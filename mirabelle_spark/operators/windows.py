@@ -27,13 +27,6 @@ def _cols(names: Sequence[str]) -> list[Column]:
     return [F.col(n) for n in names]
 
 
-def with_window_start(
-    df: DataFrame, duration_s: float, time_col: str = "time", out: str = "window_start"
-) -> DataFrame:
-    """Attach the tumbling-window start (epoch seconds) column."""
-    return df.withColumn(out, window_start_s(time_col, duration_s))
-
-
 def fixed_time_window(
     df: DataFrame,
     duration_s: float,

@@ -1019,6 +1019,10 @@ def ivf_topk(
 
     Returns (query_id, vec_id, cosine, rank) like the exact
     baseline; recall grows with ``nprobe`` (== nlist ⇒ exhaustive).
+    A zero-norm corpus or query vector gets a NULL cosine whatever
+    the session's ANSI mode: the fused Arrow kernel tests the norm
+    product for zero instead of dividing, so no divide-by-zero error
+    can arise.
     """
     c = corpus.select(F.col(id_col), as_double_vec(F.col(vec_col)).alias("__cv__"))
     if centroids is None:

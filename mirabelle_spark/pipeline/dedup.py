@@ -1107,6 +1107,12 @@ def resolve_clusters(
     rounds than the text chains). Old generations' blocks are freed
     by the context cleaner; the driver holds one decimal per round
     (the monotone label-sum fixpoint probe), never the labels.
+
+    ``clean_pairs=True`` is a caller contract: ``pairs`` is distinct
+    with both endpoints drawn from ``ids``, and ``ids`` holds
+    DISTINCT ids. Ids in no pair pass through one final anti-join
+    as they are, so a duplicated id yields duplicate output rows
+    (the default path's per-round groupBy collapses them).
     """
     # pin the PAIR table ONCE before symmetrizing (r16): the
     # two-direction union references ``pairs`` twice, so an unpinned

@@ -279,17 +279,11 @@ def sample_frames(
 DHASH_SCHEMA = "id BIGINT, band0 INT, band1 INT, band2 INT, band3 INT"
 
 
-def _dhash_bands(payload: bytes) -> list[int] | None:
+def _dhash_bands_batch(payloads) -> list:
     """The dHash kernel shared by the batch (:func:`image_dhash`)
     and streaming (:func:`image_dhash_band_col`) paths: netpbm
-    decode → 9×8 NN grayscale → four 16-bit row-pair bands.
-    None on undecodable payloads."""
-    return _dhash_bands_batch([payload])[0]
-
-
-def _dhash_bands_batch(payloads) -> list:
-    """Batch dHash: same integer arithmetic as the one-payload form
-    but vectorized across every same-shaped raster in the batch —
+    decode → 9×8 NN grayscale → four 16-bit row-pair bands,
+    vectorized across every same-shaped raster in the batch —
     per-frame numpy dispatch overhead (~25 tiny-array ops per call)
     was the dominant cost of the video near-dup signature pass at
     60k frames (guide §4.2: hand whole batches to vectorized
@@ -297,8 +291,8 @@ def _dhash_bands_batch(payloads) -> list:
     runs ONE gather/compare/pack pipeline. Returns a list aligned
     with ``payloads`` (None for undecodable entries). Integer-exact:
     the NN gather, (r+g+b)//3 grayscale, strict > compare and
-    MSB-first band packing are element-for-element the operations
-    the scalar kernel performed."""
+    MSB-first band packing are element for element a per-frame
+    scalar kernel's operations."""
     import numpy as np
 
     out: list = [None] * len(payloads)

@@ -62,11 +62,10 @@ class Ctx:
     is the default watermark tolerance for windowed twins (the
     reference's per-op :delay overrides it via cfg). ``shards``
     (set per-fork via ``by``'s ``{"shards": N}`` config key, or
-    session-wide here) flips the twins that have a sharded form
-    (ewma, the cond-dt family, changed, ddt/ddt-pos, zscore,
-    throttle; r8 adds stable and KEYED coalesce via columnar
-    carries) to shard-mapped keyed state — the high-cardinality
-    shape, PERF §39/§43; None keeps per-key state."""
+    session-wide here) is passed to every keyed-state twin: N routes
+    keys to N shard-mapped state groups — the high-cardinality
+    shape, PERF §39/§43; None keeps one state group per key (see
+    streaming.core._keyed_fold_scan)."""
 
     by: tuple[str, ...] = ()
     time_col: str = "time"
@@ -595,42 +594,32 @@ def _s_ftw(df, ctx, cfg):
 def _s_few(df, ctx, cfg):
     from mirabelle_spark import streaming as stx
 
-    kw = dict(by=_need_by(ctx, "fixed-event-window"), time_col=ctx.time_col,
-              fork_ttl_s=cfg.get("fork-ttl"))
-    if ctx.shards:
-        return stx.stream_fixed_event_window_sharded(
-            df, cfg["size"], shards=ctx.shards, **kw
-        )
-    return stx.stream_fixed_event_window(df, cfg["size"], **kw)
+    return stx.stream_fixed_event_window(
+        df, cfg["size"], by=_need_by(ctx, "fixed-event-window"),
+        time_col=ctx.time_col, fork_ttl_s=cfg.get("fork-ttl"),
+        shards=ctx.shards,
+    )
 
 
 @stream_action("moving-event-window")
 def _s_mew(df, ctx, cfg):
     from mirabelle_spark import streaming as stx
 
-    kw = dict(by=_need_by(ctx, "moving-event-window"), time_col=ctx.time_col)
-    if ctx.shards:
-        return stx.stream_moving_event_window_sharded(
-            df, cfg["size"], shards=ctx.shards, **kw
-        )
-    return stx.stream_moving_event_window(df, cfg["size"], **kw)
+    return stx.stream_moving_event_window(
+        df, cfg["size"], by=_need_by(ctx, "moving-event-window"),
+        time_col=ctx.time_col, shards=ctx.shards,
+    )
 
 
 @stream_action("coalesce")
 def _s_coalesce(df, ctx, cfg):
     from mirabelle_spark import streaming as stx
 
-    if ctx.shards and ctx.by:
-        # keyed coalesce shards bit-exactly (per-key tick clocks);
-        # the UNKEYED form has ONE global tick clock and must stay a
-        # single state group
-        return stx.stream_coalesce_sharded(
-            df, cfg["duration"], cfg["fields"], by=list(ctx.by),
-            time_col=ctx.time_col, shards=ctx.shards,
-        )
+    # the UNKEYED form has ONE global tick clock: stream_coalesce
+    # keeps it a single state group whatever ctx.shards says
     return stx.stream_coalesce(
         df, cfg["duration"], cfg["fields"], by=list(ctx.by),
-        time_col=ctx.time_col,
+        time_col=ctx.time_col, shards=ctx.shards,
     )
 
 
@@ -648,14 +637,9 @@ def _s_ssort(df, ctx, cfg):
 def _s_throttle(df, ctx, cfg):
     from mirabelle_spark import streaming as stx
 
-    if ctx.shards:
-        return stx.stream_throttle_sharded(
-            df, cfg["count"], cfg["duration"], by=_need_by(ctx, "throttle"),
-            time_col=ctx.time_col, shards=ctx.shards,
-        )
     return stx.stream_throttle(
         df, cfg["count"], cfg["duration"], by=_need_by(ctx, "throttle"),
-        time_col=ctx.time_col,
+        time_col=ctx.time_col, shards=ctx.shards,
     )
 
 
@@ -663,14 +647,9 @@ def _s_throttle(df, ctx, cfg):
 def _s_ewma(df, ctx, r):
     from mirabelle_spark import streaming as stx
 
-    if ctx.shards:
-        return stx.stream_ewma_sharded(
-            df, r, by=_need_by(ctx, "ewma-timeless"), time_col=ctx.time_col,
-            metric_col=ctx.metric_col, shards=ctx.shards,
-        )
     return stx.stream_ewma(
         df, r, by=_need_by(ctx, "ewma-timeless"), time_col=ctx.time_col,
-        metric_col=ctx.metric_col,
+        metric_col=ctx.metric_col, shards=ctx.shards,
     )
 
 
@@ -688,15 +667,11 @@ def _s_sessionize(df, ctx, cfg):
 def _s_zscore(df, ctx, cfg):
     from mirabelle_spark import streaming as stx
 
-    kw = dict(
-        by=_need_by(ctx, "zscore"), time_col=ctx.time_col,
-        metric_col=ctx.metric_col, min_n=int(cfg.get("min-n", 2)),
+    return stx.stream_zscore(
+        df, float(cfg["window"]), by=_need_by(ctx, "zscore"),
+        time_col=ctx.time_col, metric_col=ctx.metric_col,
+        min_n=int(cfg.get("min-n", 2)), shards=ctx.shards,
     )
-    if ctx.shards:
-        return stx.stream_zscore_sharded(
-            df, float(cfg["window"]), shards=ctx.shards, **kw
-        )
-    return stx.stream_zscore(df, float(cfg["window"]), **kw)
 
 
 @stream_action("curate")
@@ -749,14 +724,9 @@ def _s_curate(df, ctx, cfg=None):
 def _s_changed(df, ctx, cfg):
     from mirabelle_spark import streaming as stx
 
-    if ctx.shards:
-        return stx.stream_changed_sharded(
-            df, cfg["field"], by=_need_by(ctx, "changed"),
-            time_col=ctx.time_col, init=cfg.get("init"), shards=ctx.shards,
-        )
     return stx.stream_changed(
         df, cfg["field"], by=_need_by(ctx, "changed"), time_col=ctx.time_col,
-        init=cfg.get("init"),
+        init=cfg.get("init"), shards=ctx.shards,
     )
 
 
@@ -771,11 +741,7 @@ def _s_smax(df, ctx, cfg=None):
         # micro-batch (update mode) — the 1M-key scale path (PERF
         # §43); default stays the reference's per-event emission
         return stx.stream_smax_jvm(df, **kw)
-    if ctx.shards:
-        # per-event emission at high key cardinality: the sharded
-        # row-carry fold (bit-exact vs stream_smax, parity pytest)
-        return stx.stream_smax_sharded(df, shards=ctx.shards, **kw)
-    return stx.stream_smax(df, **kw)
+    return stx.stream_smax(df, shards=ctx.shards, **kw)
 
 
 @stream_action("smin")
@@ -786,22 +752,18 @@ def _s_smin(df, ctx, cfg=None):
               metric_col=ctx.metric_col)
     if cfg and cfg.get("emission") == "per-batch":
         return stx.stream_smin_jvm(df, **kw)
-    if ctx.shards:
-        return stx.stream_smin_sharded(df, shards=ctx.shards, **kw)
-    return stx.stream_smin(df, **kw)
+    return stx.stream_smin(df, shards=ctx.shards, **kw)
 
 
 def _s_ddt_any(name, remove_neg):
     def fn(df, ctx):
         from mirabelle_spark import streaming as stx
 
-        kw = dict(
-            by=_need_by(ctx, name), time_col=ctx.time_col,
+        return stx.stream_ddt(
+            df, by=_need_by(ctx, name), time_col=ctx.time_col,
             metric_col=ctx.metric_col, remove_neg=remove_neg,
+            shards=ctx.shards,
         )
-        if ctx.shards:
-            return stx.stream_ddt_sharded(df, shards=ctx.shards, **kw)
-        return stx.stream_ddt(df, **kw)
 
     return fn
 
@@ -814,13 +776,9 @@ stream_action("ddt-pos")(_s_ddt_any("ddt-pos", True))
 def _s_stable(df, ctx, dt, fieldname):
     from mirabelle_spark import streaming as stx
 
-    if ctx.shards:
-        return stx.stream_stable_sharded(
-            df, dt, fieldname, by=_need_by(ctx, "stable"),
-            time_col=ctx.time_col, shards=ctx.shards,
-        )
     return stx.stream_stable(
-        df, dt, fieldname, by=_need_by(ctx, "stable"), time_col=ctx.time_col
+        df, dt, fieldname, by=_need_by(ctx, "stable"), time_col=ctx.time_col,
+        shards=ctx.shards,
     )
 
 
@@ -829,13 +787,9 @@ def _s_cond_dt_vec(vec_fn):
         from mirabelle_spark import streaming as stx
 
         cond, dt = vec_fn(ctx, *params)
-        if ctx.shards:
-            return stx.stream_cond_dt_sharded(
-                df, cond, dt, by=_need_by(ctx, "cond-dt"),
-                time_col=ctx.time_col, shards=ctx.shards,
-            )
         return stx.stream_cond_dt(
-            df, cond, dt, by=_need_by(ctx, "cond-dt"), time_col=ctx.time_col
+            df, cond, dt, by=_need_by(ctx, "cond-dt"), time_col=ctx.time_col,
+            shards=ctx.shards,
         )
 
     return fn
@@ -939,22 +893,20 @@ def _s_mtw(df, ctx, cfg):
 def _s_expired(df, ctx):
     from mirabelle_spark import streaming as stx
 
-    kw = dict(by=_need_by(ctx, "expired"), time_col=ctx.time_col,
-              keep_expired=True)
-    if ctx.shards:
-        return stx.stream_expired_sharded(df, shards=ctx.shards, **kw)
-    return stx.stream_expired(df, **kw)
+    return stx.stream_expired(
+        df, by=_need_by(ctx, "expired"), time_col=ctx.time_col,
+        keep_expired=True, shards=ctx.shards,
+    )
 
 
 @stream_action("not-expired")
 def _s_not_expired(df, ctx):
     from mirabelle_spark import streaming as stx
 
-    kw = dict(by=_need_by(ctx, "not-expired"), time_col=ctx.time_col,
-              keep_expired=False)
-    if ctx.shards:
-        return stx.stream_expired_sharded(df, shards=ctx.shards, **kw)
-    return stx.stream_expired(df, **kw)
+    return stx.stream_expired(
+        df, by=_need_by(ctx, "not-expired"), time_col=ctx.time_col,
+        keep_expired=False, shards=ctx.shards,
+    )
 
 
 # every remaining action is either stateless (streaming-transparent)

@@ -45,26 +45,3 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Read the driver-provided parquet tables and register temp views."""
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    from mirabelle_spark.queries import _normalize_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    ts_cols = {"events": ["ts"], "lineitem": ["l_shipdate"], "orders": ["o_orderdate"]}
-    out = {}
-    for n in names:
-        path = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            for c in ts_cols.get(n, []):
-                df = _normalize_ts(df, c)
-            df.createOrReplaceTempView(n)
-            out[n] = df
-    return out

@@ -135,6 +135,7 @@ def stream_changed(
     by: Sequence[str],
     time_col: str = "time",
     init=None,
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming ``changed`` via keyed state: emits rows whose
     ``field`` differs (null-safe, matching the batch twin's
@@ -142,22 +143,83 @@ def stream_changed(
     the reference's :init — the value each key's first event is
     compared against (action.clj:334-360). The micro-batch compare
     is one vectorized shift — no per-row Python.
-    """
 
-    def batch_fn(s, pdf):
-        (last,) = s
+    Per key (``shards=None``) the state is the field's own Spark
+    type, so every field dtype works (decimal, date, array,
+    interval). With ``shards=N`` the last value rides the shard's
+    JSON carry map: only the per-key SEGMENT STARTS read it and
+    segment ends write it, so the Python work is O(distinct keys in
+    batch). Timestamp fields encode as isoformat (revived to
+    pd.Timestamp for the compare), binary as hex; JSON-native types
+    pass through. Other field dtypes raise a named error up front —
+    use ``shards=None`` for those.
+    """
+    import numpy as np
+    import pandas as pd
+
+    dtype = dict(df.dtypes)[fieldname]
+    if not shards:
+        def batch_fn(s, pdf):
+            (last,) = s
+            vals = pdf[fieldname]
+            prev = vals.shift(1)
+            prev.iloc[0] = last
+            same = (vals == prev) | (vals.isna() & prev.isna())
+            out = pdf[~same.to_numpy(dtype=bool)]
+            return (_native(vals.iloc[-1]),), out
+
+        return _keyed_batch_scan(
+            df, by, time_col, f"last {dtype}", (init,), batch_fn
+        )
+
+    is_ts = dtype in ("timestamp", "timestamp_ntz")
+    is_bin = dtype == "binary"
+    # exact simpleString names, not prefixes: 'int' as a prefix would
+    # also admit 'interval day to second', whose timedelta then fails
+    # at runtime inside json.dumps instead of this up-front error
+    if not (is_ts or is_bin) and dtype not in (
+        "string", "boolean", "double", "float", "tinyint",
+        "smallint", "int", "bigint", "long",
+    ):
+        raise NotImplementedError(
+            f"stream_changed(shards=...) cannot JSON-carry field dtype "
+            f"{dtype!r}; use shards=None (typed per-key state)"
+        )
+
+    def enc(v):
+        v = _native(v.isoformat() if is_ts and v is not None and v == v else v)
+        if is_bin and v is not None:
+            return bytes(v).hex()
+        return v
+
+    def dec(v):
+        if v is None:
+            return None
+        if is_ts:
+            return pd.Timestamp(v)
+        if is_bin:
+            return bytes.fromhex(v)
+        return v
+
+    def fold(carry, ks, pdf):
+        n = len(pdf)
         vals = pdf[fieldname]
         prev = vals.shift(1)
-        if len(pdf):
-            prev.iloc[0] = last
+        ks_arr = np.array(ks, dtype=object)
+        starts = np.flatnonzero(
+            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
+        )
+        start_keys = ks_arr[starts].tolist()
+        # ONE positional gather/scatter per batch — per-element .iloc
+        # writes cost more than the whole fold at 1-row segments
+        prev.iloc[starts] = [dec(carry.get(k, enc(init))) for k in start_keys]
         same = (vals == prev) | (vals.isna() & prev.isna())
-        out = pdf[~same.to_numpy(dtype=bool)]
-        new_last = _native(vals.iloc[-1]) if len(pdf) else last
-        return (new_last,), out
+        ends = np.concatenate((starts[1:] - 1, [n - 1]))
+        for k, v in zip(start_keys, vals.iloc[ends].tolist()):
+            carry[k] = enc(v)
+        return pdf[~same.to_numpy(dtype=bool)]
 
-    return _keyed_batch_scan(
-        df, by, time_col, f"last {dict(df.dtypes)[fieldname]}", (init,), batch_fn
-    )
+    return _keyed_fold_scan(df, by, time_col, shards, fold)
 
 
 def stream_changed_jvm_run(
@@ -794,7 +856,7 @@ def _stream_band_dedup(
         res["__dup__"] = dup
         return res
 
-    scanned = _sharded_keyed_batch_scan(
+    scanned = _keyed_fold_scan(
         ex, ["__band_key__"], time_col, shards, shard_fold,
         extra_out="__dup__ boolean", state_ttl_s=state_ttl_s,
     )
@@ -896,8 +958,6 @@ def reinject_source(spark: SparkSession, topic_dir: str, schema: str) -> DataFra
     return file_source(spark, topic_dir, schema)
 
 
-
-
 def _keyed_batch_scan(
     df: DataFrame,
     by,
@@ -907,34 +967,39 @@ def _keyed_batch_scan(
     batch_fn,
     state_ttl_s=None,
     out_schema=None,
-    ttl_clock="event",
+    key_cols=(),
 ):
-    """Shared shell for order-dependent keyed-state twins: per key,
-    run ``batch_fn(state, pdf_sorted) -> (state, out_pdf)`` over each
-    micro-batch sorted by event time, persisting state across
-    batches. This is the streaming analog of the reference's
-    per-operator atoms (single-threaded per key, parallel across
-    keys) — but each operator's fold is vectorized over the whole
-    micro-batch (numpy scans / pandas shifts), never a per-row
-    ``iterrows``/``to_dict`` loop (r2 perf finding: a hot key melts
-    on per-row Python).
+    """applyInPandasWithState shell for order-dependent keyed state:
+    per group, run ``batch_fn(state, pdf) -> (state, out_pdf)`` ONCE
+    over the group's whole micro-batch sorted by event time,
+    persisting state across batches. ``key_cols`` makes each key's
+    rows contiguous and time-sorted instead, for groups that hold
+    several keys. This is
+    the streaming analog of the reference's per-operator atoms
+    (single-threaded per key, parallel across keys) — but each fold
+    is vectorized over the whole micro-batch (numpy scans / pandas
+    shifts), never a per-row ``iterrows``/``to_dict`` loop (r2 perf
+    finding: a hot key melts on per-row Python).
+
+    Arrow hands a group's rows over in chunks of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``. The chunks are
+    concatenated (only when there are several) before the one sort,
+    so a key whose rows span two chunks still folds in event-time
+    order. ``batch_fn`` never sees an empty slice.
 
     ``state_ttl_s`` is the reference's `by` fork GC
-    (action.clj:1559-1582 :fork-ttl): keys idle past the ttl have
-    their state evicted — the next event starts fresh, and state
-    size stays bounded by the active-key set. ``ttl_clock`` picks
-    the timeout clock: ``"event"`` (watermark-driven; requires a
-    watermark on ``df``, and Spark then drops late rows before the
-    operator) or ``"processing"`` (wall-clock, the reference's
-    :gc-interval timer in Spark form — no watermark, late rows
-    still delivered, right for operators that must keep the
-    reference's out-of-order behavior).
+    (action.clj:1559-1582 :fork-ttl) on the event clock: keys idle
+    past the ttl have their state evicted — the next event starts
+    fresh, and state size stays bounded by the active-key set.
+    Requires a watermark on ``df`` (Spark then drops late rows before
+    the operator).
 
     ``out_schema`` (StructType or DDL string) lets an operator emit
     rows shaped differently from its input (e.g. window rows with an
     events array); ``batch_fn`` must then return exactly those
     columns.
     """
+    import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -945,38 +1010,41 @@ def _keyed_batch_scan(
     )  # None → trust batch_fn's column set
     ttl_ms = int(state_ttl_s * 1000) if state_ttl_s else None
 
+    def sort(pdf):
+        if not key_cols:
+            return pdf.sort_values(time_col, kind="mergesort")
+        # keys need only be contiguous, not ordered: stable lexsort on
+        # factorized key codes (nulls share code -1; -0.0 == 0.0) is
+        # ~3x cheaper than comparing key strings
+        codes = [pd.factorize(pdf[c])[0] for c in reversed(key_cols)]
+        return pdf.take(np.lexsort([pdf[time_col].to_numpy(), *codes]))
+
     def fn(key, pdf_iter, state: GroupState):
         if state.hasTimedOut:
             state.remove()
             return
-        s = state.get if state.exists else init
-        outs = []
-        max_ms = None
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(time_col, kind="mergesort")
-            s, out = batch_fn(s, pdf)
-            if out is not None and len(out):
-                outs.append(out[cols] if cols is not None else out)
-            t = pdf[time_col]
-            mx = (
-                int(t.max().value // 1_000_000)
-                if str(t.dtype).startswith("datetime64")
-                else int(float(t.max()) * 1000)
-            )
-            max_ms = mx if max_ms is None else max(max_ms, mx)
+        chunks = [p for p in pdf_iter if len(p)]
+        if not chunks:
+            return
+        pdf = sort(
+            chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        )
+        s, out = batch_fn(state.get if state.exists else init, pdf)
         state.update(tuple(s))
-        if ttl_ms and ttl_clock == "processing":
-            state.setTimeoutDuration(ttl_ms)
-        elif ttl_ms and max_ms is not None:
+        if ttl_ms:
+            t = pdf[time_col].max()
+            max_ms = (
+                int(t.value // 1_000_000)
+                if str(pdf[time_col].dtype).startswith("datetime64")
+                else int(float(t) * 1000)
+            )
             # clamp above the watermark: an out-of-order tail event can
             # put last-event + ttl BEHIND the watermark, which Spark
             # rejects; the key then just times out at the next bound
             wm = state.getCurrentWatermarkMs()
             state.setTimeoutTimestamp(max(max_ms + ttl_ms, wm + 1))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+        if out is not None and len(out):
+            yield out[cols] if cols is not None else out
 
     return df.groupBy(*[F.col(c) for c in by]).applyInPandasWithState(
         fn,
@@ -984,12 +1052,219 @@ def _keyed_batch_scan(
         stateStructType=state_struct,
         outputMode="append",
         timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if not state_ttl_s
-            else GroupStateTimeout.ProcessingTimeTimeout
-            if ttl_clock == "processing"
-            else GroupStateTimeout.EventTimeTimeout
+            GroupStateTimeout.EventTimeTimeout
+            if state_ttl_s
+            else GroupStateTimeout.NoTimeout
         ),
+    )
+
+
+# -- keyed-state folds: one fold, two groupings ------------------------------
+# Every keyed operator below is ONE fold ``fold(carry, ks, pdf) -> out``:
+# ``pdf`` is a micro-batch slice holding each key's rows contiguous and
+# in event-time order, ``ks`` the per-row key string, and ``carry`` the
+# {key string: state} map the
+# fold reads at segment starts and writes at segment ends. The key
+# groups are only a routing choice (ICDE 2025, "Towards Fine-Grained
+# Scalability for Stateful Stream Processing Systems"), picked by
+# ``shards``:
+#
+# - ``shards=None`` groups on the ``by`` columns themselves (the
+#   reference's per-key `by` fork): one Python call per key per
+#   micro-batch, ``ks`` is constant and no key strings are built.
+# - ``shards=N`` groups on pmod(xxhash64(by), N): applyInPandasWithState
+#   calls the Python state fn once per GROUP per micro-batch, so at
+#   10^6 keys this collapses 10^6 interpreter round-trips to N (PERF
+#   §39: ewma 7.9k → 214k ev/s at 1M keys). The whole shard map
+#   round-trips per batch — right when most keys are touched each
+#   batch.
+#
+# Both groupings keep the same ``carry STRING`` state, so a fold's
+# per-key operation sequence is identical either way (parity pytests
+# against the batch twins).
+
+_SHARD_COL = "__shard__"
+_UNKEYED_COL = "__g__"  # the one constant group of an unkeyed fold
+_NULL_KEY = "\x00null"
+_KEY_SEP = "\x1f"
+# key-mode carry slot: each call holds exactly one key
+_ONE_KEY = ""
+
+# stream_ewma: key runs longer than this take the scalar loop — the
+# vectorized stepper costs O(max run) numpy dispatches per batch, so
+# one hot key must not set the step count for the whole shard. At the
+# shard tier's design point (high cardinality, short runs) every run
+# is far below this.
+_EWMA_VEC_CAP = 512
+
+
+def _shard_key_strings(pdf, key_cols, key_dtypes):
+    """Composite string key per row (JSON-map-safe); nulls fold
+    under a sentinel distinct from any real value.
+
+    ``key_dtypes`` (Spark simpleString per key col) makes the string
+    TYPE-STABLE across micro-batches: Arrow hands an int64 slice
+    that contains any NULL to pandas as float64, so a bare str(v)
+    would serialize the same key as "7" in one batch and "7.0" in
+    the next — silently resetting its state. Integral Spark types
+    therefore format through int(v); everything else through str.
+
+    Float and double keys render zero as ``0.0``: Spark hashes and
+    groups ``-0.0`` with ``0.0`` as one key, so they must share one
+    state slot (and form one key segment in the (key, time) sort).
+    NaN and null both map to the null sentinel (``v != v``), while
+    Spark keeps them as two groups: they alias one slot whenever
+    they hash to the same shard (key mode keeps them apart).
+
+    INJECTIVE under adversarial string values: a value containing
+    the separator or the escape byte is escaped (\\x00 -> \\x00"0",
+    \\x1f -> \\x00"1") before joining, so escaped values never
+    contain a bare separator and can never spell the null sentinel
+    (whose second byte 'n' follows \\x00 only in the sentinel) —
+    two distinct key tuples can't alias one state slot. Non-string
+    key types (numeric formatting) never produce either byte, so
+    the common path pays one containment check per value."""
+
+    def esc(s):
+        if "\x00" in s or _KEY_SEP in s:
+            return s.replace("\x00", "\x00" + "0").replace(_KEY_SEP, "\x00" + "1")
+        return s
+
+    def conv_for(dtype):
+        if dtype in ("tinyint", "smallint", "int", "bigint", "long"):
+            return lambda v: str(int(v))
+        if dtype in ("float", "double"):
+            return lambda v: str(v + 0.0)  # -0.0 + 0.0 == +0.0
+        return lambda v: esc(str(v))
+
+    convs = [conv_for(t) for t in key_dtypes]
+    if len(key_cols) == 1:
+        col, conv = pdf[key_cols[0]], convs[0]
+        return [(_NULL_KEY if v is None or v != v else conv(v)) for v in col.tolist()]
+    cols = [pdf[c].tolist() for c in key_cols]
+    return [
+        _KEY_SEP.join(
+            _NULL_KEY if v is None or v != v else conv(v)
+            for conv, v in zip(convs, row)
+        )
+        for row in zip(*cols)
+    ]
+
+
+def _load_carry(carry_json):
+    """Decode a fold's ``carry STRING`` state: ``{"c": {key: state}}``
+    plus ``"t": {key: last event µs}`` under a shard ttl.
+
+    Before both groupings shared one fold, the per-key twins kept
+    their own state. Spark rejects a restart over the typed ones
+    (STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE) but accepts a single
+    STRING column under another name, so a JSON blob that is not a
+    carry map raises here instead of silently resetting every key."""
+    import json as _json
+
+    blob = _json.loads(carry_json) if carry_json else {"c": {}}
+    if not (isinstance(blob, dict) and isinstance(blob.get("c"), dict)):
+        raise ValueError(
+            "keyed state is not a carry map: the checkpoint was written "
+            "by an older per-key twin; restart from a new checkpoint"
+        )
+    return blob
+
+
+def _keyed_fold_scan(
+    df, by, time_col, shards, fold, extra_out=None, state_ttl_s=None,
+    out_schema=None,
+):
+    """The one shell of the keyed folds (see the section comment):
+    group per key (``shards=None``, or a constant group when ``by``
+    is empty — the unkeyed coalesce) or per shard (``shards=N`` and
+    ``by`` non-empty), state = one JSON carry map, and per batch call
+    ``fold(carry, ks, pdf)`` with the slice's key runs contiguous and
+    time-sorted and the routing column dropped. ``fold`` mutates ``carry`` and
+    returns the output rows. ``extra_out`` appends DDL columns the
+    fold adds (e.g. zscore); ``out_schema`` replaces the whole output
+    DDL (window emission).
+
+    ``state_ttl_s`` is the fork GC (the reference's :fork-ttl). Per
+    key it is the GroupState event-time timeout (needs a watermark).
+    Inside a shard map, which shard-level timeouts cannot express,
+    the shell tracks each key's last event time next to the carry
+    and, after the fold, drops keys idle longer than the ttl relative
+    to the shard's event clock (its running max event time); a key
+    whose gap since its last event exceeds the ttl folds from
+    scratch. Either way an evicted key's next event starts fresh.
+    """
+    import json as _json
+
+    key_cols = list(by)
+    sharded = bool(shards) and bool(key_cols)
+    if sharded:
+        dtypes = dict(df.dtypes)
+        key_dtypes = [dtypes[c] for c in key_cols]
+        src = df.withColumn(
+            _SHARD_COL,
+            F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(shards)),
+        )
+        group = [_SHARD_COL]
+    elif key_cols:
+        src, group = df, key_cols
+    else:
+        src, group = df.withColumn(_UNKEYED_COL, F.lit(0)), [_UNKEYED_COL]
+    if out_schema is None:
+        out_schema = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+        )
+        if extra_out:
+            out_schema += f", {extra_out}"
+    ttl_us = int(round(state_ttl_s * 1_000_000)) if state_ttl_s and sharded else None
+
+    def batch_fn(s, pdf):
+        (carry_json,) = s
+        blob = _load_carry(carry_json)
+        carry = blob["c"]
+        seen = blob.get("t", {})
+        if group != key_cols:
+            pdf = pdf.drop(columns=group)
+        if not sharded:
+            out = fold(carry, [_ONE_KEY] * len(pdf), pdf)
+        elif ttl_us is None:
+            out = fold(carry, _shard_key_strings(pdf, key_cols, key_dtypes), pdf)
+        else:
+            import numpy as np
+
+            ks = _shard_key_strings(pdf, key_cols, key_dtypes)
+            tv = _series_us(pdf[time_col])
+            ks_arr = np.array(ks, dtype=object)
+            starts = np.flatnonzero(
+                np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
+            )
+            ends = np.concatenate((starts[1:] - 1, [len(ks) - 1]))
+            # restart rule BEFORE the fold: a key whose gap since its
+            # last event exceeds the ttl folds from scratch
+            for sidx in starts.tolist():
+                k = ks_arr[sidx]
+                prev = seen.get(k)
+                if prev is not None and int(tv[sidx]) - prev > ttl_us:
+                    seen.pop(k, None)
+                    carry.pop(k, None)
+            out = fold(carry, ks, pdf)
+            # memory bound AFTER the fold: keys idle past the ttl on
+            # the shard's event clock drop even if they never return
+            for sidx, e in zip(starts.tolist(), ends.tolist()):
+                k = ks_arr[sidx]
+                t_last = int(tv[e])
+                prev = seen.get(k)
+                seen[k] = t_last if prev is None else max(prev, t_last)
+            cutoff = max(seen.values()) - ttl_us
+            for k in [k for k, t in seen.items() if t < cutoff]:
+                seen.pop(k, None)
+                carry.pop(k, None)
+        return (_json.dumps({"c": carry, "t": seen} if ttl_us else {"c": carry}),), out
+
+    return _keyed_batch_scan(
+        src, group, time_col, "carry STRING", (None,), batch_fn,
+        state_ttl_s=None if sharded else state_ttl_s,
+        out_schema=out_schema, key_cols=key_cols if sharded else (),
     )
 
 
@@ -999,21 +1274,30 @@ def stream_throttle(
     duration_s: float,
     by: Sequence[str],
     time_col: str = "time",
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming anchored-window throttle (action.clj:1163-1217) —
-    keyed state (anchor_us, n); exact integer-µs window math like the
-    batch twin. The scan loops over a primitive int64 array (the
-    anchored recurrence is inherently sequential) but never builds
-    per-row dicts/Series."""
+    per-key state (anchor_us, n); exact integer-µs window math like
+    the batch twin. The scan loops over a primitive int64 array (the
+    anchored recurrence is inherently sequential) with carry reload at
+    key boundaries only; it never builds per-row dicts/Series.
+    ``shards`` picks the grouping (see ``_keyed_fold_scan``)."""
     import numpy as np
 
     dur_us = int(round(duration_s * 1_000_000))
 
-    def batch_fn(s, pdf):
-        anchor, n = s
+    def fold(carry, ks, pdf):
         tv = _series_us(pdf[time_col])
         keep = np.empty(len(tv), dtype=bool)
-        for i, t in enumerate(tv.tolist()):
+        unset = object()
+        prev = unset
+        anchor, n = None, 0
+        for i, (k, t) in enumerate(zip(ks, tv.tolist())):
+            if k != prev:
+                if prev is not unset:
+                    carry[prev] = (anchor, n)
+                anchor, n = carry.get(k, (None, 0))
+                prev = k
             if anchor is None or t >= anchor + dur_us:
                 anchor, n = t, 1
                 keep[i] = True
@@ -1022,11 +1306,11 @@ def stream_throttle(
                 keep[i] = True
             else:
                 keep[i] = False
-        return (anchor, n), pdf[keep]
+        if prev is not unset:
+            carry[prev] = (anchor, n)
+        return pdf[keep]
 
-    return _keyed_batch_scan(
-        df, by, time_col, "anchor BIGINT, n INT", (None, 0), batch_fn
-    )
+    return _keyed_fold_scan(df, by, time_col, shards, fold)
 
 
 def stream_ewma(
@@ -1036,33 +1320,101 @@ def stream_ewma(
     time_col: str = "time",
     metric_col: str = "metric",
     state_ttl_s: float | None = None,
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming ewma-timeless (action.clj:1248-1276): keyed running
     average, identical double recurrence (same fold order) as the
-    batch twin. ``state_ttl_s`` evicts idle keys (fork GC) — pass a
-    watermarked input when set. The fold runs over a primitive
-    float64 array; null metrics pass through as null without
-    touching the state."""
+    batch twin; null metrics pass through as null without touching
+    the state. ``state_ttl_s`` evicts idle keys (fork GC) — pass a
+    watermarked input when set per key. ``shards`` picks the grouping
+    (see ``_keyed_fold_scan``); PERF §39: 214k ev/s at 1M keys
+    sharded vs 7.9k per key.
+
+    A slice holding one key segment (every per-key call) runs the
+    scalar loop over a primitive float64 array. With several keys
+    the fold is VECTORIZED across keys (r17, guide §4.2: the per-row
+    loop was ~62 % of the shard tier's CPU): key runs are contiguous
+    segments, and step j updates every key's j-th event at once with
+    the SAME scalar expression ``r*v + (1.0-r)*m`` (numpy float64
+    scalar ops are IEEE doubles — each key's value sequence sees the
+    identical op order as the scalar loop, pinned by the batch-parity
+    pytests). A NaN event emits NaN and leaves the key's state
+    unchanged, exactly the scalar branch. Keys whose run exceeds
+    ``_EWMA_VEC_CAP`` take the scalar loop over just their rows."""
     import numpy as np
     import pandas as pd
 
-    def batch_fn(s, pdf):
-        (m,) = s
-        x = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        out = np.empty(len(x))
-        for i, v in enumerate(x.tolist()):
-            if v != v:  # null/NaN input → emit null, keep state
+    cap = _EWMA_VEC_CAP
+
+    def _scalar_run(carry, k, vals, out, lo, hi):
+        m = carry.get(k)
+        for i in range(lo, hi):
+            v = vals[i]
+            if v != v:
                 out[i] = np.nan
             else:
                 m = r * v + (1.0 - r) * (m if m is not None else 0.0)
                 out[i] = m
+        if m is not None:
+            carry[k] = m
+
+    def fold(carry, ks, pdf):
+        n = len(pdf)
+        vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
+        out = np.empty(n)
+        ks_arr = np.asarray(ks, dtype=object)
+        starts = np.flatnonzero(
+            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
+        )
+        if starts.size == 1:
+            _scalar_run(carry, ks_arr[0], vals.tolist(), out, 0, n)
+        else:
+            lens = np.diff(np.concatenate((starts, [n])))
+            short = lens <= cap
+            s_starts = starts[short]
+            s_lens = lens[short]
+            if s_starts.size:
+                keys_list = ks_arr[s_starts].tolist()
+                m0 = [carry.get(k) for k in keys_list]
+                seen = np.array([v is not None for v in m0], dtype=bool)
+                m = np.array(
+                    [v if v is not None else 0.0 for v in m0],
+                    dtype=np.float64,
+                )
+                # length-descending order → the keys still active at
+                # step j are a prefix; total work is Σ lens, no padding
+                order = np.argsort(-s_lens, kind="stable")
+                s_starts = s_starts[order]
+                s_lens = s_lens[order]
+                m = m[order]
+                seen = seen[order]
+                # active count per step: s_lens sorted desc, so keys
+                # with len > j form the prefix
+                for j in range(int(s_lens[0])):
+                    a = int(np.searchsorted(-s_lens, -(j + 1), side="right"))
+                    pos = s_starts[:a] + j
+                    v = vals[pos]
+                    real = v == v
+                    stepped = r * v + (1.0 - r) * m[:a]
+                    m[:a] = np.where(real, stepped, m[:a])
+                    out[pos] = np.where(real, stepped, np.nan)
+                    seen[:a] |= real
+                for i in np.flatnonzero(seen).tolist():
+                    carry[ks_arr[s_starts[i]]] = float(m[i])
+            if not short.all():
+                vl = vals.tolist()
+                for si in np.flatnonzero(~short).tolist():
+                    lo = int(starts[si])
+                    _scalar_run(
+                        carry, ks_arr[lo], vl, out, lo, lo + int(lens[si])
+                    )
         res = pdf.copy()
         # NaN in a float64 column round-trips to SQL NULL via Arrow
         res[metric_col] = pd.array(out, dtype="float64")
-        return (m,), res
+        return res
 
-    return _keyed_batch_scan(
-        df, by, time_col, "m DOUBLE", (None,), batch_fn, state_ttl_s=state_ttl_s
+    return _keyed_fold_scan(
+        df, by, time_col, shards, fold, state_ttl_s=state_ttl_s
     )
 
 
@@ -1071,67 +1423,89 @@ def stream_smax(
     by: Sequence[str],
     time_col: str = "time",
     metric_col: str = "metric",
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming smax (action.clj:2742-2772): per input event emit
     the best-so-far event of its key; strict > keeps the first
-    winner on ties. State carries the best row as JSON (one
-    encode/decode per micro-batch, not per event). The winner scan
-    runs over a primitive float64 array; output rows materialize as
-    one positional gather, plus at most one stored-best prefix
-    (once a batch row wins, the stored best never re-emits)."""
-    import json as _json
-
+    winner on ties (:func:`stream_smax_jvm` is the per-batch-grain
+    alternative). The stored-best row carries as one JSON dict per
+    key, the fold walks the slice with carry reload at key boundaries
+    only, and the output materializes as two positional gathers
+    (batch-sourced winners + carry-sourced re-emits) merged back into
+    event order — no per-event dict building. ``shards`` picks the
+    grouping (see ``_keyed_fold_scan``)."""
     import numpy as np
     import pandas as pd
 
-    def batch_fn(s, pdf):
-        (best_json,) = s
-        best = _json.loads(best_json) if best_json else None
+    def fold(carry, ks, pdf):
+        n = len(pdf)
+        cols = list(pdf.columns)
+        raw = _RawCols(pdf)
         v = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        n = len(v)
-        best_v = -np.inf
-        if best is not None and best.get(metric_col) is not None:
-            best_v = float(best[metric_col])
-        have = best is not None
-        src = np.empty(n, dtype=np.int64)  # -1 = stored best row
-        cur = -1
-        for i, x in enumerate(v.tolist()):
-            if not have or (x == x and x > best_v):
-                cur = i
+        ks_arr = np.asarray(ks, dtype=object)
+        starts = np.flatnonzero(
+            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
+        )
+        ends = np.concatenate((starts[1:], [n]))
+        emit: list = []  # ("b", idx) batch winner | ("o", dict) carried best
+        for s0, e0 in zip(starts.tolist(), ends.tolist()):
+            k = ks_arr[s0]
+            st = carry.get(k)
+            if st is None:
+                have = False
+                best_v = -np.inf
+                best_ref = None
+            else:
                 have = True
-                if x == x:
-                    best_v = x
-            src[i] = cur
-        out = pdf.iloc[np.where(src >= 0, src, 0)].reset_index(drop=True)
-        k = int((src < 0).sum())  # contiguous prefix re-emitting stored best
-        if k:
-            stored = {
-                key: (pd.Timestamp(val) if key == time_col and isinstance(val, str) else val)
-                for key, val in best.items()
-            }
-            for col_name, val in stored.items():
-                if col_name not in out.columns:
-                    continue
-                if isinstance(val, (list, tuple, np.ndarray)):
-                    # array-typed columns (e.g. tags): a .loc set with
-                    # a list value is an elementwise broadcast —
-                    # ValueError when len(val) != k, silent scatter
-                    # when equal. Assign cell-by-cell as objects.
-                    out[col_name] = out[col_name].astype(object)
-                    idx = out.columns.get_loc(col_name)
-                    for i in range(k):
-                        out.iat[i, idx] = list(val)
-                else:
-                    out.loc[: k - 1, col_name] = val
-        if cur >= 0:
-            row = pdf.iloc[cur]
-            best = {
-                key: _native(val.isoformat() if hasattr(val, "isoformat") else val)
-                for key, val in row.items()
-            }
-        return (_json.dumps(best),), out
+                best_v = -np.inf if st["m"] is None else float(st["m"])
+                best_ref = ("o", st["b"])
+            for i in range(s0, e0):
+                x = v[i]
+                if not have or (x == x and x > best_v):
+                    best_ref = ("b", i)
+                    have = True
+                    if x == x:
+                        best_v = x
+                emit.append(best_ref)
+            # save state: winner row serialized once per batch per key
+            if best_ref is not None and best_ref[0] == "b":
+                i = best_ref[1]
+                carry[k] = {
+                    "m": None if v[i] != v[i] else float(v[i]),
+                    "b": raw.row(cols, i),
+                }
+        b_pos = [p for p, e in enumerate(emit) if e[0] == "b"]
+        o_pos = [p for p, e in enumerate(emit) if e[0] == "o"]
+        frames = []
+        if b_pos:
+            frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
+        if o_pos:
+            odf = pd.DataFrame(
+                {c: [emit[p][1][c] for p in o_pos] for c in cols}, columns=cols
+            )
+            frames.append(_revive_datetime_cols(odf, pdf))
+        if len(frames) == 1:
+            return frames[0]
+        out = pd.concat(frames, ignore_index=True)
+        return out.iloc[np.argsort(np.asarray(b_pos + o_pos), kind="stable")]
 
-    return _keyed_batch_scan(df, by, time_col, "best STRING", (None,), batch_fn)
+    return _keyed_fold_scan(df, by, time_col, shards, fold)
+
+
+def stream_smin(
+    df: DataFrame,
+    by: Sequence[str],
+    time_col: str = "time",
+    metric_col: str = "metric",
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming smin (action.clj:2774-2804): smax over the negated
+    metric, negated back — the stored-best state machinery is shared
+    (the stored metric stays un-negated) and nulls pass through
+    (-NULL = NULL)."""
+    neg = df.withColumn(metric_col, -F.col(metric_col))
+    out = stream_smax(neg, by, time_col, metric_col, shards=shards)
+    return out.withColumn(metric_col, -F.col(metric_col))
 
 
 def stream_cond_dt(
@@ -1140,16 +1514,19 @@ def stream_cond_dt(
     dt_s: float,
     by: Sequence[str],
     time_col: str = "time",
+    shards: int | None = None,
 ) -> DataFrame:
-    """Streaming cond-dt family (action.clj:476-508): keyed state
+    """Streaming cond-dt family (action.clj:476-508): per-key state
     (ok, flip_us); valid events pass once the condition has held
-    continuously for more than dt seconds.
+    continuously for more than dt seconds. PERF §39 (sharded): 552k
+    ev/s at 1M keys; 1.73M ev/s at 10M events / 10k keys.
 
     ``cond`` accepts the SAME condition vectors as the batch twins
     (``[":>", "metric", 100]`` — compiled per micro-batch by
     :func:`mirabelle_spark.conditions.compile_condition_pandas`,
-    fully vectorized) or a python row-predicate for custom logic
-    (applied row-wise, the slow path)."""
+    fully vectorized over the whole slice) or a python row-predicate
+    for custom logic (applied row-wise, the slow path). ``shards``
+    picks the grouping (see ``_keyed_fold_scan``)."""
     import numpy as np
 
     dt_us = int(round(dt_s * 1_000_000))
@@ -1164,22 +1541,29 @@ def stream_cond_dt(
         def valid_series(pdf):
             return _pred(pdf).to_numpy(dtype=bool)
 
-    def batch_fn(s, pdf):
-        ok, flip = s
+    def fold(carry, ks, pdf):
         tv = _series_us(pdf[time_col])
         valid = valid_series(pdf)
         keep = np.empty(len(tv), dtype=bool)
-        for i, (t, va) in enumerate(zip(tv.tolist(), valid.tolist())):
+        unset = object()
+        prev = unset
+        ok, flip = False, None
+        for i, (k, t, va) in enumerate(zip(ks, tv.tolist(), valid.tolist())):
+            if k != prev:
+                if prev is not unset:
+                    carry[prev] = (ok, flip)
+                ok, flip = carry.get(k, (False, None))
+                prev = k
             if va and not ok:
                 ok, flip = True, t
             elif not va:
                 ok, flip = False, None
             keep[i] = va and ok and t > flip + dt_us
-        return (ok, flip), pdf[keep]
+        if prev is not unset:
+            carry[prev] = (ok, flip)
+        return pdf[keep]
 
-    return _keyed_batch_scan(
-        df, by, time_col, "ok BOOLEAN, flip BIGINT", (False, None), batch_fn
-    )
+    return _keyed_fold_scan(df, by, time_col, shards, fold)
 
 
 def stream_ssort(
@@ -1224,94 +1608,144 @@ def stream_stable(
     field: str,
     by: Sequence[str],
     time_col: str = "time",
+    shards: int | None = None,
 ) -> DataFrame:
-    """Streaming ``stable`` (action.clj:2053-2138): keyed value-run
+    """Streaming ``stable`` (action.clj:2053-2138): per-key value-run
     state; events pass once their run's ``field`` value has stayed
     identical for more than ``dt`` seconds. The run's early events
     buffer in state and flush at confirmation; a value change drops
     an unconfirmed buffer (flap suppression). Out-of-order events
-    (time < running max) are dropped, like the reference.
-    """
-    import json as _json
+    (time < the key's running max) are dropped, like the reference.
 
+    Each key's unconfirmed-run buffer carries as PARALLEL COLUMN
+    ARRAYS ({col: [values]}) instead of dict-per-row (VERDICT r7 ask
+    #1a). Python work per batch is O(value-runs), not O(rows): run
+    boundaries come from one vectorized null-safe shift compare,
+    confirmation points from searchsorted, confirmed-run emission
+    from slice coalescing (one concat at the end), and only
+    UNCONFIRMED rows (the flap buffer) pay per-value JSON conversion.
+    ``shards`` picks the grouping (see ``_keyed_fold_scan``)."""
     import numpy as np
     import pandas as pd
 
     dt_us = int(round(dt_s * 1_000_000))
 
-    def _row_ser(pdf, i):
-        return {
-            k: _native(v.isoformat() if hasattr(v, "isoformat") else v)
-            for k, v in pdf.iloc[i].items()
-        }
+    def _eq(a, b):
+        if a is None or b is None:
+            return a is None and b is None
+        if isinstance(a, float) and isinstance(b, float) and a != a and b != b:
+            return True
+        return a == b
 
-    def batch_fn(st, pdf):
-        (blob,) = st
-        s = (
-            _json.loads(blob)
-            if blob
-            else {"max": None, "has": False, "value": None, "flip": None,
-                  "confirmed": False, "buffer": []}
-        )
+    def _store(v):
+        # keep NaN as NaN in the carry: Python json round-trips it
+        # and _eq treats NaN==NaN. _native's NaN→None fold would make
+        # _eq(nan, None) False and reset the run at every micro-batch
+        # boundary (ADVICE r8 #1).
+        if isinstance(v, float) and v != v:
+            return float(v)
+        return _native(v)
+
+    def fold(carry, ks, pdf):
+        n = len(pdf)
         t = _series_us(pdf[time_col])
-        n = len(t)
-        # drop out-of-order rows: time < running max (incl. state max)
-        run_max = np.maximum.accumulate(t)
-        prior = np.concatenate(([s["max"] if s["max"] is not None else -(1 << 62)],
-                                run_max[:-1]))
-        keep = t >= prior
-        s["max"] = (
-            int(max(run_max[-1], -(1 << 62) if s["max"] is None else s["max"]))
-            if n
-            else s["max"]
-        )
-        pdf = pdf[keep].reset_index(drop=True)
-        t = t[keep]
-        n = len(t)
-        emit: list[pd.DataFrame] = []
-        vals = pdf[field].tolist()
+        ks_arr = np.asarray(ks, dtype=object)
+        kstart = np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
+        starts = np.flatnonzero(kstart)
+        ends = np.concatenate((starts[1:], [n]))
+        # out-of-order drop + running-max update per key, vectorized
+        # per segment: the slice is (key, time)-sorted so only rows
+        # below the key's STORED max can drop, and the new max is the
+        # segment's last timestamp
+        keep = np.ones(n, dtype=bool)
+        for s0, e0 in zip(starts.tolist(), ends.tolist()):
+            st = carry.get(ks_arr[s0])
+            if st is not None and st["s"][0] is not None:
+                keep[s0:e0] = t[s0:e0] >= st["s"][0]
+                st["s"][0] = max(st["s"][0], int(t[e0 - 1]))
+            elif st is not None:
+                st["s"][0] = int(t[e0 - 1])
+        if not keep.all():
+            pdf = pdf[keep].reset_index(drop=True)
+            ks_arr = ks_arr[keep]
+            t = t[keep]
+            n = len(pdf)
+            if not n:
+                return pdf
+            kstart = np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
+            starts = np.flatnonzero(kstart)
+            ends = np.concatenate((starts[1:], [n]))
+        # run boundaries: key change OR null-safe field value change
+        fs = pdf[field]
+        same_val = (fs.eq(fs.shift()) | (fs.isna() & fs.isna().shift(fill_value=False))).to_numpy(dtype=bool)
+        run_start = kstart | ~same_val
+        rstarts = np.flatnonzero(run_start)
+        rends = np.concatenate((rstarts[1:], [n]))
+        vals = fs.tolist()
+        cols = list(pdf.columns)
+        raw = _RawCols(pdf)
 
-        def _eq(a, b):
-            if a is None or b is None:
-                return a is None and b is None
-            if isinstance(a, float) and isinstance(b, float) and a != a and b != b:
-                return True
-            return a == b
+        parts: list = []  # ordered mix of (i, j) slices and DataFrames
 
-        i = 0
-        while i < n:
-            v = vals[i]
-            j = i + 1
-            while j < n and _eq(vals[j], v):
-                j += 1
-            if not (s["has"] and _eq(v, s["value"])):
-                # value changed: unconfirmed buffer is dropped
-                s.update(value=v, has=True, flip=int(t[i]),
-                         confirmed=False, buffer=[])
-            if not s["confirmed"]:
-                thresh = s["flip"] + dt_us
-                k = i
-                while k < j and t[k] <= thresh:
-                    k += 1
-                if k == j:  # run not yet stable: buffer the segment
-                    s["buffer"].extend(_row_ser(pdf, x) for x in range(i, j))
-                else:  # confirmed at row k: flush buffer + segment prefix
-                    s["confirmed"] = True
-                    buf = s["buffer"] + [_row_ser(pdf, x) for x in range(i, k)]
-                    s["buffer"] = []
-                    if buf:
-                        bdf = _revive_datetime_cols(
-                            pd.DataFrame(buf, columns=list(pdf.columns)), pdf
-                        )
-                        emit.append(bdf)
-                    emit.append(pdf.iloc[k:j])
+        def emit_slice(i, j):
+            if parts and isinstance(parts[-1], list) and parts[-1][1] == i:
+                parts[-1][1] = j  # coalesce adjacent confirmed slices
             else:
-                emit.append(pdf.iloc[i:j])
-            i = j
-        out = pd.concat(emit, ignore_index=True) if emit else None
-        return (_json.dumps(s),), out
+                parts.append([i, j])
 
-    return _keyed_batch_scan(df, by, time_col, "state STRING", (None,), batch_fn)
+        cur_key = None
+        st = None
+        for i, j in zip(rstarts.tolist(), rends.tolist()):
+            k = ks_arr[i]
+            if k != cur_key:
+                if cur_key is not None:
+                    carry[cur_key] = st
+                st = carry.get(k)
+                if st is None:
+                    # s = [max_us, has, value, flip_us, confirmed]
+                    st = {"s": [int(t[j - 1]), False, None, None, False],
+                          "b": None}
+                    # max over the FULL key segment was set above only
+                    # for existing states; find this key's segment end
+                    e0 = ends[np.searchsorted(starts, i, side="right") - 1]
+                    st["s"][0] = int(t[e0 - 1])
+                cur_key = k
+            v = vals[i]
+            if not (st["s"][1] and _eq(v, st["s"][2])):
+                st["s"][1] = True
+                st["s"][2] = _store(v)
+                st["s"][3] = int(t[i])
+                st["s"][4] = False
+                st["b"] = None
+            if not st["s"][4]:
+                thresh = st["s"][3] + dt_us
+                kk = i + int(np.searchsorted(t[i:j], thresh, side="right"))
+                if kk == j:  # run not yet stable: buffer the segment
+                    if st["b"] is None:
+                        st["b"] = {c: [] for c in cols}
+                    for c in cols:
+                        st["b"][c].extend(raw.slice_native(c, i, j))
+                else:  # confirmed at kk: flush buffer + whole segment
+                    st["s"][4] = True
+                    if st["b"] is not None and next(iter(st["b"].values())):
+                        bdf = pd.DataFrame(
+                            {c: st["b"][c] for c in cols}, columns=cols
+                        )
+                        parts.append(_revive_datetime_cols(bdf, pdf))
+                    st["b"] = None
+                    emit_slice(i, j)
+            else:
+                emit_slice(i, j)
+        if cur_key is not None:
+            carry[cur_key] = st
+        if not parts:
+            return pdf.iloc[0:0]
+        frames = [
+            pdf.iloc[p[0]:p[1]] if isinstance(p, list) else p for p in parts
+        ]
+        return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+
+    return _keyed_fold_scan(df, by, time_col, shards, fold)
 
 
 def stream_fixed_event_window(
@@ -1320,98 +1754,116 @@ def stream_fixed_event_window(
     by: Sequence[str],
     time_col: str = "time",
     fork_ttl_s: float | None = None,
-    gc_wall_s: float | None = None,
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming ``fixed-event-window`` (action.clj:233-262) with the
     reference's ``:fork-ttl`` semantics (stream_test.clj:331-408):
-    per-key buffer in state; every ``n`` buffered events flush as one
-    window row ``(by…, window_start, events)``.
+    per-key count buffer in state; every ``n`` buffered events flush
+    as one window row ``(by…, window_start, events)``.
 
-    Eviction is two-layered, matching the reference's by-fork GC:
-
-    - **gap eviction** (the reference's timer GC in its continuous
-      limit): an event arriving more than ``fork_ttl_s`` after the
-      key's previous event drops the stale partial buffer — the
-      window restarts from the newcomer.
-    - **gap eviction** uses the EVENT clock, exactly like the
-      reference (action.clj:1575-1600 compares fork times against
-      the incoming event's ``:time``). The reference's GC can also
-      sweep OTHER keys' idle forks when one key's event advances the
-      clock; per-key state can't see across keys, so that sweep maps
-      to the optional ``gc_wall_s`` **wall-clock timeout** — a
-      memory-bound backstop for keys that never speak again (a push
-      engine's wall clock tracks its event clock). It is NOT the
-      event-time watermark: a watermark makes Spark drop late rows
-      before the operator, which would break the reference's
-      out-of-order behavior.
+    **Gap eviction** uses the EVENT clock, exactly like the reference
+    (action.clj:1575-1600 compares fork times against the incoming
+    event's ``:time``): an event arriving more than ``fork_ttl_s``
+    after the key's previous event drops the stale partial buffer —
+    the window restarts from the newcomer. A silent key keeps its
+    partial buffer (at most n-1 rows) in state.
 
     Events are processed in event-time order within a micro-batch
     (per-event batches degrade gracefully to the reference's arrival
-    order, which its out-of-order deftest relies on).
+    order, which its out-of-order deftest relies on). Each key's
+    partial window carries COLUMNAR ({col: [...]}); batch rows are
+    referenced by position and serialize at most once — when they
+    emit into a window or remain buffered at batch end. ``shards``
+    picks the grouping (see ``_keyed_fold_scan``).
     """
-    import json as _json
-
+    import numpy as np
     import pandas as pd
 
     ttl_us = int(round(fork_ttl_s * 1_000_000)) if fork_ttl_s else None
     ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-
-    def _row_ser(pdf, i):
-        return {
-            k: _native(v.isoformat() if hasattr(v, "isoformat") else v)
-            for k, v in pdf.iloc[i].items()
-        }
-
-    ev_struct = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    by_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields if f.name in by
+    key_cols = list(by)
+    ev_struct = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
-    out_schema = f"{by_struct}, window_start double, events array<struct<{ev_struct}>>"
+    by_struct = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+        if f.name in by
+    )
+    out_schema = (
+        f"{by_struct}, window_start double, events array<struct<{ev_struct}>>"
+    )
 
-    def batch_fn(st, pdf):
-        last_us, buf_json = st
-        buf = _json.loads(buf_json) if buf_json else []
+    def fold(carry, ks, pdf):
+        cols = list(pdf.columns)
+        out_rows: list = []
+        m = len(pdf)
+        raw = _RawCols(pdf)
         t = _series_us(pdf[time_col])
-        windows = []
-        for i in range(len(pdf)):
-            ti = int(t[i])
-            if (
-                ttl_us is not None
-                and last_us is not None
-                and ti - last_us > ttl_us
-            ):
-                buf = []  # stale fork: GC dropped it before this event
-            buf.append(_row_ser(pdf, i))
-            last_us = ti
-            if len(buf) == n:
-                windows.append(buf)
-                buf = []
-        if not windows:
-            return (last_us, _json.dumps(buf)), None
-        keyvals = {c: pdf.iloc[0][c] for c in by}
-        rows = []
-        for w in windows:
-            evs = [_revive_ts_fields(e, ts_cols) for e in w]
-            first = evs[0][time_col]
-            start = (
-                first.timestamp()
-                if hasattr(first, "timestamp")
-                else float(first)
-            )
-            rows.append({**keyvals, "window_start": start, "events": evs})
-        out = pd.DataFrame(rows)
-        return (last_us, _json.dumps(buf)), out
+        ks_arr = np.asarray(ks, dtype=object)
+        starts = np.flatnonzero(
+            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
+        )
+        ends = np.concatenate((starts[1:], [m]))
 
-    return _keyed_batch_scan(
-        df,
-        by,
-        time_col,
-        "last_us BIGINT, buf STRING",
-        (None, None),
-        batch_fn,
-        state_ttl_s=gc_wall_s,
-        out_schema=out_schema,
-        ttl_clock="processing",
+        def revive(e):
+            return _revive_ts_fields(e, ts_cols)
+
+        for s0, e0 in zip(starts.tolist(), ends.tolist()):
+            k = ks_arr[s0]
+            st = carry.get(k)
+            if st is None:
+                last_us = None
+                buf: list = []
+            else:
+                last_us = st["l"]
+                bc = st["b"]
+                blen = len(next(iter(bc.values()))) if bc else 0
+                buf = [
+                    {c: bc[c][x] for c in cols} for x in range(blen)
+                ]
+            keyvals = {c: pdf.iloc[s0][c] for c in key_cols}
+            for i in range(s0, e0):
+                ti = int(t[i])
+                if (
+                    ttl_us is not None
+                    and last_us is not None
+                    and ti - last_us > ttl_us
+                ):
+                    buf = []  # stale fork: GC dropped it pre-event
+                buf.append(i)
+                last_us = ti
+                if len(buf) == n:
+                    evs = [
+                        revive(e if isinstance(e, dict)
+                               else raw.row(cols, e))
+                        for e in buf
+                    ]
+                    first = evs[0][time_col]
+                    start = (
+                        first.timestamp()
+                        if hasattr(first, "timestamp")
+                        else float(first)
+                    )
+                    out_rows.append(
+                        {**keyvals, "window_start": start, "events": evs}
+                    )
+                    buf = []
+            rest = [
+                e if isinstance(e, dict) else raw.row(cols, e)
+                for e in buf
+            ]
+            carry[k] = {
+                "l": last_us,
+                "b": {c: [e[c] for e in rest] for c in cols} if rest else {},
+            }
+        if not out_rows:
+            return pd.DataFrame(
+                columns=key_cols + ["window_start", "events"]
+            )
+        return pd.DataFrame(out_rows)
+
+    return _keyed_fold_scan(
+        df, by, time_col, shards, fold, out_schema=out_schema
     )
 
 
@@ -1420,73 +1872,56 @@ def stream_moving_event_window(
     n: int,
     by: Sequence[str],
     time_col: str = "time",
-    gc_wall_s: float | None = None,
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming ``moving-event-window`` (action.clj:1219-1246): on
     every event, emit the trailing ``n`` events of its key as an
     ``events`` array — the keyed-state sliding buffer, emitted
-    per-row like the batch twin's collect_list window. ``gc_wall_s``
-    bounds state for silent keys (wall-clock backstop)."""
-    import json as _json
-
-    import pandas as pd
+    per-row like the batch twin's collect_list window. Emission cost
+    is O(rows·n) dict lists (the output shape demands it). ``shards``
+    picks the grouping (see ``_keyed_fold_scan``)."""
+    import numpy as np
 
     ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-
-    def _row_ser(pdf, i):
-        return {
-            k: _native(v.isoformat() if hasattr(v, "isoformat") else v)
-            for k, v in pdf.iloc[i].items()
-        }
-
     ev_struct = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-        + f", events array<struct<{ev_struct}>>"
-    )
+    extra_out = f"events array<struct<{ev_struct}>>"
 
-    def _revive(e):
-        return _revive_ts_fields(e, ts_cols)
+    def fold(carry, ks, pdf):
+        m = len(pdf)
+        cols = list(pdf.columns)
+        events_col: list = [None] * m
+        raw = _RawCols(pdf)
+        ks_arr = np.asarray(ks, dtype=object)
+        starts = np.flatnonzero(
+            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
+        )
+        ends = np.concatenate((starts[1:], [m]))
 
-    def batch_fn(st, pdf):
-        (buf_json,) = st
-        buf = _json.loads(buf_json) if buf_json else []
-        events_col = []
-        for i in range(len(pdf)):
-            buf.append(_row_ser(pdf, i))
-            buf = buf[-n:]
-            events_col.append([_revive(e) for e in buf])
+        def revive(e):
+            return _revive_ts_fields(e, ts_cols)
+
+        for s0, e0 in zip(starts.tolist(), ends.tolist()):
+            k = ks_arr[s0]
+            bc = carry.get(k)
+            if bc:
+                blen = len(next(iter(bc.values())))
+                buf = [{c: bc[c][x] for c in cols} for x in range(blen)]
+            else:
+                buf = []
+            for i in range(s0, e0):
+                buf.append(raw.row(cols, i))
+                buf = buf[-n:]
+                events_col[i] = [revive(e) for e in buf]
+            carry[k] = {c: [e[c] for e in buf] for c in cols} if buf else {}
         out = pdf.copy()
         out["events"] = events_col
-        return (_json.dumps(buf),), out
+        return out
 
-    return _keyed_batch_scan(
-        df,
-        by,
-        time_col,
-        "buf STRING",
-        (None,),
-        batch_fn,
-        state_ttl_s=gc_wall_s,
-        out_schema=out_schema,
-        ttl_clock="processing",
+    return _keyed_fold_scan(
+        df, by, time_col, shards, fold, extra_out=extra_out
     )
-
-
-def stream_smin(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-) -> DataFrame:
-    """Streaming smin (action.clj:2774-2804): smax over the negated
-    metric, negated back — the stored-best state machinery is shared
-    and nulls pass through (-NULL = NULL)."""
-    neg = df.withColumn(metric_col, -F.col(metric_col))
-    out = stream_smax(neg, by, time_col, metric_col)
-    return out.withColumn(metric_col, -F.col(metric_col))
 
 
 def stream_ddt(
@@ -1495,38 +1930,53 @@ def stream_ddt(
     time_col: str = "time",
     metric_col: str = "metric",
     remove_neg: bool = False,
+    shards: int | None = None,
 ) -> DataFrame:
-    """Streaming ddt/ddt-pos (action.clj:1041-1083): keyed state
+    """Streaming ddt/ddt-pos (action.clj:1041-1083): per-key state
     (last_us, last_metric) carries the previous event across
-    micro-batches; the per-batch derivative is one vectorized
-    shift/diff. Null-metric events are skipped entirely (they never
-    become the new previous); zero time delta is skipped."""
+    micro-batches; the derivative is one vectorized diff over the
+    slice with the previous (t, metric) injected from the carry at
+    segment starts only — O(distinct keys) Python, O(rows) numpy.
+    Null-metric events are skipped entirely (they never become the
+    new previous); zero time delta is skipped. ``shards`` picks the
+    grouping (see ``_keyed_fold_scan``)."""
     import numpy as np
 
-    def batch_fn(s, pdf):
-        last_us, last_m = s
-        keep = pdf[metric_col].notna().to_numpy(dtype=bool)
-        pdf = pdf[keep].reset_index(drop=True)
+    def fold(carry, ks, pdf):
+        keepna = pdf[metric_col].notna().to_numpy(dtype=bool)
+        if not keepna.all():
+            pdf = pdf[keepna].reset_index(drop=True)
+            ks = [k for k, good in zip(ks, keepna.tolist()) if good]
         n = len(pdf)
         if not n:
-            return (last_us, last_m), None
+            return pdf
         t = _series_us(pdf[time_col]).astype("float64")
         m = pdf[metric_col].to_numpy(dtype="float64")
-        prev_t = np.concatenate(([last_us if last_us is not None else np.nan], t[:-1]))
-        prev_m = np.concatenate(([last_m if last_m is not None else np.nan], m[:-1]))
+        prev_t = np.concatenate(([np.nan], t[:-1]))
+        prev_m = np.concatenate(([np.nan], m[:-1]))
+        ks_arr = np.array(ks, dtype=object)
+        starts = np.flatnonzero(
+            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
+        )
+        for s in starts.tolist():
+            last = carry.get(ks_arr[s])
+            prev_t[s], prev_m[s] = (
+                (np.nan, np.nan) if last is None else (float(last[0]), float(last[1]))
+            )
         dt = (t - prev_t) / 1_000_000.0
         with np.errstate(divide="ignore", invalid="ignore"):
             diff = (m - prev_m) / dt
         ok = np.isfinite(diff)
         if remove_neg:
             ok &= diff >= 0
+        ends = np.concatenate((starts[1:] - 1, [n - 1]))
+        for s, e in zip(starts.tolist(), ends.tolist()):
+            carry[ks_arr[s]] = (int(t[e]), float(m[e]))
         out = pdf[ok].copy()
         out[metric_col] = diff[ok]
-        return (int(t[-1]), float(m[-1])), out
+        return out
 
-    return _keyed_batch_scan(
-        df, by, time_col, "last_us BIGINT, last_m DOUBLE", (None, None), batch_fn
-    )
+    return _keyed_fold_scan(df, by, time_col, shards, fold)
 
 
 def stream_coalesce(
@@ -1538,6 +1988,7 @@ def stream_coalesce(
     ttl_col: str = "ttl",
     state_col: str = "state",
     default_ttl_s: float = 120.0,
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming ``coalesce`` (action.clj:721-791): keep the latest
     event per ``fields`` tuple; every ``duration`` seconds of EVENT
@@ -1545,92 +1996,157 @@ def stream_coalesce(
     time), flush all kept non-expired events. Expiry follows
     event.clj:12-19: state == "expired" or age > ttl (default 120 s).
 
-    Keyed state carries {buffer, current_time, last_tick}; the
-    per-event recurrence is a Python loop — coalesce is an
-    alert-volume operator (one row per service×host per tick), never
-    a data-plane scan.
+    Without ``by`` this is the reference's single global coalesce:
+    one tick clock, one state group (``shards`` does not apply).
+    Each key's buffer carries COLUMNAR, with batch rows referenced by
+    POSITION until the end of the batch: the per-event loop touches
+    only scalars/tuples (tick clock, dict upsert, expiry compare) —
+    no dict-per-row serialization; JSON conversion happens once per
+    batch for the rows still buffered at its end, and emission is
+    two positional gathers (batch-sourced + carry-sourced) merged
+    back into flush order. ``shards`` picks the grouping (see
+    ``_keyed_fold_scan``).
     """
     import json as _json
 
+    import numpy as np
     import pandas as pd
 
     dur_us = int(round(duration_s * 1_000_000))
     default_ttl_us = int(round(default_ttl_s * 1_000_000))
-    has_ttl = ttl_col in df.columns
-    has_state = state_col in df.columns
+    has_ttl_col = ttl_col in df.columns
+    has_state_col = state_col in df.columns
 
-    def _row_ser(pdf, i):
-        return {
-            k: _native(v.isoformat() if hasattr(v, "isoformat") else v)
-            for k, v in pdf.iloc[i].items()
-        }
-
-    def _expired(row, t_us, ct_us):
-        if has_state and row.get(state_col) == "expired":
-            return True
-        ttl_us = default_ttl_us
-        if has_ttl and row.get(ttl_col) is not None:
-            ttl_us = int(round(float(row[ttl_col]) * 1_000_000))
-        return ct_us - t_us > ttl_us
-
-    def batch_fn(st, pdf):
-        (blob,) = st
-        s = _json.loads(blob) if blob else {"buffer": {}, "ct": 0, "lt": None}
+    def fold(carry, ks, pdf):
+        n = len(pdf)
         t = _series_us(pdf[time_col])
         null_t = pdf[time_col].isna().to_numpy(dtype=bool)
-        emitted: list[dict] = []
-        for i in range(len(pdf)):
+        cols = list(pdf.columns)
+        f_arrs = [pdf[f].tolist() for f in fields]
+        st_arr = pdf[state_col].tolist() if has_state_col else None
+        ttl_arr = (
+            pdf[ttl_col].to_numpy(dtype="float64", na_value=np.nan)
+            if has_ttl_col
+            else None
+        )
+
+        def batch_expired(i, ti, ct):
+            if st_arr is not None and st_arr[i] == "expired":
+                return True
+            ttl_us = default_ttl_us
+            if ttl_arr is not None and ttl_arr[i] == ttl_arr[i]:
+                ttl_us = int(round(float(ttl_arr[i]) * 1_000_000))
+            return ct - ti > ttl_us
+
+        def old_expired(store, idx, ti, ct):
+            if has_state_col and store[state_col][idx] == "expired":
+                return True
+            ttl_us = default_ttl_us
+            if has_ttl_col and store[ttl_col][idx] is not None:
+                ttl_us = int(round(float(store[ttl_col][idx]) * 1_000_000))
+            return ct - ti > ttl_us
+
+        ks_arr = np.asarray(ks, dtype=object)
+        raw = _RawCols(pdf)
+        emit: list = []  # (src 0=batch/1=old_of_key, row idx, store ref)
+        live: dict = {}  # key -> [ct, lt, buf{ftk: [src, idx, t_us]}, store]
+
+        def _load(k):
+            got = live.get(k)
+            if got is not None:
+                return got
+            c = carry.get(k)
+            if c is None:
+                cur = [0, None, {}, None]
+            else:
+                store = c["bc"]
+                buf = {
+                    fk: [1, x, c["bt"][x]] for x, fk in enumerate(c["bf"])
+                }
+                cur = [c["ct"], c["lt"], buf, store]
+            live[k] = cur
+            return cur
+
+        cur_key = None
+        cur = None
+        for i in range(n):
             if null_t[i]:
                 continue
+            k = ks_arr[i]
+            if k != cur_key:
+                cur = _load(k)
+                cur_key = k
             ti = int(t[i])
-            row = _row_ser(pdf, i)
-            s["ct"] = max(s["ct"], ti)
-            if _expired(row, ti, s["ct"]):
+            if ti > cur[0]:
+                cur[0] = ti
+            if batch_expired(i, ti, cur[0]):
                 continue
-            key = _json.dumps([row.get(f) for f in fields])
-
-            def _update(cur):
-                # e/most-recent?: the stored event wins ties
-                if cur is not None and cur["__t__"] >= ti:
-                    return cur
-                return {"__t__": ti, "row": row}
-
-            if s["lt"] is None:
-                s["buffer"][key] = _update(s["buffer"].get(key))
-                s["lt"] = ti
-            elif s["ct"] < s["lt"] + dur_us:
-                s["buffer"][key] = _update(s["buffer"].get(key))
-            else:
-                s["buffer"][key] = _update(s["buffer"].get(key))
-                alive = {
-                    k: v
-                    for k, v in s["buffer"].items()
-                    if not _expired(v["row"], v["__t__"], s["ct"])
-                }
-                s["buffer"] = alive
-                s["lt"] = s["ct"]
-                emitted.extend(v["row"] for v in alive.values())
-        out = None
-        if emitted:
-            # revive EVERY timestamp column, not just time_col — a
-            # timestamp-typed payload column must round-trip the JSON
-            # buffer too (ADVICE r8 #2's per-key sibling)
-            out = _revive_datetime_cols(
-                pd.DataFrame(emitted, columns=list(pdf.columns)), pdf
+            # _cell_native, not _native: a timestamp-typed fields
+            # column must isoformat — raw pd.Timestamp is not
+            # JSON-serializable (ADVICE r8 #2)
+            ftk = _json.dumps([_cell_native(a[i]) for a in f_arrs])
+            buf = cur[2]
+            ent = buf.get(ftk)
+            # e/most-recent?: the stored event wins ties
+            if ent is None or ent[2] < ti:
+                buf[ftk] = [0, i, ti]
+            if cur[1] is None:
+                cur[1] = ti
+            elif cur[0] >= cur[1] + dur_us:
+                alive = {}
+                for fk, e in buf.items():
+                    if e[0] == 0:
+                        dead = batch_expired(e[1], e[2], cur[0])
+                    else:
+                        dead = old_expired(cur[3], e[1], e[2], cur[0])
+                    if not dead:
+                        alive[fk] = e
+                        emit.append((e[0], e[1], cur[3]))
+                cur[2] = alive
+                cur[1] = cur[0]
+        # rebuild each touched key's carry: surviving buffer rows go
+        # columnar (batch-sourced rows pay JSON conversion HERE, once)
+        for k, cur in live.items():
+            buf = cur[2]
+            if not buf:
+                carry[k] = {"ct": cur[0], "lt": cur[1], "bf": [], "bt": [],
+                            "bc": {c: [] for c in cols}}
+                continue
+            bf, bt = [], []
+            bc: dict = {c: [] for c in cols}
+            for fk, e in buf.items():
+                bf.append(fk)
+                bt.append(e[2])
+                if e[0] == 0:
+                    i = e[1]
+                    for c in cols:
+                        bc[c].append(raw.cell(c, i))
+                else:
+                    store = cur[3]
+                    for c in cols:
+                        bc[c].append(store[c][e[1]])
+            carry[k] = {"ct": cur[0], "lt": cur[1], "bf": bf, "bt": bt, "bc": bc}
+        if not emit:
+            return pdf.iloc[0:0]
+        b_pos = [p for p, e in enumerate(emit) if e[0] == 0]
+        o_pos = [p for p, e in enumerate(emit) if e[0] == 1]
+        frames = []
+        if b_pos:
+            frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
+        if o_pos:
+            odf = pd.DataFrame(
+                {c: [emit[p][2][c][emit[p][1]] for p in o_pos] for c in cols},
+                columns=cols,
             )
-        return (_json.dumps(s),), out
+            frames.append(_revive_datetime_cols(odf, pdf))
+        if len(frames) == 1:
+            return frames[0]
+        out = pd.concat(frames, ignore_index=True)
+        # concat row q holds emit position (b_pos+o_pos)[q]; restore
+        # flush order by sorting rows on that position
+        return out.iloc[np.argsort(np.asarray(b_pos + o_pos), kind="stable")]
 
-    if not by:
-        # single global coalesce (the reference's unkeyed form): one
-        # synthetic key -> one state group, same as the single-node
-        # reference. Alert-rate traffic; supply `by` to shard.
-        keyed = df.withColumn("__g__", F.lit(0))
-        out = _keyed_batch_scan(
-            keyed, ["__g__"], time_col, "state STRING", (None,), batch_fn,
-            out_schema=keyed.schema,
-        )
-        return out.drop("__g__")
-    return _keyed_batch_scan(df, by, time_col, "state STRING", (None,), batch_fn)
+    return _keyed_fold_scan(df, by, time_col, shards, fold)
 
 
 # -- windowed aggregation twins (watermark + tumbling window) ---------------
@@ -1794,12 +2310,12 @@ def stream_project(
     return _wfinish(_wgroup(df, duration_s, delay_s, by, time_col).agg(*aggs))
 
 
+
 def stream_moving_time_window(
     df: DataFrame,
     duration_s: float,
     by: Sequence[str],
     time_col: str = "time",
-    gc_wall_s: float | None = None,
 ) -> DataFrame:
     """Streaming ``moving-time-window`` (action.clj:2596-2639): per
     event, all of its key's events within the trailing ``duration``
@@ -1812,12 +2328,6 @@ def stream_moving_time_window(
     dur_us = int(round(duration_s * 1_000_000))
     ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
 
-    def _row_ser(pdf, i):
-        return {
-            k: _native(v.isoformat() if hasattr(v, "isoformat") else v)
-            for k, v in pdf.iloc[i].items()
-        }
-
     ev_struct = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
@@ -1826,34 +2336,25 @@ def stream_moving_time_window(
         + f", events array<struct<{ev_struct}>>"
     )
 
-    def _revive(e):
-        return _revive_ts_fields(e, ts_cols)
-
     def batch_fn(st, pdf):
         (buf_json,) = st
         buf = _json.loads(buf_json) if buf_json else []  # [(t_us, row)]
         t = _series_us(pdf[time_col])
+        raw = _RawCols(pdf)
+        cols = list(pdf.columns)
         events_col = []
         for i in range(len(pdf)):
             ti = int(t[i])
-            buf.append((ti, _row_ser(pdf, i)))
+            buf.append((ti, raw.row(cols, i)))
             lo = ti - dur_us + 1
             buf = [(tb, e) for tb, e in buf if tb >= lo]
-            events_col.append([_revive(e) for _, e in buf])
+            events_col.append([_revive_ts_fields(e, ts_cols) for _, e in buf])
         out = pdf.copy()
         out["events"] = events_col
         return (_json.dumps(buf),), out
 
     return _keyed_batch_scan(
-        df,
-        by,
-        time_col,
-        "buf STRING",
-        (None,),
-        batch_fn,
-        state_ttl_s=gc_wall_s,
-        out_schema=out_schema,
-        ttl_clock="processing",
+        df, by, time_col, "buf STRING", (None,), batch_fn, out_schema=out_schema
     )
 
 
@@ -1864,43 +2365,56 @@ def stream_expired(
     ttl_col: str | None = "ttl",
     state_col: str | None = "state",
     keep_expired: bool = True,
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming ``expired``/``not-expired`` (action.clj:427-474):
     the stream clock is the running max event time PER KEY (the
     reference's clock is per-stream; a key's fork owns its clock
     downstream of `by`), carried in keyed state; expiry follows
     event.clj:12-19 (state == "expired" or age > coalesce(ttl, 120)).
+    The whole slice evaluates in ONE vectorized pass — segment starts
+    seed each key's accumulate from the carry, segment ends write it
+    back; Python work is O(distinct keys in batch). ``shards`` picks
+    the grouping (see ``_keyed_fold_scan``).
     """
     import numpy as np
 
     has_ttl = ttl_col is not None and ttl_col in df.columns
     has_state = state_col is not None and state_col in df.columns
 
-    def batch_fn(s, pdf):
-        (mx,) = s
+    def fold(carry, ks, pdf):
+        n = len(pdf)
         has_time = pdf[time_col].notna().to_numpy(dtype=bool)
         t = _series_us(pdf[time_col]).astype("float64")
         t = np.where(has_time, t, -np.inf)  # null time: no age, no clock
-        run = np.maximum.accumulate(t)
-        if mx is not None:
-            run = np.maximum(run, float(mx))
+        ks_arr = np.asarray(ks, dtype=object)
+        starts = np.flatnonzero(
+            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
+        )
+        ends = np.concatenate((starts[1:], [n]))
+        run = np.empty(n, dtype="float64")
+        for s0, e0 in zip(starts.tolist(), ends.tolist()):
+            k = ks_arr[s0]
+            seg = np.maximum.accumulate(t[s0:e0])
+            mx = carry.get(k)
+            if mx is not None:
+                seg = np.maximum(seg, float(mx))
+            run[s0:e0] = seg
+            fin = seg[np.isfinite(seg)]
+            if len(fin):
+                carry[k] = float(fin[-1])
         age_s = (run - t) / 1_000_000.0
         if has_ttl:
             ttl = pdf[ttl_col].astype("float64").fillna(120.0).to_numpy()
         else:
-            ttl = np.full(len(pdf), 120.0)
+            ttl = np.full(n, 120.0)
         # null time ⇒ not expired-by-age (batch twin's null-safe rule)
         exp = (age_s > ttl) & has_time
         if has_state:
             exp |= (pdf[state_col] == "expired").to_numpy(dtype=bool)
-        out = pdf[exp if keep_expired else ~exp]
-        finite = run[np.isfinite(run)]
-        new_mx = float(finite[-1]) if len(finite) else mx
-        return (new_mx,), out
+        return pdf[exp if keep_expired else ~exp]
 
-    return _keyed_batch_scan(
-        df, by, time_col, "mx DOUBLE", (None,), batch_fn
-    )
+    return _keyed_fold_scan(df, by, time_col, shards, fold)
 
 
 def stream_sessionize(
@@ -1979,7 +2493,7 @@ def stream_zscore(
     metric_col: str = "metric",
     min_n: int = 2,
     out: str = "zscore",
-    state_ttl_s: float | None = None,
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming twin of :func:`mirabelle_spark.operators.stateful.zscore`:
     per event, the metric's deviation from the trailing ``window_s``
@@ -1998,558 +2512,9 @@ def stream_zscore(
     peer arriving later is not retroactively included, the standard
     trade of every streaming twin here, cf. stream_moving_time_window).
 
-    Cost: O(1) amortized per event (deque append + evict, two decimal
+    Cost: O(1) amortized per event (append + evict, two decimal
     adds/subs); state is bounded by events-per-window per key.
-    ``state_ttl_s`` evicts idle keys (fork GC)."""
-    import json as _json
-    import math
-    from collections import deque
-    from decimal import Decimal, localcontext
-
-    import numpy as np
-    import pandas as pd
-
-    win_us = int(round(window_s * 1_000_000))
-
-    def batch_fn(st, pdf):
-        (sj,) = st
-        if sj:
-            d = _json.loads(sj)
-            buf = deque(
-                (t, None if a is None else Decimal(a), None if b is None else Decimal(b))
-                for t, a, b in d["b"]
-            )
-            s1, s2 = Decimal(d["s1"]), Decimal(d["s2"])
-            # pre-r8 checkpoints carried no term counters: every
-            # stored term was non-NULL then, so recompute from buf
-            c1 = d.get("c1", sum(1 for _, a, _b in buf if a is not None))
-            c2 = d.get("c2", sum(1 for _, _a, b in buf if b is not None))
-        else:
-            buf, s1, s2, c1, c2 = deque(), Decimal(0), Decimal(0), 0, 0
-        t = _series_us(pdf[time_col])
-        vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        zs = np.full(len(pdf), np.nan)
-        with localcontext() as ctx:
-            ctx.prec = _ZSCORE_PREC
-            for i in range(len(pdf)):
-                ti = int(t[i])
-                v = vals[i]
-                m = 0.0 if v != v else float(v)
-                q1, q2 = _zscore_q9(m), _zscore_q9(m * m)
-                buf.append((ti, q1, q2))
-                if q1 is not None:
-                    s1 += q1
-                    c1 += 1
-                if q2 is not None:
-                    s2 += q2
-                    c2 += 1
-                lo = ti - win_us
-                while buf and buf[0][0] < lo:
-                    _, a, b = buf.popleft()
-                    if a is not None:
-                        s1 -= a
-                        c1 -= 1
-                    if b is not None:
-                        s2 -= b
-                        c2 -= 1
-                n = len(buf)
-                if n >= min_n and v == v and c1 and c2:
-                    nd = float(n)
-                    mean = float(s1) / nd
-                    var = max(float(s2) / nd - mean * mean, 0.0)
-                    if var > 0.0:
-                        zs[i] = (float(v) - mean) / math.sqrt(var)
-        res = pdf.copy()
-        res[out] = pd.array(zs, dtype="float64")
-        sj2 = _json.dumps(
-            {
-                "b": [
-                    [tt, None if a is None else str(a), None if b is None else str(b)]
-                    for tt, a, b in buf
-                ],
-                "s1": str(s1),
-                "s2": str(s2),
-                "c1": c1,
-                "c2": c2,
-            }
-        )
-        return (sj2,), res
-
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-        + f", {out} double"
-    )
-    return _keyed_batch_scan(
-        df,
-        by,
-        time_col,
-        "buf STRING",
-        (None,),
-        batch_fn,
-        state_ttl_s=state_ttl_s,
-        out_schema=out_schema,
-        ttl_clock="processing",
-    )
-
-# -- sharded keyed state (r7) ----------------------------------------------
-# applyInPandasWithState calls the Python state fn once per KEY per
-# micro-batch; at 10^6 distinct keys the interpreter round-trips —
-# not the fold — dominate (PERF §39: ewma 7.9k ev/s, cond_dt 5.6k).
-# Sharding the GROUP key to pmod(xxhash64(keys), shards) with one
-# carry map per shard collapses 10^6 calls to `shards`, while the
-# fold still runs per ORIGINAL key: the shard slice is sorted by
-# (key, time) and the carry resets at key boundaries, so each key
-# sees exactly the per-key twin's operation sequence (bit-exact
-# parity pytests). Trades: the whole shard map round-trips per batch
-# (right when most keys are touched each batch; for sparse-update
-# workloads stay per-key), and there is no per-key TTL inside a
-# shard (state is bounded by key cardinality / shards).
-
-_SHARD_COL = "__shard__"
-_NULL_KEY = "\x00null"
-_KEY_SEP = "\x1f"
-
-# stream_ewma_sharded: key runs longer than this take the scalar
-# loop — the vectorized stepper costs O(max run) numpy dispatches
-# per batch, so one hot key must not set the step count for the
-# whole shard. At the tier's design point (high cardinality, short
-# runs) every run is far below this.
-_EWMA_VEC_CAP = 512
-
-
-def _shard_key_strings(pdf, key_cols, key_dtypes):
-    """Composite string key per row (JSON-map-safe); nulls fold
-    under a sentinel distinct from any real value, matching the
-    per-key twins' null-group semantics.
-
-    ``key_dtypes`` (Spark simpleString per key col) makes the string
-    TYPE-STABLE across micro-batches: Arrow hands an int64 slice
-    that contains any NULL to pandas as float64, so a bare str(v)
-    would serialize the same key as "7" in one batch and "7.0" in
-    the next — silently resetting its state. Integral Spark types
-    therefore format through int(v); everything else through str.
-
-    INJECTIVE under adversarial string values: a value containing
-    the separator or the escape byte is escaped (\\x00 -> \\x00"0",
-    \\x1f -> \\x00"1") before joining, so escaped values never
-    contain a bare separator and can never spell the null sentinel
-    (whose second byte 'n' follows \\x00 only in the sentinel) —
-    two distinct key tuples can't alias one state slot. Non-string
-    key types (numeric formatting) never produce either byte, so
-    the common path pays one containment check per value."""
-
-    def esc(s):
-        if "\x00" in s or _KEY_SEP in s:
-            return s.replace("\x00", "\x00" + "0").replace(_KEY_SEP, "\x00" + "1")
-        return s
-
-    def conv_for(dtype):
-        if dtype in ("tinyint", "smallint", "int", "bigint", "long"):
-            return lambda v: str(int(v))
-        return lambda v: esc(str(v))
-
-    convs = [conv_for(t) for t in key_dtypes]
-    if len(key_cols) == 1:
-        col, conv = pdf[key_cols[0]], convs[0]
-        return [(_NULL_KEY if v is None or v != v else conv(v)) for v in col.tolist()]
-    cols = [pdf[c].tolist() for c in key_cols]
-    return [
-        _KEY_SEP.join(
-            _NULL_KEY if v is None or v != v else conv(v)
-            for conv, v in zip(convs, row)
-        )
-        for row in zip(*cols)
-    ]
-
-
-def _sharded_keyed_batch_scan(
-    df, by, time_col, shards, shard_fold, extra_out=None, state_ttl_s=None,
-    out_schema=None,
-):
-    """Shared shell for the sharded twins: group on the shard id,
-    state = one JSON carry map for the shard's keys, and per batch
-    call ``shard_fold(carry, ks, pdf)`` with the shard slice sorted
-    by (key, time) (stable on top of _keyed_batch_scan's time sort)
-    and the shard column dropped; ``ks`` is the per-row key string.
-    ``shard_fold`` mutates ``carry`` and returns the output rows.
-    ``extra_out`` appends DDL columns the fold adds (e.g. zscore).
-
-    ``state_ttl_s`` is the fork GC INSIDE the shard map (the
-    reference's :fork-ttl at per-key grain, which shard-level
-    GroupState timeouts cannot express): the shell tracks each key's
-    last event time next to the carry and, after the fold, drops
-    keys idle longer than the ttl relative to the shard's event
-    clock (its running max event time). An evicted key's next event
-    starts fresh — identical semantics to the per-key twins'
-    eviction — and shard state stays bounded by the ACTIVE key set
-    instead of the ever-seen key set."""
-    import json as _json
-
-    key_cols = list(by)
-    dtypes = dict(df.dtypes)
-    key_dtypes = [dtypes[c] for c in key_cols]
-    src = df.withColumn(
-        _SHARD_COL,
-        F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(shards)),
-    )
-    if out_schema is None:
-        # default: input columns (+ extra_out appendix); a fold whose
-        # rows are shaped differently (window emission) passes its
-        # own DDL
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-        )
-        if extra_out:
-            out_schema += f", {extra_out}"
-    ttl_us = int(round(state_ttl_s * 1_000_000)) if state_ttl_s else None
-
-    def batch_fn(s, pdf):
-        (carry_json,) = s
-        blob = _json.loads(carry_json) if carry_json else {}
-        carry = blob.get("c", {})
-        seen = blob.get("t", {})
-        pdf = pdf.sort_values(key_cols, kind="mergesort").drop(columns=[_SHARD_COL])
-        ks = _shard_key_strings(pdf, key_cols, key_dtypes)
-        if ttl_us is not None and len(pdf):
-            import numpy as np
-
-            tv = _series_us(pdf[time_col])
-            ks_arr = np.array(ks, dtype=object)
-            starts = np.flatnonzero(
-                np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            )
-            ends = np.concatenate((starts[1:] - 1, [len(ks) - 1]))
-            # restart rule BEFORE the fold: a key whose gap since its
-            # last event exceeds the ttl folds from scratch (exactly
-            # the per-key twins' event-clock eviction)
-            for sidx in starts.tolist():
-                k = ks_arr[sidx]
-                prev = seen.get(k)
-                if prev is not None and int(tv[sidx]) - prev > ttl_us:
-                    seen.pop(k, None)
-                    carry.pop(k, None)
-            out = shard_fold(carry, ks, pdf)
-            # memory bound AFTER the fold: keys idle past the ttl on
-            # the shard's event clock drop even if they never return
-            for sidx, e in zip(starts.tolist(), ends.tolist()):
-                k = ks_arr[sidx]
-                t_last = int(tv[e])
-                prev = seen.get(k)
-                seen[k] = t_last if prev is None else max(prev, t_last)
-            cutoff = max(seen.values()) - ttl_us
-            for k in [k for k, t in seen.items() if t < cutoff]:
-                seen.pop(k, None)
-                carry.pop(k, None)
-        else:
-            out = shard_fold(carry, ks, pdf)
-        return (_json.dumps({"c": carry, "t": seen} if ttl_us else {"c": carry}),), out
-
-    return _keyed_batch_scan(
-        src, [_SHARD_COL], time_col, "carry STRING", (None,), batch_fn,
-        out_schema=out_schema,
-    )
-
-
-def stream_ewma_sharded(
-    df: DataFrame,
-    r: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    shards: int = 64,
-    state_ttl_s: float | None = None,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_ewma`: same double
-    fold, bit-identical per key (parity pytest vs the batch
-    operator), through the sharded shell above. PERF §39: 214k ev/s
-    at 1M keys vs 7.9k per-key — 27×, above the JVM windowed agg at
-    that cardinality.
-
-    r17 (guide §4.2; VERDICT r16 ask #8): the fold is VECTORIZED
-    across keys instead of looping per row — a clean-machine cost
-    split measured the per-row Python loop at ~62 % of the whole
-    tier (2M events / 1M keys: 6.34 s real vs 2.40 s with a
-    passthrough fold). The shard slice arrives sorted by (key,
-    time), so key runs are contiguous segments; step j updates
-    every key's j-th event at once with the SAME scalar expression
-    ``r*v + (1.0-r)*m`` (numpy float64 scalar ops are IEEE doubles
-    — each key's value sequence sees the identical op order as the
-    scalar loop, pinned by the existing batch-parity pytest). A NaN
-    event emits NaN and leaves the key's state unchanged, exactly
-    the scalar branch. Keys whose run exceeds ``_EWMA_VEC_CAP``
-    (one hot key would make the step loop O(run) numpy dispatches)
-    take the original scalar loop over just their rows — identical
-    semantics, never slower than the old path."""
-    import numpy as np
-    import pandas as pd
-
-    cap = _EWMA_VEC_CAP
-
-    def _scalar_run(carry, k, vals, out, lo, hi):
-        m = carry.get(k)
-        for i in range(lo, hi):
-            v = vals[i]
-            if v != v:
-                out[i] = np.nan
-            else:
-                m = r * v + (1.0 - r) * (m if m is not None else 0.0)
-                out[i] = m
-        if m is not None:
-            carry[k] = m
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        out = np.empty(n)
-        if n:
-            ks_arr = np.asarray(ks, dtype=object)
-            starts = np.flatnonzero(
-                np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            )
-            lens = np.diff(np.concatenate((starts, [n])))
-            short = lens <= cap
-            s_starts = starts[short]
-            s_lens = lens[short]
-            if s_starts.size:
-                keys_list = ks_arr[s_starts].tolist()
-                m0 = [carry.get(k) for k in keys_list]
-                seen = np.array([v is not None for v in m0], dtype=bool)
-                m = np.array(
-                    [v if v is not None else 0.0 for v in m0],
-                    dtype=np.float64,
-                )
-                # length-descending order → the keys still active at
-                # step j are a prefix; total work is Σ lens, no padding
-                order = np.argsort(-s_lens, kind="stable")
-                s_starts = s_starts[order]
-                s_lens = s_lens[order]
-                m = m[order]
-                seen = seen[order]
-                # active count per step: s_lens sorted desc, so keys
-                # with len > j form the prefix
-                for j in range(int(s_lens[0])):
-                    a = int(np.searchsorted(-s_lens, -(j + 1), side="right"))
-                    pos = s_starts[:a] + j
-                    v = vals[pos]
-                    real = v == v
-                    stepped = r * v + (1.0 - r) * m[:a]
-                    m[:a] = np.where(real, stepped, m[:a])
-                    out[pos] = np.where(real, stepped, np.nan)
-                    seen[:a] |= real
-                for i in np.flatnonzero(seen).tolist():
-                    carry[ks_arr[s_starts[i]]] = float(m[i])
-            if not short.all():
-                vl = vals.tolist()
-                for si in np.flatnonzero(~short).tolist():
-                    lo = int(starts[si])
-                    _scalar_run(
-                        carry, ks_arr[lo], vl, out, lo, lo + int(lens[si])
-                    )
-        res = pdf.copy()
-        res[metric_col] = pd.array(out, dtype="float64")
-        return res
-
-    return _sharded_keyed_batch_scan(
-        df, by, time_col, shards, shard_fold, state_ttl_s=state_ttl_s
-    )
-
-
-def stream_cond_dt_sharded(
-    df: DataFrame,
-    cond,
-    dt_s: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_cond_dt` — the same
-    (ok, flip_us) recurrence per key, condition vectorized once over
-    the whole shard slice, identical output rows to the per-key twin
-    (parity pytest). PERF §39: 552k ev/s at 1M keys vs 5.6k per-key
-    (98×); 1.73M ev/s at 10M events / 10k keys — at or above the
-    reference's ~1M ev/s/node lineage claim."""
-    import numpy as np
-
-    dt_us = int(round(dt_s * 1_000_000))
-    if callable(cond):
-        def valid_series(pdf):
-            return pdf.apply(cond, axis=1).to_numpy(dtype=bool)
-    else:
-        from mirabelle_spark.conditions import compile_condition_pandas
-
-        _pred = compile_condition_pandas(cond)
-
-        def valid_series(pdf):
-            return _pred(pdf).to_numpy(dtype=bool)
-
-    def shard_fold(carry, ks, pdf):
-        tv = _series_us(pdf[time_col])
-        valid = valid_series(pdf)
-        keep = np.empty(len(tv), dtype=bool)
-        unset = object()
-        prev = unset
-        ok, flip = False, None
-        for i, (k, t, va) in enumerate(zip(ks, tv.tolist(), valid.tolist())):
-            if k != prev:
-                if prev is not unset:
-                    carry[prev] = (ok, flip)
-                ok, flip = carry.get(k, (False, None))
-                prev = k
-            if va and not ok:
-                ok, flip = True, t
-            elif not va:
-                ok, flip = False, None
-            keep[i] = va and ok and t > flip + dt_us
-        if prev is not unset:
-            carry[prev] = (ok, flip)
-        return pdf[keep]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_changed_sharded(
-    df: DataFrame,
-    fieldname: str,
-    by: Sequence[str],
-    time_col: str = "time",
-    init=None,
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_changed`: the shard
-    slice compares via ONE vectorized shift — only the per-key
-    SEGMENT STARTS (first row of each key in the batch) read the
-    carry map, and only segment ends write it, so the Python work is
-    O(distinct keys in batch), not O(rows). Null-safe compare and
-    :init semantics identical to the per-key twin (parity pytest).
-
-    The carried last-value must survive the shard map's JSON round
-    trip: timestamp fields encode as isoformat (revived to
-    pd.Timestamp for the compare), binary as hex; JSON-native types
-    pass through. Other field dtypes (decimal, arrays) raise a named
-    error up front — use the per-key twin's typed state for those."""
-    import numpy as np
-    import pandas as pd
-
-    dtype = dict(df.dtypes)[fieldname]
-    is_ts = dtype in ("timestamp", "timestamp_ntz")
-    is_bin = dtype == "binary"
-    # exact simpleString names, not prefixes: 'int' as a prefix would
-    # also admit 'interval day to second', whose timedelta then fails
-    # at runtime inside json.dumps instead of this up-front error
-    if not (is_ts or is_bin) and dtype not in (
-        "string", "boolean", "double", "float", "tinyint",
-        "smallint", "int", "bigint", "long",
-    ):
-        raise NotImplementedError(
-            f"stream_changed_sharded cannot JSON-carry field dtype "
-            f"{dtype!r}; use the per-key stream_changed (typed state)"
-        )
-
-    def enc(v):
-        v = _native(v.isoformat() if is_ts and v is not None and v == v else v)
-        if is_bin and v is not None:
-            return bytes(v).hex()
-        return v
-
-    def dec(v):
-        if v is None:
-            return None
-        if is_ts:
-            return pd.Timestamp(v)
-        if is_bin:
-            return bytes.fromhex(v)
-        return v
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        if not n:
-            return pdf
-        vals = pdf[fieldname]
-        prev = vals.shift(1)
-        ks_arr = np.array(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        start_keys = ks_arr[starts].tolist()
-        # ONE positional gather/scatter per batch — per-element .iloc
-        # writes cost more than the whole fold at 1-row segments
-        prev.iloc[starts] = [dec(carry.get(k, enc(init))) for k in start_keys]
-        same = (vals == prev) | (vals.isna() & prev.isna())
-        ends = np.concatenate((starts[1:] - 1, [n - 1]))
-        for k, v in zip(start_keys, vals.iloc[ends].tolist()):
-            carry[k] = enc(v)
-        return pdf[~same.to_numpy(dtype=bool)]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_ddt_sharded(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    remove_neg: bool = False,
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_ddt`: the derivative is
-    one vectorized diff over the shard slice with the previous
-    (t, metric) injected from the carry map at segment starts only —
-    O(distinct keys) Python, O(rows) numpy. Null-metric events are
-    dropped before the shift exactly like the per-key twin, so they
-    never become the previous sample."""
-    import numpy as np
-
-    def shard_fold(carry, ks, pdf):
-        keepna = pdf[metric_col].notna().to_numpy(dtype=bool)
-        if not keepna.all():
-            pdf = pdf[keepna].reset_index(drop=True)
-            ks = [k for k, good in zip(ks, keepna.tolist()) if good]
-        n = len(pdf)
-        if not n:
-            return pdf
-        t = _series_us(pdf[time_col]).astype("float64")
-        m = pdf[metric_col].to_numpy(dtype="float64")
-        prev_t = np.concatenate(([np.nan], t[:-1]))
-        prev_m = np.concatenate(([np.nan], m[:-1]))
-        ks_arr = np.array(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        for s in starts.tolist():
-            last = carry.get(ks_arr[s])
-            prev_t[s], prev_m[s] = (
-                (np.nan, np.nan) if last is None else (float(last[0]), float(last[1]))
-            )
-        dt = (t - prev_t) / 1_000_000.0
-        with np.errstate(divide="ignore", invalid="ignore"):
-            diff = (m - prev_m) / dt
-        ok = np.isfinite(diff)
-        if remove_neg:
-            ok &= diff >= 0
-        ends = np.concatenate((starts[1:] - 1, [n - 1]))
-        for s, e in zip(starts.tolist(), ends.tolist()):
-            carry[ks_arr[s]] = (int(t[e]), float(m[e]))
-        out = pdf[ok].copy()
-        out[metric_col] = diff[ok]
-        return out
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_zscore_sharded(
-    df: DataFrame,
-    window_s: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    min_n: int = 2,
-    out: str = "zscore",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_zscore`: the carry map
-    holds each key's trailing-window triples and decimal moment sums
-    (identical quantization and fold order — bit-exact parity with
-    the per-key twin and the batch range frame on in-order input)."""
+    ``shards`` picks the grouping (see ``_keyed_fold_scan``)."""
     import math
     from decimal import Decimal, localcontext
 
@@ -2558,7 +2523,7 @@ def stream_zscore_sharded(
 
     win_us = int(round(window_s * 1_000_000))
 
-    def shard_fold(carry, ks, pdf):
+    def fold(carry, ks, pdf):
         t = _series_us(pdf[time_col])
         vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
         zs = np.full(len(pdf), np.nan)
@@ -2647,52 +2612,9 @@ def stream_zscore_sharded(
         res[out] = pd.array(zs, dtype="float64")
         return res
 
-    return _sharded_keyed_batch_scan(
-        df, by, time_col, shards, shard_fold, extra_out=f"{out} double"
+    return _keyed_fold_scan(
+        df, by, time_col, shards, fold, extra_out=f"{out} double"
     )
-
-
-def stream_throttle_sharded(
-    df: DataFrame,
-    count: int,
-    duration_s: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_throttle`: the same
-    anchored (anchor_us, n) recurrence per key through the sharded
-    shell — `shards` Python calls per micro-batch instead of one per
-    key; identical kept rows (parity pytest)."""
-    import numpy as np
-
-    dur_us = int(round(duration_s * 1_000_000))
-
-    def shard_fold(carry, ks, pdf):
-        tv = _series_us(pdf[time_col])
-        keep = np.empty(len(tv), dtype=bool)
-        unset = object()
-        prev = unset
-        anchor, n = None, 0
-        for i, (k, t) in enumerate(zip(ks, tv.tolist())):
-            if k != prev:
-                if prev is not unset:
-                    carry[prev] = (anchor, n)
-                anchor, n = carry.get(k, (None, 0))
-                prev = k
-            if anchor is None or t >= anchor + dur_us:
-                anchor, n = t, 1
-                keep[i] = True
-            elif n < count:
-                n += 1
-                keep[i] = True
-            else:
-                keep[i] = False
-        if prev is not unset:
-            carry[prev] = (anchor, n)
-        return pdf[keep]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
 
 
 def stream_smax_jvm(
@@ -2705,18 +2627,18 @@ def stream_smax_jvm(
     aggregation ``max(struct(metric, -t, row))`` — scalar-struct
     state in Spark's own state store, NO Python on the path at all.
 
-    Emission grain is the trade vs :func:`stream_smax`: the per-key
-    twin forwards the best-so-far event for EVERY input event
+    Emission grain is the trade vs :func:`stream_smax`, which
+    forwards the best-so-far event for EVERY input event
     (action.clj:2742-2772's per-event Riemann semantics); this tier
     emits one best-so-far row per key per micro-batch that touched
     the key (update output mode) — at 1M+ hot keys that is the
     emission grain an alert consumer can absorb anyway, and the last
     update per key is bit-equal to the batch twin's final best
     (parity pytest). Tie-breaks deterministically: strictly greater
-    metric wins, then the EARLIEST event (the per-key twin's
+    metric wins, then the EARLIEST event (stream_smax's
     first-winner-on-ties rule under time-ordered arrival); a NULL
     metric never beats a non-null one (struct ordering sorts nulls
-    lowest), diverging from the per-key twin's "a null first event
+    lowest), diverging from stream_smax's "a null first event
     occupies the slot" edge.
 
     State per key is one struct row (bounded by key cardinality, no
@@ -2744,7 +2666,7 @@ def stream_smin_jvm(
     metric_col: str = "metric",
 ) -> DataFrame:
     """Pure-JVM smin tier: :func:`stream_smax_jvm` over the negated
-    metric, negated back (the same composition as the per-key
+    metric, negated back (the same composition as
     :func:`stream_smin`; -NULL = NULL so null metrics still lose)."""
     neg = df.withColumn(metric_col, -F.col(metric_col))
     out = stream_smax_jvm(neg, by, time_col, metric_col)
@@ -2752,13 +2674,12 @@ def stream_smin_jvm(
 
 
 def _cell_native(v):
-    """One buffered cell → JSON-able (timestamps to isoformat — the
-    per-key twins' _row_ser rule, applied per value)."""
+    """One buffered cell → JSON-able (timestamps to isoformat)."""
     return _native(v.isoformat() if hasattr(v, "isoformat") else v)
 
 
 class _RawCols:
-    """Cell access for the sharded row-buffer folds, adaptive to the
+    """Cell access for the row-buffer folds, adaptive to the
     touch density the batch size implies. ``pdf[c].iloc[i]`` per
     touch pays a Series lookup + slice object; two regimes fix it:
 
@@ -2819,640 +2740,3 @@ def _revive_ts_fields(e, ts_cols):
 
     rv = {c: pd.Timestamp(e[c]) for c in ts_cols if e.get(c) is not None}
     return {**e, **rv} if rv else e
-
-
-def stream_stable_sharded(
-    df: DataFrame,
-    dt_s: float,
-    field: str,
-    by: Sequence[str],
-    time_col: str = "time",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_stable` (VERDICT r7
-    ask #1a): the identical per-key value-run state machine
-    (action.clj:2053-2138) through the sharded shell, with each
-    key's unconfirmed-run buffer carried as PARALLEL COLUMN ARRAYS
-    ({col: [values]}) instead of dict-per-row — the §39 micro-lesson
-    applied to row-buffer state. Python work per batch is
-    O(value-runs), not O(rows): run boundaries come from one
-    vectorized null-safe shift compare, confirmation points from
-    searchsorted, confirmed-run emission from slice coalescing (one
-    concat at the end), and only UNCONFIRMED rows (the flap buffer)
-    pay per-value JSON conversion. Bit-exact kept rows vs the
-    per-key twin (parity pytest)."""
-    import json as _json
-
-    import numpy as np
-    import pandas as pd
-
-    dt_us = int(round(dt_s * 1_000_000))
-
-    def _eq(a, b):
-        if a is None or b is None:
-            return a is None and b is None
-        if isinstance(a, float) and isinstance(b, float) and a != a and b != b:
-            return True
-        return a == b
-
-    def _store(v):
-        # keep NaN as NaN in the carry: Python json round-trips it
-        # and _eq treats NaN==NaN — matching the per-key twin.
-        # _native's NaN→None fold would make _eq(nan, None) False and
-        # reset the run at every micro-batch boundary (ADVICE r8 #1).
-        if isinstance(v, float) and v != v:
-            return float(v)
-        return _native(v)
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        if not n:
-            return pdf
-        t = _series_us(pdf[time_col])
-        ks_arr = np.asarray(ks, dtype=object)
-        kstart = np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        starts = np.flatnonzero(kstart)
-        ends = np.concatenate((starts[1:], [n]))
-        # out-of-order drop + running-max update per key, vectorized
-        # per segment: the slice is (key, time)-sorted so only rows
-        # below the key's STORED max can drop, and the new max is the
-        # segment's last timestamp
-        keep = np.ones(n, dtype=bool)
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            st = carry.get(ks_arr[s0])
-            if st is not None and st["s"][0] is not None:
-                keep[s0:e0] = t[s0:e0] >= st["s"][0]
-                st["s"][0] = max(st["s"][0], int(t[e0 - 1]))
-            elif st is not None:
-                st["s"][0] = int(t[e0 - 1])
-        if not keep.all():
-            pdf = pdf[keep].reset_index(drop=True)
-            ks_arr = ks_arr[keep]
-            t = t[keep]
-            n = len(pdf)
-            if not n:
-                return pdf
-            kstart = np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            starts = np.flatnonzero(kstart)
-            ends = np.concatenate((starts[1:], [n]))
-        # run boundaries: key change OR null-safe field value change
-        fs = pdf[field]
-        same_val = (fs.eq(fs.shift()) | (fs.isna() & fs.isna().shift(fill_value=False))).to_numpy(dtype=bool)
-        run_start = kstart | ~same_val
-        rstarts = np.flatnonzero(run_start)
-        rends = np.concatenate((rstarts[1:], [n]))
-        vals = fs.tolist()
-        cols = list(pdf.columns)
-        raw = _RawCols(pdf)
-
-        parts: list = []  # ordered mix of (i, j) slices and DataFrames
-
-        def emit_slice(i, j):
-            if parts and isinstance(parts[-1], list) and parts[-1][1] == i:
-                parts[-1][1] = j  # coalesce adjacent confirmed slices
-            else:
-                parts.append([i, j])
-
-        cur_key = None
-        st = None
-        for i, j in zip(rstarts.tolist(), rends.tolist()):
-            k = ks_arr[i]
-            if k != cur_key:
-                if cur_key is not None:
-                    carry[cur_key] = st
-                st = carry.get(k)
-                if st is None:
-                    # s = [max_us, has, value, flip_us, confirmed]
-                    st = {"s": [int(t[j - 1]), False, None, None, False],
-                          "b": None}
-                    # max over the FULL key segment was set above only
-                    # for existing states; find this key's segment end
-                    e0 = ends[np.searchsorted(starts, i, side="right") - 1]
-                    st["s"][0] = int(t[e0 - 1])
-                cur_key = k
-            v = vals[i]
-            if not (st["s"][1] and _eq(v, st["s"][2])):
-                st["s"][1] = True
-                st["s"][2] = _store(v)
-                st["s"][3] = int(t[i])
-                st["s"][4] = False
-                st["b"] = None
-            if not st["s"][4]:
-                thresh = st["s"][3] + dt_us
-                kk = i + int(np.searchsorted(t[i:j], thresh, side="right"))
-                if kk == j:  # run not yet stable: buffer the segment
-                    if st["b"] is None:
-                        st["b"] = {c: [] for c in cols}
-                    for c in cols:
-                        st["b"][c].extend(raw.slice_native(c, i, j))
-                else:  # confirmed at kk: flush buffer + whole segment
-                    st["s"][4] = True
-                    if st["b"] is not None and next(iter(st["b"].values())):
-                        bdf = pd.DataFrame(
-                            {c: st["b"][c] for c in cols}, columns=cols
-                        )
-                        parts.append(_revive_datetime_cols(bdf, pdf))
-                    st["b"] = None
-                    emit_slice(i, j)
-            else:
-                emit_slice(i, j)
-        if cur_key is not None:
-            carry[cur_key] = st
-        if not parts:
-            return pdf.iloc[0:0]
-        frames = [
-            pdf.iloc[p[0]:p[1]] if isinstance(p, list) else p for p in parts
-        ]
-        return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_coalesce_sharded(
-    df: DataFrame,
-    duration_s: float,
-    fields: Sequence[str],
-    by: Sequence[str],
-    time_col: str = "time",
-    ttl_col: str = "ttl",
-    state_col: str = "state",
-    default_ttl_s: float = 120.0,
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_coalesce` (keyed form
-    only — the reference's UNKEYED coalesce has one global tick
-    clock and stays a single state group by definition). Identical
-    per-key recurrence (action.clj:721-791: latest event per fields
-    tuple, flush on event-time tick, event.clj:12-19 expiry), with
-    each key's buffer carried COLUMNAR and batch rows referenced by
-    POSITION until the end of the batch: the per-event loop touches
-    only scalars/tuples (tick clock, dict upsert, expiry compare) —
-    no dict-per-row serialization; JSON conversion happens once per
-    batch for the rows still buffered at its end, and emission is
-    two positional gathers (batch-sourced + carry-sourced) merged
-    back into flush order. Bit-exact emitted rows vs the per-key
-    twin (parity pytest)."""
-    import json as _json
-
-    import numpy as np
-    import pandas as pd
-
-    dur_us = int(round(duration_s * 1_000_000))
-    default_ttl_us = int(round(default_ttl_s * 1_000_000))
-    has_ttl_col = ttl_col in df.columns
-    has_state_col = state_col in df.columns
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        if not n:
-            return pdf
-        t = _series_us(pdf[time_col])
-        null_t = pdf[time_col].isna().to_numpy(dtype=bool)
-        cols = list(pdf.columns)
-        f_arrs = [pdf[f].tolist() for f in fields]
-        st_arr = pdf[state_col].tolist() if has_state_col else None
-        ttl_arr = (
-            pdf[ttl_col].to_numpy(dtype="float64", na_value=np.nan)
-            if has_ttl_col
-            else None
-        )
-
-        def batch_expired(i, ti, ct):
-            if st_arr is not None and st_arr[i] == "expired":
-                return True
-            ttl_us = default_ttl_us
-            if ttl_arr is not None and ttl_arr[i] == ttl_arr[i]:
-                ttl_us = int(round(float(ttl_arr[i]) * 1_000_000))
-            return ct - ti > ttl_us
-
-        def old_expired(store, idx, ti, ct):
-            if has_state_col and store[state_col][idx] == "expired":
-                return True
-            ttl_us = default_ttl_us
-            if has_ttl_col and store[ttl_col][idx] is not None:
-                ttl_us = int(round(float(store[ttl_col][idx]) * 1_000_000))
-            return ct - ti > ttl_us
-
-        ks_arr = np.asarray(ks, dtype=object)
-        raw = _RawCols(pdf)
-        emit: list = []  # (src 0=batch/1=old_of_key, row idx, store ref)
-        live: dict = {}  # key -> [ct, lt, buf{ftk: [src, idx, t_us]}, store]
-
-        def _load(k):
-            got = live.get(k)
-            if got is not None:
-                return got
-            c = carry.get(k)
-            if c is None:
-                cur = [0, None, {}, None]
-            else:
-                store = c["bc"]
-                buf = {
-                    fk: [1, x, c["bt"][x]] for x, fk in enumerate(c["bf"])
-                }
-                cur = [c["ct"], c["lt"], buf, store]
-            live[k] = cur
-            return cur
-
-        cur_key = None
-        cur = None
-        for i in range(n):
-            if null_t[i]:
-                continue
-            k = ks_arr[i]
-            if k != cur_key:
-                cur = _load(k)
-                cur_key = k
-            ti = int(t[i])
-            if ti > cur[0]:
-                cur[0] = ti
-            if batch_expired(i, ti, cur[0]):
-                continue
-            # _cell_native, not _native: a timestamp-typed fields
-            # column must isoformat (the per-key twin's _row_ser
-            # rule) — raw pd.Timestamp is not JSON-serializable
-            # (ADVICE r8 #2)
-            ftk = _json.dumps([_cell_native(a[i]) for a in f_arrs])
-            buf = cur[2]
-            ent = buf.get(ftk)
-            # e/most-recent?: the stored event wins ties
-            if ent is None or ent[2] < ti:
-                buf[ftk] = [0, i, ti]
-            if cur[1] is None:
-                cur[1] = ti
-            elif cur[0] >= cur[1] + dur_us:
-                alive = {}
-                for fk, e in buf.items():
-                    if e[0] == 0:
-                        dead = batch_expired(e[1], e[2], cur[0])
-                    else:
-                        dead = old_expired(cur[3], e[1], e[2], cur[0])
-                    if not dead:
-                        alive[fk] = e
-                        emit.append((e[0], e[1], cur[3]))
-                cur[2] = alive
-                cur[1] = cur[0]
-        # rebuild each touched key's carry: surviving buffer rows go
-        # columnar (batch-sourced rows pay JSON conversion HERE, once)
-        for k, cur in live.items():
-            buf = cur[2]
-            if not buf:
-                carry[k] = {"ct": cur[0], "lt": cur[1], "bf": [], "bt": [],
-                            "bc": {c: [] for c in cols}}
-                continue
-            bf, bt = [], []
-            bc: dict = {c: [] for c in cols}
-            for fk, e in buf.items():
-                bf.append(fk)
-                bt.append(e[2])
-                if e[0] == 0:
-                    i = e[1]
-                    for c in cols:
-                        bc[c].append(raw.cell(c, i))
-                else:
-                    store = cur[3]
-                    for c in cols:
-                        bc[c].append(store[c][e[1]])
-            carry[k] = {"ct": cur[0], "lt": cur[1], "bf": bf, "bt": bt, "bc": bc}
-        if not emit:
-            return pdf.iloc[0:0]
-        b_pos = [p for p, e in enumerate(emit) if e[0] == 0]
-        o_pos = [p for p, e in enumerate(emit) if e[0] == 1]
-        frames = []
-        if b_pos:
-            frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
-        if o_pos:
-            odf = pd.DataFrame(
-                {c: [emit[p][2][c][emit[p][1]] for p in o_pos] for c in cols},
-                columns=cols,
-            )
-            frames.append(_revive_datetime_cols(odf, pdf))
-        if len(frames) == 1:
-            return frames[0]
-        out = pd.concat(frames, ignore_index=True)
-        # concat row q holds emit position (b_pos+o_pos)[q]; restore
-        # flush order by sorting rows on that position
-        return out.iloc[np.argsort(np.asarray(b_pos + o_pos), kind="stable")]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-
-def stream_fixed_event_window_sharded(
-    df: DataFrame,
-    n: int,
-    by: Sequence[str],
-    time_col: str = "time",
-    fork_ttl_s: float | None = None,
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_fixed_event_window`
-    (r8 — the event-window half of the row-buffer tier): identical
-    per-key count-buffer + event-clock :fork-ttl gap eviction
-    (stream_test.clj:331-408 semantics) through the sharded shell.
-    Each key's partial window carries COLUMNAR ({col: [...]}, ≤ n-1
-    rows); batch rows are referenced by position and serialize at
-    most once — when they emit into a window or remain buffered at
-    batch end. Bit-exact emitted windows vs the per-key twin
-    (parity pytest)."""
-    import numpy as np
-    import pandas as pd
-
-    ttl_us = int(round(fork_ttl_s * 1_000_000)) if fork_ttl_s else None
-    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-    key_cols = list(by)
-    ev_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    by_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-        if f.name in by
-    )
-    out_schema = (
-        f"{by_struct}, window_start double, events array<struct<{ev_struct}>>"
-    )
-
-    def shard_fold(carry, ks, pdf):
-        cols = list(pdf.columns)
-        out_rows: list = []
-        m = len(pdf)
-        if m:
-            raw = _RawCols(pdf)
-            t = _series_us(pdf[time_col])
-            ks_arr = np.asarray(ks, dtype=object)
-            starts = np.flatnonzero(
-                np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            )
-            ends = np.concatenate((starts[1:], [m]))
-
-            def revive(e):
-                return _revive_ts_fields(e, ts_cols)
-
-            for s0, e0 in zip(starts.tolist(), ends.tolist()):
-                k = ks_arr[s0]
-                st = carry.get(k)
-                if st is None:
-                    last_us = None
-                    buf: list = []
-                else:
-                    last_us = st["l"]
-                    bc = st["b"]
-                    blen = len(next(iter(bc.values()))) if bc else 0
-                    buf = [
-                        {c: bc[c][x] for c in cols} for x in range(blen)
-                    ]
-                keyvals = {c: pdf.iloc[s0][c] for c in key_cols}
-                for i in range(s0, e0):
-                    ti = int(t[i])
-                    if (
-                        ttl_us is not None
-                        and last_us is not None
-                        and ti - last_us > ttl_us
-                    ):
-                        buf = []  # stale fork: GC dropped it pre-event
-                    buf.append(i)
-                    last_us = ti
-                    if len(buf) == n:
-                        evs = [
-                            revive(e if isinstance(e, dict)
-                                   else raw.row(cols, e))
-                            for e in buf
-                        ]
-                        first = evs[0][time_col]
-                        start = (
-                            first.timestamp()
-                            if hasattr(first, "timestamp")
-                            else float(first)
-                        )
-                        out_rows.append(
-                            {**keyvals, "window_start": start, "events": evs}
-                        )
-                        buf = []
-                rest = [
-                    e if isinstance(e, dict) else raw.row(cols, e)
-                    for e in buf
-                ]
-                carry[k] = {
-                    "l": last_us,
-                    "b": {c: [e[c] for e in rest] for c in cols} if rest else {},
-                }
-        if not out_rows:
-            return pd.DataFrame(
-                columns=key_cols + ["window_start", "events"]
-            )
-        return pd.DataFrame(out_rows)
-
-    return _sharded_keyed_batch_scan(
-        df, by, time_col, shards, shard_fold, out_schema=out_schema
-    )
-
-
-def stream_moving_event_window_sharded(
-    df: DataFrame,
-    n: int,
-    by: Sequence[str],
-    time_col: str = "time",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_moving_event_window`:
-    per event, the trailing ≤ n events of its key as an ``events``
-    array — the same sliding dict buffer, one shard call instead of
-    one per key. Emission cost is O(rows·n) dict lists in BOTH
-    tiers (the output shape demands it); sharding removes only the
-    per-key interpreter round-trips. Bit-exact vs the per-key twin
-    (parity pytest)."""
-    import numpy as np
-    import pandas as pd
-
-    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-    ev_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    extra_out = f"events array<struct<{ev_struct}>>"
-
-    def shard_fold(carry, ks, pdf):
-        m = len(pdf)
-        cols = list(pdf.columns)
-        events_col: list = [None] * m
-        if m:
-            raw = _RawCols(pdf)
-            ks_arr = np.asarray(ks, dtype=object)
-            starts = np.flatnonzero(
-                np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            )
-            ends = np.concatenate((starts[1:], [m]))
-
-            def revive(e):
-                return _revive_ts_fields(e, ts_cols)
-
-            for s0, e0 in zip(starts.tolist(), ends.tolist()):
-                k = ks_arr[s0]
-                bc = carry.get(k)
-                if bc:
-                    blen = len(next(iter(bc.values())))
-                    buf = [{c: bc[c][x] for c in cols} for x in range(blen)]
-                else:
-                    buf = []
-                for i in range(s0, e0):
-                    buf.append(raw.row(cols, i))
-                    buf = buf[-n:]
-                    events_col[i] = [revive(e) for e in buf]
-                carry[k] = {c: [e[c] for e in buf] for c in cols} if buf else {}
-        out = pdf.copy()
-        out["events"] = events_col
-        return out
-
-    return _sharded_keyed_batch_scan(
-        df, by, time_col, shards, shard_fold, extra_out=extra_out
-    )
-
-
-def stream_expired_sharded(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    ttl_col: str | None = "ttl",
-    state_col: str | None = "state",
-    keep_expired: bool = True,
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality form of :func:`stream_expired` (completing
-    the scalar-state tier): the per-key running-max clock carries in
-    the shard map, the whole shard slice evaluates in ONE vectorized
-    pass — segment starts seed each key's accumulate from the carry,
-    segment ends write it back; Python work is O(distinct keys in
-    batch). Bit-exact kept rows vs the per-key twin (parity
-    pytest)."""
-    import numpy as np
-
-    has_ttl = ttl_col is not None and ttl_col in df.columns
-    has_state = state_col is not None and state_col in df.columns
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        if not n:
-            return pdf
-        has_time = pdf[time_col].notna().to_numpy(dtype=bool)
-        t = _series_us(pdf[time_col]).astype("float64")
-        t = np.where(has_time, t, -np.inf)  # null time: no age, no clock
-        ks_arr = np.asarray(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        ends = np.concatenate((starts[1:], [n]))
-        run = np.empty(n, dtype="float64")
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            k = ks_arr[s0]
-            seg = np.maximum.accumulate(t[s0:e0])
-            mx = carry.get(k)
-            if mx is not None:
-                seg = np.maximum(seg, float(mx))
-            run[s0:e0] = seg
-            fin = seg[np.isfinite(seg)]
-            if len(fin):
-                carry[k] = float(fin[-1])
-        age_s = (run - t) / 1_000_000.0
-        if has_ttl:
-            ttl = pdf[ttl_col].astype("float64").fillna(120.0).to_numpy()
-        else:
-            ttl = np.full(n, 120.0)
-        exp = (age_s > ttl) & has_time
-        if has_state:
-            exp |= (pdf[state_col] == "expired").to_numpy(dtype=bool)
-        return pdf[exp if keep_expired else ~exp]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_smax_sharded(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality smax with the per-key twin's PER-EVENT
-    emission (action.clj:2742-2772 — forward the best-so-far event
-    for every input event; :func:`stream_smax_jvm` is the
-    per-batch-grain alternative): the stored-best row carries in the
-    shard map as one JSON dict per key, the fold walks the shard
-    slice with carry reload at key boundaries only, and the output
-    materializes as two positional gathers (batch-sourced winners +
-    carry-sourced re-emits) merged back into event order — no
-    per-event dict building. Bit-exact vs :func:`stream_smax`
-    (parity pytest); DSL-reachable via ``by {"shards": N}``."""
-    import numpy as np
-    import pandas as pd
-
-    def shard_fold(carry, ks, pdf):
-        n = len(pdf)
-        if not n:
-            return pdf
-        cols = list(pdf.columns)
-        raw = _RawCols(pdf)
-        v = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        ks_arr = np.asarray(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        ends = np.concatenate((starts[1:], [n]))
-        emit: list = []  # ("b", idx) batch winner | ("o", dict) carried best
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            k = ks_arr[s0]
-            st = carry.get(k)
-            if st is None:
-                have = False
-                best_v = -np.inf
-                best_ref = None
-            else:
-                have = True
-                best_v = -np.inf if st["m"] is None else float(st["m"])
-                best_ref = ("o", st["b"])
-            for i in range(s0, e0):
-                x = v[i]
-                if not have or (x == x and x > best_v):
-                    best_ref = ("b", i)
-                    have = True
-                    if x == x:
-                        best_v = x
-                emit.append(best_ref)
-            # save state: winner row serialized once per batch per key
-            if best_ref is not None and best_ref[0] == "b":
-                i = best_ref[1]
-                carry[k] = {
-                    "m": None if v[i] != v[i] else float(v[i]),
-                    "b": raw.row(cols, i),
-                }
-        b_pos = [p for p, e in enumerate(emit) if e[0] == "b"]
-        o_pos = [p for p, e in enumerate(emit) if e[0] == "o"]
-        frames = []
-        if b_pos:
-            frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
-        if o_pos:
-            odf = pd.DataFrame(
-                {c: [emit[p][1][c] for p in o_pos] for c in cols}, columns=cols
-            )
-            frames.append(_revive_datetime_cols(odf, pdf))
-        if len(frames) == 1:
-            return frames[0]
-        out = pd.concat(frames, ignore_index=True)
-        return out.iloc[np.argsort(np.asarray(b_pos + o_pos), kind="stable")]
-
-    return _sharded_keyed_batch_scan(df, by, time_col, shards, shard_fold)
-
-
-def stream_smin_sharded(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    shards: int = 64,
-) -> DataFrame:
-    """High-cardinality smin with per-event emission: the negate-
-    compare-negate composition of :func:`stream_smin`, through the
-    sharded smax fold (the stored metric stays un-negated)."""
-    neg = df.withColumn(metric_col, -F.col(metric_col))
-    out = stream_smax_sharded(
-        neg, by, time_col, metric_col, shards=shards
-    )
-    return out.withColumn(metric_col, -F.col(metric_col))

@@ -228,7 +228,7 @@ def test_stream_ewma_sharded_vectorized_hot_key_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    out = core.stream_ewma_sharded(
+    out = core.stream_ewma(
         stream, 0.3, by=["host"], time_col="time", metric_col="metric",
         shards=2,
     )

@@ -2038,7 +2038,7 @@ def test_stream_ewma_sharded_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    out = core.stream_ewma_sharded(
+    out = core.stream_ewma(
         stream, 0.25, by=["host"], time_col="time", metric_col="metric", shards=4
     )
     q = (
@@ -2057,9 +2057,10 @@ def test_stream_ewma_sharded_parity(spark, tmp_path):
 def test_stream_cond_dt_sharded_parity(spark, tmp_path):
     """Sharded cond-dt emits exactly the per-key twin's rows: 200
     keys with flip/hold/reset patterns through 4 shards across a
-    two-file micro-batch split."""
+    two-file micro-batch split — and both equal the batch twin."""
     import pyspark.sql.functions as F
 
+    from mirabelle_spark.operators import stateful as st
     from mirabelle_spark.streaming import core
 
     rows = []
@@ -2101,9 +2102,13 @@ def test_stream_cond_dt_sharded_parity(spark, tmp_path):
         return {r.event_id for r in spark.sql(f"SELECT * FROM {name}").collect()}
 
     per_key = run(core.stream_cond_dt, "cds_per_key")
-    sharded = run(core.stream_cond_dt_sharded, "cds_sharded", shards=4)
+    sharded = run(core.stream_cond_dt, "cds_sharded", shards=4)
     assert sharded == per_key
     assert 0 < len(per_key) < 1600  # the condition actually filters
+    batch = {r.event_id for r in st.cond_dt(
+        df, [":>", "metric", 100.0], 5.0, by=["host"], time_col="time",
+        order_cols=("event_id",)).collect()}
+    assert per_key == batch
 
 
 def test_by_shards_dsl_dispatches_sharded_twins(spark, tmp_path):
@@ -2164,9 +2169,10 @@ def test_stream_sharded_changed_ddt_zscore_parity(spark, tmp_path):
     """The r7 sharded tier (changed / ddt / zscore) emits exactly the
     per-key twins' rows and values across a two-file micro-batch
     split — including null metrics, :init semantics, and zscore's
-    decimal-exact moments."""
+    decimal-exact moments. Both groupings equal the batch twins."""
     import pyspark.sql.functions as F
 
+    from mirabelle_spark.operators import stateful as st
     from mirabelle_spark.streaming import core
 
     rows = []
@@ -2210,35 +2216,45 @@ def test_stream_sharded_changed_ddt_zscore_parity(spark, tmp_path):
         lambda s: core.stream_changed(s, "state", by=["host"], time_col="time", init="ok"),
         "sh3_chg_pk")}
     shd = {r.event_id for r in run(
-        lambda s: core.stream_changed_sharded(s, "state", by=["host"], time_col="time",
+        lambda s: core.stream_changed(s, "state", by=["host"], time_col="time",
                                               init="ok", shards=4), "sh3_chg_sh")}
     assert shd == per and 0 < len(per) < 960
+    assert per == {r.event_id for r in st.changed(
+        df, "state", init="ok", by=["host"], time_col="time",
+        order_cols=("event_id",)).collect()}
 
     # ddt
     per_d = {r.event_id: r.metric for r in run(
         lambda s: core.stream_ddt(s, by=["host"], time_col="time"), "sh3_ddt_pk")}
     shd_d = {r.event_id: r.metric for r in run(
-        lambda s: core.stream_ddt_sharded(s, by=["host"], time_col="time", shards=4),
+        lambda s: core.stream_ddt(s, by=["host"], time_col="time", shards=4),
         "sh3_ddt_sh")}
     assert shd_d == per_d and len(per_d) > 500
+    assert per_d == {r.event_id: r.metric for r in st.ddt(
+        df, by=["host"], time_col="time", order_cols=("event_id",)).collect()}
 
     # zscore (bit-exact)
     per_z = {r.event_id: r.zscore for r in run(
         lambda s: core.stream_zscore(s, 50.0, by=["host"], time_col="time",
                                      metric_col="metric", min_n=2), "sh3_zs_pk")}
     shd_z = {r.event_id: r.zscore for r in run(
-        lambda s: core.stream_zscore_sharded(s, 50.0, by=["host"], time_col="time",
+        lambda s: core.stream_zscore(s, 50.0, by=["host"], time_col="time",
                                              metric_col="metric", min_n=2, shards=4),
         "sh3_zs_sh")}
     assert set(shd_z) == set(per_z)
     assert not {k for k in per_z if shd_z[k] != per_z[k]}
+    assert per_z == {r.event_id: r.zscore for r in st.zscore(
+        df, 50.0, by=["host"], time_col="time", metric_col="metric",
+        min_n=2).collect()}
 
 
 def test_stream_throttle_sharded_parity(spark, tmp_path):
-    """Sharded throttle keeps exactly the per-key twin's rows across
-    a micro-batch split (anchored-window recurrence)."""
+    """Sharded throttle keeps exactly the per-key grouping's rows
+    across a micro-batch split (anchored-window recurrence), and both
+    equal the batch twin."""
     import pyspark.sql.functions as F
 
+    from mirabelle_spark.operators.filters import throttle_batch
     from mirabelle_spark.streaming import core
 
     rows = []
@@ -2271,8 +2287,11 @@ def test_stream_throttle_sharded_parity(spark, tmp_path):
         return {r.event_id for r in spark.sql(f"SELECT * FROM {name}").collect()}
 
     per = run(core.stream_throttle, "ths_pk")
-    shd = run(core.stream_throttle_sharded, "ths_sh", shards=4)
+    shd = run(core.stream_throttle, "ths_sh", shards=4)
     assert shd == per and 0 < len(per) < 1200
+    assert per == {r.event_id for r in throttle_batch(
+        df, 2, 10.0, by=["host"], time_col="time",
+        order_cols=("event_id",)).collect()}
 
 
 def test_stream_changed_jvm_fb_parity(spark, tmp_path):
@@ -2340,9 +2359,11 @@ def test_stream_smax_smin_sharded_parity(spark, tmp_path):
     """The sharded smax/smin tier keeps the per-key twins' PER-EVENT
     emission bit-exactly across a micro-batch split — including null
     metrics and carried-best re-emits (ADVICE r8 #3: the tier is now
-    exported, DSL-dispatched via by{shards}, and parity-proven)."""
+    exported, DSL-dispatched via by{shards}, and parity-proven) —
+    and both groupings equal the batch twins."""
     import pyspark.sql.functions as F
 
+    from mirabelle_spark.operators import stateful as st
     from mirabelle_spark.streaming import core
 
     rows = []
@@ -2380,26 +2401,34 @@ def test_stream_smax_smin_sharded_parity(spark, tmp_path):
 
     per_mx = run(lambda s: core.stream_smax(s, by=["host"], time_col="time"), "smx_pk")
     shd_mx = run(
-        lambda s: core.stream_smax_sharded(s, by=["host"], time_col="time", shards=4),
+        lambda s: core.stream_smax(s, by=["host"], time_col="time", shards=4),
         "smx_sh",
     )
     assert shd_mx == per_mx and len(per_mx) == 800  # per-event: one emit per input
+    assert per_mx == sorted(
+        (r.event_id, r.metric) for r in st.smax(
+            df, by=["host"], time_col="time", order_cols=("event_id",)).collect())
 
     per_mn = run(lambda s: core.stream_smin(s, by=["host"], time_col="time"), "smn_pk")
     shd_mn = run(
-        lambda s: core.stream_smin_sharded(s, by=["host"], time_col="time", shards=4),
+        lambda s: core.stream_smin(s, by=["host"], time_col="time", shards=4),
         "smn_sh",
     )
     assert shd_mn == per_mn and len(per_mn) == 800
+    assert per_mn == sorted(
+        (r.event_id, r.metric) for r in st.smin(
+            df, by=["host"], time_col="time", order_cols=("event_id",)).collect())
 
 
 def test_stream_stable_sharded_nan_run_parity(spark, tmp_path):
     """ADVICE r8 #1 regression: a stable run over a double field whose
     value is NaN/NULL must survive the micro-batch boundary in the
     sharded tier (the carry must not fold NaN→None, which made
-    _eq(nan, None) False and reset the run every batch)."""
+    _eq(nan, None) False and reset the run every batch). Both
+    groupings equal the batch twin."""
     import pyspark.sql.functions as F
 
+    from mirabelle_spark.operators import stateful as st
     from mirabelle_spark.streaming import core
 
     rows = []
@@ -2444,20 +2473,25 @@ def test_stream_stable_sharded_nan_run_parity(spark, tmp_path):
         "stn_pk",
     )
     shd = run(
-        lambda s: core.stream_stable_sharded(
+        lambda s: core.stream_stable(
             s, 20.0, "metric", by=["host"], time_col="time", shards=4
         ),
         "stn_sh",
     )
     assert shd == per and len(per) > 150  # NaN runs DO confirm
+    assert per == sorted(r.event_id for r in st.stable(
+        df, 20.0, "metric", by=["host"], time_col="time",
+        order_cols=("event_id",)).collect())
 
 
 def test_stream_coalesce_sharded_timestamp_fields_parity(spark, tmp_path):
     """ADVICE r8 #2 regression: a timestamp-typed column in
     ``fields`` must not crash the sharded coalesce (raw pd.Timestamp
-    in json.dumps) and must bucket identically to the per-key twin."""
+    in json.dumps) and must bucket identically in both groupings.
+    The fixed-event-window half also equals its batch twin."""
     import pyspark.sql.functions as F
 
+    from mirabelle_spark.operators import windows as win
     from mirabelle_spark.streaming import core
 
     rows = []
@@ -2503,7 +2537,7 @@ def test_stream_coalesce_sharded_timestamp_fields_parity(spark, tmp_path):
         "cts_pk",
     )
     shd = run(
-        lambda s: core.stream_coalesce_sharded(
+        lambda s: core.stream_coalesce(
             s, 60.0, ["seen"], by=["host"], time_col="time", shards=4
         ),
         "cts_sh",
@@ -2534,12 +2568,17 @@ def test_stream_coalesce_sharded_timestamp_fields_parity(spark, tmp_path):
         "cts_few_pk",
     )
     shd_w = run_win(
-        lambda s: core.stream_fixed_event_window_sharded(
+        lambda s: core.stream_fixed_event_window(
             s, 3, by=["host"], time_col="time", shards=4
         ),
         "cts_few_sh",
     )
     assert shd_w == per_w and len(per_w) == 60  # 30 hosts × 2 full windows
+    assert per_w == sorted(
+        (r.host, str(r.events[0].time.timestamp()), tuple(str(e.seen) for e in r.events))
+        for r in win.fixed_event_window(
+            df, 3, by=["host"], time_col="time", order_cols=("event_id",)).collect()
+    )
 
 
 def test_streaming_document_pipeline_end_to_end(spark, tmp_path):
@@ -2629,7 +2668,7 @@ def test_sharded_state_ttl_evicts_idle_keys(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    out = core.stream_ewma_sharded(
+    out = core.stream_ewma(
         stream, 0.5, by=["host"], time_col="time", metric_col="metric",
         shards=1, state_ttl_s=100.0,
     )
@@ -2674,7 +2713,7 @@ def test_sharded_key_strings_type_stable_with_null_keys(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    out = core.stream_ewma_sharded(
+    out = core.stream_ewma(
         stream, 0.5, by=["service_id"], time_col="time", metric_col="metric",
         shards=1,
     )
@@ -2730,8 +2769,13 @@ def test_stream_changed_sharded_timestamp_field(spark, tmp_path):
         return {r.event_id for r in spark.sql(f"SELECT * FROM {name}").collect()}
 
     per = run(core.stream_changed, "tsf_pk")
-    shd = run(core.stream_changed_sharded, "tsf_sh", shards=2)
+    shd = run(core.stream_changed, "tsf_sh", shards=2)
     assert shd == per == {0, 2}
+    from mirabelle_spark.operators import stateful as st
+
+    assert per == {r.event_id for r in st.changed(
+        df, "updated_at", by=["host"], time_col="time",
+        order_cols=("event_id",)).collect()}
 
     # non-JSON-carryable dtypes raise a NAMED error up front
     import pytest as _pytest
@@ -2739,9 +2783,9 @@ def test_stream_changed_sharded_timestamp_field(spark, tmp_path):
     dec_df = df.withColumn("updated_at", F.col("event_id").cast("decimal(10,2)"))
     stream = spark.readStream.schema(dec_df.schema).parquet(src_dir)
     with _pytest.raises(NotImplementedError, match="decimal"):
-        core.stream_changed_sharded(
+        core.stream_changed(
             stream.withColumn("updated_at", F.col("event_id").cast("decimal(10,2)")),
-            "updated_at", by=["host"], time_col="time",
+            "updated_at", by=["host"], time_col="time", shards=4,
         )
 
 
@@ -2806,7 +2850,7 @@ def test_stream_zscore_huge_values_fold_exact(spark, tmp_path):
 
     for fn, name, kw in (
         (core.stream_zscore, "zsh_pk", {}),
-        (core.stream_zscore_sharded, "zsh_sh", {"shards": 2}),
+        (core.stream_zscore, "zsh_sh", {"shards": 2}),
     ):
         stream = (
             spark.readStream.schema(df.schema)
@@ -2876,7 +2920,7 @@ def test_stream_changed_sharded_rejects_interval(spark, tmp_path):
     from mirabelle_spark.streaming import core
 
     with pytest.raises(NotImplementedError, match="interval"):
-        core.stream_changed_sharded(df, "gap", by=["host"], time_col="time")
+        core.stream_changed(df, "gap", by=["host"], time_col="time", shards=4)
 
 
 def _two_batch_runner(spark, tmp_path, df, split_pred, tag):
@@ -2903,13 +2947,128 @@ def _two_batch_runner(spark, tmp_path, df, split_pred, tag):
     return run
 
 
+def test_keyed_fold_sorts_group_once_across_arrow_chunks(spark, tmp_path):
+    """A group holding more rows than
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` reaches the
+    state function as several Arrow chunks. The shell concatenates
+    them and sorts once, so a key whose reverse-time rows span chunks
+    still folds in event-time order — in both groupings, equal to the
+    batch twin."""
+    import pyspark.sql.functions as F
+
+    from mirabelle_spark.operators import aggregations as agg
+    from mirabelle_spark.streaming import core
+
+    rows = []
+    eid = 0
+    for h in range(6):
+        for j in range(20):
+            rows.append((eid, f"h{h}", float(j), float((h * 7 + j * 3) % 11)))
+            eid += 1
+    df = spark.createDataFrame(
+        rows, "event_id bigint, host string, t double, metric double"
+    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
+    batch = {
+        r.event_id: r.metric
+        for r in agg.ewma_timeless(
+            df, 0.25, by=["host"], time_col="time", metric_col="metric",
+            order_cols=("event_id",),
+        ).collect()
+    }
+    src_dir = str(tmp_path / "chunk_in")
+    df.orderBy(F.col("time").desc(), F.col("event_id").desc()).coalesce(1) \
+        .write.parquet(src_dir)
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "5")
+    try:
+        for name, kw in (("chunk_pk", {}), ("chunk_sh", {"shards": 2})):
+            stream = spark.readStream.schema(df.schema).parquet(src_dir)
+            out = core.stream_ewma(
+                stream, 0.25, by=["host"], time_col="time", metric_col="metric", **kw
+            )
+            q = (
+                out.writeStream.format("memory").queryName(name)
+                .option("checkpointLocation", str(tmp_path / f"{name}_ck"))
+                .outputMode("append").trigger(availableNow=True).start()
+            )
+            q.awaitTermination()
+            got = {r.event_id: r.metric for r in spark.sql(f"SELECT * FROM {name}").collect()}
+            assert got == batch, (name, sorted(k for k in batch if got.get(k) != batch[k])[:10])
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_keyed_fold_signed_zero_keys_are_one_key(spark, tmp_path):
+    """Spark hashes and groups -0.0 with 0.0 as one key, so the shard
+    key strings must too: with 0.0/-0.0 rows interleaved in time, the
+    sharded fold (several key segments per shard) equals the per-key
+    grouping and the batch twin."""
+    import pandas as pd
+    import pyspark.sql.functions as F
+
+    from mirabelle_spark.operators import aggregations as agg
+    from mirabelle_spark.streaming import core
+
+    assert core._shard_key_strings(
+        pd.DataFrame({"k": [0.0, -0.0, 1.5]}), ["k"], ["double"]
+    ) == ["0.0", "0.0", "1.5"]
+    rows = []
+    eid = 0
+    for j in range(12):
+        rows.append((eid, -0.0 if j % 2 else 0.0, float(j), float(j % 5)))
+        eid += 1
+        for k in (1.5, 2.5):
+            rows.append((eid, k, float(j), float((j * 3) % 7)))
+            eid += 1
+    df = spark.createDataFrame(
+        rows, "event_id bigint, k double, t double, metric double"
+    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
+    batch = {
+        r.event_id: r.metric
+        for r in agg.ewma_timeless(
+            df, 0.25, by=["k"], time_col="time", metric_col="metric",
+            order_cols=("event_id",),
+        ).collect()
+    }
+    run = _two_batch_runner(spark, tmp_path, df, "time < timestamp_micros(6000000)", "sz")
+    for name, kw in (("sz_pk", {}), ("sz_sh", {"shards": 4})):
+        got = {r.event_id: r.metric for r in run(lambda s: core.stream_ewma(
+            s, 0.25, by=["k"], time_col="time", metric_col="metric", **kw), name)}
+        assert got == batch, (name, sorted(k for k in batch if got.get(k) != batch[k]))
+
+
+def test_keyed_fold_rejects_pre_merge_per_key_state():
+    """A checkpoint written by the old per-key twins' STRING state
+    (same one-column schema, so Spark accepts it) must raise rather
+    than fold every key from scratch."""
+    import json as _json
+
+    from mirabelle_spark.streaming.core import _load_carry
+
+    assert _load_carry(None) == {"c": {}}
+    shard_blob = {"c": {"a": 0.5}, "t": {"a": 10}}
+    assert _load_carry(_json.dumps(shard_blob)) == shard_blob
+    for old in (
+        {"max": 5, "has": True, "value": "up", "flip": 0, "confirmed": False,
+         "buffer": []},                       # per-key stable
+        [],                                   # per-key event-window buffer
+        {"metric": 1.0, "host": "a", "c": 3},  # per-key smax best row
+    ):
+        with pytest.raises(ValueError, match="carry map"):
+            _load_carry(_json.dumps(old))
+
+
 def test_stream_stable_sharded_parity(spark, tmp_path):
     """Columnar-carry sharded stable emits exactly the per-key twin's
     rows: flapping runs (unconfirmed buffers dropped), confirmation
     inside and across the micro-batch boundary, buffer flushes whose
-    rows came from the PREVIOUS batch, and null field values."""
+    rows came from the PREVIOUS batch, and null field values — and
+    both groupings equal the batch twin."""
     import pyspark.sql.functions as F
 
+    from mirabelle_spark.operators import stateful as st
     from mirabelle_spark.streaming import core
 
     rows = []
@@ -2936,17 +3095,22 @@ def test_stream_stable_sharded_parity(spark, tmp_path):
     )
     shd = sorted(
         r.event_id
-        for r in run(lambda s: core.stream_stable_sharded(
+        for r in run(lambda s: core.stream_stable(
             s, 5.0, "status", by=["host"], time_col="time", shards=4), "sts_sh")
     )
     assert shd == per
     assert 0 < len(per) < len(rows)
+    assert per == sorted(r.event_id for r in st.stable(
+        df, 5.0, "status", by=["host"], time_col="time",
+        order_cols=("event_id",)).collect())
 
 
 def test_stream_stable_sharded_out_of_order_drop(spark, tmp_path):
     """Rows behind a key's running-max clock drop in BOTH tiers (the
     reference's out-of-order rule), exercised across the batch
-    boundary: batch 2 opens with times before batch 1's max."""
+    boundary: batch 2 opens with times before batch 1's max. (The
+    batch twin sorts the whole input by time, so it has no
+    across-batch out-of-order rows to compare against.)"""
     import pyspark.sql.functions as F
 
     from mirabelle_spark.streaming import core
@@ -2969,7 +3133,7 @@ def test_stream_stable_sharded_out_of_order_drop(spark, tmp_path):
         lambda s: core.stream_stable(s, 5.0, "status", by=["host"],
                                      time_col="time"), "sto_pk"))
     shd = sorted(r.event_id for r in run(
-        lambda s: core.stream_stable_sharded(s, 5.0, "status", by=["host"],
+        lambda s: core.stream_stable(s, 5.0, "status", by=["host"],
                                              time_col="time", shards=2), "sto_sh"))
     assert shd == per
     assert 4 not in per and 6 not in per
@@ -3010,7 +3174,7 @@ def test_stream_coalesce_sharded_parity(spark, tmp_path):
 
     per = counts(run(lambda s: core.stream_coalesce(
         s, 10.0, ["service"], by=["host"], time_col="time"), "cls_pk"))
-    shd = counts(run(lambda s: core.stream_coalesce_sharded(
+    shd = counts(run(lambda s: core.stream_coalesce(
         s, 10.0, ["service"], by=["host"], time_col="time", shards=4), "cls_sh"))
     assert shd == per
     assert per and max(per.values()) >= 2  # re-emission actually exercised
@@ -3126,11 +3290,13 @@ def test_dsl_smax_emission_per_batch_routes_jvm_tier(spark, tmp_path):
 
 def test_stream_event_window_sharded_parity(spark, tmp_path):
     """The sharded event-window twins emit exactly the per-key
-    twins' rows across a micro-batch boundary: fixed windows
+    grouping's rows across a micro-batch boundary: fixed windows
     (including partial buffers carried between batches and the
-    event-clock fork-ttl gap reset) and moving trailing-n arrays."""
+    event-clock fork-ttl gap reset) and moving trailing-n arrays.
+    Without a fork-ttl both equal the batch twins."""
     import pyspark.sql.functions as F
 
+    from mirabelle_spark.operators import windows as win
     from mirabelle_spark.streaming import core
 
     rows = []
@@ -3155,7 +3321,7 @@ def test_stream_event_window_sharded_parity(spark, tmp_path):
 
     per_f = fixed_rows(run(lambda s: core.stream_fixed_event_window(
         s, 4, by=["host"], time_col="time", fork_ttl_s=60.0), "ews_pf"))
-    shd_f = fixed_rows(run(lambda s: core.stream_fixed_event_window_sharded(
+    shd_f = fixed_rows(run(lambda s: core.stream_fixed_event_window(
         s, 4, by=["host"], time_col="time", fork_ttl_s=60.0, shards=4), "ews_sf"))
     assert shd_f == per_f
     assert per_f  # windows actually emitted
@@ -3165,6 +3331,11 @@ def test_stream_event_window_sharded_parity(spark, tmp_path):
     no_ttl = fixed_rows(run(lambda s: core.stream_fixed_event_window(
         s, 4, by=["host"], time_col="time"), "ews_pf0"))
     assert per_f != no_ttl
+    assert no_ttl == sorted(
+        (r.host, r.events[0].time.timestamp(), tuple(e.event_id for e in r.events))
+        for r in win.fixed_event_window(
+            df, 4, by=["host"], time_col="time", order_cols=("event_id",)).collect()
+    )
 
     def moving_rows(rows_):
         return sorted(
@@ -3173,10 +3344,12 @@ def test_stream_event_window_sharded_parity(spark, tmp_path):
 
     per_m = moving_rows(run(lambda s: core.stream_moving_event_window(
         s, 3, by=["host"], time_col="time"), "ews_pm"))
-    shd_m = moving_rows(run(lambda s: core.stream_moving_event_window_sharded(
+    shd_m = moving_rows(run(lambda s: core.stream_moving_event_window(
         s, 3, by=["host"], time_col="time", shards=4), "ews_sm"))
     assert shd_m == per_m
     assert len(per_m) == len(rows)
+    assert per_m == moving_rows(win.moving_event_window(
+        df, 3, by=["host"], time_col="time", order_cols=("event_id",)).collect())
 
 
 def test_by_shards_dsl_dispatches_row_buffer_twins(spark):
@@ -3252,9 +3425,11 @@ def test_stream_expired_sharded_parity(spark, tmp_path):
     """Sharded expired/not-expired keeps exactly the per-key twin's
     rows across a micro-batch boundary: per-key running-max clocks
     seeded from the carry, null-time rows never expire by age,
-    state=='expired' forces, per-event ttl respected."""
+    state=='expired' forces, per-event ttl respected — and both
+    groupings equal the batch twin over the same arrival order."""
     import pyspark.sql.functions as F
 
+    from mirabelle_spark.operators import filters as flt
     from mirabelle_spark.streaming import core
 
     rows = []
@@ -3276,11 +3451,14 @@ def test_stream_expired_sharded_parity(spark, tmp_path):
             lambda s: core.stream_expired(s, by=["host"], time_col="time",
                                           keep_expired=keep), f"exs_pk_{tag}"))
         shd = sorted(r.event_id for r in run(
-            lambda s: core.stream_expired_sharded(
+            lambda s: core.stream_expired(
                 s, by=["host"], time_col="time", keep_expired=keep,
                 shards=4), f"exs_sh_{tag}"))
         assert shd == per
         assert 0 < len(per) < len(rows)
+        twin = flt.expired if keep else flt.not_expired
+        assert per == sorted(r.event_id for r in twin(
+            df, time_col="time", arrival_cols=("event_id",), by=["host"]).collect())
 
 
 def test_stream_changed_jvm_replay_and_buckets(spark, tmp_path):

@@ -4,21 +4,19 @@
 Measures events/s through one availableNow pass for each mode:
 
   jvm              windowed sum aggregate (JVM baseline, update mode)
-  apws             stream_ewma — per-key applyInPandasWithState
-  sharded          stream_ewma_sharded (r7 shard-mapped keyed state)
+  apws             stream_ewma, one state group per key
+  sharded          stream_ewma(shards=N), shard-mapped keyed state
   sharded_ttl      same + state_ttl_s=3600 (prices the fork GC)
   tws              transformWithStateInPandas ewma prototype (needs
                    the google.protobuf package; import-gated)
-  cond_dt[_sharded], changed[_sharded], ddt[_sharded],
-  zscore[_sharded], throttle[_sharded], coalesce[_sharded],
-  stable[_sharded]  the other keyed twins, per-key and sharded
-                    (r8: the row-buffer twins stable/coalesce shard
-                    with columnar carries)
-  smax / smax_jvm   per-key row state vs the pure-JVM max_by tier
-                    (update mode; per-batch emission grain)
-  few[_sharded], mew[_sharded], expired[_sharded]
-                    fixed/moving event windows and the expiry clock,
-                    per-key and sharded
+  cond_dt, changed, ddt, zscore, throttle, coalesce, stable,
+  few, mew, expired, smax
+                   the other keyed twins per key; append ``_sharded``
+                   for the same fold with shards=N (few/mew: fixed/
+                   moving event windows)
+  smax_jvm         the pure-JVM max_by tier (update mode; per-batch
+                   emission grain)
+  changed_jvm      foreachBatch changed tier
 
 Usage:
   python tools/bench_streaming_state.py [--events 1000000]
@@ -127,6 +125,38 @@ class EwmaTws:
         return P()
 
 
+def _keyed_ops():
+    """Keyed twin builders by mode name; each takes ``shards`` (None =
+    one state group per key)."""
+    from pyspark.sql import functions as F
+
+    from mirabelle_spark import streaming as stx
+
+    k = dict(by=["host"], time_col="time")
+    return {
+        "ewma": lambda s, **kw: stx.stream_ewma(s, 0.25, **k, **kw),
+        "cond_dt": lambda s, **kw: stx.stream_cond_dt(
+            s, [":>", "metric", 60.0], 5.0, **k, **kw),
+        "changed": lambda s, **kw: stx.stream_changed(s, "metric", **k, **kw),
+        "ddt": lambda s, **kw: stx.stream_ddt(s, **k, **kw),
+        "zscore": lambda s, **kw: stx.stream_zscore(s, 30.0, **k, **kw),
+        "throttle": lambda s, **kw: stx.stream_throttle(s, 5, 30.0, **k, **kw),
+        "coalesce": lambda s, **kw: stx.stream_coalesce(
+            s, 60.0, fields=["host"], **k, **kw),
+        # status flips when the metric ramp crosses the threshold —
+        # long confirmed runs (the steady-state fast path) with
+        # periodic flaps that exercise the buffer machinery
+        "stable": lambda s, **kw: stx.stream_stable(
+            s.withColumn("status", F.when(F.col("metric") > 70.0, "hi")
+                         .otherwise("lo")),
+            5.0, "status", **k, **kw),
+        "few": lambda s, **kw: stx.stream_fixed_event_window(s, 5, **k, **kw),
+        "mew": lambda s, **kw: stx.stream_moving_event_window(s, 5, **k, **kw),
+        "expired": lambda s, **kw: stx.stream_expired(s, **k, **kw),
+        "smax": lambda s, **kw: stx.stream_smax(s, **k, **kw),
+    }
+
+
 def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int):
     from pyspark.sql import functions as F
 
@@ -143,6 +173,8 @@ def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int)
         )
         q.awaitTermination()
         return time.monotonic() - t0
+    keyed = _keyed_ops()
+    op = mode[: -len("_sharded")] if mode.endswith("_sharded") else mode
     if mode == "jvm":
         out = (
             stream.withWatermark("time", "0 seconds")
@@ -150,22 +182,11 @@ def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int)
             .agg(F.sum("metric").alias("metric"))
         )
     elif mode == "apws":
-        from mirabelle_spark.streaming import stream_ewma
-
-        out = stream_ewma(stream, 0.25, by=["host"], time_col="time")
+        out = keyed["ewma"](stream)
     elif mode == "sharded":
-        from mirabelle_spark.streaming import stream_ewma_sharded
-
-        out = stream_ewma_sharded(
-            stream, 0.25, by=["host"], time_col="time", shards=shards
-        )
+        out = keyed["ewma"](stream, shards=shards)
     elif mode == "sharded_ttl":
-        from mirabelle_spark.streaming import stream_ewma_sharded
-
-        out = stream_ewma_sharded(
-            stream, 0.25, by=["host"], time_col="time", shards=shards,
-            state_ttl_s=3600.0,
-        )
+        out = keyed["ewma"](stream, shards=shards, state_ttl_s=3600.0)
     elif mode == "tws":
         out = stream.groupBy("host").transformWithStateInPandas(
             EwmaTws(0.25).build(),
@@ -173,120 +194,12 @@ def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int)
             outputMode="append",
             timeMode="none",
         )
-    elif mode == "cond_dt":
-        from mirabelle_spark.streaming import stream_cond_dt
-
-        out = stream_cond_dt(
-            stream, [":>", "metric", 60.0], 5.0, by=["host"], time_col="time"
-        )
-    elif mode == "cond_dt_sharded":
-        from mirabelle_spark.streaming import stream_cond_dt_sharded
-
-        out = stream_cond_dt_sharded(
-            stream, [":>", "metric", 60.0], 5.0, by=["host"], time_col="time",
-            shards=shards,
-        )
-    elif mode == "coalesce":
-        from mirabelle_spark.streaming import stream_coalesce
-
-        out = stream_coalesce(
-            stream, 60.0, fields=["host"], by=["host"], time_col="time"
-        )
-    elif mode == "zscore":
-        from mirabelle_spark.streaming import stream_zscore
-
-        out = stream_zscore(stream, 30.0, by=["host"], time_col="time")
-    elif mode == "zscore_sharded":
-        from mirabelle_spark.streaming import stream_zscore_sharded
-
-        out = stream_zscore_sharded(
-            stream, 30.0, by=["host"], time_col="time", shards=shards
-        )
-    elif mode == "changed":
-        from mirabelle_spark.streaming import stream_changed
-
-        out = stream_changed(stream, "metric", by=["host"], time_col="time")
-    elif mode == "changed_sharded":
-        from mirabelle_spark.streaming import stream_changed_sharded
-
-        out = stream_changed_sharded(
-            stream, "metric", by=["host"], time_col="time", shards=shards
-        )
-    elif mode == "ddt":
-        from mirabelle_spark.streaming import stream_ddt
-
-        out = stream_ddt(stream, by=["host"], time_col="time")
-    elif mode == "throttle":
-        from mirabelle_spark.streaming import stream_throttle
-
-        out = stream_throttle(stream, 5, 30.0, by=["host"], time_col="time")
-    elif mode == "throttle_sharded":
-        from mirabelle_spark.streaming import stream_throttle_sharded
-
-        out = stream_throttle_sharded(
-            stream, 5, 30.0, by=["host"], time_col="time", shards=shards
-        )
-    elif mode == "ddt_sharded":
-        from mirabelle_spark.streaming import stream_ddt_sharded
-
-        out = stream_ddt_sharded(stream, by=["host"], time_col="time", shards=shards)
-    elif mode in ("stable", "stable_sharded"):
-        # status flips when the metric ramp crosses the threshold —
-        # long confirmed runs (the steady-state fast path) with
-        # periodic flaps that exercise the buffer machinery
-        st = stream.withColumn(
-            "status", F.when(F.col("metric") > 70.0, "hi").otherwise("lo")
-        )
-        if mode == "stable":
-            from mirabelle_spark.streaming import stream_stable
-
-            out = stream_stable(st, 5.0, "status", by=["host"], time_col="time")
-        else:
-            from mirabelle_spark.streaming import stream_stable_sharded
-
-            out = stream_stable_sharded(
-                st, 5.0, "status", by=["host"], time_col="time", shards=shards
-            )
-    elif mode == "coalesce_sharded":
-        from mirabelle_spark.streaming import stream_coalesce_sharded
-
-        out = stream_coalesce_sharded(
-            stream, 60.0, fields=["host"], by=["host"], time_col="time",
-            shards=shards,
-        )
-    elif mode in ("few", "few_sharded"):
-        if mode == "few":
-            from mirabelle_spark.streaming import stream_fixed_event_window as f
-        else:
-            from mirabelle_spark.streaming import (
-                stream_fixed_event_window_sharded as f,
-            )
-        kw = {"shards": shards} if mode.endswith("sharded") else {}
-        out = f(stream, 5, by=["host"], time_col="time", **kw)
-    elif mode in ("mew", "mew_sharded"):
-        if mode == "mew":
-            from mirabelle_spark.streaming import stream_moving_event_window as f
-        else:
-            from mirabelle_spark.streaming import (
-                stream_moving_event_window_sharded as f,
-            )
-        kw = {"shards": shards} if mode.endswith("sharded") else {}
-        out = f(stream, 5, by=["host"], time_col="time", **kw)
-    elif mode in ("expired", "expired_sharded"):
-        if mode == "expired":
-            from mirabelle_spark.streaming import stream_expired as f
-        else:
-            from mirabelle_spark.streaming import stream_expired_sharded as f
-        kw = {"shards": shards} if mode.endswith("sharded") else {}
-        out = f(stream, by=["host"], time_col="time", **kw)
-    elif mode == "smax":
-        from mirabelle_spark.streaming import stream_smax
-
-        out = stream_smax(stream, by=["host"], time_col="time")
     elif mode == "smax_jvm":
         from mirabelle_spark.streaming import stream_smax_jvm
 
         out = stream_smax_jvm(stream, by=["host"], time_col="time")
+    elif op in keyed:
+        out = keyed[op](stream, shards=shards if op != mode else None)
     else:
         raise SystemExit(f"unknown mode {mode}")
 
