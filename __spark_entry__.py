@@ -27,26 +27,26 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # The driver's correctness gate samples the FIRST 50 registry entries,
-# so ordering is coverage policy. Round-16 rotation (VERDICT r15 ask
-# #1, executed as written): (a) queries ADDED in round 16 lead — the
-# image perceptual-hash pair (dHash over the real netpbm codec +
-# Hamming-band near-dup resolution), the video frame-dHash near-dup,
-# and the audio envelope-dHash pair (stdlib WAV codec + the same
-# band machinery); (b) the 20-query r12 tail — last driver-gated in
-# round 12, the oldest cohort; (c) the first 25 of the 47-entry r13
-# cohort, registry order, filling to exactly 50.
-# After this gate no query's last-green is older than r13; the
-# remaining 22 r13-gated entries (coll_top3, coll_bottom3,
-# coll_sort_ids, by_sum_daily,
-# smax_running, semdedup_survivors, semdedup_arrow_survivors,
-# semdedup_prod_survivors, semdedup_prod_arrow_survivors,
-# ngram_containment_pairs, contamination_bloom_docs,
-# dsir_logweight_docs, dsir_top_docs, temperature_sample_docs,
-# bpe_fertility_by_lang, curate_head_dsir_docs,
-# dup_span_removed_prefilter_docs, dup_span_removed_char_prefilter_docs,
-# dup_span_removed_twophase_docs, vocab_cardinality_by_lang,
-# corpus_datasheet, volume_shipping) lead r17 together with r17's own
-# adds, then the oldest r14-gated entries in registry order.
+# so ordering is coverage policy: the oldest last-gated queries come
+# first, and a query whose engine path changed leads the next gate.
+# Current rotation:
+# (a) ewma_smoothed and throttle lead — their batch path now runs the
+#     streaming fold under one mapInPandas shell; last gated in r14;
+# (b) the 22 r13-gated entries, the oldest cohort (registry order);
+# (c) the first 26 r14-gated entries in registry order, filling to
+#     exactly 50.
+# r16 and r17 gated the same 50 names (the r16 list was not rotated),
+# so after this gate every query's last-green is r14 or later; the
+# remaining 22 r14-gated entries (registry order: ann_pq_topk,
+# embedding_near_dups, semantic_dedup_survivors,
+# stratified_sample_docs, contamination_docs, pack_docs,
+# boilerplate_removed_docs, ann_ivfpq_trained_topk,
+# winnow_dedup_pairs, bpe_top_pairs, pca_power_iter,
+# pca_project_trained, tfidf_top_terms, dup_span_fraction_docs,
+# curate_head_lm_docs, curate_head_lm3_docs, lm3_bits_docs,
+# lm3_quality_docs, top_suppliers, priority_conditional_counts,
+# brand_part_revenue, segment_top_orders) lead the next rotation,
+# then the r15-gated cohort.
 #
 # winnow_dedup_pairs_fast is rows-only BY DESIGN (no xxhash64 in
 # DuckDB; overlap vs the portable path is pytest-pinned) — it must
@@ -54,27 +54,28 @@ def entry(spark: SparkSession) -> DataFrame:
 # an `err` for its missing oracle. It stays below slot 50 because
 # this list holds exactly 50 oracle-backed names.
 GATE_PRIORITY = [
-    # (a) added in round 16 (image/video/audio perceptual-hash near-dup)
-    "image_dhash_docs", "image_near_dups", "video_near_dups",
-    "audio_dhash_docs", "audio_near_dups",
-    # (b) the 20-query r12 tail (registry order; 4 rounds since last gate)
-    "text_quality", "text_lang_id", "text_fingerprint",
-    "text_rolling_fp", "neardup_degree_histogram", "soft_dedup_docs",
-    "corpus_split_docs", "search_quality_docs", "doc_length_profile",
-    "split_token_budget", "bpe_segment_trained", "scrubbed_corpus_docs",
-    "curate_head_logreg_docs", "logreg_quality_docs", "curate_head_docs",
-    "dup_span_removed_docs", "dup_span_removed_char_docs",
-    "order_priority_counts", "returned_item_customers",
-    "large_order_customers",
-    # (c) first 25 of the 47-entry r13 cohort (registry order)
-    "where_not", "where_regex", "under_filter", "expired_events",
-    "not_expired_events", "changed_transitions", "above_dt_alert",
-    "outside_dt_alert", "extract_nested", "sflatten_roundtrip",
-    "moving_time_window_count", "coalesce_latest", "agg_sum_hourly",
-    "agg_sum_delayed_hourly", "agg_mean_hourly", "agg_top_event",
-    "agg_bottom_event", "agg_rate_hourly", "agg_ratio_error_click",
-    "agg_percentiles_hourly", "coll_count_hourly", "coll_max_hourly",
-    "coll_min_hourly", "coll_rate_hourly", "coll_quotient_daily",
+    # (a) engine path changed this round (last gated r14)
+    "ewma_smoothed", "throttle",
+    # (b) the 22 r13-gated entries (registry order)
+    "coll_top3", "coll_bottom3", "coll_sort_ids", "by_sum_daily",
+    "smax_running", "semdedup_survivors", "semdedup_arrow_survivors",
+    "semdedup_prod_survivors", "semdedup_prod_arrow_survivors",
+    "ngram_containment_pairs", "contamination_bloom_docs",
+    "dsir_logweight_docs", "dsir_top_docs", "temperature_sample_docs",
+    "bpe_fertility_by_lang", "curate_head_dsir_docs",
+    "dup_span_removed_prefilter_docs",
+    "dup_span_removed_char_prefilter_docs",
+    "dup_span_removed_twophase_docs", "vocab_cardinality_by_lang",
+    "corpus_datasheet", "volume_shipping",
+    # (c) first 26 r14-gated entries (registry order)
+    "where_basic", "over_filter", "tagged_all", "split_routing",
+    "stable_states", "with_const", "default_missing", "scale_metric",
+    "coll_increase_daily", "ddt_rate", "coll_where_inside_window",
+    "coll_sum_hourly", "coll_mean_hourly", "coll_percentiles_hourly",
+    "sessionize_user_events", "zscore_events", "dedup_exact_docs",
+    "minhash_lsh_pairs", "ngram_jaccard_pairs", "simhash_pairs",
+    "dedup_clusters", "dedup_survivors_docs", "ann_bruteforce_topk",
+    "ann_bruteforce_l2_topk", "ann_lsh_topk", "ann_ivf_topk",
 ]
 
 

@@ -542,29 +542,18 @@ def ewma_timeless(
     null metric leaves the average untouched and emits null).
 
     An order-dependent FP recurrence has no associative form, so it
-    cannot be a hash aggregate — this is the textbook keyed-scan op:
-    Arrow-batched ``applyInPandas`` per ``by`` key, sorted by event
-    time. Parallelism across keys; the streaming twin is
-    transformWithState. The identical double recurrence is what the
-    DuckDB oracle computes, so results match bit-for-bit.
+    cannot be a hash aggregate — this is the textbook keyed scan. It
+    runs the streaming fold ``stream_ewma`` runs (``_ewma_fold``) with
+    an empty carry, under the batch shell ``_keyed_fold_batch``: one
+    ``mapInPandas`` over the table repartitioned on ``by`` and sorted
+    by (``by``, time, *order_cols). Parallelism across keys; a null
+    ``by`` key is a key of its own, as in Spark's groupBy. The
+    identical double recurrence is what the DuckDB oracle computes,
+    so results match bit-for-bit.
     """
-    from mirabelle_spark.operators.stateful import ordered_keyed_scan
+    # lazy: streaming.core imports this module at the top
+    from mirabelle_spark.streaming.core import _ewma_fold, _keyed_fold_batch
 
-    schema = df.schema
-    key_cols = list(by) if by else ["__g__"]
-    src = df if by else df.withColumn("__g__", F.lit(0))
-    sort_cols = [time_col, *order_cols]
-
-    def _ewma(pdf):
-        m = 0.0
-        out = []
-        # .tolist(): plain-float loop is ~5x faster than Series iteration
-        for x in pdf[metric_col].tolist():
-            if x is None or (isinstance(x, float) and x != x):
-                out.append(None)
-            else:
-                m = r * float(x) + (1.0 - r) * m
-                out.append(m)
-        return pdf.assign(**{metric_col: out})
-
-    return ordered_keyed_scan(src, key_cols, sort_cols, _ewma, schema=schema)
+    return _keyed_fold_batch(
+        df, by, [time_col, *order_cols], _ewma_fold(r, metric_col)
+    )

@@ -241,45 +241,19 @@ def throttle_batch(
     (``when (:time event)``).
 
     The anchored recurrence is a segmented scan — not expressible as
-    a closed-form window function — so this runs as an Arrow-batched
-    ``applyInPandas`` per key, sorted by (time, *order_cols). With
-    ``by`` keys this scales horizontally (one group per key); without
+    a closed-form window function — so this runs the streaming fold
+    ``stream_throttle`` runs (``_throttle_fold``) with an empty carry,
+    under the batch shell ``_keyed_fold_batch``: one ``mapInPandas``
+    sorted by (``by``, time, *order_cols). With ``by`` keys this
+    scales horizontally, a null key being a key of its own; without
     keys it degenerates to a single ordered scan, same as the
     single-threaded reference.
     """
-    import pandas as pd
+    from mirabelle_spark.streaming.core import _keyed_fold_batch, _throttle_fold
 
-    from mirabelle_spark.operators.stateful import ordered_keyed_scan
-
-    schema = df.schema
-    key_cols = list(by) if by else ["__g__"]
-    src = df.filter(F.col(time_col).isNotNull())
-    if not by:
-        src = src.withColumn("__g__", F.lit(0))
-    sort_cols = [time_col, *order_cols]
-
-    dur_us = int(round(duration_s * 1_000_000))
-
-    def _throttle(pdf: pd.DataFrame) -> pd.DataFrame:
-        ts = pdf[time_col]
-        # exact integer µs so window-boundary comparisons can never
-        # drift from the integer-µs oracle (float seconds would)
-        if str(ts.dtype).startswith("datetime64"):
-            tvals = ts.astype("int64") // 1_000
-        else:
-            tvals = (ts.astype("float64") * 1_000_000).round().astype("int64")
-        anchor = None
-        n = 0
-        keep = []
-        for tv in tvals.tolist():
-            if anchor is None or tv >= anchor + dur_us:
-                anchor, n = tv, 1
-                keep.append(True)
-            elif n < count:
-                n += 1
-                keep.append(True)
-            else:
-                keep.append(False)
-        return pdf[pd.Series(keep, index=pdf.index)]
-
-    return ordered_keyed_scan(src, key_cols, sort_cols, _throttle, schema=schema)
+    return _keyed_fold_batch(
+        df.filter(F.col(time_col).isNotNull()),
+        by,
+        [time_col, *order_cols],
+        _throttle_fold(count, duration_s, time_col),
+    )

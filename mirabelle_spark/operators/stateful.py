@@ -4,8 +4,10 @@ The reference implements these as per-operator atoms mutated in
 arrival order (single-threaded). Batch realization: analytic window
 functions over (by-keys, event-time order) — lag, prefix aggregates,
 and run/sessionization — all JVM-side, one shuffle on the keys.
-Streaming twins (transformWithState) live in
-:mod:`mirabelle_spark.streaming`.
+Streaming twins live in :mod:`mirabelle_spark.streaming`. The two
+keyed operators with a Python fold (ewma, throttle) run that one
+fold in batch too, under a ``mapInPandas`` shell
+(``streaming.core._keyed_fold_batch``).
 
 Determinism: arrival order in a batch table is defined by
 ``order_cols`` (e.g. an ingest sequence id) appended to the
@@ -253,56 +255,6 @@ def stable(
     )
     out = d.filter(F.col("__runmax__") > F.col("__flip__") + F.lit(dt_us))
     return out.drop("__pm__", "__run__", "__flip__", "__runmax__")
-
-
-def ordered_keyed_scan(df, by, sort_cols, process_group, schema=None):
-    """Run ``process_group(pdf) -> pdf`` once per key group, with the
-    grouped-UDF overhead amortized: repartition on the keys, sort
-    within partitions, stream large Arrow batches through ONE
-    mapInPandas and split groups pandas-side (carrying the tail
-    group across batch boundaries).
-
-    Why: applyInPandas pays per-group Arrow slicing — ~3 ms/group
-    regardless of size, which dominates when keys are many and small
-    (measured: identity applyInPandas on 100k rows / 1500 keys =
-    4.7 s; this path ≈ the plain scan). Semantics identical: each
-    group arrives complete and sorted.
-    """
-    import pandas as pd
-
-    schema = schema or df.schema
-    out_cols = [f.name for f in schema.fields]
-    by = list(by)
-    src = df.repartition(*[F.col(c) for c in by]).sortWithinPartitions(
-        *[F.col(c) for c in by], *[F.col(c) for c in sort_cols]
-    )
-
-    def run(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                carry = None
-                continue
-            keys = pdf[by].apply(tuple, axis=1)
-            last = keys.iloc[-1]
-            tail_mask = (keys == last).values
-            # the final group may continue in the next batch — hold it
-            carry = pdf[tail_mask]
-            body = pdf[~tail_mask]
-            if len(body):
-                out = body.groupby(by, sort=False, group_keys=False).apply(
-                    process_group
-                )
-                if len(out):
-                    yield out[out_cols]
-        if carry is not None and len(carry):
-            out = carry.groupby(by, sort=False, group_keys=False).apply(process_group)
-            if len(out):
-                yield out[out_cols]
-
-    return src.mapInPandas(run, schema=schema)
 
 
 def zscore(

@@ -1059,15 +1059,14 @@ def _keyed_batch_scan(
     )
 
 
-# -- keyed-state folds: one fold, two groupings ------------------------------
+# -- keyed-state folds: one fold, three shells -------------------------------
 # Every keyed operator below is ONE fold ``fold(carry, ks, pdf) -> out``:
-# ``pdf`` is a micro-batch slice holding each key's rows contiguous and
-# in event-time order, ``ks`` the per-row key string, and ``carry`` the
-# {key string: state} map the
-# fold reads at segment starts and writes at segment ends. The key
-# groups are only a routing choice (ICDE 2025, "Towards Fine-Grained
-# Scalability for Stateful Stream Processing Systems"), picked by
-# ``shards``:
+# ``pdf`` is a slice holding each key's rows contiguous and in
+# event-time order, ``ks`` the per-row key string, and ``carry`` the
+# {key string: state} map the fold reads at segment starts and writes
+# at segment ends. The key groups are only a routing choice (ICDE
+# 2025, "Towards Fine-Grained Scalability for Stateful Stream
+# Processing Systems"), picked by ``shards``:
 #
 # - ``shards=None`` groups on the ``by`` columns themselves (the
 #   reference's per-key `by` fork): one Python call per key per
@@ -1080,8 +1079,10 @@ def _keyed_batch_scan(
 #   batch.
 #
 # Both groupings keep the same ``carry STRING`` state, so a fold's
-# per-key operation sequence is identical either way (parity pytests
-# against the batch twins).
+# per-key operation sequence is identical either way. The batch twin
+# (``_keyed_fold_batch``) is the same fold with an empty carry: a
+# sorted table partition is one more key group. Null keys are a key
+# of their own in all three shells, as in Spark's groupBy.
 
 _SHARD_COL = "__shard__"
 _UNKEYED_COL = "__g__"  # the one constant group of an unkeyed fold
@@ -1268,20 +1269,52 @@ def _keyed_fold_scan(
     )
 
 
-def stream_throttle(
-    df: DataFrame,
-    count: int,
-    duration_s: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    shards: int | None = None,
-) -> DataFrame:
-    """Streaming anchored-window throttle (action.clj:1163-1217) —
-    per-key state (anchor_us, n); exact integer-µs window math like
-    the batch twin. The scan loops over a primitive int64 array (the
-    anchored recurrence is inherently sequential) with carry reload at
-    key boundaries only; it never builds per-row dicts/Series.
-    ``shards`` picks the grouping (see ``_keyed_fold_scan``)."""
+def _keyed_fold_batch(df, by, sort_cols, fold):
+    """The batch shell of the keyed folds: the streaming ``fold`` run
+    over a whole table, each key starting from an empty carry.
+
+    Repartition on ``by`` (or the constant ``_UNKEYED_COL`` when ``by``
+    is empty), sort within partitions on (``by``, ``sort_cols``) and
+    stream each partition's Arrow chunks through one ``mapInPandas``
+    — no per-group Arrow slicing, so many small keys cost about a
+    plain scan. Between chunks only the last key's carry is kept: a
+    sorted partition never comes back to a key, and that carry is
+    what lets a key span two chunks. Key identity is
+    ``_shard_key_strings``, so a null key folds as its own key, as in
+    the streaming shells and Spark's groupBy."""
+    key_cols = list(by)
+    if key_cols:
+        src, group = df, key_cols
+    else:
+        src, group = df.withColumn(_UNKEYED_COL, F.lit(0)), [_UNKEYED_COL]
+    dtypes = dict(src.dtypes)
+    key_dtypes = [dtypes[c] for c in group]
+    src = src.repartition(*[F.col(c) for c in group]).sortWithinPartitions(
+        *[F.col(c) for c in group], *[F.col(c) for c in sort_cols]
+    )
+
+    def run(chunks):
+        carry = {}
+        for pdf in chunks:
+            if not len(pdf):
+                continue
+            ks = _shard_key_strings(pdf, group, key_dtypes)
+            if group != key_cols:
+                pdf = pdf.drop(columns=group)
+            yield fold(carry, ks, pdf)
+            last = ks[-1]
+            carry = {last: carry[last]} if last in carry else {}
+
+    return src.mapInPandas(run, schema=df.schema)
+
+
+def _throttle_fold(count, duration_s, time_col):
+    """The anchored-window throttle fold (action.clj:1163-1217): per
+    key state (anchor_us, n), exact integer-µs window math. It loops
+    over a primitive int64 array (the anchored recurrence is
+    inherently sequential) and reloads the carry at key boundaries
+    only; it never builds per-row dicts/Series. Rows must have a
+    time."""
     import numpy as np
 
     dur_us = int(round(duration_s * 1_000_000))
@@ -1310,41 +1343,33 @@ def stream_throttle(
             carry[prev] = (anchor, n)
         return pdf[keep]
 
-    return _keyed_fold_scan(df, by, time_col, shards, fold)
+    return fold
 
 
-def stream_ewma(
-    df: DataFrame,
-    r: float,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-    state_ttl_s: float | None = None,
-    shards: int | None = None,
-) -> DataFrame:
-    """Streaming ewma-timeless (action.clj:1248-1276): keyed running
-    average, identical double recurrence (same fold order) as the
-    batch twin; null metrics pass through as null without touching
-    the state. ``state_ttl_s`` evicts idle keys (fork GC) — pass a
-    watermarked input when set per key. ``shards`` picks the grouping
-    (see ``_keyed_fold_scan``); PERF §39: 214k ev/s at 1M keys
-    sharded vs 7.9k per key.
+def _ewma_fold(r, metric_col):
+    """The ewma-timeless fold (action.clj:1248-1276): m' = r·x +
+    (1−r)·m from m₀ = 0 per key; a null metric emits null and leaves
+    the state untouched.
 
-    A slice holding one key segment (every per-key call) runs the
-    scalar loop over a primitive float64 array. With several keys
-    the fold is VECTORIZED across keys (r17, guide §4.2: the per-row
-    loop was ~62 % of the shard tier's CPU): key runs are contiguous
-    segments, and step j updates every key's j-th event at once with
-    the SAME scalar expression ``r*v + (1.0-r)*m`` (numpy float64
-    scalar ops are IEEE doubles — each key's value sequence sees the
-    identical op order as the scalar loop, pinned by the batch-parity
-    pytests). A NaN event emits NaN and leaves the key's state
-    unchanged, exactly the scalar branch. Keys whose run exceeds
-    ``_EWMA_VEC_CAP`` take the scalar loop over just their rows."""
+    A slice holding one key segment (every per-key streaming call)
+    runs the scalar loop over a primitive float64 array. With several
+    keys the fold is VECTORIZED across keys (r17: the per-row loop
+    was ~62 % of the shard tier's CPU): key runs are
+    contiguous segments, and step j updates every key's j-th event at
+    once with the SAME ``step`` as the scalar loop (numpy float64 ops
+    are IEEE doubles — each key's value sequence sees the identical
+    op order as the scalar loop, and as the DuckDB oracle's recursive
+    CTE). A NaN event emits NaN and leaves the
+    key's state unchanged, exactly the scalar branch. Keys whose run
+    exceeds ``_EWMA_VEC_CAP`` take the scalar loop over just their
+    rows."""
     import numpy as np
     import pandas as pd
 
     cap = _EWMA_VEC_CAP
+
+    def step(v, m):
+        return r * v + (1.0 - r) * m
 
     def _scalar_run(carry, k, vals, out, lo, hi):
         m = carry.get(k)
@@ -1353,7 +1378,7 @@ def stream_ewma(
             if v != v:
                 out[i] = np.nan
             else:
-                m = r * v + (1.0 - r) * (m if m is not None else 0.0)
+                m = step(v, m if m is not None else 0.0)
                 out[i] = m
         if m is not None:
             carry[k] = m
@@ -1395,7 +1420,7 @@ def stream_ewma(
                     pos = s_starts[:a] + j
                     v = vals[pos]
                     real = v == v
-                    stepped = r * v + (1.0 - r) * m[:a]
+                    stepped = step(v, m[:a])
                     m[:a] = np.where(real, stepped, m[:a])
                     out[pos] = np.where(real, stepped, np.nan)
                     seen[:a] |= real
@@ -1413,8 +1438,43 @@ def stream_ewma(
         res[metric_col] = pd.array(out, dtype="float64")
         return res
 
+    return fold
+
+
+def stream_throttle(
+    df: DataFrame,
+    count: int,
+    duration_s: float,
+    by: Sequence[str],
+    time_col: str = "time",
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming anchored-window throttle (action.clj:1163-1217): the
+    ``_throttle_fold`` that ``throttle_batch`` also runs. ``shards``
+    picks the grouping (see ``_keyed_fold_scan``)."""
     return _keyed_fold_scan(
-        df, by, time_col, shards, fold, state_ttl_s=state_ttl_s
+        df, by, time_col, shards, _throttle_fold(count, duration_s, time_col)
+    )
+
+
+def stream_ewma(
+    df: DataFrame,
+    r: float,
+    by: Sequence[str],
+    time_col: str = "time",
+    metric_col: str = "metric",
+    state_ttl_s: float | None = None,
+    shards: int | None = None,
+) -> DataFrame:
+    """Streaming ewma-timeless (action.clj:1248-1276): the
+    ``_ewma_fold`` that ``ewma_timeless`` also runs, so both emit the
+    same doubles. ``state_ttl_s`` evicts idle keys (fork GC) — pass a
+    watermarked input when set per key. ``shards`` picks the grouping
+    (see ``_keyed_fold_scan``); PERF §39: 214k ev/s at 1M keys
+    sharded vs 7.9k per key."""
+    return _keyed_fold_scan(
+        df, by, time_col, shards, _ewma_fold(r, metric_col),
+        state_ttl_s=state_ttl_s,
     )
 
 

@@ -21,6 +21,17 @@ EVENTS = st.lists(
     max_size=30,
 )
 
+# events with a `by` key per event; None is a key of its own
+KEYED_EVENTS = st.lists(
+    st.tuples(
+        st.integers(min_value=-1000, max_value=1000),   # time seconds
+        st.integers(min_value=-50, max_value=50),        # metric
+        st.sampled_from(["a", "b", None]),               # host
+    ),
+    min_size=1,
+    max_size=30,
+)
+
 SLOW = settings(
     max_examples=12,
     deadline=None,
@@ -31,6 +42,12 @@ SLOW = settings(
 def _df(make_events, evs):
     return make_events(
         [{"time": t, "metric": float(m)} for t, m in evs]
+    )
+
+
+def _keyed_df(make_events, evs):
+    return make_events(
+        [{"time": t, "metric": float(m), "host": h} for t, m, h in evs]
     )
 
 
@@ -53,28 +70,31 @@ def test_window_bucket_matches_reference_math(make_events, evs, dur):
     assert {k: int(v) for k, v in got.items()} == expected
 
 
-@given(evs=EVENTS, count=st.integers(1, 3), dur=st.sampled_from([5, 20]))
+@given(evs=KEYED_EVENTS, count=st.integers(1, 3), dur=st.sampled_from([5, 20]))
 @SLOW
 def test_throttle_matches_reference_loop(make_events, evs, count, dur):
     """Anchored-window throttle vs a literal transcription of
-    action.clj:1163-1195 run over time-sorted input."""
+    action.clj:1163-1195 run per `by` key over time-sorted input; a
+    null key is a key of its own (the reference's `by` fork)."""
     from mirabelle_spark.operators import filters as flt
 
-    df = _df(make_events, evs)
+    df = _keyed_df(make_events, evs)
     out = flt.throttle_batch(
-        df, count=count, duration_s=float(dur), time_col="time", order_cols=["seq"]
+        df, count=count, duration_s=float(dur), by=["host"], time_col="time",
+        order_cols=["seq"],
     )
     got = sorted(r.seq for r in out.collect())
 
     order = sorted(range(len(evs)), key=lambda i: (evs[i][0], i))
-    anchor, n, keep = None, 0, []
+    state, keep = {}, []
     for i in order:
-        t = evs[i][0]
+        t, _, h = evs[i]
+        anchor, n = state.get(h, (None, 0))
         if anchor is None or t >= anchor + dur:
-            anchor, n = t, 1
+            state[h] = (t, 1)
             keep.append(i)
         elif n < count:
-            n += 1
+            state[h] = (anchor, n + 1)
             keep.append(i)
     assert got == sorted(keep)
 
@@ -125,22 +145,25 @@ def test_smax_matches_reference_loop(make_events, evs):
     assert got == sorted(out)
 
 
-@given(evs=EVENTS, r=st.sampled_from([0.25, 0.5, 0.75]))
+@given(evs=KEYED_EVENTS, r=st.sampled_from([0.25, 0.5, 0.75]))
 @SLOW
 def test_ewma_matches_reference_loop(make_events, evs, r):
-    """ewma m' = r·x + (1−r)·m, m0=0 (action.clj:1248-1276) — exact
-    float equality with the sequential loop."""
+    """ewma m' = r·x + (1−r)·m, m0=0 (action.clj:1248-1276) per `by`
+    key, a null key being a key of its own — exact float equality
+    with the sequential loop."""
     from mirabelle_spark.operators import aggregations as agg
 
-    df = _df(make_events, evs)
-    out = agg.ewma_timeless(df, r, time_col="time", order_cols=["seq"])
+    df = _keyed_df(make_events, evs)
+    out = agg.ewma_timeless(df, r, by=["host"], time_col="time", order_cols=["seq"])
     got = {row.seq: row.metric for row in out.collect()}
 
     order = sorted(range(len(evs)), key=lambda i: (evs[i][0], i))
-    m = 0.0
+    assert sorted(got) == list(range(len(evs)))
+    ms = {}
     for i in order:
-        m = r * float(evs[i][1]) + (1.0 - r) * m
-        assert got[i] == m
+        _, x, h = evs[i]
+        ms[h] = r * float(x) + (1.0 - r) * ms.get(h, 0.0)
+        assert got[i] == ms[h]
 
 
 @given(evs=st.lists(st.tuples(st.integers(0, 100), st.sampled_from(["ok", "crit"])),

@@ -1999,10 +1999,8 @@ def test_stream_zscore_parity(spark, tmp_path):
 
 def test_stream_ewma_sharded_parity(spark, tmp_path):
     """The sharded high-cardinality ewma twin is bit-identical to the
-    per-key twin AND to the batch operator: 300 keys folded through 4
-    shards across a two-file micro-batch split, including null
-    metrics. (Null KEYS follow the batch operator's pandas-groupby
-    semantics — dropped — so they stay out of the parity fixture.)"""
+    batch operator: 300 keys plus a null key folded through 4 shards
+    across a two-file micro-batch split, including null metrics."""
     import pyspark.sql.functions as F
 
     from mirabelle_spark.operators import aggregations as agg
@@ -2010,8 +2008,8 @@ def test_stream_ewma_sharded_parity(spark, tmp_path):
 
     rows = []
     eid = 0
-    for i in range(300):
-        host = f"h{i:03d}"
+    for i in range(301):
+        host = f"h{i:03d}" if i < 300 else None
         x = float((i * 37) % 101) / 7.0
         for j in range(6):
             v = None if (i + j) % 23 == 5 else x + j * 0.625
@@ -2251,7 +2249,7 @@ def test_stream_sharded_changed_ddt_zscore_parity(spark, tmp_path):
 def test_stream_throttle_sharded_parity(spark, tmp_path):
     """Sharded throttle keeps exactly the per-key grouping's rows
     across a micro-batch split (anchored-window recurrence), and both
-    equal the batch twin."""
+    equal the batch twin — a null key included, as its own key."""
     import pyspark.sql.functions as F
 
     from mirabelle_spark.operators.filters import throttle_batch
@@ -2259,9 +2257,10 @@ def test_stream_throttle_sharded_parity(spark, tmp_path):
 
     rows = []
     eid = 0
-    for i in range(150):
+    for i in range(151):
         for j in range(8):
-            rows.append((eid, f"h{i:03d}", float(j * 3)))  # 3s apart, 10s window
+            host = f"h{i:03d}" if i < 150 else None
+            rows.append((eid, host, float(j * 3)))  # 3s apart, 10s window
             eid += 1
     df = spark.createDataFrame(
         rows, "event_id bigint, host string, t double"
@@ -2288,7 +2287,8 @@ def test_stream_throttle_sharded_parity(spark, tmp_path):
 
     per = run(core.stream_throttle, "ths_pk")
     shd = run(core.stream_throttle, "ths_sh", shards=4)
-    assert shd == per and 0 < len(per) < 1200
+    assert shd == per and 0 < len(per) < len(rows)
+    assert {1200, 1201} <= per  # the null key's first window
     assert per == {r.event_id for r in throttle_batch(
         df, 2, 10.0, by=["host"], time_col="time",
         order_cols=("event_id",)).collect()}
@@ -2996,6 +2996,59 @@ def test_keyed_fold_sorts_group_once_across_arrow_chunks(spark, tmp_path):
             q.awaitTermination()
             got = {r.event_id: r.metric for r in spark.sql(f"SELECT * FROM {name}").collect()}
             assert got == batch, (name, sorted(k for k in batch if got.get(k) != batch[k])[:10])
+    finally:
+        spark.conf.set(conf, old)
+
+
+def test_keyed_fold_batch_carries_key_across_arrow_chunks(spark):
+    """The batch shell streams each sorted partition through
+    ``mapInPandas`` in Arrow chunks and keeps the last key's carry
+    between them: with ``maxRecordsPerBatch=5`` every key's run spans
+    several chunks, and ``ewma_timeless``/``throttle_batch`` still
+    equal a plain per-key loop, keyed (a null key included) and
+    unkeyed."""
+    import pyspark.sql.functions as F
+
+    from mirabelle_spark.operators.aggregations import ewma_timeless
+    from mirabelle_spark.operators.filters import throttle_batch
+
+    rows = []
+    for h in ("a", "b", None):
+        for j in range(17):
+            rows.append((len(rows), h, float(j * 2), float((j * 5) % 7)))
+    df = spark.createDataFrame(
+        rows, "event_id bigint, host string, t double, metric double"
+    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
+    order = sorted(range(len(rows)), key=lambda i: (rows[i][2], i))
+
+    def reference(keyed):
+        ms, anchors, ewma, kept = {}, {}, {}, set()
+        for i in order:
+            _, h, t, x = rows[i]
+            k = h if keyed else 0
+            ms[k] = 0.25 * x + (1.0 - 0.25) * ms.get(k, 0.0)
+            ewma[i] = ms[k]
+            anchor, n = anchors.get(k, (None, 0))
+            if anchor is None or t >= anchor + 10.0:
+                anchors[k] = (t, 1)
+                kept.add(i)
+            elif n < 3:
+                anchors[k] = (anchor, n + 1)
+                kept.add(i)
+        return ewma, kept
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "5")
+    try:
+        for by in (["host"], []):
+            ewma, kept = reference(bool(by))
+            kw = dict(by=by, time_col="time", order_cols=("event_id",))
+            got = {r.event_id: r.metric
+                   for r in ewma_timeless(df, 0.25, **kw).collect()}
+            assert got == ewma, by
+            got = {r.event_id for r in throttle_batch(df, 3, 10.0, **kw).collect()}
+            assert got == kept, by
     finally:
         spark.conf.set(conf, old)
 

@@ -7,8 +7,6 @@ Measures events/s through one availableNow pass for each mode:
   apws             stream_ewma, one state group per key
   sharded          stream_ewma(shards=N), shard-mapped keyed state
   sharded_ttl      same + state_ttl_s=3600 (prices the fork GC)
-  tws              transformWithStateInPandas ewma prototype (needs
-                   the google.protobuf package; import-gated)
   cond_dt, changed, ddt, zscore, throttle, coalesce, stable,
   few, mew, expired, smax
                    the other keyed twins per key; append ``_sharded``
@@ -20,7 +18,7 @@ Measures events/s through one availableNow pass for each mode:
 
 Usage:
   python tools/bench_streaming_state.py [--events 1000000]
-      [--keys 1000000] [--modes jvm,apws,sharded,tws]
+      [--keys 1000000] [--modes jvm,apws,sharded]
       [--cpus 32] [--shards 64]
 
 Prints one JSON line: {"events": N, "keys": K,
@@ -28,9 +26,7 @@ Prints one JSON line: {"events": N, "keys": K,
 
 Notes: the generator writes one parquet dir per run; all modes read
 the same files through the same file source into a noop sink, so the
-delta between modes is the operator, not I/O. tws requires the
-RocksDB state store provider (set automatically for that mode's
-query via spark.sql.streaming.stateStore.providerClass).
+delta between modes is the operator, not I/O.
 """
 
 from __future__ import annotations
@@ -80,49 +76,6 @@ def gen_events(spark, path: str, n: int, keys: int, files: int = 8) -> None:
         .write.mode("overwrite")
         .parquet(path)
     )
-
-
-class EwmaTws:
-    """transformWithStateInPandas ewma: per-key ValueState in the JVM
-    state store, same double fold as stream_ewma."""
-
-    def __init__(self, r: float):
-        self.r = r
-
-    def build(self):
-        from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-        r = self.r
-
-        class P(StatefulProcessor):
-            def init(self, handle):
-                self.m = handle.getValueState("m", "m DOUBLE")
-
-            def handleInputRows(self, key, rows, timerValues):
-                import numpy as np
-                import pandas as pd
-
-                m = self.m.get()[0] if self.m.exists() else None
-                for pdf in rows:
-                    pdf = pdf.sort_values("time", kind="mergesort")
-                    x = pdf["metric"].to_numpy(dtype="float64", na_value=np.nan)
-                    out = np.empty(len(x))
-                    for i, v in enumerate(x.tolist()):
-                        if v != v:
-                            out[i] = np.nan
-                        else:
-                            m = r * v + (1.0 - r) * (m if m is not None else 0.0)
-                            out[i] = m
-                    res = pdf.copy()
-                    res["metric"] = pd.array(out, dtype="float64")
-                    yield res
-                if m is not None:
-                    self.m.update((m,))
-
-            def close(self):
-                pass
-
-        return P()
 
 
 def _keyed_ops():
@@ -187,13 +140,6 @@ def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int)
         out = keyed["ewma"](stream, shards=shards)
     elif mode == "sharded_ttl":
         out = keyed["ewma"](stream, shards=shards, state_ttl_s=3600.0)
-    elif mode == "tws":
-        out = stream.groupBy("host").transformWithStateInPandas(
-            EwmaTws(0.25).build(),
-            outputStructType=schema,
-            outputMode="append",
-            timeMode="none",
-        )
     elif mode == "smax_jvm":
         from mirabelle_spark.streaming import stream_smax_jvm
 
@@ -228,32 +174,8 @@ def main() -> None:
     ap.add_argument("--keys", type=int, default=1_000_000)
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--shards", type=int, default=64)
-    ap.add_argument("--modes", default="jvm,apws,sharded,tws")
+    ap.add_argument("--modes", default="jvm,apws,sharded")
     args = ap.parse_args()
-
-    if "tws" in args.modes:
-        # transformWithStateInPandas speaks protobuf to the JVM state
-        # server; this container has no google.protobuf package, but
-        # the gcloud SDK's App Engine dir bundles a pure-python
-        # runtime. The sitecustomize shim (tools/tws_pythonpath)
-        # inserts it and relaxes the gencode-minor-version check —
-        # set PYTHONPATH BEFORE the session so every python worker
-        # inherits it, and import it here for the driver process.
-        try:
-            from google.protobuf import descriptor  # noqa: F401
-        except ImportError:
-            shim = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "tws_pythonpath")
-            os.environ["PYTHONPATH"] = shim + (
-                os.pathsep + os.environ["PYTHONPATH"]
-                if os.environ.get("PYTHONPATH") else ""
-            )
-            sys.path.insert(0, shim)
-            try:
-                import sitecustomize  # noqa: F401
-                from google.protobuf import descriptor  # noqa: F401
-            except ImportError:
-                pass
 
     spark = make_spark(args.cpus)
     spark.sparkContext.setLogLevel("WARN")
@@ -265,24 +187,7 @@ def main() -> None:
         results = {}
         for mode in args.modes.split(","):
             mode = mode.strip()
-            if mode == "tws":
-                # transformWithStateInPandas speaks protobuf to the
-                # JVM state server; without the google.protobuf
-                # python package the driver worker crashes at init
-                try:
-                    from google.protobuf import descriptor  # noqa: F401
-                except ImportError:
-                    print("# tws: SKIPPED (google.protobuf not installed)", flush=True)
-                    results["tws"] = {"error": "requires google.protobuf python package"}
-                    continue
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass",
-                    "org.apache.spark.sql.execution.streaming.state."
-                    "RocksDBStateStoreProvider",
-                )
             sec = run_mode(spark, mode, src, schema, os.path.join(work, "ck"), args.shards)
-            if mode == "tws":
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
             results[mode] = {
                 "sec": round(sec, 2),
                 "ev_per_s": int(args.events / sec),
