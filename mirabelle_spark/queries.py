@@ -216,7 +216,8 @@ WITH RECURSIVE ordered AS (
               WHEN th.cnt < 2 THEN th.cnt + 1 ELSE th.cnt END,
          CASE WHEN o.t >= th.anchor + 3600000000 THEN TRUE
               WHEN th.cnt < 2 THEN TRUE ELSE FALSE END
-  FROM th JOIN ordered o ON o.user_id = th.user_id AND o.rn = th.rn + 1
+  FROM th JOIN ordered o
+    ON o.user_id IS NOT DISTINCT FROM th.user_id AND o.rn = th.rn + 1
 )
 SELECT event_id FROM th WHERE pass
 """
@@ -1133,7 +1134,8 @@ WITH RECURSIVE ordered AS (
   FROM ordered WHERE rn = 1
   UNION ALL
   SELECT o.user_id, o.event_id, o.rn, 0.5 * o.value + 0.5 * rec.m
-  FROM rec JOIN ordered o ON o.user_id = rec.user_id AND o.rn = rec.rn + 1
+  FROM rec JOIN ordered o
+    ON o.user_id IS NOT DISTINCT FROM rec.user_id AND o.rn = rec.rn + 1
 )
 SELECT event_id, m AS value FROM rec
 """,

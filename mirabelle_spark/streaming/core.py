@@ -201,21 +201,15 @@ def stream_changed(
             return bytes.fromhex(v)
         return v
 
-    def fold(carry, ks, pdf):
-        n = len(pdf)
+    def fold(carry, keys, starts, pdf):
         vals = pdf[fieldname]
         prev = vals.shift(1)
-        ks_arr = np.array(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        start_keys = ks_arr[starts].tolist()
         # ONE positional gather/scatter per batch — per-element .iloc
         # writes cost more than the whole fold at 1-row segments
-        prev.iloc[starts] = [dec(carry.get(k, enc(init))) for k in start_keys]
+        prev.iloc[starts] = [dec(carry.get(k, enc(init))) for k in keys]
         same = (vals == prev) | (vals.isna() & prev.isna())
-        ends = np.concatenate((starts[1:] - 1, [n - 1]))
-        for k, v in zip(start_keys, vals.iloc[ends].tolist()):
+        ends = np.append(starts[1:], len(pdf)) - 1
+        for k, v in zip(keys, vals.iloc[ends].tolist()):
             carry[k] = enc(v)
         return pdf[~same.to_numpy(dtype=bool)]
 
@@ -234,7 +228,6 @@ def stream_changed_jvm_run(
     trigger: dict | None = None,
     n_buckets: int = 64,
     compact_every: int = 16,
-    prune_reads: bool = False,
 ):
     """Pure-JVM per-event ``changed`` (VERDICT r8 ask #6 experiment):
     zero Python on the data path, per-event emission grain.
@@ -296,7 +289,7 @@ def stream_changed_jvm_run(
     (compose via ``reinject!``/a topic dir if needed), ties on
     ``time_col`` within a key order arbitrarily (the apws twins keep
     arrival order), and each batch pays one keyed shuffle + a
-    bucket-pruned state read/merge/write. ``out_writer(df,
+    state read/merge/write. ``out_writer(df,
     batch_id)`` receives each batch's emitted rows (default: noop
     write — bench shape). Returns the started StreamingQuery."""
     import json as _json
@@ -329,25 +322,18 @@ def stream_changed_jvm_run(
         with open(_manifest_path(mid)) as f:
             return _json.load(f)
 
-    def _read_state(man, touched=None):
+    def _read_state(man):
         """Resolve base ∪ deltas to one row per key (newest wins).
-        Bounded: <= compact_every+1 dirs; deltas are O(their batch).
-        ``touched`` (bucket ids) PRUNES the base read to those
-        partitions — the emission join only needs state for the
-        batch's own keys, so a key-local batch reads a key-local
-        slice of the base (deltas are O(batch), always read whole);
-        compaction passes None for the full table."""
+        Bounded: <= compact_every+1 dirs; deltas are O(their batch)."""
         dirs = ([man["base"]] if man.get("base") else []) + man.get("deltas", [])
         if not dirs:
             return None
-        parts = []
-        for i, d in enumerate(dirs):
-            p = spark.read.parquet(d)
-            if touched is not None and d == man.get("base"):
-                p = p.filter(F.col("__bkt__").isin(touched))
-            parts.append(
-                p.select(*key_cols, "__lv__").withColumn("__seq__", F.lit(i))
-            )
+        parts = [
+            spark.read.parquet(d)
+            .select(*key_cols, "__lv__")
+            .withColumn("__seq__", F.lit(i))
+            for i, d in enumerate(dirs)
+        ]
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
@@ -371,19 +357,7 @@ def stream_changed_jvm_run(
         # batch (its own manifest reflects post-batch state)
         pre_ids = [i for i in ids if i < batch_id] if replay else ids
         pre = _load_manifest(pre_ids[-1]) if pre_ids else {"base": None, "deltas": []}
-        # prune_reads: one bounded driver action (<= n_buckets ints)
-        # buys a bucket-pruned emission-side base read. Net WIN only
-        # when the pruned slice out-saves the extra job — large
-        # bases on remote storage with key-local batches; measured a
-        # net LOSS at local scale (+0.5 s/batch collect vs ~0 read
-        # savings at 1M keys, PERF §60), hence default off.
-        touched = None
-        if prune_reads:
-            touched = [
-                r["__tb__"]
-                for r in batch.select(bkt.alias("__tb__")).distinct().collect()
-            ]
-        st = _read_state(pre, touched=touched)
+        st = _read_state(pre)
 
         w = _W.partitionBy(*key_cols).orderBy(time_col)
         e = batch.withColumn(
@@ -412,8 +386,7 @@ def stream_changed_jvm_run(
         vdir = _os.path.join(state_root, f"b{batch_id}")
         compact = st is None or len(pre["deltas"]) + 1 >= compact_every
         if compact:
-            # compaction rewrites EVERY key: unpruned state read
-            st = _read_state(pre)
+            # compaction rewrites EVERY key
             if st is not None:
                 merged = st.alias("s").join(
                     last.alias("l"), key_cols, "full_outer"
@@ -835,23 +808,19 @@ def _stream_band_dedup(
         )
     )
 
-    def shard_fold(carry, ks, pdf):
-        band_ids = pdf["__band_id__"].tolist()
-        dup = [False] * len(ks)
-        prev = None
-        for i, k in enumerate(ks):
-            if band_ids[i] < 0:
-                # sentinel: never duplicate, never seeds state; reset
-                # the run tracker so a real key sharing the string is
-                # re-checked against the carry (correct either way)
-                prev = None
-                continue
-            if k != prev:
-                dup[i] = k in carry
-                carry[k] = 1
-                prev = k
-            else:
-                dup[i] = True
+    def shard_fold(carry, keys, starts, pdf):
+        # a sentinel row (band_id < 0) is never a duplicate and never
+        # seeds state; a real row is a duplicate unless it is its
+        # key's first real row and the key is new to the carry
+        import numpy as np
+
+        dup = pdf["__band_id__"].to_numpy() >= 0
+        real = np.flatnonzero(dup)
+        seg = _segment_ids(starts, len(pdf))[real]
+        first = np.concatenate(([True], seg[1:] != seg[:-1]))[: real.size]
+        for i, j in zip(real[first].tolist(), seg[first].tolist()):
+            dup[i] = keys[j] in carry
+            carry[keys[j]] = 1
         res = pdf.copy()
         res["__dup__"] = dup
         return res
@@ -1060,17 +1029,22 @@ def _keyed_batch_scan(
 
 
 # -- keyed-state folds: one fold, three shells -------------------------------
-# Every keyed operator below is ONE fold ``fold(carry, ks, pdf) -> out``:
-# ``pdf`` is a slice holding each key's rows contiguous and in
-# event-time order, ``ks`` the per-row key string, and ``carry`` the
-# {key string: state} map the fold reads at segment starts and writes
-# at segment ends. The key groups are only a routing choice (ICDE
-# 2025, "Towards Fine-Grained Scalability for Stateful Stream
+# Every keyed operator below is ONE fold
+# ``fold(carry, keys, starts, pdf) -> out``: ``pdf`` is a slice
+# holding each key's rows as one contiguous, event-time-ordered
+# segment; ``starts`` (int array, strictly increasing from 0) is the
+# first row of each segment and ``keys`` its key string, each key
+# appearing once; ``carry`` is the {key string: state} map the fold
+# reads at segment starts and writes at segment ends. A fold never
+# works out key identity itself: the shells own it
+# (``_key_segments``). The key groups are only a routing choice
+# (ICDE 2025, "Towards Fine-Grained Scalability for Stateful Stream
 # Processing Systems"), picked by ``shards``:
 #
 # - ``shards=None`` groups on the ``by`` columns themselves (the
 #   reference's per-key `by` fork): one Python call per key per
-#   micro-batch, ``ks`` is constant and no key strings are built.
+#   micro-batch, one segment ``([_ONE_KEY], [0])`` and no key
+#   strings are built.
 # - ``shards=N`` groups on pmod(xxhash64(by), N): applyInPandasWithState
 #   calls the Python state fn once per GROUP per micro-batch, so at
 #   10^6 keys this collapses 10^6 interpreter round-trips to N (PERF
@@ -1152,6 +1126,45 @@ def _shard_key_strings(pdf, key_cols, key_dtypes):
     ]
 
 
+def _key_segments(pdf, key_cols, key_dtypes):
+    """The key segments of a slice whose key runs are contiguous:
+    ``starts`` (int64 array) holds the first row of each run of equal
+    factorized key codes — the identity ``_keyed_batch_scan`` sorts
+    by (nulls share one code; ``-0.0 == 0.0``) — and ``keys`` the
+    ``_shard_key_strings`` of those rows only, so carry keys are the
+    same strings whatever the slicing."""
+    import numpy as np
+    import pandas as pd
+
+    change = np.zeros(len(pdf), dtype=bool)
+    change[0] = True
+    for c in key_cols:
+        codes = pd.factorize(pdf[c])[0]
+        change[1:] |= codes[1:] != codes[:-1]
+    starts = np.flatnonzero(change)
+    keys = _shard_key_strings(pdf[key_cols].iloc[starts], key_cols, key_dtypes)
+    return keys, starts
+
+
+def _segment_ids(starts, n):
+    """Per-row segment index of an ``n``-row slice."""
+    import numpy as np
+
+    return np.repeat(np.arange(len(starts)), np.diff(np.append(starts, n)))
+
+
+def _keep_segments(keys, starts, keep):
+    """``(keys, starts)`` of the slice ``pdf[keep]``: segments left
+    with no row vanish."""
+    import numpy as np
+
+    seg = _segment_ids(starts, len(keep))[keep]
+    if not seg.size:
+        return [], seg
+    first = np.flatnonzero(np.concatenate(([True], seg[1:] != seg[:-1])))
+    return [keys[i] for i in seg[first].tolist()], first
+
+
 def _load_carry(carry_json):
     """Decode a fold's ``carry STRING`` state: ``{"c": {key: state}}``
     plus ``"t": {key: last event µs}`` under a shard ttl.
@@ -1176,15 +1189,16 @@ def _keyed_fold_scan(
     df, by, time_col, shards, fold, extra_out=None, state_ttl_s=None,
     out_schema=None,
 ):
-    """The one shell of the keyed folds (see the section comment):
-    group per key (``shards=None``, or a constant group when ``by``
-    is empty — the unkeyed coalesce) or per shard (``shards=N`` and
-    ``by`` non-empty), state = one JSON carry map, and per batch call
-    ``fold(carry, ks, pdf)`` with the slice's key runs contiguous and
-    time-sorted and the routing column dropped. ``fold`` mutates ``carry`` and
-    returns the output rows. ``extra_out`` appends DDL columns the
-    fold adds (e.g. zscore); ``out_schema`` replaces the whole output
-    DDL (window emission).
+    """The one streaming shell of the keyed folds (see the section
+    comment): group per key (``shards=None``, or a constant group when
+    ``by`` is empty — the unkeyed coalesce) or per shard (``shards=N``
+    and ``by`` non-empty), state = one JSON carry map, and per batch
+    call ``fold(carry, keys, starts, pdf)`` with the routing column
+    dropped. Per key the slice is one segment ``([_ONE_KEY], [0])``;
+    per shard ``_key_segments`` splits the (key, time)-sorted slice.
+    ``fold`` mutates ``carry`` and returns the output rows.
+    ``extra_out`` appends DDL columns the fold adds (e.g. zscore);
+    ``out_schema`` replaces the whole output DDL (window emission).
 
     ``state_ttl_s`` is the fork GC (the reference's :fork-ttl). Per
     key it is the GroupState event-time timeout (needs a watermark).
@@ -1196,6 +1210,8 @@ def _keyed_fold_scan(
     scratch. Either way an evicted key's next event starts fresh.
     """
     import json as _json
+
+    import numpy as np
 
     key_cols = list(by)
     sharded = bool(shards) and bool(key_cols)
@@ -1226,41 +1242,33 @@ def _keyed_fold_scan(
         seen = blob.get("t", {})
         if group != key_cols:
             pdf = pdf.drop(columns=group)
-        if not sharded:
-            out = fold(carry, [_ONE_KEY] * len(pdf), pdf)
-        elif ttl_us is None:
-            out = fold(carry, _shard_key_strings(pdf, key_cols, key_dtypes), pdf)
+        if sharded:
+            keys, starts = _key_segments(pdf, key_cols, key_dtypes)
         else:
-            import numpy as np
-
-            ks = _shard_key_strings(pdf, key_cols, key_dtypes)
-            tv = _series_us(pdf[time_col])
-            ks_arr = np.array(ks, dtype=object)
-            starts = np.flatnonzero(
-                np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            )
-            ends = np.concatenate((starts[1:] - 1, [len(ks) - 1]))
-            # restart rule BEFORE the fold: a key whose gap since its
-            # last event exceeds the ttl folds from scratch
-            for sidx in starts.tolist():
-                k = ks_arr[sidx]
-                prev = seen.get(k)
-                if prev is not None and int(tv[sidx]) - prev > ttl_us:
-                    seen.pop(k, None)
-                    carry.pop(k, None)
-            out = fold(carry, ks, pdf)
-            # memory bound AFTER the fold: keys idle past the ttl on
-            # the shard's event clock drop even if they never return
-            for sidx, e in zip(starts.tolist(), ends.tolist()):
-                k = ks_arr[sidx]
-                t_last = int(tv[e])
-                prev = seen.get(k)
-                seen[k] = t_last if prev is None else max(prev, t_last)
-            cutoff = max(seen.values()) - ttl_us
-            for k in [k for k, t in seen.items() if t < cutoff]:
+            keys, starts = [_ONE_KEY], np.zeros(1, dtype=np.int64)
+        if ttl_us is None:
+            out = fold(carry, keys, starts, pdf)
+            return (_json.dumps({"c": carry}),), out
+        tv = _series_us(pdf[time_col])
+        # restart rule BEFORE the fold: a key whose gap since its
+        # last event exceeds the ttl folds from scratch
+        for k, sidx in zip(keys, starts.tolist()):
+            prev = seen.get(k)
+            if prev is not None and int(tv[sidx]) - prev > ttl_us:
                 seen.pop(k, None)
                 carry.pop(k, None)
-        return (_json.dumps({"c": carry, "t": seen} if ttl_us else {"c": carry}),), out
+        out = fold(carry, keys, starts, pdf)
+        # memory bound AFTER the fold: keys idle past the ttl on
+        # the shard's event clock drop even if they never return
+        for k, e in zip(keys, (np.append(starts[1:], len(pdf)) - 1).tolist()):
+            t_last = int(tv[e])
+            prev = seen.get(k)
+            seen[k] = t_last if prev is None else max(prev, t_last)
+        cutoff = max(seen.values()) - ttl_us
+        for k in [k for k, t in seen.items() if t < cutoff]:
+            seen.pop(k, None)
+            carry.pop(k, None)
+        return (_json.dumps({"c": carry, "t": seen}),), out
 
     return _keyed_batch_scan(
         src, group, time_col, "carry STRING", (None,), batch_fn,
@@ -1277,11 +1285,12 @@ def _keyed_fold_batch(df, by, sort_cols, fold):
     is empty), sort within partitions on (``by``, ``sort_cols``) and
     stream each partition's Arrow chunks through one ``mapInPandas``
     — no per-group Arrow slicing, so many small keys cost about a
-    plain scan. Between chunks only the last key's carry is kept: a
-    sorted partition never comes back to a key, and that carry is
-    what lets a key span two chunks. Key identity is
-    ``_shard_key_strings``, so a null key folds as its own key, as in
-    the streaming shells and Spark's groupBy."""
+    plain scan. Each chunk is split by ``_key_segments`` and folded
+    as ``fold(carry, keys, starts, pdf)``. Between chunks only the
+    last key's carry is kept: a sorted partition never comes back to
+    a key, and that carry is what lets a key span two chunks. A null
+    key folds as its own key, as in the streaming shells and Spark's
+    groupBy."""
     key_cols = list(by)
     if key_cols:
         src, group = df, key_cols
@@ -1298,11 +1307,11 @@ def _keyed_fold_batch(df, by, sort_cols, fold):
         for pdf in chunks:
             if not len(pdf):
                 continue
-            ks = _shard_key_strings(pdf, group, key_dtypes)
+            keys, starts = _key_segments(pdf, group, key_dtypes)
             if group != key_cols:
                 pdf = pdf.drop(columns=group)
-            yield fold(carry, ks, pdf)
-            last = ks[-1]
+            yield fold(carry, keys, starts, pdf)
+            last = keys[-1]
             carry = {last: carry[last]} if last in carry else {}
 
     return src.mapInPandas(run, schema=df.schema)
@@ -1312,35 +1321,30 @@ def _throttle_fold(count, duration_s, time_col):
     """The anchored-window throttle fold (action.clj:1163-1217): per
     key state (anchor_us, n), exact integer-µs window math. It loops
     over a primitive int64 array (the anchored recurrence is
-    inherently sequential) and reloads the carry at key boundaries
-    only; it never builds per-row dicts/Series. Rows must have a
+    inherently sequential) and reloads the carry once per key
+    segment; it never builds per-row dicts/Series. Rows must have a
     time."""
     import numpy as np
 
     dur_us = int(round(duration_s * 1_000_000))
 
-    def fold(carry, ks, pdf):
-        tv = _series_us(pdf[time_col])
+    def fold(carry, keys, starts, pdf):
+        tv = _series_us(pdf[time_col]).tolist()
         keep = np.empty(len(tv), dtype=bool)
-        unset = object()
-        prev = unset
-        anchor, n = None, 0
-        for i, (k, t) in enumerate(zip(ks, tv.tolist())):
-            if k != prev:
-                if prev is not unset:
-                    carry[prev] = (anchor, n)
-                anchor, n = carry.get(k, (None, 0))
-                prev = k
-            if anchor is None or t >= anchor + dur_us:
-                anchor, n = t, 1
-                keep[i] = True
-            elif n < count:
-                n += 1
-                keep[i] = True
-            else:
-                keep[i] = False
-        if prev is not unset:
-            carry[prev] = (anchor, n)
+        ends = np.append(starts[1:], len(tv)).tolist()
+        for k, s0, e0 in zip(keys, starts.tolist(), ends):
+            anchor, n = carry.get(k, (None, 0))
+            for i in range(s0, e0):
+                t = tv[i]
+                if anchor is None or t >= anchor + dur_us:
+                    anchor, n = t, 1
+                    keep[i] = True
+                elif n < count:
+                    n += 1
+                    keep[i] = True
+                else:
+                    keep[i] = False
+            carry[k] = (anchor, n)
         return pdf[keep]
 
     return fold
@@ -1354,9 +1358,9 @@ def _ewma_fold(r, metric_col):
     A slice holding one key segment (every per-key streaming call)
     runs the scalar loop over a primitive float64 array. With several
     keys the fold is VECTORIZED across keys (r17: the per-row loop
-    was ~62 % of the shard tier's CPU): key runs are
-    contiguous segments, and step j updates every key's j-th event at
-    once with the SAME ``step`` as the scalar loop (numpy float64 ops
+    was ~62 % of the shard tier's CPU): the shell hands each key over
+    as exactly one segment, and step j updates every key's j-th event
+    at once with the SAME ``step`` as the scalar loop (numpy float64 ops
     are IEEE doubles — each key's value sequence sees the identical
     op order as the scalar loop, and as the DuckDB oracle's recursive
     CTE). A NaN event emits NaN and leaves the
@@ -1383,24 +1387,20 @@ def _ewma_fold(r, metric_col):
         if m is not None:
             carry[k] = m
 
-    def fold(carry, ks, pdf):
+    def fold(carry, keys, starts, pdf):
         n = len(pdf)
         vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
         out = np.empty(n)
-        ks_arr = np.asarray(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
         if starts.size == 1:
-            _scalar_run(carry, ks_arr[0], vals.tolist(), out, 0, n)
+            _scalar_run(carry, keys[0], vals.tolist(), out, 0, n)
         else:
-            lens = np.diff(np.concatenate((starts, [n])))
+            lens = np.diff(np.append(starts, n))
             short = lens <= cap
             s_starts = starts[short]
             s_lens = lens[short]
             if s_starts.size:
-                keys_list = ks_arr[s_starts].tolist()
-                m0 = [carry.get(k) for k in keys_list]
+                s_keys = [keys[i] for i in np.flatnonzero(short).tolist()]
+                m0 = [carry.get(k) for k in s_keys]
                 seen = np.array([v is not None for v in m0], dtype=bool)
                 m = np.array(
                     [v if v is not None else 0.0 for v in m0],
@@ -1424,14 +1424,14 @@ def _ewma_fold(r, metric_col):
                     m[:a] = np.where(real, stepped, m[:a])
                     out[pos] = np.where(real, stepped, np.nan)
                     seen[:a] |= real
-                for i in np.flatnonzero(seen).tolist():
-                    carry[ks_arr[s_starts[i]]] = float(m[i])
+                for o, mv in zip(order[seen].tolist(), m[seen].tolist()):
+                    carry[s_keys[o]] = mv
             if not short.all():
                 vl = vals.tolist()
                 for si in np.flatnonzero(~short).tolist():
                     lo = int(starts[si])
                     _scalar_run(
-                        carry, ks_arr[lo], vl, out, lo, lo + int(lens[si])
+                        carry, keys[si], vl, out, lo, lo + int(lens[si])
                     )
         res = pdf.copy()
         # NaN in a float64 column round-trips to SQL NULL via Arrow
@@ -1489,27 +1489,21 @@ def stream_smax(
     the best-so-far event of its key; strict > keeps the first
     winner on ties (:func:`stream_smax_jvm` is the per-batch-grain
     alternative). The stored-best row carries as one JSON dict per
-    key, the fold walks the slice with carry reload at key boundaries
-    only, and the output materializes as two positional gathers
+    key, the fold walks the slice with one carry reload per key
+    segment, and the output materializes as two positional gathers
     (batch-sourced winners + carry-sourced re-emits) merged back into
     event order — no per-event dict building. ``shards`` picks the
     grouping (see ``_keyed_fold_scan``)."""
     import numpy as np
     import pandas as pd
 
-    def fold(carry, ks, pdf):
-        n = len(pdf)
+    def fold(carry, keys, starts, pdf):
         cols = list(pdf.columns)
         raw = _RawCols(pdf)
         v = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
-        ks_arr = np.asarray(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        ends = np.concatenate((starts[1:], [n]))
+        ends = np.append(starts[1:], len(pdf))
         emit: list = []  # ("b", idx) batch winner | ("o", dict) carried best
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            k = ks_arr[s0]
+        for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
             st = carry.get(k)
             if st is None:
                 have = False
@@ -1601,26 +1595,21 @@ def stream_cond_dt(
         def valid_series(pdf):
             return _pred(pdf).to_numpy(dtype=bool)
 
-    def fold(carry, ks, pdf):
-        tv = _series_us(pdf[time_col])
-        valid = valid_series(pdf)
+    def fold(carry, keys, starts, pdf):
+        tv = _series_us(pdf[time_col]).tolist()
+        valid = valid_series(pdf).tolist()
         keep = np.empty(len(tv), dtype=bool)
-        unset = object()
-        prev = unset
-        ok, flip = False, None
-        for i, (k, t, va) in enumerate(zip(ks, tv.tolist(), valid.tolist())):
-            if k != prev:
-                if prev is not unset:
-                    carry[prev] = (ok, flip)
-                ok, flip = carry.get(k, (False, None))
-                prev = k
-            if va and not ok:
-                ok, flip = True, t
-            elif not va:
-                ok, flip = False, None
-            keep[i] = va and ok and t > flip + dt_us
-        if prev is not unset:
-            carry[prev] = (ok, flip)
+        ends = np.append(starts[1:], len(tv)).tolist()
+        for k, s0, e0 in zip(keys, starts.tolist(), ends):
+            ok, flip = carry.get(k, (False, None))
+            for i in range(s0, e0):
+                t, va = tv[i], valid[i]
+                if va and not ok:
+                    ok, flip = True, t
+                elif not va:
+                    ok, flip = False, None
+                keep[i] = va and ok and t > flip + dt_us
+            carry[k] = (ok, flip)
         return pdf[keep]
 
     return _keyed_fold_scan(df, by, time_col, shards, fold)
@@ -1706,20 +1695,17 @@ def stream_stable(
             return float(v)
         return _native(v)
 
-    def fold(carry, ks, pdf):
+    def fold(carry, keys, starts, pdf):
         n = len(pdf)
         t = _series_us(pdf[time_col])
-        ks_arr = np.asarray(ks, dtype=object)
-        kstart = np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        starts = np.flatnonzero(kstart)
-        ends = np.concatenate((starts[1:], [n]))
+        ends = np.append(starts[1:], n)
         # out-of-order drop + running-max update per key, vectorized
         # per segment: the slice is (key, time)-sorted so only rows
         # below the key's STORED max can drop, and the new max is the
         # segment's last timestamp
         keep = np.ones(n, dtype=bool)
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            st = carry.get(ks_arr[s0])
+        for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
+            st = carry.get(k)
             if st is not None and st["s"][0] is not None:
                 keep[s0:e0] = t[s0:e0] >= st["s"][0]
                 st["s"][0] = max(st["s"][0], int(t[e0 - 1]))
@@ -1727,20 +1713,20 @@ def stream_stable(
                 st["s"][0] = int(t[e0 - 1])
         if not keep.all():
             pdf = pdf[keep].reset_index(drop=True)
-            ks_arr = ks_arr[keep]
+            keys, starts = _keep_segments(keys, starts, keep)
             t = t[keep]
             n = len(pdf)
             if not n:
                 return pdf
-            kstart = np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-            starts = np.flatnonzero(kstart)
-            ends = np.concatenate((starts[1:], [n]))
+            ends = np.append(starts[1:], n)
         # run boundaries: key change OR null-safe field value change
         fs = pdf[field]
         same_val = (fs.eq(fs.shift()) | (fs.isna() & fs.isna().shift(fill_value=False))).to_numpy(dtype=bool)
-        run_start = kstart | ~same_val
+        run_start = ~same_val
+        run_start[starts] = True
         rstarts = np.flatnonzero(run_start)
-        rends = np.concatenate((rstarts[1:], [n]))
+        rends = np.append(rstarts[1:], n)
+        rsegs = _segment_ids(starts, n)[rstarts]
         vals = fs.tolist()
         cols = list(pdf.columns)
         raw = _RawCols(pdf)
@@ -1753,23 +1739,20 @@ def stream_stable(
             else:
                 parts.append([i, j])
 
-        cur_key = None
+        cur = -1  # segment of the runs being walked
         st = None
-        for i, j in zip(rstarts.tolist(), rends.tolist()):
-            k = ks_arr[i]
-            if k != cur_key:
-                if cur_key is not None:
-                    carry[cur_key] = st
-                st = carry.get(k)
+        for i, j, g in zip(rstarts.tolist(), rends.tolist(), rsegs.tolist()):
+            if g != cur:
+                if cur >= 0:
+                    carry[keys[cur]] = st
+                st = carry.get(keys[g])
                 if st is None:
-                    # s = [max_us, has, value, flip_us, confirmed]
-                    st = {"s": [int(t[j - 1]), False, None, None, False],
+                    # s = [max_us, has, value, flip_us, confirmed]; the
+                    # max spans the FULL key segment (set above only
+                    # for existing states)
+                    st = {"s": [int(t[ends[g] - 1]), False, None, None, False],
                           "b": None}
-                    # max over the FULL key segment was set above only
-                    # for existing states; find this key's segment end
-                    e0 = ends[np.searchsorted(starts, i, side="right") - 1]
-                    st["s"][0] = int(t[e0 - 1])
-                cur_key = k
+                cur = g
             v = vals[i]
             if not (st["s"][1] and _eq(v, st["s"][2])):
                 st["s"][1] = True
@@ -1796,8 +1779,8 @@ def stream_stable(
                     emit_slice(i, j)
             else:
                 emit_slice(i, j)
-        if cur_key is not None:
-            carry[cur_key] = st
+        if cur >= 0:
+            carry[keys[cur]] = st
         if not parts:
             return pdf.iloc[0:0]
         frames = [
@@ -1853,23 +1836,17 @@ def stream_fixed_event_window(
         f"{by_struct}, window_start double, events array<struct<{ev_struct}>>"
     )
 
-    def fold(carry, ks, pdf):
+    def fold(carry, keys, starts, pdf):
         cols = list(pdf.columns)
         out_rows: list = []
-        m = len(pdf)
         raw = _RawCols(pdf)
         t = _series_us(pdf[time_col])
-        ks_arr = np.asarray(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        ends = np.concatenate((starts[1:], [m]))
+        ends = np.append(starts[1:], len(pdf))
 
         def revive(e):
             return _revive_ts_fields(e, ts_cols)
 
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            k = ks_arr[s0]
+        for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
             st = carry.get(k)
             if st is None:
                 last_us = None
@@ -1948,22 +1925,16 @@ def stream_moving_event_window(
     )
     extra_out = f"events array<struct<{ev_struct}>>"
 
-    def fold(carry, ks, pdf):
-        m = len(pdf)
+    def fold(carry, keys, starts, pdf):
         cols = list(pdf.columns)
-        events_col: list = [None] * m
+        events_col: list = [None] * len(pdf)
         raw = _RawCols(pdf)
-        ks_arr = np.asarray(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        ends = np.concatenate((starts[1:], [m]))
+        ends = np.append(starts[1:], len(pdf))
 
         def revive(e):
             return _revive_ts_fields(e, ts_cols)
 
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            k = ks_arr[s0]
+        for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
             bc = carry.get(k)
             if bc:
                 blen = len(next(iter(bc.values())))
@@ -2002,24 +1973,19 @@ def stream_ddt(
     grouping (see ``_keyed_fold_scan``)."""
     import numpy as np
 
-    def fold(carry, ks, pdf):
+    def fold(carry, keys, starts, pdf):
         keepna = pdf[metric_col].notna().to_numpy(dtype=bool)
         if not keepna.all():
             pdf = pdf[keepna].reset_index(drop=True)
-            ks = [k for k, good in zip(ks, keepna.tolist()) if good]
-        n = len(pdf)
-        if not n:
+            keys, starts = _keep_segments(keys, starts, keepna)
+        if not len(pdf):
             return pdf
         t = _series_us(pdf[time_col]).astype("float64")
         m = pdf[metric_col].to_numpy(dtype="float64")
         prev_t = np.concatenate(([np.nan], t[:-1]))
         prev_m = np.concatenate(([np.nan], m[:-1]))
-        ks_arr = np.array(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        for s in starts.tolist():
-            last = carry.get(ks_arr[s])
+        for k, s in zip(keys, starts.tolist()):
+            last = carry.get(k)
             prev_t[s], prev_m[s] = (
                 (np.nan, np.nan) if last is None else (float(last[0]), float(last[1]))
             )
@@ -2029,9 +1995,9 @@ def stream_ddt(
         ok = np.isfinite(diff)
         if remove_neg:
             ok &= diff >= 0
-        ends = np.concatenate((starts[1:] - 1, [n - 1]))
-        for s, e in zip(starts.tolist(), ends.tolist()):
-            carry[ks_arr[s]] = (int(t[e]), float(m[e]))
+        ends = np.append(starts[1:], len(pdf)) - 1
+        for k, e in zip(keys, ends.tolist()):
+            carry[k] = (int(t[e]), float(m[e]))
         out = pdf[ok].copy()
         out[metric_col] = diff[ok]
         return out
@@ -2077,7 +2043,7 @@ def stream_coalesce(
     has_ttl_col = ttl_col in df.columns
     has_state_col = state_col in df.columns
 
-    def fold(carry, ks, pdf):
+    def fold(carry, keys, starts, pdf):
         n = len(pdf)
         t = _series_us(pdf[time_col])
         null_t = pdf[time_col].isna().to_numpy(dtype=bool)
@@ -2106,15 +2072,11 @@ def stream_coalesce(
                 ttl_us = int(round(float(store[ttl_col][idx]) * 1_000_000))
             return ct - ti > ttl_us
 
-        ks_arr = np.asarray(ks, dtype=object)
         raw = _RawCols(pdf)
         emit: list = []  # (src 0=batch/1=old_of_key, row idx, store ref)
         live: dict = {}  # key -> [ct, lt, buf{ftk: [src, idx, t_us]}, store]
 
         def _load(k):
-            got = live.get(k)
-            if got is not None:
-                return got
             c = carry.get(k)
             if c is None:
                 cur = [0, None, {}, None]
@@ -2127,43 +2089,42 @@ def stream_coalesce(
             live[k] = cur
             return cur
 
-        cur_key = None
-        cur = None
-        for i in range(n):
-            if null_t[i]:
-                continue
-            k = ks_arr[i]
-            if k != cur_key:
-                cur = _load(k)
-                cur_key = k
-            ti = int(t[i])
-            if ti > cur[0]:
-                cur[0] = ti
-            if batch_expired(i, ti, cur[0]):
-                continue
-            # _cell_native, not _native: a timestamp-typed fields
-            # column must isoformat — raw pd.Timestamp is not
-            # JSON-serializable (ADVICE r8 #2)
-            ftk = _json.dumps([_cell_native(a[i]) for a in f_arrs])
-            buf = cur[2]
-            ent = buf.get(ftk)
-            # e/most-recent?: the stored event wins ties
-            if ent is None or ent[2] < ti:
-                buf[ftk] = [0, i, ti]
-            if cur[1] is None:
-                cur[1] = ti
-            elif cur[0] >= cur[1] + dur_us:
-                alive = {}
-                for fk, e in buf.items():
-                    if e[0] == 0:
-                        dead = batch_expired(e[1], e[2], cur[0])
-                    else:
-                        dead = old_expired(cur[3], e[1], e[2], cur[0])
-                    if not dead:
-                        alive[fk] = e
-                        emit.append((e[0], e[1], cur[3]))
-                cur[2] = alive
-                cur[1] = cur[0]
+        ends = np.append(starts[1:], n)
+        for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
+            cur = None  # loaded at the key's first timed row
+            for i in range(s0, e0):
+                if null_t[i]:
+                    continue
+                if cur is None:
+                    cur = _load(k)
+                ti = int(t[i])
+                if ti > cur[0]:
+                    cur[0] = ti
+                if batch_expired(i, ti, cur[0]):
+                    continue
+                # _cell_native, not _native: a timestamp-typed fields
+                # column must isoformat — raw pd.Timestamp is not
+                # JSON-serializable (ADVICE r8 #2)
+                ftk = _json.dumps([_cell_native(a[i]) for a in f_arrs])
+                buf = cur[2]
+                ent = buf.get(ftk)
+                # e/most-recent?: the stored event wins ties
+                if ent is None or ent[2] < ti:
+                    buf[ftk] = [0, i, ti]
+                if cur[1] is None:
+                    cur[1] = ti
+                elif cur[0] >= cur[1] + dur_us:
+                    alive = {}
+                    for fk, e in buf.items():
+                        if e[0] == 0:
+                            dead = batch_expired(e[1], e[2], cur[0])
+                        else:
+                            dead = old_expired(cur[3], e[1], e[2], cur[0])
+                        if not dead:
+                            alive[fk] = e
+                            emit.append((e[0], e[1], cur[3]))
+                    cur[2] = alive
+                    cur[1] = cur[0]
         # rebuild each touched key's carry: surviving buffer rows go
         # columnar (batch-sourced rows pay JSON conversion HERE, once)
         for k, cur in live.items():
@@ -2379,42 +2340,39 @@ def stream_moving_time_window(
 ) -> DataFrame:
     """Streaming ``moving-time-window`` (action.clj:2596-2639): per
     event, all of its key's events within the trailing ``duration``
-    seconds — a keyed-state buffer trimmed by exact µs bound (same
-    (-(dur-1µs), 0] range as the batch twin's range frame)."""
-    import json as _json
-
-    import pandas as pd
+    seconds — a keyed-state fold whose ``carry[k]`` is the buffer of
+    (t_us, row) pairs trimmed by exact µs bound (same (-(dur-1µs), 0]
+    range as the batch twin's range frame). Per key only."""
+    import numpy as np
 
     dur_us = int(round(duration_s * 1_000_000))
     ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-
     ev_struct = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
-    out_schema = (
-        ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-        + f", events array<struct<{ev_struct}>>"
-    )
 
-    def batch_fn(st, pdf):
-        (buf_json,) = st
-        buf = _json.loads(buf_json) if buf_json else []  # [(t_us, row)]
+    def fold(carry, keys, starts, pdf):
         t = _series_us(pdf[time_col])
         raw = _RawCols(pdf)
         cols = list(pdf.columns)
         events_col = []
-        for i in range(len(pdf)):
-            ti = int(t[i])
-            buf.append((ti, raw.row(cols, i)))
-            lo = ti - dur_us + 1
-            buf = [(tb, e) for tb, e in buf if tb >= lo]
-            events_col.append([_revive_ts_fields(e, ts_cols) for _, e in buf])
+        ends = np.append(starts[1:], len(pdf))
+        for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
+            buf = carry.get(k, [])
+            for i in range(s0, e0):
+                ti = int(t[i])
+                buf.append((ti, raw.row(cols, i)))
+                lo = ti - dur_us + 1
+                buf = [(tb, e) for tb, e in buf if tb >= lo]
+                events_col.append([_revive_ts_fields(e, ts_cols) for _, e in buf])
+            carry[k] = buf
         out = pdf.copy()
         out["events"] = events_col
-        return (_json.dumps(buf),), out
+        return out
 
-    return _keyed_batch_scan(
-        df, by, time_col, "buf STRING", (None,), batch_fn, out_schema=out_schema
+    return _keyed_fold_scan(
+        df, by, time_col, None, fold,
+        extra_out=f"events array<struct<{ev_struct}>>",
     )
 
 
@@ -2442,19 +2400,14 @@ def stream_expired(
     has_ttl = ttl_col is not None and ttl_col in df.columns
     has_state = state_col is not None and state_col in df.columns
 
-    def fold(carry, ks, pdf):
+    def fold(carry, keys, starts, pdf):
         n = len(pdf)
         has_time = pdf[time_col].notna().to_numpy(dtype=bool)
         t = _series_us(pdf[time_col]).astype("float64")
         t = np.where(has_time, t, -np.inf)  # null time: no age, no clock
-        ks_arr = np.asarray(ks, dtype=object)
-        starts = np.flatnonzero(
-            np.concatenate(([True], ks_arr[1:] != ks_arr[:-1]))
-        )
-        ends = np.concatenate((starts[1:], [n]))
+        ends = np.append(starts[1:], n)
         run = np.empty(n, dtype="float64")
-        for s0, e0 in zip(starts.tolist(), ends.tolist()):
-            k = ks_arr[s0]
+        for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
             seg = np.maximum.accumulate(t[s0:e0])
             mx = carry.get(k)
             if mx is not None:
@@ -2583,18 +2536,13 @@ def stream_zscore(
 
     win_us = int(round(window_s * 1_000_000))
 
-    def fold(carry, ks, pdf):
+    def fold(carry, keys, starts, pdf):
         t = _series_us(pdf[time_col])
         vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
         zs = np.full(len(pdf), np.nan)
-        unset = object()
-        prev = unset
-        cur = None
         live: dict = {}  # decoded states this batch (decimal objects)
 
         def _load(k):
-            if k in live:
-                return live[k]
             st = carry.get(k)
             if st is None:
                 c = [[], Decimal(0), Decimal(0), 0, 0]
@@ -2617,46 +2565,45 @@ def stream_zscore(
             live[k] = c
             return c
 
+        ends = np.append(starts[1:], len(pdf)).tolist()
         with localcontext() as ctx:
             ctx.prec = _ZSCORE_PREC
-            for i in range(len(pdf)):
-                k = ks[i]
-                if k != prev:
-                    cur = _load(k)
-                    prev = k
+            for k, s0, e0 in zip(keys, starts.tolist(), ends):
+                cur = _load(k)
                 buf = cur[0]
-                ti = int(t[i])
-                v = vals[i]
-                m = 0.0 if v != v else float(v)
-                q1, q2 = _zscore_q9(m), _zscore_q9(m * m)
-                buf.append((ti, q1, q2))
-                if q1 is not None:
-                    cur[1] += q1
-                    cur[3] += 1
-                if q2 is not None:
-                    cur[2] += q2
-                    cur[4] += 1
-                lo = ti - win_us
-                drop = 0
-                for tt, a, b in buf:
-                    if tt >= lo:
-                        break
-                    if a is not None:
-                        cur[1] -= a
-                        cur[3] -= 1
-                    if b is not None:
-                        cur[2] -= b
-                        cur[4] -= 1
-                    drop += 1
-                if drop:
-                    del buf[:drop]
-                n = len(buf)
-                if n >= min_n and v == v and cur[3] and cur[4]:
-                    nd = float(n)
-                    mean = float(cur[1]) / nd
-                    var = max(float(cur[2]) / nd - mean * mean, 0.0)
-                    if var > 0.0:
-                        zs[i] = (float(v) - mean) / math.sqrt(var)
+                for i in range(s0, e0):
+                    ti = int(t[i])
+                    v = vals[i]
+                    m = 0.0 if v != v else float(v)
+                    q1, q2 = _zscore_q9(m), _zscore_q9(m * m)
+                    buf.append((ti, q1, q2))
+                    if q1 is not None:
+                        cur[1] += q1
+                        cur[3] += 1
+                    if q2 is not None:
+                        cur[2] += q2
+                        cur[4] += 1
+                    lo = ti - win_us
+                    drop = 0
+                    for tt, a, b in buf:
+                        if tt >= lo:
+                            break
+                        if a is not None:
+                            cur[1] -= a
+                            cur[3] -= 1
+                        if b is not None:
+                            cur[2] -= b
+                            cur[4] -= 1
+                        drop += 1
+                    if drop:
+                        del buf[:drop]
+                    n = len(buf)
+                    if n >= min_n and v == v and cur[3] and cur[4]:
+                        nd = float(n)
+                        mean = float(cur[1]) / nd
+                        var = max(float(cur[2]) / nd - mean * mean, 0.0)
+                        if var > 0.0:
+                            zs[i] = (float(v) - mean) / math.sqrt(var)
         for k, (b, a1, a2, k1, k2) in live.items():
             carry[k] = {
                 "b": [

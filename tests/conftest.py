@@ -146,14 +146,12 @@ SLOW_TESTS = {
     "test_streaming.py::test_stream_changed_jvm_replay_and_buckets",
     "test_streaming.py::test_stream_changed_sharded_timestamp_field",
     "test_streaming.py::test_stream_coalesce_reference_cases",
-    "test_streaming.py::test_stream_coalesce_sharded_parity",
     "test_streaming.py::test_stream_coalesce_sharded_timestamp_fields_parity",
     "test_streaming.py::test_stream_cond_dt_sharded_parity",
     "test_streaming.py::test_stream_curate_contamination_parity",
     "test_streaming.py::test_stream_curate_lm3_parity",
     "test_streaming.py::test_stream_curate_neardup_parity",
     "test_streaming.py::test_stream_curate_parity",
-    "test_streaming.py::test_stream_event_window_sharded_parity",
     "test_streaming.py::test_stream_expired_sharded_parity",
     "test_streaming.py::test_stream_fixed_event_window_fork_ttl",
     "test_streaming.py::test_stream_fixed_event_window_fork_ttl_out_of_order",
@@ -162,7 +160,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_stream_mtw_project_expired_parity",
     "test_streaming.py::test_stream_neardup_dedup_parity",
     "test_streaming.py::test_stream_rate_reference_case",
-    "test_streaming.py::test_stream_sharded_changed_ddt_zscore_parity",
     "test_streaming.py::test_stream_smax_jvm_final_best_matches_batch",
     "test_streaming.py::test_stream_smax_smin_reference_cases",
     "test_streaming.py::test_stream_smax_smin_sharded_parity",

@@ -142,3 +142,29 @@ def test_bench_stdout_carries_per_query_map_within_budget():
     parsed2 = json.loads(line2)
     assert len(line2) < 1900
     assert parsed2["queries"] == qmap
+
+
+def test_recursive_cte_oracles_fold_null_key_run(spark, tmp_path):
+    """The ``throttle`` and ``ewma_smoothed`` oracles are recursive
+    CTEs that step from row n to row n+1 of the same user. They join
+    ``IS NOT DISTINCT FROM``, so a null ``user_id`` is one key whose
+    whole run folds, as the engine keeps it (Spark groupBy identity);
+    a plain ``=`` join would stop the null key after its first row."""
+    import duckdb
+
+    from mirabelle_spark import queries as Q
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE events AS SELECT i AS event_id,"
+        " TIMESTAMP '2024-01-01' + to_minutes(i * 13) AS ts,"
+        " CASE i % 3 WHEN 0 THEN NULL ELSE i % 3 END::BIGINT AS user_id,"
+        " (i * 7 % 11)::DOUBLE AS value FROM range(30) t(i)"
+    )
+    con.execute(f"COPY events TO '{tmp_path}/events.parquet' (FORMAT parquet)")
+    null_ids = set(range(0, 30, 3))
+    for name in ("throttle", "ewma_smoothed"):
+        got = sorted(tuple(r) for r in Q.QUERIES[name](spark, str(tmp_path)).collect())
+        want = sorted(con.execute(Q.ORACLES[name]).fetchall())
+        assert got == want, name
+        assert len(null_ids & {r[0] for r in want}) > 1, name

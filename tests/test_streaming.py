@@ -3092,6 +3092,97 @@ def test_keyed_fold_signed_zero_keys_are_one_key(spark, tmp_path):
         assert got == batch, (name, sorted(k for k in batch if got.get(k) != batch[k]))
 
 
+def test_keyed_fold_shells_hand_over_key_segments(spark, tmp_path):
+    """Every keyed-fold shell calls ``fold(carry, keys, starts, pdf)``
+    with each key as ONE contiguous, time-sorted segment: ``starts``
+    strictly increases from 0, every key string appears once per
+    call, and each segment's rows share one key tuple. A spy fold
+    records every call through the per-key and sharded streaming
+    shells and the batch shell (Arrow chunks of 5 rows). Keys:
+    -0.0/0.0, null, strings holding the escape and separator bytes,
+    and a two-column key whose int column holds nulls. (NaN vs null
+    keys are a known open aliasing, not covered here.)"""
+    import os
+    import pickle
+
+    import pyspark.sql.functions as F
+
+    from mirabelle_spark.streaming import core
+
+    strs = [None, "a\x00", "a\x1fb", "\x00null", "a"]
+    rows = [
+        (j, [-0.0, 0.0, None, 1.5][j % 4], strs[j % 5], [None, 1, 2][j % 3],
+         float(40 - j))
+        for j in range(40)
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id bigint, kd double, ks string, ki int, t double"
+    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
+    src_dir = str(tmp_path / "seg_in")
+    df.coalesce(1).write.parquet(src_dir)
+
+    def spy_for(rec_dir):
+        os.makedirs(rec_dir)
+
+        def spy(carry, keys, starts, pdf):
+            import uuid
+
+            with open(os.path.join(rec_dir, uuid.uuid4().hex), "wb") as f:
+                pickle.dump((list(keys), starts.tolist(), pdf), f)
+            return pdf
+
+        return spy
+
+    def check(rec_dir, by):
+        calls = []
+        for name in os.listdir(rec_dir):
+            with open(os.path.join(rec_dir, name), "rb") as f:
+                calls.append(pickle.load(f))
+        assert calls, rec_dir
+        seen = []
+        for keys, starts, pdf in calls:
+            assert starts[0] == 0 and len(starts) == len(keys)
+            assert all(a < b for a, b in zip(starts, starts[1:])), starts
+            assert len(set(keys)) == len(keys), keys
+            for s0, e0 in zip(starts, starts[1:] + [len(pdf)]):
+                seg = pdf.iloc[s0:e0]
+                for c in by:
+                    vals = seg[c].tolist()
+                    nulls = seg[c].isna().tolist()
+                    assert all(nulls) or (
+                        not any(nulls) and all(v == vals[0] for v in vals)
+                    ), (by, keys, starts, vals)
+                assert seg["time"].is_monotonic_increasing, (by, keys)
+            seen += pdf["event_id"].tolist()
+        assert sorted(seen) == list(range(len(rows)))
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    try:
+        for i, by in enumerate((["kd"], ["ks", "ki"])):
+            for shards in (None, 2):
+                name = f"seg{i}_{shards or 0}"
+                rec = str(tmp_path / name)
+                out = core._keyed_fold_scan(
+                    spark.readStream.schema(df.schema).parquet(src_dir),
+                    by, "time", shards, spy_for(rec),
+                )
+                q = (
+                    out.writeStream.format("memory").queryName(name)
+                    .option("checkpointLocation", str(tmp_path / f"{name}_ck"))
+                    .trigger(availableNow=True).start()
+                )
+                q.awaitTermination()
+                check(rec, by)
+            spark.conf.set(conf, "5")
+            rec = str(tmp_path / f"seg{i}_batch")
+            assert core._keyed_fold_batch(df, by, ["time"], spy_for(rec)).count() == len(rows)
+            spark.conf.set(conf, old)
+            check(rec, by)
+    finally:
+        spark.conf.set(conf, old)
+
+
 def test_keyed_fold_rejects_pre_merge_per_key_state():
     """A checkpoint written by the old per-key twins' STRING state
     (same one-column schema, so Spark accepts it) must raise rather
@@ -3108,6 +3199,8 @@ def test_keyed_fold_rejects_pre_merge_per_key_state():
          "buffer": []},                       # per-key stable
         [],                                   # per-key event-window buffer
         {"metric": 1.0, "host": "a", "c": 3},  # per-key smax best row
+        [[1000000, {"time": "1970-01-01T00:00:01", "metric": 1.0}]],
+        # moving-time-window's own ``buf STRING`` state
     ):
         with pytest.raises(ValueError, match="carry map"):
             _load_carry(_json.dumps(old))

@@ -32,10 +32,8 @@ def main() -> None:
     ap.add_argument("--compact", default="1,16",
                     help="comma list of compact_every values (1 = r9 full-rewrite-per-batch behavior)")
     ap.add_argument("--local-keys", type=int, default=0,
-                    help="if >0, each incremental batch touches only this many distinct keys (key-local workload: bucket pruning applies)")
+                    help="if >0, each incremental batch touches only this many distinct keys (key-local workload)")
     ap.add_argument("--buckets", type=int, default=64, help="n_buckets for the compacted base")
-    ap.add_argument("--prune-reads", action="store_true",
-                    help="enable bucket-pruned emission reads (stream_changed_jvm_run prune_reads=True)")
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     args = ap.parse_args()
 
@@ -88,7 +86,6 @@ def main() -> None:
             spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
             "metric", by=["host"], work_dir=work, time_col="time",
             out_writer=writer, compact_every=nb, n_buckets=args.buckets,
-            prune_reads=args.prune_reads,
         )
         q.awaitTermination()
         total = time.monotonic() - t0
@@ -108,7 +105,6 @@ def main() -> None:
     print(json.dumps({
         "keys": args.keys, "batch": args.batch, "inc": args.inc,
         "local_keys": args.local_keys, "n_buckets": args.buckets,
-        "prune_reads": args.prune_reads,
         "compact_every": results,
     }))
 
