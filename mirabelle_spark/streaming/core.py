@@ -109,26 +109,6 @@ def _series_us(ts) -> "object":
     return (ts.astype("float64") * 1_000_000).round().astype("int64").to_numpy()
 
 
-def _native(v):
-    """numpy scalar/array → python native for GroupState round-trips.
-
-    Array-typed event columns (tags) arrive as ndarrays: ``.item()``
-    only works on size-1 arrays, so sequences convert elementwise."""
-    import numpy as np
-    import pandas as pd
-
-    if v is None or (isinstance(v, float) and v != v):
-        return None
-    if isinstance(v, (np.ndarray, list, tuple)):
-        return [_native(x) for x in v]
-    try:
-        if pd.isna(v):
-            return None
-    except (TypeError, ValueError):
-        pass
-    return v.item() if hasattr(v, "item") else v
-
-
 def stream_changed(
     df: DataFrame,
     fieldname: str,
@@ -141,76 +121,37 @@ def stream_changed(
     ``field`` differs (null-safe, matching the batch twin's
     eqNullSafe) from the previous row of the same key. ``init`` is
     the reference's :init — the value each key's first event is
-    compared against (action.clj:334-360). The micro-batch compare
-    is one vectorized shift — no per-row Python.
+    compared against (action.clj:334-360).
 
-    Per key (``shards=None``) the state is the field's own Spark
-    type, so every field dtype works (decimal, date, array,
-    interval). With ``shards=N`` the last value rides the shard's
-    JSON carry map: only the per-key SEGMENT STARTS read it and
-    segment ends write it, so the Python work is O(distinct keys in
-    batch). Timestamp fields encode as isoformat (revived to
-    pd.Timestamp for the compare), binary as hex; JSON-native types
-    pass through. Other field dtypes raise a named error up front —
-    use ``shards=None`` for those.
+    The micro-batch compare is one vectorized shift; only the key
+    segment starts read the carry and segment ends write it, so the
+    Python work is O(distinct keys in batch). Any field dtype works
+    in both groupings; array fields compare (and carry) as tuples.
+    ``shards`` picks the grouping (see ``_keyed_fold_scan``).
     """
     import numpy as np
     import pandas as pd
 
-    dtype = dict(df.dtypes)[fieldname]
-    if not shards:
-        def batch_fn(s, pdf):
-            (last,) = s
-            vals = pdf[fieldname]
-            prev = vals.shift(1)
-            prev.iloc[0] = last
-            same = (vals == prev) | (vals.isna() & prev.isna())
-            out = pdf[~same.to_numpy(dtype=bool)]
-            return (_native(vals.iloc[-1]),), out
+    is_array = dict(df.dtypes)[fieldname].startswith("array")
 
-        return _keyed_batch_scan(
-            df, by, time_col, f"last {dtype}", (init,), batch_fn
-        )
+    def as_key(v):
+        return tuple(v) if is_array and v is not None else v
 
-    is_ts = dtype in ("timestamp", "timestamp_ntz")
-    is_bin = dtype == "binary"
-    # exact simpleString names, not prefixes: 'int' as a prefix would
-    # also admit 'interval day to second', whose timedelta then fails
-    # at runtime inside json.dumps instead of this up-front error
-    if not (is_ts or is_bin) and dtype not in (
-        "string", "boolean", "double", "float", "tinyint",
-        "smallint", "int", "bigint", "long",
-    ):
-        raise NotImplementedError(
-            f"stream_changed(shards=...) cannot JSON-carry field dtype "
-            f"{dtype!r}; use shards=None (typed per-key state)"
-        )
-
-    def enc(v):
-        v = _native(v.isoformat() if is_ts and v is not None and v == v else v)
-        if is_bin and v is not None:
-            return bytes(v).hex()
-        return v
-
-    def dec(v):
-        if v is None:
-            return None
-        if is_ts:
-            return pd.Timestamp(v)
-        if is_bin:
-            return bytes.fromhex(v)
-        return v
+    start = as_key(init)
 
     def fold(carry, keys, starts, pdf):
         vals = pdf[fieldname]
+        if is_array:
+            vals = pd.Series([as_key(v) for v in vals.tolist()], dtype=object)
         prev = vals.shift(1)
         # ONE positional gather/scatter per batch — per-element .iloc
         # writes cost more than the whole fold at 1-row segments
-        prev.iloc[starts] = [dec(carry.get(k, enc(init))) for k in keys]
+        seed = [carry.get(k, start) for k in keys]
+        prev.iloc[starts] = pd.Series(seed, dtype=prev.dtype).to_numpy()
         same = (vals == prev) | (vals.isna() & prev.isna())
         ends = np.append(starts[1:], len(pdf)) - 1
         for k, v in zip(keys, vals.iloc[ends].tolist()):
-            carry[k] = enc(v)
+            carry[k] = v
         return pdf[~same.to_numpy(dtype=bool)]
 
     return _keyed_fold_scan(df, by, time_col, shards, fold)
@@ -927,107 +868,6 @@ def reinject_source(spark: SparkSession, topic_dir: str, schema: str) -> DataFra
     return file_source(spark, topic_dir, schema)
 
 
-def _keyed_batch_scan(
-    df: DataFrame,
-    by,
-    time_col,
-    state_struct,
-    init,
-    batch_fn,
-    state_ttl_s=None,
-    out_schema=None,
-    key_cols=(),
-):
-    """applyInPandasWithState shell for order-dependent keyed state:
-    per group, run ``batch_fn(state, pdf) -> (state, out_pdf)`` ONCE
-    over the group's whole micro-batch sorted by event time,
-    persisting state across batches. ``key_cols`` makes each key's
-    rows contiguous and time-sorted instead, for groups that hold
-    several keys. This is
-    the streaming analog of the reference's per-operator atoms
-    (single-threaded per key, parallel across keys) — but each fold
-    is vectorized over the whole micro-batch (numpy scans / pandas
-    shifts), never a per-row ``iterrows``/``to_dict`` loop (r2 perf
-    finding: a hot key melts on per-row Python).
-
-    Arrow hands a group's rows over in chunks of at most
-    ``spark.sql.execution.arrow.maxRecordsPerBatch``. The chunks are
-    concatenated (only when there are several) before the one sort,
-    so a key whose rows span two chunks still folds in event-time
-    order. ``batch_fn`` never sees an empty slice.
-
-    ``state_ttl_s`` is the reference's `by` fork GC
-    (action.clj:1559-1582 :fork-ttl) on the event clock: keys idle
-    past the ttl have their state evicted — the next event starts
-    fresh, and state size stays bounded by the active-key set.
-    Requires a watermark on ``df`` (Spark then drops late rows before
-    the operator).
-
-    ``out_schema`` (StructType or DDL string) lets an operator emit
-    rows shaped differently from its input (e.g. window rows with an
-    events array); ``batch_fn`` must then return exactly those
-    columns.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    schema = df.schema
-    out_struct = out_schema if out_schema is not None else schema
-    cols = (
-        [f.name for f in schema.fields] if out_schema is None else None
-    )  # None → trust batch_fn's column set
-    ttl_ms = int(state_ttl_s * 1000) if state_ttl_s else None
-
-    def sort(pdf):
-        if not key_cols:
-            return pdf.sort_values(time_col, kind="mergesort")
-        # keys need only be contiguous, not ordered: stable lexsort on
-        # factorized key codes (nulls share code -1; -0.0 == 0.0) is
-        # ~3x cheaper than comparing key strings
-        codes = [pd.factorize(pdf[c])[0] for c in reversed(key_cols)]
-        return pdf.take(np.lexsort([pdf[time_col].to_numpy(), *codes]))
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
-            return
-        pdf = sort(
-            chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        )
-        s, out = batch_fn(state.get if state.exists else init, pdf)
-        state.update(tuple(s))
-        if ttl_ms:
-            t = pdf[time_col].max()
-            max_ms = (
-                int(t.value // 1_000_000)
-                if str(pdf[time_col].dtype).startswith("datetime64")
-                else int(float(t) * 1000)
-            )
-            # clamp above the watermark: an out-of-order tail event can
-            # put last-event + ttl BEHIND the watermark, which Spark
-            # rejects; the key then just times out at the next bound
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(max_ms + ttl_ms, wm + 1))
-        if out is not None and len(out):
-            yield out[cols] if cols is not None else out
-
-    return df.groupBy(*[F.col(c) for c in by]).applyInPandasWithState(
-        fn,
-        outputStructType=out_struct,
-        stateStructType=state_struct,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if state_ttl_s
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
 # -- keyed-state folds: one fold, three shells -------------------------------
 # Every keyed operator below is ONE fold
 # ``fold(carry, keys, starts, pdf) -> out``: ``pdf`` is a slice
@@ -1052,8 +892,14 @@ def _keyed_batch_scan(
 #   round-trips per batch — right when most keys are touched each
 #   batch.
 #
-# Both groupings keep the same ``carry STRING`` state, so a fold's
-# per-key operation sequence is identical either way. The batch twin
+# The shell owns the carry's format: both groupings keep one
+# ``carry BINARY`` state holding the pickled {"c": carry[, "t":
+# seen]} blob (protocol 5, the serializer PySpark itself moves every
+# GroupState with). A fold stores cells exactly as pandas hands them
+# (``Series.tolist()``/``.iloc``: float, int, str, bytes, Decimal,
+# pd.Timestamp, pd.Timedelta, date, ndarray, tuples) and encodes
+# nothing, so a fold's per-key operation sequence is identical in
+# both groupings and for every column dtype. The batch twin
 # (``_keyed_fold_batch``) is the same fold with an empty carry: a
 # sorted table partition is one more key group. Null keys are a key
 # of their own in all three shells, as in Spark's groupBy.
@@ -1074,7 +920,7 @@ _EWMA_VEC_CAP = 512
 
 
 def _shard_key_strings(pdf, key_cols, key_dtypes):
-    """Composite string key per row (JSON-map-safe); nulls fold
+    """Composite string key per row (the carry map key); nulls fold
     under a sentinel distinct from any real value.
 
     ``key_dtypes`` (Spark simpleString per key col) makes the string
@@ -1129,7 +975,7 @@ def _shard_key_strings(pdf, key_cols, key_dtypes):
 def _key_segments(pdf, key_cols, key_dtypes):
     """The key segments of a slice whose key runs are contiguous:
     ``starts`` (int64 array) holds the first row of each run of equal
-    factorized key codes — the identity ``_keyed_batch_scan`` sorts
+    factorized key codes — the identity ``_keyed_fold_scan`` sorts
     by (nulls share one code; ``-0.0 == 0.0``) — and ``keys`` the
     ``_shard_key_strings`` of those rows only, so carry keys are the
     same strings whatever the slicing."""
@@ -1165,26 +1011,6 @@ def _keep_segments(keys, starts, keep):
     return [keys[i] for i in seg[first].tolist()], first
 
 
-def _load_carry(carry_json):
-    """Decode a fold's ``carry STRING`` state: ``{"c": {key: state}}``
-    plus ``"t": {key: last event µs}`` under a shard ttl.
-
-    Before both groupings shared one fold, the per-key twins kept
-    their own state. Spark rejects a restart over the typed ones
-    (STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE) but accepts a single
-    STRING column under another name, so a JSON blob that is not a
-    carry map raises here instead of silently resetting every key."""
-    import json as _json
-
-    blob = _json.loads(carry_json) if carry_json else {"c": {}}
-    if not (isinstance(blob, dict) and isinstance(blob.get("c"), dict)):
-        raise ValueError(
-            "keyed state is not a carry map: the checkpoint was written "
-            "by an older per-key twin; restart from a new checkpoint"
-        )
-    return blob
-
-
 def _keyed_fold_scan(
     df, by, time_col, shards, fold, extra_out=None, state_ttl_s=None,
     out_schema=None,
@@ -1192,13 +1018,18 @@ def _keyed_fold_scan(
     """The one streaming shell of the keyed folds (see the section
     comment): group per key (``shards=None``, or a constant group when
     ``by`` is empty — the unkeyed coalesce) or per shard (``shards=N``
-    and ``by`` non-empty), state = one JSON carry map, and per batch
-    call ``fold(carry, keys, starts, pdf)`` with the routing column
-    dropped. Per key the slice is one segment ``([_ONE_KEY], [0])``;
-    per shard ``_key_segments`` splits the (key, time)-sorted slice.
-    ``fold`` mutates ``carry`` and returns the output rows.
-    ``extra_out`` appends DDL columns the fold adds (e.g. zscore);
-    ``out_schema`` replaces the whole output DDL (window emission).
+    and ``by`` non-empty) and run ONE ``applyInPandasWithState`` whose
+    state is the pickled carry blob. Per group and micro-batch the
+    Arrow chunks are concatenated (only when there are several) and
+    sorted once — by event time per key, by (key, event time) per
+    shard — so a key whose rows span chunks still folds in event-time
+    order; then ``fold(carry, keys, starts, pdf)`` runs with the
+    routing column dropped. Per key the slice is one segment
+    ``([_ONE_KEY], [0])``; per shard ``_key_segments`` splits it.
+    ``fold`` mutates ``carry`` and returns the output rows; it never
+    sees an empty slice. ``extra_out`` appends DDL columns the fold
+    adds (e.g. zscore); ``out_schema`` replaces the whole output DDL
+    (window emission).
 
     ``state_ttl_s`` is the fork GC (the reference's :fork-ttl). Per
     key it is the GroupState event-time timeout (needs a watermark).
@@ -1208,10 +1039,17 @@ def _keyed_fold_scan(
     to the shard's event clock (its running max event time); a key
     whose gap since its last event exceeds the ttl folds from
     scratch. Either way an evicted key's next event starts fresh.
+
+    Only this shell writes the blob it unpickles. A checkpoint whose
+    state is not this one BINARY column (the earlier JSON text map,
+    typed per-key state) fails at restart with Spark's
+    STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE.
     """
-    import json as _json
+    import pickle
 
     import numpy as np
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     key_cols = list(by)
     sharded = bool(shards) and bool(key_cols)
@@ -1234,46 +1072,79 @@ def _keyed_fold_scan(
         if extra_out:
             out_schema += f", {extra_out}"
     ttl_us = int(round(state_ttl_s * 1_000_000)) if state_ttl_s and sharded else None
+    ttl_ms = int(state_ttl_s * 1000) if state_ttl_s and not sharded else None
 
-    def batch_fn(s, pdf):
-        (carry_json,) = s
-        blob = _load_carry(carry_json)
-        carry = blob["c"]
-        seen = blob.get("t", {})
+    def fn(key, pdf_iter, state):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        chunks = [p for p in pdf_iter if len(p)]
+        if not chunks:
+            return
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
         if group != key_cols:
             pdf = pdf.drop(columns=group)
+        blob = pickle.loads(state.get[0]) if state.exists else {"c": {}}
+        carry = blob["c"]
         if sharded:
+            # keys need only be contiguous, not ordered: stable lexsort
+            # on factorized key codes (nulls share code -1; -0.0 ==
+            # 0.0) is ~3x cheaper than comparing key strings
+            codes = [pd.factorize(pdf[c])[0] for c in reversed(key_cols)]
+            pdf = pdf.take(np.lexsort([pdf[time_col].to_numpy(), *codes]))
             keys, starts = _key_segments(pdf, key_cols, key_dtypes)
         else:
+            pdf = pdf.sort_values(time_col, kind="mergesort")
             keys, starts = [_ONE_KEY], np.zeros(1, dtype=np.int64)
         if ttl_us is None:
             out = fold(carry, keys, starts, pdf)
-            return (_json.dumps({"c": carry}),), out
-        tv = _series_us(pdf[time_col])
-        # restart rule BEFORE the fold: a key whose gap since its
-        # last event exceeds the ttl folds from scratch
-        for k, sidx in zip(keys, starts.tolist()):
-            prev = seen.get(k)
-            if prev is not None and int(tv[sidx]) - prev > ttl_us:
+        else:
+            seen = blob.setdefault("t", {})
+            tv = _series_us(pdf[time_col])
+            # restart rule BEFORE the fold: a key whose gap since its
+            # last event exceeds the ttl folds from scratch
+            for k, sidx in zip(keys, starts.tolist()):
+                prev = seen.get(k)
+                if prev is not None and int(tv[sidx]) - prev > ttl_us:
+                    seen.pop(k, None)
+                    carry.pop(k, None)
+            out = fold(carry, keys, starts, pdf)
+            # memory bound AFTER the fold: keys idle past the ttl on
+            # the shard's event clock drop even if they never return
+            for k, e in zip(keys, (np.append(starts[1:], len(pdf)) - 1).tolist()):
+                t_last = int(tv[e])
+                prev = seen.get(k)
+                seen[k] = t_last if prev is None else max(prev, t_last)
+            cutoff = max(seen.values()) - ttl_us
+            for k in [k for k, t in seen.items() if t < cutoff]:
                 seen.pop(k, None)
                 carry.pop(k, None)
-        out = fold(carry, keys, starts, pdf)
-        # memory bound AFTER the fold: keys idle past the ttl on
-        # the shard's event clock drop even if they never return
-        for k, e in zip(keys, (np.append(starts[1:], len(pdf)) - 1).tolist()):
-            t_last = int(tv[e])
-            prev = seen.get(k)
-            seen[k] = t_last if prev is None else max(prev, t_last)
-        cutoff = max(seen.values()) - ttl_us
-        for k in [k for k, t in seen.items() if t < cutoff]:
-            seen.pop(k, None)
-            carry.pop(k, None)
-        return (_json.dumps({"c": carry, "t": seen}),), out
+        state.update((pickle.dumps(blob, protocol=5),))
+        if ttl_ms:
+            t = pdf[time_col].max()
+            max_ms = (
+                int(t.value // 1_000_000)
+                if str(pdf[time_col].dtype).startswith("datetime64")
+                else int(float(t) * 1000)
+            )
+            # clamp above the watermark: an out-of-order tail event can
+            # put last-event + ttl BEHIND the watermark, which Spark
+            # rejects; the key then just times out at the next bound
+            wm = state.getCurrentWatermarkMs()
+            state.setTimeoutTimestamp(max(max_ms + ttl_ms, wm + 1))
+        if len(out):
+            yield out
 
-    return _keyed_batch_scan(
-        src, group, time_col, "carry STRING", (None,), batch_fn,
-        state_ttl_s=None if sharded else state_ttl_s,
-        out_schema=out_schema, key_cols=key_cols if sharded else (),
+    return src.groupBy(*[F.col(c) for c in group]).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType="carry BINARY",
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.EventTimeTimeout
+            if ttl_ms
+            else GroupStateTimeout.NoTimeout
+        ),
     )
 
 
@@ -1488,7 +1359,7 @@ def stream_smax(
     """Streaming smax (action.clj:2742-2772): per input event emit
     the best-so-far event of its key; strict > keeps the first
     winner on ties (:func:`stream_smax_jvm` is the per-batch-grain
-    alternative). The stored-best row carries as one JSON dict per
+    alternative). The stored-best row carries as one dict of cells per
     key, the fold walks the slice with one carry reload per key
     segment, and the output materializes as two positional gathers
     (batch-sourced winners + carry-sourced re-emits) merged back into
@@ -1537,7 +1408,7 @@ def stream_smax(
             odf = pd.DataFrame(
                 {c: [emit[p][1][c] for p in o_pos] for c in cols}, columns=cols
             )
-            frames.append(_revive_datetime_cols(odf, pdf))
+            frames.append(odf)
         if len(frames) == 1:
             return frames[0]
         out = pd.concat(frames, ignore_index=True)
@@ -1672,7 +1543,7 @@ def stream_stable(
     boundaries come from one vectorized null-safe shift compare,
     confirmation points from searchsorted, confirmed-run emission
     from slice coalescing (one concat at the end), and only
-    UNCONFIRMED rows (the flap buffer) pay per-value JSON conversion.
+    UNCONFIRMED rows (the flap buffer) are copied into the carry.
     ``shards`` picks the grouping (see ``_keyed_fold_scan``)."""
     import numpy as np
     import pandas as pd
@@ -1685,15 +1556,6 @@ def stream_stable(
         if isinstance(a, float) and isinstance(b, float) and a != a and b != b:
             return True
         return a == b
-
-    def _store(v):
-        # keep NaN as NaN in the carry: Python json round-trips it
-        # and _eq treats NaN==NaN. _native's NaN→None fold would make
-        # _eq(nan, None) False and reset the run at every micro-batch
-        # boundary (ADVICE r8 #1).
-        if isinstance(v, float) and v != v:
-            return float(v)
-        return _native(v)
 
     def fold(carry, keys, starts, pdf):
         n = len(pdf)
@@ -1756,7 +1618,7 @@ def stream_stable(
             v = vals[i]
             if not (st["s"][1] and _eq(v, st["s"][2])):
                 st["s"][1] = True
-                st["s"][2] = _store(v)
+                st["s"][2] = v
                 st["s"][3] = int(t[i])
                 st["s"][4] = False
                 st["b"] = None
@@ -1767,14 +1629,11 @@ def stream_stable(
                     if st["b"] is None:
                         st["b"] = {c: [] for c in cols}
                     for c in cols:
-                        st["b"][c].extend(raw.slice_native(c, i, j))
+                        st["b"][c].extend(raw.slice(c, i, j))
                 else:  # confirmed at kk: flush buffer + whole segment
                     st["s"][4] = True
                     if st["b"] is not None and next(iter(st["b"].values())):
-                        bdf = pd.DataFrame(
-                            {c: st["b"][c] for c in cols}, columns=cols
-                        )
-                        parts.append(_revive_datetime_cols(bdf, pdf))
+                        parts.append(pd.DataFrame(st["b"], columns=cols))
                     st["b"] = None
                     emit_slice(i, j)
             else:
@@ -1823,7 +1682,6 @@ def stream_fixed_event_window(
     import pandas as pd
 
     ttl_us = int(round(fork_ttl_s * 1_000_000)) if fork_ttl_s else None
-    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
     key_cols = list(by)
     ev_struct = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
@@ -1842,10 +1700,6 @@ def stream_fixed_event_window(
         raw = _RawCols(pdf)
         t = _series_us(pdf[time_col])
         ends = np.append(starts[1:], len(pdf))
-
-        def revive(e):
-            return _revive_ts_fields(e, ts_cols)
-
         for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
             st = carry.get(k)
             if st is None:
@@ -1871,8 +1725,7 @@ def stream_fixed_event_window(
                 last_us = ti
                 if len(buf) == n:
                     evs = [
-                        revive(e if isinstance(e, dict)
-                               else raw.row(cols, e))
+                        e if isinstance(e, dict) else raw.row(cols, e)
                         for e in buf
                     ]
                     first = evs[0][time_col]
@@ -1919,7 +1772,6 @@ def stream_moving_event_window(
     picks the grouping (see ``_keyed_fold_scan``)."""
     import numpy as np
 
-    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
     ev_struct = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
@@ -1930,10 +1782,6 @@ def stream_moving_event_window(
         events_col: list = [None] * len(pdf)
         raw = _RawCols(pdf)
         ends = np.append(starts[1:], len(pdf))
-
-        def revive(e):
-            return _revive_ts_fields(e, ts_cols)
-
         for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
             bc = carry.get(k)
             if bc:
@@ -1944,7 +1792,7 @@ def stream_moving_event_window(
             for i in range(s0, e0):
                 buf.append(raw.row(cols, i))
                 buf = buf[-n:]
-                events_col[i] = [revive(e) for e in buf]
+                events_col[i] = list(buf)
             carry[k] = {c: [e[c] for e in buf] for c in cols} if buf else {}
         out = pdf.copy()
         out["events"] = events_col
@@ -2027,8 +1875,8 @@ def stream_coalesce(
     Each key's buffer carries COLUMNAR, with batch rows referenced by
     POSITION until the end of the batch: the per-event loop touches
     only scalars/tuples (tick clock, dict upsert, expiry compare) —
-    no dict-per-row serialization; JSON conversion happens once per
-    batch for the rows still buffered at its end, and emission is
+    no dict-per-row building; the rows still buffered at the end of
+    the batch are copied into the carry once, and emission is
     two positional gathers (batch-sourced + carry-sourced) merged
     back into flush order. ``shards`` picks the grouping (see
     ``_keyed_fold_scan``).
@@ -2068,8 +1916,9 @@ def stream_coalesce(
             if has_state_col and store[state_col][idx] == "expired":
                 return True
             ttl_us = default_ttl_us
-            if has_ttl_col and store[ttl_col][idx] is not None:
-                ttl_us = int(round(float(store[ttl_col][idx]) * 1_000_000))
+            ttl = store[ttl_col][idx] if has_ttl_col else None
+            if ttl is not None and ttl == ttl:
+                ttl_us = int(round(float(ttl) * 1_000_000))
             return ct - ti > ttl_us
 
         raw = _RawCols(pdf)
@@ -2102,10 +1951,11 @@ def stream_coalesce(
                     cur[0] = ti
                 if batch_expired(i, ti, cur[0]):
                     continue
-                # _cell_native, not _native: a timestamp-typed fields
-                # column must isoformat — raw pd.Timestamp is not
-                # JSON-serializable (ADVICE r8 #2)
-                ftk = _json.dumps([_cell_native(a[i]) for a in f_arrs])
+                # the fields tuple's identity key: JSON text, not
+                # pickle (pickle bytes of equal tuples can differ
+                # through the memo); str() covers Timestamp, Decimal
+                # and bytes fields
+                ftk = _json.dumps([a[i] for a in f_arrs], default=str)
                 buf = cur[2]
                 ent = buf.get(ftk)
                 # e/most-recent?: the stored event wins ties
@@ -2126,7 +1976,7 @@ def stream_coalesce(
                     cur[2] = alive
                     cur[1] = cur[0]
         # rebuild each touched key's carry: surviving buffer rows go
-        # columnar (batch-sourced rows pay JSON conversion HERE, once)
+        # columnar (batch-sourced rows are copied HERE, once)
         for k, cur in live.items():
             buf = cur[2]
             if not buf:
@@ -2155,11 +2005,10 @@ def stream_coalesce(
         if b_pos:
             frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
         if o_pos:
-            odf = pd.DataFrame(
+            frames.append(pd.DataFrame(
                 {c: [emit[p][2][c][emit[p][1]] for p in o_pos] for c in cols},
                 columns=cols,
-            )
-            frames.append(_revive_datetime_cols(odf, pdf))
+            ))
         if len(frames) == 1:
             return frames[0]
         out = pd.concat(frames, ignore_index=True)
@@ -2346,7 +2195,6 @@ def stream_moving_time_window(
     import numpy as np
 
     dur_us = int(round(duration_s * 1_000_000))
-    ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
     ev_struct = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     )
@@ -2364,7 +2212,7 @@ def stream_moving_time_window(
                 buf.append((ti, raw.row(cols, i)))
                 lo = ti - dur_us + 1
                 buf = [(tb, e) for tb, e in buf if tb >= lo]
-                events_col.append([_revive_ts_fields(e, ts_cols) for _, e in buf])
+                events_col.append([e for _, e in buf])
             carry[k] = buf
         out = pdf.copy()
         out["events"] = events_col
@@ -2513,7 +2361,8 @@ def stream_zscore(
     seconds of its key, in standard deviations.
 
     Exactness: keyed state carries the trailing window as
-    ``(t_us, q1, q2)`` triples plus running DECIMAL(38,9) sums, where
+    ``(t_us, q1, q2)`` triples plus running DECIMAL(38,9) sums and
+    their non-null term counts, as Decimal objects, where
     ``q1``/``q2`` are the metric and its double-squared value rounded
     HALF_UP at scale 9 from the shortest decimal representation —
     the same rule Spark's double→decimal cast applies in the batch
@@ -2540,36 +2389,12 @@ def stream_zscore(
         t = _series_us(pdf[time_col])
         vals = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
         zs = np.full(len(pdf), np.nan)
-        live: dict = {}  # decoded states this batch (decimal objects)
-
-        def _load(k):
-            st = carry.get(k)
-            if st is None:
-                c = [[], Decimal(0), Decimal(0), 0, 0]
-            else:
-                c = [
-                    [
-                        (
-                            tt,
-                            None if a is None else Decimal(a),
-                            None if b is None else Decimal(b),
-                        )
-                        for tt, a, b in st["b"]
-                    ],
-                    Decimal(st["s1"]),
-                    Decimal(st["s2"]),
-                    # pre-r8 carries had no counters (no NULL terms then)
-                    st.get("c1", sum(1 for e in st["b"] if e[1] is not None)),
-                    st.get("c2", sum(1 for e in st["b"] if e[2] is not None)),
-                ]
-            live[k] = c
-            return c
-
         ends = np.append(starts[1:], len(pdf)).tolist()
         with localcontext() as ctx:
             ctx.prec = _ZSCORE_PREC
             for k, s0, e0 in zip(keys, starts.tolist(), ends):
-                cur = _load(k)
+                # [buf of (t_us, q1, q2), s1, s2, c1, c2]
+                cur = carry.setdefault(k, [[], Decimal(0), Decimal(0), 0, 0])
                 buf = cur[0]
                 for i in range(s0, e0):
                     ti = int(t[i])
@@ -2604,17 +2429,6 @@ def stream_zscore(
                         var = max(float(cur[2]) / nd - mean * mean, 0.0)
                         if var > 0.0:
                             zs[i] = (float(v) - mean) / math.sqrt(var)
-        for k, (b, a1, a2, k1, k2) in live.items():
-            carry[k] = {
-                "b": [
-                    [tt, None if x is None else str(x), None if y is None else str(y)]
-                    for tt, x, y in b
-                ],
-                "s1": str(a1),
-                "s2": str(a2),
-                "c1": k1,
-                "c2": k2,
-            }
         res = pdf.copy()
         res[out] = pd.array(zs, dtype="float64")
         return res
@@ -2680,11 +2494,6 @@ def stream_smin_jvm(
     return out.withColumn(metric_col, -F.col(metric_col))
 
 
-def _cell_native(v):
-    """One buffered cell → JSON-able (timestamps to isoformat)."""
-    return _native(v.isoformat() if hasattr(v, "isoformat") else v)
-
-
 class _RawCols:
     """Cell access for the row-buffer folds, adaptive to the
     touch density the batch size implies. ``pdf[c].iloc[i]`` per
@@ -2698,8 +2507,9 @@ class _RawCols:
       thousand buffered cells): cached-Series ``.iat``/``.iloc`` —
       whole-column materialization there costs more than it saves.
 
-    Both regimes yield the same values the old iloc path did
-    (datetime64 → pd.Timestamp, numpy scalars native via _native)."""
+    Cells come back as pandas hands them (pd.Timestamp, Decimal,
+    bytes, ndarray, NaN for a null double); the shell's carry stores
+    them as they are."""
 
     _DENSE_MAX = 2_000_000
 
@@ -2718,32 +2528,11 @@ class _RawCols:
 
     def cell(self, c, i):
         col = self._series(c)
-        return _cell_native(col[i] if self._dense else col.iat[i])
+        return col[i] if self._dense else col.iat[i]
 
     def row(self, cols, i):
         return {c: self.cell(c, i) for c in cols}
 
-    def slice_native(self, c, i, j):
+    def slice(self, c, i, j):
         col = self._series(c)
-        vals = col[i:j] if self._dense else col.iloc[i:j]
-        return [_cell_native(v) for v in vals]
-
-
-def _revive_datetime_cols(bdf, like_pdf):
-    import pandas as pd
-
-    for c in like_pdf.columns:
-        if str(like_pdf[c].dtype).startswith("datetime64"):
-            bdf[c] = pd.to_datetime(bdf[c])
-    return bdf
-
-
-def _revive_ts_fields(e, ts_cols):
-    """One buffered JSON row dict → emission: isoformat strings back
-    to pd.Timestamp for EVERY timestamp-typed column — a
-    timestamp-typed payload field must round-trip the JSON buffer
-    exactly like the time column (ADVICE r8 #2 and siblings)."""
-    import pandas as pd
-
-    rv = {c: pd.Timestamp(e[c]) for c in ts_cols if e.get(c) is not None}
-    return {**e, **rv} if rv else e
+        return col[i:j] if self._dense else col.iloc[i:j].tolist()

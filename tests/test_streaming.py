@@ -2731,9 +2731,9 @@ def test_sharded_key_strings_type_stable_with_null_keys(spark, tmp_path):
 
 
 def test_stream_changed_sharded_timestamp_field(spark, tmp_path):
-    """r7 review fix: a timestamp watched field must survive the
-    shard map's JSON round trip (isoformat encode / Timestamp
-    revive) — parity with the per-key twin across a batch split."""
+    """r7 review fix: a timestamp watched field carries across a
+    batch split in the shard map — parity with the per-key twin and
+    the batch twin."""
     import pyspark.sql.functions as F
 
     from mirabelle_spark.streaming import core
@@ -2776,17 +2776,6 @@ def test_stream_changed_sharded_timestamp_field(spark, tmp_path):
     assert per == {r.event_id for r in st.changed(
         df, "updated_at", by=["host"], time_col="time",
         order_cols=("event_id",)).collect()}
-
-    # non-JSON-carryable dtypes raise a NAMED error up front
-    import pytest as _pytest
-
-    dec_df = df.withColumn("updated_at", F.col("event_id").cast("decimal(10,2)"))
-    stream = spark.readStream.schema(dec_df.schema).parquet(src_dir)
-    with _pytest.raises(NotImplementedError, match="decimal"):
-        core.stream_changed(
-            stream.withColumn("updated_at", F.col("event_id").cast("decimal(10,2)")),
-            "updated_at", by=["host"], time_col="time", shards=4,
-        )
 
 
 def test_stream_zscore_huge_values_fold_exact(spark, tmp_path):
@@ -2907,20 +2896,46 @@ def test_shard_key_strings_injective_adversarial():
     assert len(set(ks1)) == 3
 
 
-def test_stream_changed_sharded_rejects_interval(spark, tmp_path):
-    """ADVICE r7 (low): an interval-typed field must hit the up-front
-    NotImplementedError (exact dtype names), not a runtime json.dumps
-    failure inside the executor."""
-    df = spark.createDataFrame(
-        [(0, "a", 1.0)], "event_id bigint, host string, t double"
-    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))) \
-     .withColumn("gap", F.expr("make_dt_interval(0, 0, 0, event_id)")).drop("t")
-    assert dict(df.dtypes)["gap"].startswith("interval")
-
+def test_stream_changed_every_field_dtype_parity(spark, tmp_path):
+    """``changed`` runs one fold in both groupings for every field
+    dtype — decimal, date, binary, day-time interval and array<int>
+    (compared as tuples) — with nulls and an unchanged value across
+    the micro-batch boundary: per key == ``shards=2`` == the batch
+    twin."""
+    from mirabelle_spark.operators import stateful as st
     from mirabelle_spark.streaming import core
 
-    with pytest.raises(NotImplementedError, match="interval"):
-        core.stream_changed(df, "gap", by=["host"], time_col="time", shards=4)
+    k = F.floor((F.col("event_id") + 1) / 2) % 3  # runs of two, split 3|4
+    df = (
+        _every_dtype_events(spark).select("event_id", "host", "time")
+        .withColumn("amount", F.when(F.col("event_id") % 7 == 3, None)
+                    .otherwise(k.cast("decimal(10,2)")))
+        .withColumn("day", F.expr("date_add(DATE'2024-01-01', CAST("
+                                  "floor((event_id + 1) / 2) % 3 AS INT))"))
+        .withColumn("blob", F.when(F.col("event_id") % 7 == 4, None)
+                    .otherwise(k.cast("string").cast("binary")))
+        .withColumn("gap", F.expr("make_dt_interval(0, 0, 0, "
+                                  "floor((event_id + 1) / 2) % 3)"))
+        .withColumn("ids", F.array(k.cast("int"), F.lit(1)))
+    )
+    fields = ("amount", "day", "blob", "gap", "ids")
+
+    def build(f, n):
+        return lambda s: core.stream_changed(
+            s, f, by=["host"], time_col="time", shards=n
+        )
+
+    got = _two_batch_runs(spark, tmp_path, df, "event_id % 8 < 4", "chd", {
+        f"chd_{f}_{n or 0}": build(f, n) for f in fields for n in (None, 2)
+    })
+    for f in fields:
+        per = sorted(r.event_id for r in got[f"chd_{f}_0"])
+        assert sorted(r.event_id for r in got[f"chd_{f}_2"]) == per, f
+        # host h2's events 19|20 straddle the split with one value
+        assert 0 < len(per) < 48 and 19 in per and 20 not in per, f
+        assert per == sorted(r.event_id for r in st.changed(
+            df, f, by=["host"], time_col="time",
+            order_cols=("event_id",)).collect()), f
 
 
 def _two_batch_runner(spark, tmp_path, df, split_pred, tag):
@@ -2945,6 +2960,38 @@ def _two_batch_runner(spark, tmp_path, df, split_pred, tag):
         return spark.sql(f"SELECT * FROM {name}").collect()
 
     return run
+
+
+def _two_batch_runs(spark, tmp_path, df, split_pred, tag, builds):
+    """``_two_batch_runner`` for several queries at once: start every
+    ``builds[name](stream)`` query, await them all and return
+    {name: rows}. The queries run on two state partitions, which
+    keeps many tiny concurrent queries cheap."""
+    src_dir = str(tmp_path / f"{tag}_in")
+    df.where(split_pred).coalesce(1).write.mode("append").parquet(src_dir)
+    df.where(f"NOT ({split_pred})").coalesce(1).write.mode("append").parquet(src_dir)
+    queries = []
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
+    try:
+        for name, build in builds.items():
+            stream = (
+                spark.readStream.schema(df.schema)
+                .option("maxFilesPerTrigger", "1")
+                .parquet(src_dir)
+            )
+            queries.append(
+                build(stream).writeStream.format("memory").queryName(name)
+                .option("checkpointLocation", str(tmp_path / f"{name}_ck"))
+                .outputMode("append").trigger(availableNow=True).start()
+            )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    for q in queries:
+        q.awaitTermination()
+    return {
+        name: spark.sql(f"SELECT * FROM {name}").collect() for name in builds
+    }
 
 
 def test_keyed_fold_sorts_group_once_across_arrow_chunks(spark, tmp_path):
@@ -3183,27 +3230,58 @@ def test_keyed_fold_shells_hand_over_key_segments(spark, tmp_path):
         spark.conf.set(conf, old)
 
 
-def test_keyed_fold_rejects_pre_merge_per_key_state():
-    """A checkpoint written by the old per-key twins' STRING state
-    (same one-column schema, so Spark accepts it) must raise rather
-    than fold every key from scratch."""
-    import json as _json
+def test_keyed_fold_rejects_pre_merge_per_key_state(spark, tmp_path):
+    """A checkpoint whose keyed state has another format — the
+    earlier ``carry STRING`` shard map, a typed per-key ``last
+    double`` — must fail the restarted query loudly, never fold
+    every key from scratch: Spark's state schema check rejects it
+    against the shell's ``carry BINARY`` state."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from mirabelle_spark.streaming.core import _load_carry
+    from mirabelle_spark.streaming import core
 
-    assert _load_carry(None) == {"c": {}}
-    shard_blob = {"c": {"a": 0.5}, "t": {"a": 10}}
-    assert _load_carry(_json.dumps(shard_blob)) == shard_blob
-    for old in (
-        {"max": 5, "has": True, "value": "up", "flip": 0, "confirmed": False,
-         "buffer": []},                       # per-key stable
-        [],                                   # per-key event-window buffer
-        {"metric": 1.0, "host": "a", "c": 3},  # per-key smax best row
-        [[1000000, {"time": "1970-01-01T00:00:01", "metric": 1.0}]],
-        # moving-time-window's own ``buf STRING`` state
-    ):
-        with pytest.raises(ValueError, match="carry map"):
-            _load_carry(_json.dumps(old))
+    df = spark.createDataFrame(
+        [(i, f"h{i % 3}", float(i * 10), float(i)) for i in range(12)],
+        "event_id bigint, host string, t double, metric double",
+    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
+
+    def old_state(group, state):  # the earlier formats, on the same grouping
+        def fn(key, pdfs, st):
+            for pdf in pdfs:
+                st.update(('{"c": {}}',) if state == "carry STRING" else (1.0,))
+                yield pdf
+
+        return lambda s: s.withColumn(
+            "__shard__", F.pmod(F.xxhash64("host"), F.lit(2))
+        ).groupBy(group).applyInPandasWithState(
+            fn, outputStructType="event_id bigint, host string, "
+            "metric double, time timestamp, __shard__ bigint",
+            stateStructType=state, outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+
+    def start(build, src_dir, ck):
+        stream = spark.readStream.schema(df.schema).parquet(src_dir)
+        return (
+            build(stream).writeStream.format("noop")
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True).start()
+        )
+
+    cases = [
+        ("ewma", old_state("__shard__", "carry STRING"),
+         lambda s: core.stream_ewma(s, 0.5, by=["host"], time_col="time", shards=2)),
+        ("changed", old_state("host", "last double"),
+         lambda s: core.stream_changed(s, "metric", by=["host"], time_col="time")),
+    ]
+    for tag, before, after in cases:
+        src_dir, ck = str(tmp_path / f"old_{tag}_in"), str(tmp_path / f"old_{tag}_ck")
+        df.where("event_id < 6").coalesce(1).write.parquet(src_dir)
+        start(before, src_dir, ck).awaitTermination()
+        df.where("event_id >= 6").coalesce(1).write.mode("append").parquet(src_dir)
+        q = start(after, src_dir, ck)
+        with pytest.raises(Exception, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+            q.awaitTermination()
 
 
 def test_stream_stable_sharded_parity(spark, tmp_path):
@@ -3324,6 +3402,95 @@ def test_stream_coalesce_sharded_parity(spark, tmp_path):
         s, 10.0, ["service"], by=["host"], time_col="time", shards=4), "cls_sh"))
     assert shd == per
     assert per and max(per.values()) >= 2  # re-emission actually exercised
+
+
+def _canon(v):
+    """A collected cell in comparable form: rows and arrays to
+    tuples, bytearray (binary) to bytes."""
+    if isinstance(v, (list, tuple)):
+        return tuple(_canon(x) for x in v)
+    if isinstance(v, bytearray):
+        return bytes(v)
+    return v
+
+
+def _canon_rows(rows):
+    return sorted((_canon(r) for r in rows), key=repr)
+
+
+def _every_dtype_events(spark):
+    """Six hosts x eight events whose payload carries decimal,
+    binary, date, day-time interval and array<int> columns (the
+    decimal and binary ones with nulls)."""
+    rows = []
+    for h in range(6):
+        for j in range(8):
+            eid = h * 8 + j
+            metric = None if (h + j) % 5 == 2 else float((h * 7 + j * 3) % 11)
+            status = "up" if (j // 3) % 2 == 0 else "down"
+            rows.append((eid, f"h{h}", float(j * 10), metric, status))
+    return (
+        spark.createDataFrame(
+            rows,
+            "event_id bigint, host string, t double, metric double, status string",
+        )
+        .withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long")))
+        .withColumn("amount", F.when(F.col("event_id") % 7 == 3, None)
+                    .otherwise((F.col("event_id") % 3).cast("decimal(10,2)")))
+        .withColumn("blob", F.when(F.col("event_id") % 7 == 4, None)
+                    .otherwise(F.col("status").cast("binary")))
+        .withColumn("day", F.expr("date_add(DATE'2024-01-01', CAST(event_id % 5 AS INT))"))
+        .withColumn("gap", F.expr("make_dt_interval(0, 0, 0, event_id)"))
+        .withColumn("ids", F.array(F.col("event_id").cast("int"), F.lit(1)))
+        .drop("t")
+    )
+
+
+def test_row_buffer_folds_carry_every_column_dtype(spark, tmp_path):
+    """The row-buffer folds keep whole rows in keyed state across a
+    micro-batch boundary: decimal, binary, date, interval and array
+    payload cells (and a decimal in coalesce's ``fields``) carry and
+    re-emit unchanged in both groupings, equal to the batch twins."""
+    from mirabelle_spark.operators import stateful as st
+    from mirabelle_spark.operators import windows as win
+    from mirabelle_spark.streaming import core
+
+    df = _every_dtype_events(spark)
+    cols = df.columns
+    builds = {}
+    for n in (None, 2):
+        g = n or 0
+        builds[f"dty_smax_{g}"] = lambda s, n=n: core.stream_smax(
+            s, by=["host"], time_col="time", shards=n)
+        builds[f"dty_stable_{g}"] = lambda s, n=n: core.stream_stable(
+            s, 15.0, "status", by=["host"], time_col="time", shards=n)
+        builds[f"dty_few_{g}"] = lambda s, n=n: core.stream_fixed_event_window(
+            s, 3, by=["host"], time_col="time", shards=n)
+        builds[f"dty_coal_{g}"] = lambda s, n=n: core.stream_coalesce(
+            s, 20.0, ["amount", "status"], by=["host"], time_col="time",
+            shards=n)
+    got = {
+        name: _canon_rows(rows) for name, rows in _two_batch_runs(
+            spark, tmp_path, df, "event_id % 8 < 4", "dty", builds).items()
+    }
+    for op in ("smax", "stable", "few", "coal"):
+        assert got[f"dty_{op}_2"] == got[f"dty_{op}_0"], op
+    assert len(got["dty_smax_0"]) == 48
+    assert got["dty_smax_0"] == _canon_rows(st.smax(
+        df, by=["host"], time_col="time", order_cols=("event_id",)
+    ).select(*cols).collect())
+    assert 0 < len(got["dty_stable_0"]) < 48
+    assert got["dty_stable_0"] == _canon_rows(st.stable(
+        df, 15.0, "status", by=["host"], time_col="time", order_cols=("event_id",)
+    ).select(*cols).collect())
+    assert len(got["dty_few_0"]) == 12  # 6 hosts x 2 full windows
+    assert sorted((r[0], r[2]) for r in got["dty_few_0"]) == sorted(
+        (r[0], r[1]) for r in _canon_rows(win.fixed_event_window(
+            df, 3, by=["host"], time_col="time", order_cols=("event_id",)
+        ).select("host", "events").collect()))
+    # a kept row re-emits on a later tick, so carried rows go out too
+    ids = [r[cols.index("event_id")] for r in got["dty_coal_0"]]
+    assert len(ids) > len(set(ids))
 
 
 def test_stream_smax_jvm_final_best_matches_batch(spark, tmp_path):
