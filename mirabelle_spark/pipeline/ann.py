@@ -79,83 +79,6 @@ def _unit_normalized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def bounded_topk(
-    scored: DataFrame,
-    k: int,
-    dist_col: str,
-    query_id_col: str = "query_id",
-    id_col: str = "vec_id",
-    descending: bool = False,
-) -> DataFrame:
-    """EXPLICIT two-phase bounded top-k per query — kept as the
-    measured CONTROL for the rank-tail scale question, NOT wired
-    into the rankers (r15, VERDICT r14 ask #8, executed then
-    reverted on evidence):
-
-    Spark ≥3.5 already compiles every ranker's
-    ``row_number() over partitionBy(query) … filter(rank <= k)``
-    tail with WindowGroupLimit pushdown — a ``Partial`` sort-limit
-    BELOW the exchange keeps ≤ k rows per (query, input-partition)
-    map-side, then one ``Final`` limit ranks the survivors
-    (plan-pinned in pytest). That is exactly the two-phase bound
-    this helper hand-rolls, minus one exchange and with a
-    spillable streaming sort-limit where this form buffers a
-    ``collect_list`` array per group. Measured on a 1M-row × 64-dim
-    corpus, 2 queries (the adversarial few-queries-huge-mass
-    shape, fresh JVM per configuration, min-of-3,
-    tools/bench_topk.py): window 25.2 s vs this form 29.4 s — the
-    optimizer's plan wins, so the rankers keep the declarative
-    window and this helper documents (and continuously re-checks,
-    via its equivalence pytest) the alternative. PERF §87.
-
-    Phase 1 keeps the k best (dist, id) structs per (query,
-    input-partition) via collect-then-slice — the ``collect_list``
-    buffer is O(group rows) in memory, only the aggregate's OUTPUT
-    is k-bounded (one reason the pushdown's spillable sort-limit
-    wins); phase 2
-    exact-ranks the ≤ k·partitions survivors per query with the
-    one window. Output is value- and rank-identical to the naive
-    window in both orders and partitioning-independent;
-    ``descending`` negates the score inside the sort struct (exact
-    for IEEE doubles; distances here are fold-sums from +0.0, so
-    -0.0 never occurs). Assumes non-null, non-NaN distances.
-
-    Returns (query_id, id, dist, rank), rank 1-based by
-    (dist asc|desc, id asc)."""
-    s = F.col(dist_col).cast("double")
-    if descending:
-        s = -s
-    hk = F.struct(
-        s.alias("h"),
-        F.col(id_col).alias("k"),
-        F.col(dist_col).alias("d"),
-    )
-    part = (
-        scored.select(F.col(query_id_col), hk.alias("__hk__"))
-        .withColumn("__pid__", F.spark_partition_id())
-        .groupBy(query_id_col, "__pid__")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_list("__hk__")), 1, k
-            ).alias("__top__")
-        )
-        .select(F.col(query_id_col), F.explode("__top__").alias("__hk__"))
-    )
-    w = W.partitionBy(query_id_col).orderBy(
-        F.col("__hk__.h"), F.col("__hk__.k")
-    )
-    return (
-        part.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col(query_id_col),
-            F.col("__hk__.k").alias(id_col),
-            F.col("__hk__.d").alias(dist_col),
-            "rank",
-        )
-    )
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -168,9 +91,12 @@ def brute_force_topk(
 
     ``queries`` needs (query_id_col, vec_col). Returns
     (query_id, vec_id, cosine, rank). Self-matches (same id) are
-    kept — filter upstream if undesired. The rank tail's scale
-    story (why the window form is already bounded map-side by
-    WindowGroupLimit pushdown) lives at :func:`bounded_topk`.
+    kept — filter upstream if undesired. The rank tail needs no
+    hand-rolled two-phase top-k: Spark compiles the window's
+    ``rank <= k`` filter with WindowGroupLimit pushdown, a Partial
+    sort-limit below the exchange that keeps ≤ k rows per (query,
+    input partition) map-side (plan-pinned in pytest; PERF §87
+    measured the explicit two-phase form slower).
     """
     q = queries.select(
         F.col(query_id_col), as_double_vec(F.col(vec_col)).alias("__qv__")

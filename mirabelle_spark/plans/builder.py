@@ -62,9 +62,9 @@ class Ctx:
     is the default watermark tolerance for windowed twins (the
     reference's per-op :delay overrides it via cfg). ``shards``
     (set per-fork via ``by``'s ``{"shards": N}`` config key, or
-    session-wide here) is passed to every keyed-state twin: N routes
-    keys to N shard-mapped state groups — the high-cardinality
-    shape, PERF §39/§43; None keeps one state group per key (see
+    session-wide here) is passed to every keyed-state twin: their
+    keys route to N shard-mapped state groups, and None means the
+    default count (streaming.core._DEFAULT_SHARDS; see
     streaming.core._keyed_fold_scan)."""
 
     by: tuple[str, ...] = ()
@@ -616,7 +616,7 @@ def _s_coalesce(df, ctx, cfg):
     from mirabelle_spark import streaming as stx
 
     # the UNKEYED form has ONE global tick clock: stream_coalesce
-    # keeps it a single state group whatever ctx.shards says
+    # keeps it one key in one shard whatever ctx.shards says
     return stx.stream_coalesce(
         df, cfg["duration"], cfg["fields"], by=list(ctx.by),
         time_col=ctx.time_col, shards=ctx.shards,
@@ -716,7 +716,7 @@ def _s_curate(df, ctx, cfg=None):
         contamination=_curate_contamination(cfg),
         neardup=neardup,
         neardup_bands=int(cfg.get("near-dup-bands", 8)),
-        neardup_shards=int(cfg.get("near-dup-shards", 64)),
+        neardup_shards=int(cfg.get("near-dup-shards", stx._DEFAULT_SHARDS)),
     )
 
 
@@ -959,7 +959,7 @@ def _walk(df: DataFrame, node: dict | list, ctx: Ctx) -> None:
     if name == "by":
         # stream.clj:38-44: fork per key-tuple = thread grouping keys
         # into every windowed/stateful descendant; {"shards": N}
-        # opts this fork into shard-mapped keyed state (PERF §39)
+        # sets the shard count of its keyed state (PERF §39)
         sub = replace(
             ctx,
             by=ctx.by + tuple(params[0]["fields"]),

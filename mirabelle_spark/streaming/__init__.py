@@ -13,7 +13,6 @@ from mirabelle_spark.streaming.core import (  # noqa: F401
     stream_ratio,
     stream_top,
     stream_changed,
-    stream_changed_jvm_run,
     stream_coalesce,
     stream_cond_dt,
     stream_ddt,

@@ -22,6 +22,10 @@ from pyspark.sql import functions as F
 from mirabelle_spark.conditions import compile_condition
 from mirabelle_spark.operators.aggregations import DEC
 
+# Every keyed-state operator routes its keys to pmod(xxhash64(by), N)
+# state groups; N is this unless the caller passes ``shards``.
+_DEFAULT_SHARDS = 64
+
 
 def file_source(
     spark: SparkSession, path: str, schema: str, fmt: str = "json"
@@ -125,9 +129,9 @@ def stream_changed(
 
     The micro-batch compare is one vectorized shift; only the key
     segment starts read the carry and segment ends write it, so the
-    Python work is O(distinct keys in batch). Any field dtype works
-    in both groupings; array fields compare (and carry) as tuples.
-    ``shards`` picks the grouping (see ``_keyed_fold_scan``).
+    Python work is O(distinct keys in batch). Any field dtype works;
+    array fields compare (and carry) as tuples.
+    ``shards`` sets the shard count (see ``_keyed_fold_scan``).
     """
     import numpy as np
     import pandas as pd
@@ -155,231 +159,6 @@ def stream_changed(
         return pdf[~same.to_numpy(dtype=bool)]
 
     return _keyed_fold_scan(df, by, time_col, shards, fold)
-
-
-def stream_changed_jvm_run(
-    df: DataFrame,
-    fieldname: str,
-    by: Sequence[str],
-    work_dir: str,
-    time_col: str = "time",
-    init=None,
-    out_writer=None,
-    query_name: str = "changed_jvm",
-    trigger: dict | None = None,
-    n_buckets: int = 64,
-    compact_every: int = 16,
-):
-    """Pure-JVM per-event ``changed`` (VERDICT r8 ask #6 experiment):
-    zero Python on the data path, per-event emission grain.
-
-    Why this is a ``foreachBatch`` TERMINAL op and not an in-pipeline
-    transformation: per-event ``changed`` needs each row's
-    predecessor within (key, time) order. On a streaming DataFrame
-    Spark rejects analytic window functions (``lag``), and the
-    in-pipeline stateful surfaces available to PySpark
-    (applyInPandasWithState / transformWithStateInPandas) are
-    Python-priced by construction. Inside ``foreachBatch`` the
-    micro-batch is a plain DataFrame, so the whole recurrence stays
-    JVM-side:
-
-    - within-batch predecessor: ``lag(struct(field))`` over
-      ``partitionBy(by).orderBy(time)``;
-    - cross-batch predecessor: left join against a parquet
-      last-value table keyed on ``by`` (one struct row per key),
-      consulted only where ``lag`` returned null (first row of the
-      key in this batch);
-    - first event ever: compared against ``init`` (null-safe),
-      action.clj:334-360;
-    - state update: ``max_by(struct(field), time)`` per key in the
-      batch, written as an LSM-STYLE DELTA — a version dir holding
-      ONLY this batch's keys (O(batch) rows) — with a full
-      compaction into a ``pmod(xxhash64(keys), n_buckets)``-
-      partitioned base every ``compact_every`` batches. Per-batch
-      state WRITE cost is O(batch keys) + O(total keys)/
-      compact_every amortized, not O(total distinct keys) every
-      batch (the r9-verdict scale finding: at 100M+ keys a
-      full-table rewrite per batch dwarfs any batch). The state
-      READ per batch resolves base ∪ deltas by newest version —
-      a bounded union of <= compact_every+1 dirs. (A per-batch
-      bucket-granular overwrite — the verdict's sketch — was
-      measured first and REJECTED: 1k random keys touch ~all
-      buckets, so each batch paid ~1000 file creates/reads; 16.6 s
-      vs 1.8 s per batch at 100k keys. Deltas write one dir of
-      O(batch) rows instead. ``compact_every=1`` reproduces the r9
-      full-rewrite behavior for benchmarking.)
-
-    Replay-idempotent and crash-atomic (r9 ADVICE): each batch
-    writes its version dir (``state/b<batch_id>``) and then
-    publishes a MANIFEST (``state/manifest_b<batch_id>.json``,
-    tmp+rename, written LAST) listing the current base and delta
-    dirs in order. A replayed micro-batch (batch_id <= the newest
-    manifest: the crash-after-commit-log-gap case) re-emits from
-    the PRE-batch manifest — so genuinely-changed first-of-key
-    rows are not suppressed by already-advanced state — and skips
-    the state write; a crash BEFORE the manifest rename leaves the
-    previous manifest authoritative and the half-written version
-    dir is simply overwritten on retry. State is exactly-once;
-    emission through ``out_writer`` is at-least-once (standard
-    foreachBatch sink semantics). The last two manifests and the
-    version dirs they reference are retained; older ones are GC'd
-    per batch.
-
-    The trade vs :func:`stream_changed` / the sharded tier: a
-    foreachBatch sink cannot feed further stream operators directly
-    (compose via ``reinject!``/a topic dir if needed), ties on
-    ``time_col`` within a key order arbitrarily (the apws twins keep
-    arrival order), and each batch pays one keyed shuffle + a
-    state read/merge/write. ``out_writer(df,
-    batch_id)`` receives each batch's emitted rows (default: noop
-    write — bench shape). Returns the started StreamingQuery."""
-    import json as _json
-    import os as _os
-    import shutil as _sh
-
-    from pyspark.sql.window import Window as _W
-
-    spark = df.sparkSession
-    key_cols = list(by)
-    ftype = dict(df.dtypes)[fieldname]
-    state_root = _os.path.join(work_dir, "state")
-    bkt = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
-
-    def _manifest_ids():
-        try:
-            names = _os.listdir(state_root)
-        except FileNotFoundError:
-            return []
-        return sorted(
-            int(m[len("manifest_b"):-len(".json")])
-            for m in names
-            if m.startswith("manifest_b") and m.endswith(".json")
-        )
-
-    def _manifest_path(mid):
-        return _os.path.join(state_root, f"manifest_b{mid}.json")
-
-    def _load_manifest(mid):
-        with open(_manifest_path(mid)) as f:
-            return _json.load(f)
-
-    def _read_state(man):
-        """Resolve base ∪ deltas to one row per key (newest wins).
-        Bounded: <= compact_every+1 dirs; deltas are O(their batch)."""
-        dirs = ([man["base"]] if man.get("base") else []) + man.get("deltas", [])
-        if not dirs:
-            return None
-        parts = [
-            spark.read.parquet(d)
-            .select(*key_cols, "__lv__")
-            .withColumn("__seq__", F.lit(i))
-            for i, d in enumerate(dirs)
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        if len(parts) == 1:
-            return u.drop("__seq__")
-        return u.groupBy(*key_cols).agg(
-            F.max_by("__lv__", "__seq__").alias("__lv__")
-        )
-
-    def _emit_noop(out, _bid):
-        out.write.format("noop").mode("overwrite").save()
-
-    writer = out_writer or _emit_noop
-
-    def handle(batch, batch_id):
-        if batch.isEmpty():
-            return
-        ids = _manifest_ids()
-        replay = bool(ids) and batch_id <= ids[-1]
-        # pre-batch state: on replay, the newest manifest BELOW this
-        # batch (its own manifest reflects post-batch state)
-        pre_ids = [i for i in ids if i < batch_id] if replay else ids
-        pre = _load_manifest(pre_ids[-1]) if pre_ids else {"base": None, "deltas": []}
-        st = _read_state(pre)
-
-        w = _W.partitionBy(*key_cols).orderBy(time_col)
-        e = batch.withColumn(
-            "__pv__", F.lag(F.struct(F.col(fieldname).alias("v"))).over(w)
-        )
-        if st is not None:
-            e = e.join(st.withColumnRenamed("__lv__", "__sv__"), key_cols, "left")
-        else:
-            e = e.withColumn("__sv__", F.lit(None).cast(f"struct<v:{ftype}>"))
-        prev = F.coalesce(F.col("__pv__"), F.col("__sv__"))
-        prev_v = F.when(prev.isNull(), F.lit(init).cast(ftype)).otherwise(
-            prev["v"]
-        )
-        out = e.filter(~prev_v.eqNullSafe(F.col(fieldname))).drop(
-            "__pv__", "__sv__"
-        )
-        writer(out, batch_id)
-        if replay:
-            return  # state already reflects this batch
-
-        last = batch.groupBy(*key_cols).agg(
-            F.max_by(
-                F.struct(F.col(fieldname).alias("v")), F.col(time_col)
-            ).alias("__lv__")
-        )
-        vdir = _os.path.join(state_root, f"b{batch_id}")
-        compact = st is None or len(pre["deltas"]) + 1 >= compact_every
-        if compact:
-            # compaction rewrites EVERY key
-            if st is not None:
-                merged = st.alias("s").join(
-                    last.alias("l"), key_cols, "full_outer"
-                ).select(
-                    *[
-                        F.coalesce(F.col(f"l.{c}"), F.col(f"s.{c}")).alias(c)
-                        for c in key_cols
-                    ],
-                    F.coalesce(F.col("l.__lv__"), F.col("s.__lv__")).alias(
-                        "__lv__"
-                    ),
-                )
-            else:
-                merged = last
-            merged.withColumn("__bkt__", bkt).write.mode(
-                "overwrite"
-            ).partitionBy("__bkt__").parquet(vdir)
-            man = {"batch_id": batch_id, "base": vdir, "deltas": []}
-        else:
-            last.write.mode("overwrite").parquet(vdir)
-            man = {
-                "batch_id": batch_id,
-                "base": pre["base"],
-                "deltas": pre["deltas"] + [vdir],
-            }
-        tmp = _manifest_path(batch_id) + ".tmp"
-        with open(tmp, "w") as f:
-            _json.dump(man, f)
-        _os.rename(tmp, _manifest_path(batch_id))  # the commit point
-
-        # GC: keep the last two manifests + every version dir they
-        # reference (replay depth after a crash is one batch)
-        ids2 = _manifest_ids()
-        kept, dropped = ids2[-2:], ids2[:-2]
-        referenced = set()
-        for mid in kept:
-            m = _load_manifest(mid)
-            for p in ([m["base"]] if m.get("base") else []) + m.get("deltas", []):
-                referenced.add(_os.path.basename(p))
-        for mid in dropped:
-            _os.remove(_manifest_path(mid))
-        for d in _os.listdir(state_root):
-            if d.startswith("b") and d[1:].isdigit() and d not in referenced:
-                _sh.rmtree(_os.path.join(state_root, d), ignore_errors=True)
-
-    wq = (
-        df.writeStream.queryName(query_name)
-        .foreachBatch(handle)
-        .option("checkpointLocation", _os.path.join(work_dir, "ck"))
-    )
-    wq = wq.trigger(**(trigger or {"availableNow": True}))
-    return wq.start()
 
 
 def stream_dedup(
@@ -415,7 +194,7 @@ def stream_curate(
     neardup_bands: int = 8,
     neardup_hashes: int = 64,
     neardup_shingle_n: int = 3,
-    neardup_shards: int = 64,
+    neardup_shards: int = _DEFAULT_SHARDS,
 ) -> DataFrame:
     """Streaming twin of the LLM-curation head (r11; near-dup r13):
     Gopher quality rules → exact dedup on the normalized-text hash
@@ -609,7 +388,7 @@ def stream_neardup_dedup(
     bands: int = 8,
     shingle_n: int = 3,
     shingle_hash: str = "fast",
-    shards: int = 64,
+    shards: int = _DEFAULT_SHARDS,
     state_ttl_s: float | None = None,
     exact: bool = False,
 ) -> DataFrame:
@@ -630,7 +409,7 @@ def stream_neardup_dedup(
     2. posexplode to one narrow row per band; the ORIGINAL row rides
        as a struct on the pos-0 row only, so document bodies cross
        the two shuffles ~once, not ``bands`` times.
-    3. ONE sharded keyed-state pass (the ewma-sharded shell:
+    3. ONE keyed-state pass (the keyed-fold shell:
        ``shards`` state groups, not one per band hash): state is a
        set of 64-bit band keys (+ last-seen event time for the
        ``state_ttl_s`` horizon eviction) — ~8 bytes per band key
@@ -692,7 +471,7 @@ def stream_image_neardup_dedup(
     media_col: str = "media",
     id_col: str = "doc_id",
     time_col: str = "time",
-    shards: int = 64,
+    shards: int = _DEFAULT_SHARDS,
     state_ttl_s: float | None = None,
 ) -> DataFrame:
     """Streaming IMAGE near-dup dedup (r16 — the perceptual-hash
@@ -868,7 +647,7 @@ def reinject_source(spark: SparkSession, topic_dir: str, schema: str) -> DataFra
     return file_source(spark, topic_dir, schema)
 
 
-# -- keyed-state folds: one fold, three shells -------------------------------
+# -- keyed-state folds: one fold, two shells ---------------------------------
 # Every keyed operator below is ONE fold
 # ``fold(carry, keys, starts, pdf) -> out``: ``pdf`` is a slice
 # holding each key's rows as one contiguous, event-time-ordered
@@ -877,39 +656,37 @@ def reinject_source(spark: SparkSession, topic_dir: str, schema: str) -> DataFra
 # appearing once; ``carry`` is the {key string: state} map the fold
 # reads at segment starts and writes at segment ends. A fold never
 # works out key identity itself: the shells own it
-# (``_key_segments``). The key groups are only a routing choice
-# (ICDE 2025, "Towards Fine-Grained Scalability for Stateful Stream
-# Processing Systems"), picked by ``shards``:
+# (``_key_segments``).
 #
-# - ``shards=None`` groups on the ``by`` columns themselves (the
-#   reference's per-key `by` fork): one Python call per key per
-#   micro-batch, one segment ``([_ONE_KEY], [0])`` and no key
-#   strings are built.
-# - ``shards=N`` groups on pmod(xxhash64(by), N): applyInPandasWithState
-#   calls the Python state fn once per GROUP per micro-batch, so at
-#   10^6 keys this collapses 10^6 interpreter round-trips to N (PERF
-#   §39: ewma 7.9k → 214k ev/s at 1M keys). The whole shard map
-#   round-trips per batch — right when most keys are touched each
-#   batch.
+# The streaming shell (``_keyed_fold_scan``) routes keys to
+# pmod(xxhash64(by), N) key groups, the shards (N = ``shards`` or
+# ``_DEFAULT_SHARDS``): key groups, not one state group per key, as
+# in ICDE 2025, "Towards Fine-Grained Scalability for Stateful Stream
+# Processing Systems". applyInPandasWithState calls the Python state
+# fn once per GROUP per micro-batch, so at 10^6 keys N groups replace
+# 10^6 interpreter round-trips (PERF §39: ewma 7.9k → 214k ev/s at 1M
+# keys; PERF §91 measures the few-key end). The whole shard map
+# round-trips per batch — right when most keys are touched each
+# batch. An unkeyed fold (coalesce without ``by``) keys on the
+# constant ``_UNKEYED_COL``: one key in one shard.
 #
-# The shell owns the carry's format: both groupings keep one
-# ``carry BINARY`` state holding the pickled {"c": carry[, "t":
-# seen]} blob (protocol 5, the serializer PySpark itself moves every
-# GroupState with). A fold stores cells exactly as pandas hands them
+# The shell owns the carry's format: one ``carry BINARY`` state per
+# shard holding the pickled {"c": carry, "n": N[, "t": seen]} blob
+# (protocol 5, the serializer PySpark itself moves every GroupState
+# with). A fold stores cells exactly as pandas hands them
 # (``Series.tolist()``/``.iloc``: float, int, str, bytes, Decimal,
 # pd.Timestamp, pd.Timedelta, date, ndarray, tuples) and encodes
-# nothing, so a fold's per-key operation sequence is identical in
-# both groupings and for every column dtype. The batch twin
-# (``_keyed_fold_batch``) is the same fold with an empty carry: a
-# sorted table partition is one more key group. Null keys are a key
-# of their own in all three shells, as in Spark's groupBy.
+# nothing, so a fold's per-key operation sequence is the same for
+# every column dtype. The batch twin (``_keyed_fold_batch``) is the
+# same fold with an empty carry: a sorted table partition is one more
+# key group. Key identity is Spark's groupBy identity in both shells:
+# a null key is a key of its own, a NaN key another, -0.0 is 0.0.
 
 _SHARD_COL = "__shard__"
-_UNKEYED_COL = "__g__"  # the one constant group of an unkeyed fold
+_UNKEYED_COL = "__g__"  # the one constant key of an unkeyed fold
 _NULL_KEY = "\x00null"
+_NAN_KEY = "NaN"
 _KEY_SEP = "\x1f"
-# key-mode carry slot: each call holds exactly one key
-_ONE_KEY = ""
 
 # stream_ewma: key runs longer than this take the scalar loop — the
 # vectorized stepper costs O(max run) numpy dispatches per batch, so
@@ -919,7 +696,7 @@ _ONE_KEY = ""
 _EWMA_VEC_CAP = 512
 
 
-def _shard_key_strings(pdf, key_cols, key_dtypes):
+def _shard_key_strings(pdf, key_cols, key_dtypes, nan_flags=None):
     """Composite string key per row (the carry map key); nulls fold
     under a sentinel distinct from any real value.
 
@@ -933,9 +710,11 @@ def _shard_key_strings(pdf, key_cols, key_dtypes):
     Float and double keys render zero as ``0.0``: Spark hashes and
     groups ``-0.0`` with ``0.0`` as one key, so they must share one
     state slot (and form one key segment in the (key, time) sort).
-    NaN and null both map to the null sentinel (``v != v``), while
-    Spark keeps them as two groups: they alias one slot whenever
-    they hash to the same shard (key mode keeps them apart).
+    Spark groups NaN and null apart, but pandas hands both over as
+    NaN: ``nan_flags`` maps a float key column to its Spark-side
+    ``isnan`` flag column (``_key_columns``), and a flagged value
+    renders as ``NaN``. Without a flag NaN folds under the null
+    sentinel.
 
     INJECTIVE under adversarial string values: a value containing
     the separator or the escape byte is escaped (\\x00 -> \\x00"0",
@@ -945,6 +724,9 @@ def _shard_key_strings(pdf, key_cols, key_dtypes):
     two distinct key tuples can't alias one state slot. Non-string
     key types (numeric formatting) never produce either byte, so
     the common path pays one containment check per value."""
+    import numpy as np
+
+    nan_flags = nan_flags or {}
 
     def esc(s):
         if "\x00" in s or _KEY_SEP in s:
@@ -958,37 +740,78 @@ def _shard_key_strings(pdf, key_cols, key_dtypes):
             return lambda v: str(v + 0.0)  # -0.0 + 0.0 == +0.0
         return lambda v: esc(str(v))
 
-    convs = [conv_for(t) for t in key_dtypes]
-    if len(key_cols) == 1:
-        col, conv = pdf[key_cols[0]], convs[0]
-        return [(_NULL_KEY if v is None or v != v else conv(v)) for v in col.tolist()]
-    cols = [pdf[c].tolist() for c in key_cols]
-    return [
-        _KEY_SEP.join(
-            _NULL_KEY if v is None or v != v else conv(v)
-            for conv, v in zip(convs, row)
+    def render(c, dtype):
+        conv = conv_for(dtype)
+        out = [(_NULL_KEY if v is None or v != v else conv(v)) for v in pdf[c].tolist()]
+        if c in nan_flags:
+            for i in np.flatnonzero(pdf[nan_flags[c]].to_numpy(dtype=bool)).tolist():
+                out[i] = _NAN_KEY
+        return out
+
+    cols = [render(c, t) for c, t in zip(key_cols, key_dtypes)]
+    if len(cols) == 1:
+        return cols[0]
+    return [_KEY_SEP.join(row) for row in zip(*cols)]
+
+
+def _key_columns(df, by):
+    """The key identity both shells group by: ``(src, key_cols,
+    key_dtypes, nan_flags)``. ``key_cols`` is ``by``, or the constant
+    ``_UNKEYED_COL`` that ``src`` adds when ``by`` is empty;
+    ``nan_flags`` maps each float/double key column to a flag column
+    ``src`` adds, ``isnan(col)`` computed by Spark, so a NaN key stays
+    apart from a null one after pandas has made both NaN. Other key
+    types get no column."""
+    key_cols = list(by)
+    if not key_cols:
+        df, key_cols = df.withColumn(_UNKEYED_COL, F.lit(0)), [_UNKEYED_COL]
+    dtypes = dict(df.dtypes)
+    key_dtypes = [dtypes[c] for c in key_cols]
+    nan_flags = {
+        c: f"__nan{i}__"
+        for i, (c, t) in enumerate(zip(key_cols, key_dtypes))
+        if t in ("float", "double")
+    }
+    if nan_flags:
+        df = df.select(
+            "*", *[F.isnan(F.col(c)).alias(f) for c, f in nan_flags.items()]
         )
-        for row in zip(*cols)
-    ]
+    return df, key_cols, key_dtypes, nan_flags
 
 
-def _key_segments(pdf, key_cols, key_dtypes):
-    """The key segments of a slice whose key runs are contiguous:
-    ``starts`` (int64 array) holds the first row of each run of equal
-    factorized key codes — the identity ``_keyed_fold_scan`` sorts
-    by (nulls share one code; ``-0.0 == 0.0``) — and ``keys`` the
-    ``_shard_key_strings`` of those rows only, so carry keys are the
-    same strings whatever the slicing."""
+def _key_codes(pdf, key_cols, nan_flags):
+    """Factorized codes per key column — the identity the shells sort
+    and segment by: nulls share code -1, ``-0.0 == 0.0``, and a NaN
+    flagged in ``nan_flags`` gets code -2."""
     import numpy as np
     import pandas as pd
 
+    codes = []
+    for c in key_cols:
+        k = pd.factorize(pdf[c])[0]
+        if c in nan_flags:
+            k = np.where(pdf[nan_flags[c]].to_numpy(dtype=bool), -2, k)
+        codes.append(k)
+    return codes
+
+
+def _key_segments(pdf, key_cols, key_dtypes, nan_flags):
+    """The key segments of a slice whose key runs are contiguous:
+    ``starts`` (int64 array) holds the first row of each run of equal
+    ``_key_codes`` and ``keys`` the ``_shard_key_strings`` of those
+    rows only, so carry keys are the same strings whatever the
+    slicing."""
+    import numpy as np
+
     change = np.zeros(len(pdf), dtype=bool)
     change[0] = True
-    for c in key_cols:
-        codes = pd.factorize(pdf[c])[0]
-        change[1:] |= codes[1:] != codes[:-1]
+    for k in _key_codes(pdf, key_cols, nan_flags):
+        change[1:] |= k[1:] != k[:-1]
     starts = np.flatnonzero(change)
-    keys = _shard_key_strings(pdf[key_cols].iloc[starts], key_cols, key_dtypes)
+    cols = key_cols + list(nan_flags.values())
+    keys = _shard_key_strings(
+        pdf[cols].iloc[starts], key_cols, key_dtypes, nan_flags
+    )
     return keys, starts
 
 
@@ -1016,86 +839,78 @@ def _keyed_fold_scan(
     out_schema=None,
 ):
     """The one streaming shell of the keyed folds (see the section
-    comment): group per key (``shards=None``, or a constant group when
-    ``by`` is empty — the unkeyed coalesce) or per shard (``shards=N``
-    and ``by`` non-empty) and run ONE ``applyInPandasWithState`` whose
-    state is the pickled carry blob. Per group and micro-batch the
-    Arrow chunks are concatenated (only when there are several) and
-    sorted once — by event time per key, by (key, event time) per
-    shard — so a key whose rows span chunks still folds in event-time
-    order; then ``fold(carry, keys, starts, pdf)`` runs with the
-    routing column dropped. Per key the slice is one segment
-    ``([_ONE_KEY], [0])``; per shard ``_key_segments`` splits it.
-    ``fold`` mutates ``carry`` and returns the output rows; it never
-    sees an empty slice. ``extra_out`` appends DDL columns the fold
-    adds (e.g. zscore); ``out_schema`` replaces the whole output DDL
-    (window emission).
+    comment): route the keys of ``by`` (or the constant
+    ``_UNKEYED_COL``) to ``shards or _DEFAULT_SHARDS`` shards and run
+    ONE ``applyInPandasWithState`` whose state is the pickled carry
+    blob. Per shard and micro-batch the Arrow chunks are concatenated
+    (only when there are several) and sorted once by (key, event
+    time), so a key whose rows span chunks still folds in event-time
+    order; ``_key_segments`` splits the slice and ``fold(carry, keys,
+    starts, pdf)`` runs with the routing columns dropped. ``fold``
+    mutates ``carry`` and returns the output rows; it never sees an
+    empty slice. ``extra_out`` appends DDL columns the fold adds
+    (e.g. zscore); ``out_schema`` replaces the whole output DDL
+    (window emission). Emitted rows show a NaN key as null: PySpark's
+    pandas→Arrow conversion turns a float NaN into null.
 
-    ``state_ttl_s`` is the fork GC (the reference's :fork-ttl). Per
-    key it is the GroupState event-time timeout (needs a watermark).
-    Inside a shard map, which shard-level timeouts cannot express,
-    the shell tracks each key's last event time next to the carry
-    and, after the fold, drops keys idle longer than the ttl relative
-    to the shard's event clock (its running max event time); a key
-    whose gap since its last event exceeds the ttl folds from
-    scratch. Either way an evicted key's next event starts fresh.
+    ``state_ttl_s`` is the fork GC (the reference's :fork-ttl) and
+    needs no watermark: the shell tracks each key's last event time
+    next to the carry and, after the fold, drops keys idle longer
+    than the ttl relative to the shard's event clock (its running max
+    event time); a key whose gap since its last event exceeds the ttl
+    folds from scratch.
 
-    Only this shell writes the blob it unpickles. A checkpoint whose
-    state is not this one BINARY column (the earlier JSON text map,
-    typed per-key state) fails at restart with Spark's
-    STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE.
+    The blob records the shard count ``"n"``. A restart under another
+    count would route most keys to shards that never saw them and
+    silently restart their state, so a blob whose ``"n"`` differs
+    raises; a blob without ``"n"`` (written before the count was
+    recorded) is taken as it is. Only this shell writes the blob it
+    unpickles: a checkpoint with another state layout fails at
+    restart with Spark's state schema check —
+    STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE for per-key state groups,
+    STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE for another state value
+    (the earlier JSON text map, typed per-key state).
     """
     import pickle
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
-    key_cols = list(by)
-    sharded = bool(shards) and bool(key_cols)
-    if sharded:
-        dtypes = dict(df.dtypes)
-        key_dtypes = [dtypes[c] for c in key_cols]
-        src = df.withColumn(
-            _SHARD_COL,
-            F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(shards)),
-        )
-        group = [_SHARD_COL]
-    elif key_cols:
-        src, group = df, key_cols
-    else:
-        src, group = df.withColumn(_UNKEYED_COL, F.lit(0)), [_UNKEYED_COL]
+    n_shards = shards or _DEFAULT_SHARDS
     if out_schema is None:
         out_schema = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
         )
         if extra_out:
             out_schema += f", {extra_out}"
-    ttl_us = int(round(state_ttl_s * 1_000_000)) if state_ttl_s and sharded else None
-    ttl_ms = int(state_ttl_s * 1000) if state_ttl_s and not sharded else None
+    src, key_cols, key_dtypes, nan_flags = _key_columns(df, by)
+    src = src.withColumn(
+        _SHARD_COL,
+        F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_shards)),
+    )
+    routing = [c for c in src.columns if c not in df.columns]
+    ttl_us = int(round(state_ttl_s * 1_000_000)) if state_ttl_s else None
 
     def fn(key, pdf_iter, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
         chunks = [p for p in pdf_iter if len(p)]
         if not chunks:
             return
         pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        if group != key_cols:
-            pdf = pdf.drop(columns=group)
         blob = pickle.loads(state.get[0]) if state.exists else {"c": {}}
+        if blob.setdefault("n", n_shards) != n_shards:
+            raise ValueError(
+                f"keyed state was written with {blob['n']} shards but the "
+                f"query now runs {n_shards} shards; a changed shard count "
+                "needs a new checkpoint"
+            )
         carry = blob["c"]
-        if sharded:
-            # keys need only be contiguous, not ordered: stable lexsort
-            # on factorized key codes (nulls share code -1; -0.0 ==
-            # 0.0) is ~3x cheaper than comparing key strings
-            codes = [pd.factorize(pdf[c])[0] for c in reversed(key_cols)]
-            pdf = pdf.take(np.lexsort([pdf[time_col].to_numpy(), *codes]))
-            keys, starts = _key_segments(pdf, key_cols, key_dtypes)
-        else:
-            pdf = pdf.sort_values(time_col, kind="mergesort")
-            keys, starts = [_ONE_KEY], np.zeros(1, dtype=np.int64)
+        # keys need only be contiguous, not ordered: a stable lexsort
+        # on factorized key codes is ~3x cheaper than comparing key
+        # strings
+        codes = _key_codes(pdf, key_cols, nan_flags)
+        pdf = pdf.take(np.lexsort([pdf[time_col].to_numpy(), *reversed(codes)]))
+        keys, starts = _key_segments(pdf, key_cols, key_dtypes, nan_flags)
+        pdf = pdf.drop(columns=routing)
         if ttl_us is None:
             out = fold(carry, keys, starts, pdf)
         else:
@@ -1120,31 +935,15 @@ def _keyed_fold_scan(
                 seen.pop(k, None)
                 carry.pop(k, None)
         state.update((pickle.dumps(blob, protocol=5),))
-        if ttl_ms:
-            t = pdf[time_col].max()
-            max_ms = (
-                int(t.value // 1_000_000)
-                if str(pdf[time_col].dtype).startswith("datetime64")
-                else int(float(t) * 1000)
-            )
-            # clamp above the watermark: an out-of-order tail event can
-            # put last-event + ttl BEHIND the watermark, which Spark
-            # rejects; the key then just times out at the next bound
-            wm = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(max_ms + ttl_ms, wm + 1))
         if len(out):
             yield out
 
-    return src.groupBy(*[F.col(c) for c in group]).applyInPandasWithState(
+    return src.groupBy(F.col(_SHARD_COL)).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType="carry BINARY",
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if ttl_ms
-            else GroupStateTimeout.NoTimeout
-        ),
+        timeoutConf="NoTimeout",
     )
 
 
@@ -1152,25 +951,20 @@ def _keyed_fold_batch(df, by, sort_cols, fold):
     """The batch shell of the keyed folds: the streaming ``fold`` run
     over a whole table, each key starting from an empty carry.
 
-    Repartition on ``by`` (or the constant ``_UNKEYED_COL`` when ``by``
-    is empty), sort within partitions on (``by``, ``sort_cols``) and
-    stream each partition's Arrow chunks through one ``mapInPandas``
-    — no per-group Arrow slicing, so many small keys cost about a
-    plain scan. Each chunk is split by ``_key_segments`` and folded
-    as ``fold(carry, keys, starts, pdf)``. Between chunks only the
-    last key's carry is kept: a sorted partition never comes back to
-    a key, and that carry is what lets a key span two chunks. A null
-    key folds as its own key, as in the streaming shells and Spark's
-    groupBy."""
-    key_cols = list(by)
-    if key_cols:
-        src, group = df, key_cols
-    else:
-        src, group = df.withColumn(_UNKEYED_COL, F.lit(0)), [_UNKEYED_COL]
-    dtypes = dict(src.dtypes)
-    key_dtypes = [dtypes[c] for c in group]
-    src = src.repartition(*[F.col(c) for c in group]).sortWithinPartitions(
-        *[F.col(c) for c in group], *[F.col(c) for c in sort_cols]
+    Repartition on the key columns of ``_key_columns`` (``by``, or the
+    constant ``_UNKEYED_COL``), sort within partitions on (key,
+    ``sort_cols``) and stream each partition's Arrow chunks through
+    one ``mapInPandas`` — no per-group Arrow slicing, so many small
+    keys cost about a plain scan. Each chunk is split by
+    ``_key_segments`` and folded as ``fold(carry, keys, starts,
+    pdf)``. Between chunks only the last key's carry is kept: a sorted
+    partition never comes back to a key, and that carry is what lets
+    a key span two chunks. Null and NaN keys fold as keys of their
+    own, as in the streaming shell and Spark's groupBy."""
+    src, key_cols, key_dtypes, nan_flags = _key_columns(df, by)
+    routing = [c for c in src.columns if c not in df.columns]
+    src = src.repartition(*[F.col(c) for c in key_cols]).sortWithinPartitions(
+        *[F.col(c) for c in key_cols], *[F.col(c) for c in sort_cols]
     )
 
     def run(chunks):
@@ -1178,9 +972,9 @@ def _keyed_fold_batch(df, by, sort_cols, fold):
         for pdf in chunks:
             if not len(pdf):
                 continue
-            keys, starts = _key_segments(pdf, group, key_dtypes)
-            if group != key_cols:
-                pdf = pdf.drop(columns=group)
+            keys, starts = _key_segments(pdf, key_cols, key_dtypes, nan_flags)
+            if routing:
+                pdf = pdf.drop(columns=routing)
             yield fold(carry, keys, starts, pdf)
             last = keys[-1]
             carry = {last: carry[last]} if last in carry else {}
@@ -1226,8 +1020,8 @@ def _ewma_fold(r, metric_col):
     (1−r)·m from m₀ = 0 per key; a null metric emits null and leaves
     the state untouched.
 
-    A slice holding one key segment (every per-key streaming call)
-    runs the scalar loop over a primitive float64 array. With several
+    A slice holding one key segment (a shard or batch chunk touched by
+    one key) runs the scalar loop over a primitive float64 array. With several
     keys the fold is VECTORIZED across keys (r17: the per-row loop
     was ~62 % of the shard tier's CPU): the shell hands each key over
     as exactly one segment, and step j updates every key's j-th event
@@ -1322,7 +1116,7 @@ def stream_throttle(
 ) -> DataFrame:
     """Streaming anchored-window throttle (action.clj:1163-1217): the
     ``_throttle_fold`` that ``throttle_batch`` also runs. ``shards``
-    picks the grouping (see ``_keyed_fold_scan``)."""
+    sets the shard count (see ``_keyed_fold_scan``)."""
     return _keyed_fold_scan(
         df, by, time_col, shards, _throttle_fold(count, duration_s, time_col)
     )
@@ -1339,10 +1133,10 @@ def stream_ewma(
 ) -> DataFrame:
     """Streaming ewma-timeless (action.clj:1248-1276): the
     ``_ewma_fold`` that ``ewma_timeless`` also runs, so both emit the
-    same doubles. ``state_ttl_s`` evicts idle keys (fork GC) — pass a
-    watermarked input when set per key. ``shards`` picks the grouping
-    (see ``_keyed_fold_scan``); PERF §39: 214k ev/s at 1M keys
-    sharded vs 7.9k per key."""
+    same doubles. ``state_ttl_s`` evicts idle keys (fork GC, on the
+    shard's event clock). ``shards`` sets the shard count (see
+    ``_keyed_fold_scan``); PERF §39: 214k ev/s at 1M keys on shards
+    vs 7.9k with one state group per key."""
     return _keyed_fold_scan(
         df, by, time_col, shards, _ewma_fold(r, metric_col),
         state_ttl_s=state_ttl_s,
@@ -1363,8 +1157,8 @@ def stream_smax(
     key, the fold walks the slice with one carry reload per key
     segment, and the output materializes as two positional gathers
     (batch-sourced winners + carry-sourced re-emits) merged back into
-    event order — no per-event dict building. ``shards`` picks the
-    grouping (see ``_keyed_fold_scan``)."""
+    event order — no per-event dict building. ``shards`` sets the
+    shard count (see ``_keyed_fold_scan``)."""
     import numpy as np
     import pandas as pd
 
@@ -1451,7 +1245,7 @@ def stream_cond_dt(
     :func:`mirabelle_spark.conditions.compile_condition_pandas`,
     fully vectorized over the whole slice) or a python row-predicate
     for custom logic (applied row-wise, the slow path). ``shards``
-    picks the grouping (see ``_keyed_fold_scan``)."""
+    sets the shard count (see ``_keyed_fold_scan``)."""
     import numpy as np
 
     dt_us = int(round(dt_s * 1_000_000))
@@ -1544,7 +1338,7 @@ def stream_stable(
     confirmation points from searchsorted, confirmed-run emission
     from slice coalescing (one concat at the end), and only
     UNCONFIRMED rows (the flap buffer) are copied into the carry.
-    ``shards`` picks the grouping (see ``_keyed_fold_scan``)."""
+    ``shards`` sets the shard count (see ``_keyed_fold_scan``)."""
     import numpy as np
     import pandas as pd
 
@@ -1676,7 +1470,7 @@ def stream_fixed_event_window(
     partial window carries COLUMNAR ({col: [...]}); batch rows are
     referenced by position and serialize at most once — when they
     emit into a window or remain buffered at batch end. ``shards``
-    picks the grouping (see ``_keyed_fold_scan``).
+    sets the shard count (see ``_keyed_fold_scan``).
     """
     import numpy as np
     import pandas as pd
@@ -1769,7 +1563,7 @@ def stream_moving_event_window(
     ``events`` array — the keyed-state sliding buffer, emitted
     per-row like the batch twin's collect_list window. Emission cost
     is O(rows·n) dict lists (the output shape demands it). ``shards``
-    picks the grouping (see ``_keyed_fold_scan``)."""
+    sets the shard count (see ``_keyed_fold_scan``)."""
     import numpy as np
 
     ev_struct = ", ".join(
@@ -1817,8 +1611,8 @@ def stream_ddt(
     slice with the previous (t, metric) injected from the carry at
     segment starts only — O(distinct keys) Python, O(rows) numpy.
     Null-metric events are skipped entirely (they never become the
-    new previous); zero time delta is skipped. ``shards`` picks the
-    grouping (see ``_keyed_fold_scan``)."""
+    new previous); zero time delta is skipped. ``shards`` sets the
+    shard count (see ``_keyed_fold_scan``)."""
     import numpy as np
 
     def fold(carry, keys, starts, pdf):
@@ -1871,14 +1665,14 @@ def stream_coalesce(
     event.clj:12-19: state == "expired" or age > ttl (default 120 s).
 
     Without ``by`` this is the reference's single global coalesce:
-    one tick clock, one state group (``shards`` does not apply).
+    one tick clock, one key in one shard.
     Each key's buffer carries COLUMNAR, with batch rows referenced by
     POSITION until the end of the batch: the per-event loop touches
     only scalars/tuples (tick clock, dict upsert, expiry compare) —
     no dict-per-row building; the rows still buffered at the end of
     the batch are copied into the carry once, and emission is
     two positional gathers (batch-sourced + carry-sourced) merged
-    back into flush order. ``shards`` picks the grouping (see
+    back into flush order. ``shards`` sets the shard count (see
     ``_keyed_fold_scan``).
     """
     import json as _json
@@ -2191,7 +1985,7 @@ def stream_moving_time_window(
     event, all of its key's events within the trailing ``duration``
     seconds — a keyed-state fold whose ``carry[k]`` is the buffer of
     (t_us, row) pairs trimmed by exact µs bound (same (-(dur-1µs), 0]
-    range as the batch twin's range frame). Per key only."""
+    range as the batch twin's range frame), on the default shards."""
     import numpy as np
 
     dur_us = int(round(duration_s * 1_000_000))
@@ -2219,7 +2013,7 @@ def stream_moving_time_window(
         return out
 
     return _keyed_fold_scan(
-        df, by, time_col, None, fold,
+        df, by, time_col, _DEFAULT_SHARDS, fold,
         extra_out=f"events array<struct<{ev_struct}>>",
     )
 
@@ -2240,8 +2034,8 @@ def stream_expired(
     event.clj:12-19 (state == "expired" or age > coalesce(ttl, 120)).
     The whole slice evaluates in ONE vectorized pass — segment starts
     seed each key's accumulate from the carry, segment ends write it
-    back; Python work is O(distinct keys in batch). ``shards`` picks
-    the grouping (see ``_keyed_fold_scan``).
+    back; Python work is O(distinct keys in batch). ``shards`` sets
+    the shard count (see ``_keyed_fold_scan``).
     """
     import numpy as np
 
@@ -2376,7 +2170,7 @@ def stream_zscore(
 
     Cost: O(1) amortized per event (append + evict, two decimal
     adds/subs); state is bounded by events-per-window per key.
-    ``shards`` picks the grouping (see ``_keyed_fold_scan``)."""
+    ``shards`` sets the shard count (see ``_keyed_fold_scan``)."""
     import math
     from decimal import Decimal, localcontext
 

@@ -142,8 +142,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_lifecycle_reload_survives_uncommitted_batch0",
     "test_streaming.py::test_riemann_tcp_tls_mtls",
     "test_streaming.py::test_state_ttl_evicts_idle_keys",
-    "test_streaming.py::test_stream_changed_jvm_fb_parity",
-    "test_streaming.py::test_stream_changed_jvm_replay_and_buckets",
     "test_streaming.py::test_stream_changed_sharded_timestamp_field",
     "test_streaming.py::test_stream_coalesce_reference_cases",
     "test_streaming.py::test_stream_coalesce_sharded_timestamp_fields_parity",

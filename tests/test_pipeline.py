@@ -1176,73 +1176,22 @@ def test_stratified_topk_partitioning_independent(spark):
         assert got1 == exp and got2 == exp
 
 
-def test_bounded_topk_matches_window_and_partials_before_rank(spark):
+def test_window_topk_tail_partials_before_exchange(spark):
     """The ANN rank-tail scale question (r15, VERDICT r14 ask #8 —
     executed, measured, reverted on evidence; PERF §87): the
     rankers ship the DECLARATIVE window form because Spark ≥3.5
     compiles its rank<=k filter with WindowGroupLimit pushdown — a
     Partial sort-limit BELOW the exchange bounds the shuffle to
     ≤ k rows per (query, input-partition) map-side, which this test
-    PINS so a regression (plan no longer bounded) is loud. The
-    explicit two-phase control (ann.bounded_topk) must stay value-
-    and rank-identical to that window form in BOTH orders,
-    partitioning-independent, with its collect_list partial feeding
-    one final window."""
+    PINS so a regression (plan no longer bounded) is loud."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window as W
 
-    from mirabelle_spark.pipeline import ann
-
-    # 3 queries x 300 candidates with deliberate distance TIES
-    # (dist = hash % 40) so the id tie-break is exercised
     scored = spark.range(900).selectExpr(
         "id % 3 AS query_id",
         "id AS vec_id",
         "CAST(pmod(hash(id), 40) AS DOUBLE) / 7.0 AS dist",
     )
-
-    def reference(desc):
-        o = F.col("dist").desc() if desc else F.col("dist").asc()
-        w = W.partitionBy("query_id").orderBy(o, F.col("vec_id"))
-        return {
-            (r.query_id, r.vec_id, r.dist, r.rank)
-            for r in scored.withColumn("rank", F.row_number().over(w))
-            .filter("rank <= 5").collect()
-        }
-
-    for desc in (True, False):
-        exp = reference(desc)
-        got = {
-            (r.query_id, r.vec_id, r.dist, r.rank)
-            for r in ann.bounded_topk(
-                scored, 5, "dist", "query_id", "vec_id", descending=desc
-            ).collect()
-        }
-        got_rep = {
-            (r.query_id, r.vec_id, r.dist, r.rank)
-            for r in ann.bounded_topk(
-                scored.repartition(13), 5, "dist", "query_id", "vec_id",
-                descending=desc,
-            ).collect()
-        }
-        assert got == exp and got_rep == exp
-
-    plan = (
-        ann.bounded_topk(scored, 5, "dist", "query_id", "vec_id")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # exactly one window exec node ("Window [" — Spark 4 also prints
-    # WindowGroupLimit rank-pushdown nodes around it, a further
-    # bound), fed by the bounded partial aggregate
-    assert plan.count("Window [") == 1, plan
-    assert "collect_list" in plan, plan
-    assert plan.index("Window [") < plan.index("collect_list"), plan
-
-    # the SHIPPED form's bound: the naive window+filter(rank<=k)
-    # tail must compile with a Partial WindowGroupLimit BELOW the
-    # exchange (map-side ≤ k rows per query per partition) — the
-    # optimizer fact the rankers rely on instead of hand-rolling
-    # the two-phase plan
     w = W.partitionBy("query_id").orderBy(F.col("dist"), F.col("vec_id"))
     naive = (
         scored.withColumn("rank", F.row_number().over(w))

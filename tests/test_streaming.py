@@ -2053,7 +2053,7 @@ def test_stream_ewma_sharded_parity(spark, tmp_path):
 
 
 def test_stream_cond_dt_sharded_parity(spark, tmp_path):
-    """Sharded cond-dt emits exactly the per-key twin's rows: 200
+    """Sharded cond-dt emits exactly the default-shard twin's rows: 200
     keys with flip/hold/reset patterns through 4 shards across a
     two-file micro-batch split — and both equal the batch twin."""
     import pyspark.sql.functions as F
@@ -2165,9 +2165,9 @@ def test_by_shards_dsl_dispatches_sharded_twins(spark, tmp_path):
 
 def test_stream_sharded_changed_ddt_zscore_parity(spark, tmp_path):
     """The r7 sharded tier (changed / ddt / zscore) emits exactly the
-    per-key twins' rows and values across a two-file micro-batch
+    default-shard twins' rows and values across a two-file micro-batch
     split — including null metrics, :init semantics, and zscore's
-    decimal-exact moments. Both groupings equal the batch twins."""
+    decimal-exact moments. Both shard counts equal the batch twins."""
     import pyspark.sql.functions as F
 
     from mirabelle_spark.operators import stateful as st
@@ -2247,7 +2247,7 @@ def test_stream_sharded_changed_ddt_zscore_parity(spark, tmp_path):
 
 
 def test_stream_throttle_sharded_parity(spark, tmp_path):
-    """Sharded throttle keeps exactly the per-key grouping's rows
+    """Sharded throttle keeps exactly the default shard count's rows
     across a micro-batch split (anchored-window recurrence), and both
     equal the batch twin — a null key included, as its own key."""
     import pyspark.sql.functions as F
@@ -2294,73 +2294,12 @@ def test_stream_throttle_sharded_parity(spark, tmp_path):
         order_cols=("event_id",)).collect()}
 
 
-def test_stream_changed_jvm_fb_parity(spark, tmp_path):
-    """The foreachBatch pure-JVM changed tier (VERDICT r8 ask #6)
-    emits exactly the per-key twin's rows across a micro-batch split
-    — within-batch lag, cross-batch parquet state join, :init
-    semantics, null field values."""
-    import pyspark.sql.functions as F
-
-    from mirabelle_spark.streaming import core
-
-    rows = []
-    eid = 0
-    for i in range(80):
-        host = f"h{i:03d}"
-        for j in range(8):
-            state = (
-                ["ok", "ok", "warn", "warn", "ok", "crit", None, "ok"][j]
-                if i % 2 == 0
-                else "ok"
-            )
-            rows.append((eid, host, float(j * 15), state))
-            eid += 1
-    df = spark.createDataFrame(
-        rows, "event_id bigint, host string, t double, state string"
-    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
-
-    src_dir = str(tmp_path / "cj_in")
-    df.where("event_id % 8 < 4").coalesce(1).write.mode("append").parquet(src_dir)
-    df.where("event_id % 8 >= 4").coalesce(1).write.mode("append").parquet(src_dir)
-
-    def stream():
-        return (
-            spark.readStream.schema(df.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-
-    # per-key twin (memory sink)
-    out = core.stream_changed(stream(), "state", by=["host"], time_col="time",
-                              init="ok")
-    q = (
-        out.writeStream.format("memory").queryName("cj_pk")
-        .option("checkpointLocation", str(tmp_path / "cj_pk_ck"))
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    per = sorted(r.event_id for r in spark.sql("SELECT event_id FROM cj_pk").collect())
-
-    # JVM tier: collect emitted batches through out_writer
-    got: list = []
-
-    def collect_writer(bdf, _bid):
-        got.extend(r.event_id for r in bdf.select("event_id").collect())
-
-    q = core.stream_changed_jvm_run(
-        stream(), "state", by=["host"], work_dir=str(tmp_path / "cj_jvm"),
-        time_col="time", init="ok", out_writer=collect_writer,
-    )
-    q.awaitTermination()
-    assert sorted(got) == per and 0 < len(per) < 640
-
-
 def test_stream_smax_smin_sharded_parity(spark, tmp_path):
-    """The sharded smax/smin tier keeps the per-key twins' PER-EVENT
+    """The sharded smax/smin tier keeps the default-shard twins' PER-EVENT
     emission bit-exactly across a micro-batch split — including null
     metrics and carried-best re-emits (ADVICE r8 #3: the tier is now
     exported, DSL-dispatched via by{shards}, and parity-proven) —
-    and both groupings equal the batch twins."""
+    and both shard counts equal the batch twins."""
     import pyspark.sql.functions as F
 
     from mirabelle_spark.operators import stateful as st
@@ -2425,7 +2364,7 @@ def test_stream_stable_sharded_nan_run_parity(spark, tmp_path):
     value is NaN/NULL must survive the micro-batch boundary in the
     sharded tier (the carry must not fold NaN→None, which made
     _eq(nan, None) False and reset the run every batch). Both
-    groupings equal the batch twin."""
+    shard counts equal the batch twin."""
     import pyspark.sql.functions as F
 
     from mirabelle_spark.operators import stateful as st
@@ -2487,7 +2426,7 @@ def test_stream_stable_sharded_nan_run_parity(spark, tmp_path):
 def test_stream_coalesce_sharded_timestamp_fields_parity(spark, tmp_path):
     """ADVICE r8 #2 regression: a timestamp-typed column in
     ``fields`` must not crash the sharded coalesce (raw pd.Timestamp
-    in json.dumps) and must bucket identically in both groupings.
+    in json.dumps) and must bucket identically at both shard counts.
     The fixed-event-window half also equals its batch twin."""
     import pyspark.sql.functions as F
 
@@ -2732,7 +2671,7 @@ def test_sharded_key_strings_type_stable_with_null_keys(spark, tmp_path):
 
 def test_stream_changed_sharded_timestamp_field(spark, tmp_path):
     """r7 review fix: a timestamp watched field carries across a
-    batch split in the shard map — parity with the per-key twin and
+    batch split in the shard map — parity with the default-shard twin and
     the batch twin."""
     import pyspark.sql.functions as F
 
@@ -2897,10 +2836,10 @@ def test_shard_key_strings_injective_adversarial():
 
 
 def test_stream_changed_every_field_dtype_parity(spark, tmp_path):
-    """``changed`` runs one fold in both groupings for every field
+    """``changed`` runs one fold at both shard counts for every field
     dtype — decimal, date, binary, day-time interval and array<int>
     (compared as tuples) — with nulls and an unchanged value across
-    the micro-batch boundary: per key == ``shards=2`` == the batch
+    the micro-batch boundary: the default shards == ``shards=2`` == the batch
     twin."""
     from mirabelle_spark.operators import stateful as st
     from mirabelle_spark.streaming import core
@@ -2999,7 +2938,7 @@ def test_keyed_fold_sorts_group_once_across_arrow_chunks(spark, tmp_path):
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` reaches the
     state function as several Arrow chunks. The shell concatenates
     them and sorts once, so a key whose reverse-time rows span chunks
-    still folds in event-time order — in both groupings, equal to the
+    still folds in event-time order — at both shard counts, equal to the
     batch twin."""
     import pyspark.sql.functions as F
 
@@ -3103,8 +3042,8 @@ def test_keyed_fold_batch_carries_key_across_arrow_chunks(spark):
 def test_keyed_fold_signed_zero_keys_are_one_key(spark, tmp_path):
     """Spark hashes and groups -0.0 with 0.0 as one key, so the shard
     key strings must too: with 0.0/-0.0 rows interleaved in time, the
-    sharded fold (several key segments per shard) equals the per-key
-    grouping and the batch twin."""
+    sharded fold (several key segments per shard) equals the default
+    shards and the batch twin."""
     import pandas as pd
     import pyspark.sql.functions as F
 
@@ -3144,11 +3083,11 @@ def test_keyed_fold_shells_hand_over_key_segments(spark, tmp_path):
     with each key as ONE contiguous, time-sorted segment: ``starts``
     strictly increases from 0, every key string appears once per
     call, and each segment's rows share one key tuple. A spy fold
-    records every call through the per-key and sharded streaming
-    shells and the batch shell (Arrow chunks of 5 rows). Keys:
+    records every call through the streaming shell (default and 2
+    shards) and the batch shell (Arrow chunks of 5 rows). Keys:
     -0.0/0.0, null, strings holding the escape and separator bytes,
-    and a two-column key whose int column holds nulls. (NaN vs null
-    keys are a known open aliasing, not covered here.)"""
+    and a two-column key whose int column holds nulls. (NaN keys:
+    ``test_keyed_fold_nan_key_is_not_null_key``.)"""
     import os
     import pickle
 
@@ -3231,12 +3170,13 @@ def test_keyed_fold_shells_hand_over_key_segments(spark, tmp_path):
 
 
 def test_keyed_fold_rejects_pre_merge_per_key_state(spark, tmp_path):
-    """A checkpoint whose keyed state has another format — the
+    """A checkpoint whose keyed state has another layout — the
     earlier ``carry STRING`` shard map, a typed per-key ``last
-    double`` — must fail the restarted query loudly, never fold
-    every key from scratch: Spark's state schema check rejects it
-    against the shell's ``carry BINARY`` state."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    double``, the carry blob kept in one state group per key — must
+    fail the restarted query loudly, never fold every key from
+    scratch: Spark's state schema check rejects it against the
+    shell's ``carry BINARY`` state on ``__shard__`` groups."""
+    import pickle
 
     from mirabelle_spark.streaming import core
 
@@ -3245,10 +3185,10 @@ def test_keyed_fold_rejects_pre_merge_per_key_state(spark, tmp_path):
         "event_id bigint, host string, t double, metric double",
     ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
 
-    def old_state(group, state):  # the earlier formats, on the same grouping
+    def old_state(group, state, value):  # the earlier layouts
         def fn(key, pdfs, st):
             for pdf in pdfs:
-                st.update(('{"c": {}}',) if state == "carry STRING" else (1.0,))
+                st.update((value,))
                 yield pdf
 
         return lambda s: s.withColumn(
@@ -3257,7 +3197,7 @@ def test_keyed_fold_rejects_pre_merge_per_key_state(spark, tmp_path):
             fn, outputStructType="event_id bigint, host string, "
             "metric double, time timestamp, __shard__ bigint",
             stateStructType=state, outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+            timeoutConf="NoTimeout",
         )
 
     def start(build, src_dir, ck):
@@ -3269,27 +3209,139 @@ def test_keyed_fold_rejects_pre_merge_per_key_state(spark, tmp_path):
         )
 
     cases = [
-        ("ewma", old_state("__shard__", "carry STRING"),
-         lambda s: core.stream_ewma(s, 0.5, by=["host"], time_col="time", shards=2)),
-        ("changed", old_state("host", "last double"),
-         lambda s: core.stream_changed(s, "metric", by=["host"], time_col="time")),
+        ("ewma", old_state("__shard__", "carry STRING", '{"c": {}}'),
+         lambda s: core.stream_ewma(s, 0.5, by=["host"], time_col="time", shards=2),
+         "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"),
+        ("changed", old_state("host", "last double", 1.0),
+         lambda s: core.stream_changed(s, "metric", by=["host"], time_col="time"),
+         "STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"),
+        ("per_key", old_state("host", "carry BINARY", pickle.dumps({"c": {"": 0.5}})),
+         lambda s: core.stream_ewma(s, 0.5, by=["host"], time_col="time", shards=4),
+         "STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"),
     ]
-    for tag, before, after in cases:
+    for tag, before, after, error in cases:
         src_dir, ck = str(tmp_path / f"old_{tag}_in"), str(tmp_path / f"old_{tag}_ck")
         df.where("event_id < 6").coalesce(1).write.parquet(src_dir)
         start(before, src_dir, ck).awaitTermination()
         df.where("event_id >= 6").coalesce(1).write.mode("append").parquet(src_dir)
         q = start(after, src_dir, ck)
-        with pytest.raises(Exception, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+        with pytest.raises(Exception, match=error):
             q.awaitTermination()
 
 
+def test_keyed_fold_restart_under_other_shard_count_raises(spark, tmp_path):
+    """The carry blob records its shard count. A restart under another
+    ``shards`` would route most keys to shards that never saw them
+    and restart their state, so it raises an error naming both counts;
+    a blob written before the count was recorded restarts as it is."""
+    import pickle
+
+    from mirabelle_spark.streaming import core
+
+    df = spark.createDataFrame(
+        [(i, f"h{i % 12}", float(i), 1.0) for i in range(24)],
+        "event_id bigint, host string, t double, metric double",
+    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
+
+    def legacy(s):  # a blob without "n", on the same shard grouping
+        def fn(key, pdfs, st):
+            for pdf in pdfs:
+                hosts = pdf["host"].unique().tolist()
+                st.update((pickle.dumps({"c": {h: 0.5 for h in hosts}}),))
+                yield pdf[["event_id", "host", "metric", "time"]]
+
+        return s.withColumn(
+            "__shard__", F.pmod(F.xxhash64("host"), F.lit(2))
+        ).groupBy("__shard__").applyInPandasWithState(
+            fn, outputStructType="event_id bigint, host string, "
+            "metric double, time timestamp",
+            stateStructType="carry BINARY", outputMode="append",
+            timeoutConf="NoTimeout",
+        )
+
+    def ewma(n):
+        return lambda s: core.stream_ewma(
+            s, 0.5, by=["host"], time_col="time", shards=n
+        )
+
+    def run(tag, before, after, got=None):
+        """Run ``before`` over the first 12 events, then restart the
+        checkpoint under ``after`` over the rest; return that query."""
+        src_dir, ck = str(tmp_path / f"{tag}_in"), str(tmp_path / f"{tag}_ck")
+        df.where("event_id < 12").coalesce(1).write.parquet(src_dir)
+        stream = spark.readStream.schema(df.schema).parquet(src_dir)
+        before(stream).writeStream.format("noop").option("checkpointLocation", ck) \
+            .trigger(availableNow=True).start().awaitTermination()
+        df.where("event_id >= 12").coalesce(1).write.mode("append").parquet(src_dir)
+        stream = spark.readStream.schema(df.schema).parquet(src_dir)
+        w = after(stream).writeStream
+        if got is None:
+            w = w.format("noop")
+        else:
+            w = w.foreachBatch(lambda b, _: got.extend(b.collect()))
+        return w.option("checkpointLocation", ck).trigger(availableNow=True).start()
+
+    q = run("grow", ewma(2), ewma(3))
+    with pytest.raises(Exception, match="written with 2 shards but the query now runs 3"):
+        q.awaitTermination()
+    q = run("shrink", ewma(3), ewma(2))
+    with pytest.raises(Exception, match="written with 3 shards but the query now runs 2"):
+        q.awaitTermination()
+    got = []
+    run("legacy", legacy, ewma(2), got).awaitTermination()
+    # every host continues from the legacy carry: 0.5·1 + 0.5·0.5
+    assert sorted(r.event_id for r in got) == list(range(12, 24))
+    assert [r.metric for r in got] == [0.75] * 12
+
+
+def test_keyed_fold_nan_key_is_not_null_key(spark, tmp_path):
+    """Spark groups a NaN key apart from a null one, but pandas hands
+    both over as NaN. Both shells keep them apart through a
+    Spark-side ``isnan`` flag: the streaming shell on one shard and on
+    the default shards (across a micro-batch split, so through the
+    carry strings too) and the batch shell on one partition, where the
+    (key, time) sort puts the null and NaN runs next to each other.
+    Emitted rows show both keys as null."""
+    from mirabelle_spark.operators import aggregations as agg
+    from mirabelle_spark.streaming import core
+
+    rows = [(0, None, 0.0), (1, float("nan"), 1.0), (2, None, 2.0),
+            (3, float("nan"), 3.0)]
+    df = spark.createDataFrame(
+        rows, "event_id bigint, host double, t double"
+    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))) \
+        .withColumn("metric", F.lit(1.0)).drop("t")
+    expect = {0: 0.5, 1: 0.5, 2: 0.75, 3: 0.75}
+    assert core._shard_key_strings(
+        df.toPandas().assign(f=[False, True, False, True]), ["host"],
+        ["double"], {"host": "f"},
+    ) == [core._NULL_KEY, "NaN", core._NULL_KEY, "NaN"]
+    got = _two_batch_runs(spark, tmp_path, df, "event_id < 2", "nan", {
+        f"nan_{n or 0}": (lambda n: lambda s: core.stream_ewma(
+            s, 0.5, by=["host"], time_col="time", shards=n))(n)
+        for n in (1, None)
+    })
+    for name, rs in got.items():
+        assert {r.event_id: r.metric for r in rs} == expect, name
+        assert all(r.host is None for r in rs), name
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        batch = agg.ewma_timeless(
+            df, 0.5, by=["host"], time_col="time", metric_col="metric",
+            order_cols=("event_id",),
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+    assert {r.event_id: r.metric for r in batch} == expect
+
+
 def test_stream_stable_sharded_parity(spark, tmp_path):
-    """Columnar-carry sharded stable emits exactly the per-key twin's
+    """Columnar-carry sharded stable emits exactly the default-shard twin's
     rows: flapping runs (unconfirmed buffers dropped), confirmation
     inside and across the micro-batch boundary, buffer flushes whose
     rows came from the PREVIOUS batch, and null field values — and
-    both groupings equal the batch twin."""
+    both shard counts equal the batch twin."""
     import pyspark.sql.functions as F
 
     from mirabelle_spark.operators import stateful as st
@@ -3364,7 +3416,7 @@ def test_stream_stable_sharded_out_of_order_drop(spark, tmp_path):
 
 
 def test_stream_coalesce_sharded_parity(spark, tmp_path):
-    """Columnar-carry sharded coalesce emits exactly the per-key
+    """Columnar-carry sharded coalesce emits exactly the default-shard
     twin's rows (same multiset — a kept row re-emits on every tick it
     survives): latest-per-fields election with stored-wins ties, the
     event-time tick clock, ttl and state=='expired' expiry, and
@@ -3450,7 +3502,7 @@ def test_row_buffer_folds_carry_every_column_dtype(spark, tmp_path):
     """The row-buffer folds keep whole rows in keyed state across a
     micro-batch boundary: decimal, binary, date, interval and array
     payload cells (and a decimal in coalesce's ``fields``) carry and
-    re-emit unchanged in both groupings, equal to the batch twins."""
+    re-emit unchanged at both shard counts, equal to the batch twins."""
     from mirabelle_spark.operators import stateful as st
     from mirabelle_spark.operators import windows as win
     from mirabelle_spark.streaming import core
@@ -3496,7 +3548,7 @@ def test_row_buffer_folds_carry_every_column_dtype(spark, tmp_path):
 def test_stream_smax_jvm_final_best_matches_batch(spark, tmp_path):
     """The pure-JVM smax tier (update-mode max(struct(metric,-t,row))
     aggregation): the best-so-far row it converges to per key is
-    bit-equal to the per-key twin's FINAL emission (and the batch
+    bit-equal to the default-shard twin's FINAL emission (and the batch
     smax's last row) — the per-event emission grain is the documented
     trade. Also smin via negation."""
     import pyspark.sql.functions as F
@@ -3532,7 +3584,7 @@ def test_stream_smax_jvm_final_best_matches_batch(spark, tmp_path):
                 best[key] = (cand, r)
         return {k: (v[1].event_id, v[1].metric) for k, v in best.items()}
 
-    # per-key twin: last emission per key is its final best
+    # default-shard twin: last emission per key is its final best
     per_rows = run(lambda s: core.stream_smax(
         s, by=["host"], time_col="time"), "sxj_pk")
     jvm_rows = run(lambda s: core.stream_smax_jvm(
@@ -3602,8 +3654,8 @@ def test_dsl_smax_emission_per_batch_routes_jvm_tier(spark, tmp_path):
 
 
 def test_stream_event_window_sharded_parity(spark, tmp_path):
-    """The sharded event-window twins emit exactly the per-key
-    grouping's rows across a micro-batch boundary: fixed windows
+    """The sharded event-window twins emit exactly the default
+    shard count's rows across a micro-batch boundary: fixed windows
     (including partial buffers carried between batches and the
     event-clock fork-ttl gap reset) and moving trailing-n arrays.
     Without a fork-ttl both equal the batch twins."""
@@ -3666,11 +3718,14 @@ def test_stream_event_window_sharded_parity(spark, tmp_path):
 
 
 def test_by_shards_dsl_dispatches_row_buffer_twins(spark):
-    """`by {"shards": N}` routes the r8 row-buffer actions (stable,
-    keyed coalesce, fixed/moving-event-window) to their sharded
-    twins — asserted structurally: the compiled plan groups on the
-    __shard__ column; without shards it groups on the fork keys.
-    Unkeyed coalesce must IGNORE shards (one global tick clock)."""
+    """`by {"shards": N}` sets the shard count of the r8 row-buffer
+    actions (stable, keyed coalesce, fixed/moving-event-window) —
+    asserted structurally: the compiled plan groups on
+    pmod(xxhash64(fork keys), N); without shards N is the default 64.
+    Unkeyed coalesce must IGNORE shards (one global tick clock): it
+    keys on one constant column, so all its state is one key."""
+    import re
+
     import pyspark.sql.functions as F
 
     from mirabelle_spark.plans.builder import Ctx, compile_stream
@@ -3697,16 +3752,23 @@ def test_by_shards_dsl_dispatches_row_buffer_twins(spark):
         ("fixed-event-window", [{"size": 3}]),
         ("moving-event-window", [{"size": 3}]),
     ]
-    for action, params in cases:
-        assert "__shard__" in plan_of(action, params, 2), action
-        assert "__shard__" not in plan_of(action, params, None), action
+    def shard_of(keys, n):
+        return re.compile(
+            rf"pmod\(xxhash64\({keys}#\d+, 42\), cast\({n} as bigint\)\) AS __shard__"
+        )
 
-    # unkeyed coalesce: single global state group, shards ignored
+    for action, params in cases:
+        assert shard_of("host", 2).search(plan_of(action, params, 2)), action
+        assert shard_of("host", 64).search(plan_of(action, params, None)), action
+
+    # unkeyed coalesce: one constant key, shards ignored
     tree = {"action": "coalesce",
             "params": [{"duration": 10, "fields": ["state"]}],
             "children": [{"action": "tap", "params": ["x"]}]}
     ctx = compile_stream(src, tree, Ctx(streaming=True, test_mode=True, shards=4))
-    assert "__shard__" not in ctx.taps["x"]._jdf.queryExecution().analyzed().toString()
+    assert shard_of("__g__", 4).search(
+        ctx.taps["x"]._jdf.queryExecution().analyzed().toString()
+    )
 
 
 def test_control_plane_soak_small(spark):
@@ -3735,11 +3797,11 @@ def test_control_plane_soak_small(spark):
 
 
 def test_stream_expired_sharded_parity(spark, tmp_path):
-    """Sharded expired/not-expired keeps exactly the per-key twin's
+    """Sharded expired/not-expired keeps exactly the default-shard twin's
     rows across a micro-batch boundary: per-key running-max clocks
     seeded from the carry, null-time rows never expire by age,
     state=='expired' forces, per-event ttl respected — and both
-    groupings equal the batch twin over the same arrival order."""
+    shard counts equal the batch twin over the same arrival order."""
     import pyspark.sql.functions as F
 
     from mirabelle_spark.operators import filters as flt
@@ -3772,128 +3834,6 @@ def test_stream_expired_sharded_parity(spark, tmp_path):
         twin = flt.expired if keep else flt.not_expired
         assert per == sorted(r.event_id for r in twin(
             df, time_col="time", arrival_cols=("event_id",), by=["host"]).collect())
-
-
-def test_stream_changed_jvm_replay_and_buckets(spark, tmp_path):
-    """r10 state redesign (r9 ADVICE medium + verdict ask #3):
-    (1) untouched buckets carry forward by manifest reference — a
-    second batch touching one key rewrites only that key's bucket;
-    (2) a replayed micro-batch (commit-log gap after crash) re-emits
-    from the PRE-batch state — first-of-key changed rows are NOT
-    suppressed — and does not double-apply state;
-    (3) a crash before the manifest rename (simulated by deleting
-    the newest manifest) leaves the previous manifest authoritative
-    and the retried batch converges to the same state."""
-    import json
-    import os
-
-    import pyspark.sql.functions as F
-
-    from mirabelle_spark.streaming import core
-
-    schema = "event_id bigint, host string, time timestamp, state string"
-
-    def mkdf(rows):
-        return (
-            spark.createDataFrame(rows, "event_id bigint, host string, t double, state string")
-            .withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long")))
-            .drop("t")
-            .select("event_id", "host", "time", "state")
-        )
-
-    src = str(tmp_path / "in")
-    work = str(tmp_path / "work")
-    # batch 0: 20 hosts, all flip ok->warn (every row emits: init None)
-    b0 = [(i, f"h{i:02d}", float(i), "ok") for i in range(20)]
-    mkdf(b0).coalesce(1).write.mode("append").parquet(src)
-
-    got: dict[int, list] = {}
-
-    def collect_writer(bdf, bid):
-        got.setdefault(bid, []).extend(
-            sorted(r.event_id for r in bdf.select("event_id").collect())
-        )
-
-    def run():
-        q = core.stream_changed_jvm_run(
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(src),
-            "state", by=["host"], work_dir=work, time_col="time",
-            out_writer=collect_writer, n_buckets=8,
-        )
-        q.awaitTermination()
-
-    run()
-    state_root = os.path.join(work, "state")
-    m0 = [f for f in os.listdir(state_root) if f.startswith("manifest")]
-    assert len(m0) == 1
-    man0 = json.load(open(os.path.join(state_root, m0[0])))
-    assert man0["base"] and man0["deltas"] == []  # first batch compacts
-    assert got[0] == sorted(r[0] for r in b0)
-
-    # batch 1: ONE host changes value -> a DELTA of one key, the
-    # base carried forward by reference (no full-state rewrite)
-    b1 = [(100, "h03", 100.0, "warn")]
-    mkdf(b1).coalesce(1).write.mode("append").parquet(src)
-    got.clear()
-    run()
-    ids = sorted(
-        int(f[len("manifest_b"):-len(".json")])
-        for f in os.listdir(state_root) if f.startswith("manifest")
-    )
-    assert len(ids) == 2
-    man1 = json.load(open(os.path.join(state_root, f"manifest_b{ids[-1]}.json")))
-    assert man1["base"] == man0["base"]  # base untouched
-    assert len(man1["deltas"]) == 1 and f"b{ids[-1]}" in man1["deltas"][0]
-    # the delta holds ONLY the touched key
-    delta_rows = spark.read.parquet(man1["deltas"][0]).collect()
-    assert len(delta_rows) == 1 and delta_rows[0]["host"] == "h03"
-    assert got[1] == [100]
-
-    # (2) replay: drop the last commit entry -> Spark re-runs batch 1
-    ck_commits = os.path.join(work, "ck", "commits")
-
-    def drop_newest_commit():
-        newest = max(int(f) for f in os.listdir(ck_commits) if f.isdigit())
-        os.remove(os.path.join(ck_commits, str(newest)))
-        crc = os.path.join(ck_commits, f".{newest}.crc")
-        if os.path.exists(crc):  # stale checksum shadow breaks rewrite
-            os.remove(crc)
-
-    drop_newest_commit()
-    got.clear()
-    run()
-    assert got.get(1) == [100], got  # re-emitted, NOT suppressed
-    ids2 = sorted(
-        int(f[len("manifest_b"):-len(".json")])
-        for f in os.listdir(state_root) if f.startswith("manifest")
-    )
-    assert ids2 == ids  # replay did not write a new state version
-
-    # batch 2 sees the correct state: same value again -> no emission
-    b2 = [(200, "h03", 200.0, "warn"), (201, "h04", 200.0, "flip")]
-    mkdf(b2).coalesce(1).write.mode("append").parquet(src)
-    got.clear()
-    run()
-    assert got.get(2) == [201], got
-
-    # (3) crash before manifest rename: delete newest manifest AND
-    # its commit entry; retried batch rebuilds identical state
-    ids3 = sorted(
-        int(f[len("manifest_b"):-len(".json")])
-        for f in os.listdir(state_root) if f.startswith("manifest")
-    )
-    man_before = json.load(
-        open(os.path.join(state_root, f"manifest_b{ids3[-1]}.json"))
-    )
-    os.remove(os.path.join(state_root, f"manifest_b{ids3[-1]}.json"))
-    drop_newest_commit()
-    got.clear()
-    run()
-    man_after = json.load(
-        open(os.path.join(state_root, f"manifest_b{ids3[-1]}.json"))
-    )
-    assert man_after == man_before
-    assert got.get(2) == [201], got
 
 
 def test_stream_curate_parity(spark, tmp_path):

@@ -4,21 +4,18 @@
 Measures events/s through one availableNow pass for each mode:
 
   jvm              windowed sum aggregate (JVM baseline, update mode)
-  apws             stream_ewma, one state group per key
   sharded          stream_ewma(shards=N), shard-mapped keyed state
   sharded_ttl      same + state_ttl_s=3600 (prices the fork GC)
   cond_dt, changed, ddt, zscore, throttle, coalesce, stable,
   few, mew, expired, smax
-                   the other keyed twins per key; append ``_sharded``
-                   for the same fold with shards=N (few/mew: fixed/
-                   moving event windows)
+                   the other keyed twins with shards=N (few/mew:
+                   fixed/moving event windows)
   smax_jvm         the pure-JVM max_by tier (update mode; per-batch
                    emission grain)
-  changed_jvm      foreachBatch changed tier
 
 Usage:
   python tools/bench_streaming_state.py [--events 1000000]
-      [--keys 1000000] [--modes jvm,apws,sharded]
+      [--keys 1000000] [--modes jvm,sharded,stable]
       [--cpus 32] [--shards 64]
 
 Prints one JSON line: {"events": N, "keys": K,
@@ -79,8 +76,7 @@ def gen_events(spark, path: str, n: int, keys: int, files: int = 8) -> None:
 
 
 def _keyed_ops():
-    """Keyed twin builders by mode name; each takes ``shards`` (None =
-    one state group per key)."""
+    """Keyed twin builders by mode name; each takes ``shards``."""
     from pyspark.sql import functions as F
 
     from mirabelle_spark import streaming as stx
@@ -114,28 +110,13 @@ def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int)
     from pyspark.sql import functions as F
 
     stream = spark.readStream.schema(schema).parquet(src)
-    if mode == "changed_jvm":
-        # foreachBatch terminal op: lag-over-batch + parquet state
-        # join, zero Python on the data path (r9, VERDICT r8 ask #6)
-        from mirabelle_spark.streaming import stream_changed_jvm_run
-
-        work = os.path.join(ck_root, f"changed_jvm_{time.monotonic_ns()}")
-        t0 = time.monotonic()
-        q = stream_changed_jvm_run(
-            stream, "metric", by=["host"], work_dir=work, time_col="time"
-        )
-        q.awaitTermination()
-        return time.monotonic() - t0
     keyed = _keyed_ops()
-    op = mode[: -len("_sharded")] if mode.endswith("_sharded") else mode
     if mode == "jvm":
         out = (
             stream.withWatermark("time", "0 seconds")
             .groupBy(F.window("time", "1 hour"), "host")
             .agg(F.sum("metric").alias("metric"))
         )
-    elif mode == "apws":
-        out = keyed["ewma"](stream)
     elif mode == "sharded":
         out = keyed["ewma"](stream, shards=shards)
     elif mode == "sharded_ttl":
@@ -144,8 +125,8 @@ def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int)
         from mirabelle_spark.streaming import stream_smax_jvm
 
         out = stream_smax_jvm(stream, by=["host"], time_col="time")
-    elif op in keyed:
-        out = keyed[op](stream, shards=shards if op != mode else None)
+    elif mode in keyed:
+        out = keyed[mode](stream, shards=shards)
     else:
         raise SystemExit(f"unknown mode {mode}")
 
@@ -174,7 +155,7 @@ def main() -> None:
     ap.add_argument("--keys", type=int, default=1_000_000)
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--shards", type=int, default=64)
-    ap.add_argument("--modes", default="jvm,apws,sharded")
+    ap.add_argument("--modes", default="jvm,sharded")
     args = ap.parse_args()
 
     spark = make_spark(args.cpus)
