@@ -30,22 +30,24 @@ def entry(spark: SparkSession) -> DataFrame:
 # so ordering is coverage policy: the oldest last-gated queries come
 # first, and a query whose engine path changed leads the next gate.
 # Current rotation:
-# (a) the 22 r15-gated entries not gated since (registry order);
-# (b) ewma_smoothed and throttle (r14-gated): the batch keyed-fold
-#     shell they run changed its key identity (NaN keys);
-# (c) the 22 r13-gated entries not gated since, the oldest cohort
-#     (registry order);
-# (d) the first 4 remaining r14-gated entries in registry order,
-#     filling to exactly 50.
-# The remaining 22 r14-gated entries (registry order: stable_states,
-# with_const, default_missing, scale_metric, coll_increase_daily,
-# ddt_rate, coll_where_inside_window, coll_sum_hourly,
-# coll_mean_hourly, coll_percentiles_hourly, sessionize_user_events,
-# zscore_events, dedup_exact_docs, minhash_lsh_pairs,
-# ngram_jaccard_pairs, simhash_pairs, dedup_clusters,
-# dedup_survivors_docs, ann_bruteforce_topk, ann_bruteforce_l2_topk,
-# ann_lsh_topk, ann_ivf_topk) lead the next rotation, then the
-# r17-gated cohort.
+# (a) the 23 windowed registry entries (registry order): their batch
+#     operators now group through aggregations.window_agg, which
+#     also serves the streaming DSL;
+# (b) the 17 remaining r14-gated entries not gated since (registry
+#     order);
+# (c) the first 10 r17-gated entries in registry order, filling to
+#     exactly 50.
+# The remaining 27 r17-gated entries (registry order: coalesce_latest,
+# agg_sum_delayed_hourly, text_quality, text_lang_id,
+# text_fingerprint, text_rolling_fp, image_dhash_docs,
+# image_near_dups, video_near_dups, audio_dhash_docs,
+# audio_near_dups, neardup_degree_histogram, soft_dedup_docs,
+# corpus_split_docs, search_quality_docs, doc_length_profile,
+# split_token_budget, bpe_segment_trained, scrubbed_corpus_docs,
+# curate_head_logreg_docs, logreg_quality_docs, curate_head_docs,
+# dup_span_removed_docs, dup_span_removed_char_docs,
+# order_priority_counts, returned_item_customers,
+# large_order_customers) lead the next rotation.
 #
 # winnow_dedup_pairs_fast is rows-only BY DESIGN (no xxhash64 in
 # DuckDB; overlap vs the portable path is pytest-pinned) — it must
@@ -53,30 +55,26 @@ def entry(spark: SparkSession) -> DataFrame:
 # an `err` for its missing oracle. It stays below slot 50 because
 # this list holds exactly 50 oracle-backed names.
 GATE_PRIORITY = [
-    # (a) the 22 r15-gated entries (registry order)
-    "text_bpe_token_count", "text_repetition", "gopher_quality_docs",
-    "vocab_top100", "token_rarity_docs", "mixture_sample_docs",
-    "clean_corpus_docs", "paragraph_dedup_docs", "multimodal_features",
-    "video_frame_sample", "linear_quality_docs", "ivf_centroid_update",
-    "best_docs_per_lang", "token_chunks_docs", "ann_sq_topk",
-    "ann_ivfpq_topk", "ann_ivfpq_rerank_topk", "ann_ivfpq_cosine_topk",
-    "lm_bits_docs", "lm_quality_docs", "tpch_pricing_summary",
-    "revenue_by_nation",
-    # (b) changed engine path
-    "ewma_smoothed", "throttle",
-    # (c) the 22 r13-gated entries (registry order)
-    "coll_top3", "coll_bottom3", "coll_sort_ids", "by_sum_daily",
-    "smax_running", "semdedup_survivors", "semdedup_arrow_survivors",
-    "semdedup_prod_survivors", "semdedup_prod_arrow_survivors",
-    "ngram_containment_pairs", "contamination_bloom_docs",
-    "dsir_logweight_docs", "dsir_top_docs", "temperature_sample_docs",
-    "bpe_fertility_by_lang", "curate_head_dsir_docs",
-    "dup_span_removed_prefilter_docs",
-    "dup_span_removed_char_prefilter_docs",
-    "dup_span_removed_twophase_docs", "vocab_cardinality_by_lang",
-    "corpus_datasheet", "volume_shipping",
-    # (d) first 4 remaining r14-gated entries (registry order)
-    "where_basic", "over_filter", "tagged_all", "split_routing",
+    # (a) the 23 windowed entries (registry order)
+    "sflatten_roundtrip", "fixed_time_window_ids", "ssort_sorted",
+    "project_correlate", "agg_sum_hourly", "agg_mean_hourly",
+    "agg_top_event", "agg_bottom_event", "agg_rate_hourly",
+    "agg_ratio_error_click", "agg_percentiles_hourly", "coll_count_hourly",
+    "coll_max_hourly", "coll_min_hourly", "coll_rate_hourly",
+    "coll_quotient_daily", "coll_increase_daily", "coll_sort_ids",
+    "by_sum_daily", "coll_where_inside_window", "coll_sum_hourly",
+    "coll_mean_hourly", "coll_percentiles_hourly",
+    # (b) the 17 remaining r14-gated entries (registry order)
+    "stable_states", "with_const", "default_missing", "scale_metric",
+    "ddt_rate", "sessionize_user_events", "zscore_events",
+    "dedup_exact_docs", "minhash_lsh_pairs", "ngram_jaccard_pairs",
+    "simhash_pairs", "dedup_clusters", "dedup_survivors_docs",
+    "ann_bruteforce_topk", "ann_bruteforce_l2_topk", "ann_lsh_topk",
+    "ann_ivf_topk",
+    # (c) the first 10 r17-gated entries (registry order)
+    "where_not", "where_regex", "under_filter", "expired_events",
+    "not_expired_events", "changed_transitions", "above_dt_alert",
+    "outside_dt_alert", "extract_nested", "moving_time_window_count",
 ]
 
 

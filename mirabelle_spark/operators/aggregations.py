@@ -5,7 +5,9 @@ windows, per-window accumulator (``keyword->aggr-fn``,
 ``action.clj:2285-2348``), optional finalizer
 (``action.clj:2350-2374``), ``:delay`` lateness. In Spark this IS
 ``groupBy(by…, window).agg(...)`` — partial+final hash aggregation,
-one shuffle keyed on (by…, bucket), watermark in the streaming twin.
+one shuffle keyed on (by…, bucket). The same functions run on a
+streaming DataFrame: the DSL watermarks it with ``:delay`` and
+:func:`window_agg` groups on ``window()`` so windows seal.
 
 Documented divergence: the reference anchors window index 0 at the
 time of the *first event seen* (``action.clj:2380-2385``
@@ -30,7 +32,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mirabelle_spark.timeutil import window_start_s
+from mirabelle_spark.timeutil import US, window_start_s
 
 DEC = "decimal(38,9)"
 
@@ -39,9 +41,27 @@ def _cols(names: Sequence[str]) -> list[Column]:
     return [F.col(n) for n in names]
 
 
-def _grouped(df: DataFrame, duration_s: float, by: Sequence[str], time_col: str):
-    bucket = window_start_s(time_col, duration_s).alias("window_start")
-    return df.groupBy(*_cols(by), bucket)
+def window_agg(
+    df: DataFrame, duration_s: float, by: Sequence[str], time_col: str, *aggs: Column
+) -> DataFrame:
+    """``aggs`` per (by…, tumbling window): columns (by…,
+    window_start, aggs…), window_start in epoch seconds.
+
+    Batch groups on the exact µs bucket of :func:`window_start_s`. A
+    streaming ``df`` (watermarked by the caller) groups on
+    ``F.window`` instead: Structured Streaming seals and evicts window
+    state only when the grouping is a ``window()`` on the watermarked
+    column. Both give the same window_start double; ``F.window`` also
+    drops rows with a null time, which batch keeps as a null
+    window."""
+    if not df.isStreaming:
+        bucket = window_start_s(time_col, duration_s).alias("window_start")
+        return df.groupBy(*_cols(by), bucket).agg(*aggs)
+    dur_us = int(round(duration_s * US))
+    w = F.window(F.col(time_col), f"{dur_us} microseconds").alias("__w__")
+    out = df.groupBy(*_cols(by), w).agg(*aggs)
+    start = F.col("__w__.start").cast("double").alias("window_start")
+    return out.select(*_cols(by), start, *out.columns[len(by) + 1 :])
 
 
 def exact_sum(metric_col: str | Column) -> Column:
@@ -59,8 +79,9 @@ def agg_sum(
 ) -> DataFrame:
     """Per-window sum of metric (``sum``, action.clj:2468-2490,
     accumulator ``:+`` :2342-2348; null metric counts as 0)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        exact_sum(F.coalesce(F.col(metric_col), F.lit(0.0))).alias("metric")
+    return window_agg(
+        df, duration_s, by, time_col,
+        exact_sum(F.coalesce(F.col(metric_col), F.lit(0.0))).alias("metric"),
     )
 
 
@@ -169,8 +190,9 @@ def agg_mean(
     """Per-window mean = exact-sum / count (``mean``,
     action.clj:2540-2562, accum :2312-2320, finalizer :2371-2374)."""
     s = F.sum(F.coalesce(F.col(metric_col), F.lit(0.0)).cast(DEC)).cast("double")
-    return _grouped(df, duration_s, by, time_col).agg(
-        (s / F.count(F.lit(1))).alias("metric")
+    return window_agg(
+        df, duration_s, by, time_col,
+        (s / F.count(F.lit(1))).alias("metric"),
     )
 
 
@@ -187,7 +209,7 @@ def agg_top(
     accum ``:max`` :2286-2292 — ties go to the later event)."""
     ev = F.struct(*[F.col(c) for c in (event_cols or df.columns)])
     key = F.struct(F.col(metric_col), F.col(time_col), *_cols(order_cols))
-    out = _grouped(df, duration_s, by, time_col).agg(F.max_by(ev, key).alias("__e__"))
+    out = window_agg(df, duration_s, by, time_col, F.max_by(ev, key).alias("__e__"))
     return out.select(*_cols(by), "window_start", "__e__.*")
 
 
@@ -205,7 +227,7 @@ def agg_bottom(
     # min over (metric, -time): ties go to the later event, like the
     # reference's `<` replace rule; emulate with max_by on negated key
     key = F.struct((-F.col(metric_col)).alias("m"), F.col(time_col), *_cols(order_cols))
-    out = _grouped(df, duration_s, by, time_col).agg(F.max_by(ev, key).alias("__e__"))
+    out = window_agg(df, duration_s, by, time_col, F.max_by(ev, key).alias("__e__"))
     return out.select(*_cols(by), "window_start", "__e__.*")
 
 
@@ -217,8 +239,9 @@ def agg_rate(
 ) -> DataFrame:
     """Per-window event rate = count / duration (``rate``,
     action.clj:2833-2843, finalizer :2364-2370)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        (F.count(F.lit(1)) / F.lit(float(duration_s))).alias("metric")
+    return window_agg(
+        df, duration_s, by, time_col,
+        (F.count(F.lit(1)) / F.lit(float(duration_s))).alias("metric"),
     )
 
 
@@ -248,7 +271,7 @@ def agg_ratio(
         num = F.count_if(c1).cast("double")
         den = F.count_if(c2).cast("double")
     ratio = F.when(den == 0, F.lit(0.0)).otherwise(num / den)
-    return _grouped(df, duration_s, by, time_col).agg(ratio.alias("metric"))
+    return window_agg(df, duration_s, by, time_col, ratio.alias("metric"))
 
 
 def agg_percentiles(
@@ -281,7 +304,8 @@ def agg_percentiles(
     """
     if approx:
         qs_lit = F.array(*[F.lit(float(q)) for q in quantiles])
-        sk = _grouped(df, duration_s, by, time_col).agg(
+        sk = window_agg(
+            df, duration_s, by, time_col,
             F.percentile_approx(
                 F.col(metric_col), [float(q) for q in quantiles]
             ).alias("__p__")
@@ -296,11 +320,14 @@ def agg_percentiles(
     sorted_m = F.sort_array(
         F.collect_list(F.col(metric_col))
     )  # nulls excluded by collect_list
-    out = _grouped(df, duration_s, by, time_col).agg(sorted_m.alias("__m__"))
+    out = window_agg(df, duration_s, by, time_col, sorted_m.alias("__m__"))
     qs = F.array(*[F.lit(float(q)) for q in quantiles])
     out = out.withColumn("quantile", F.explode(qs))
     n = F.size("__m__")
     idx = F.least(n - 1, F.floor(n.cast("double") * F.col("quantile")).cast("int"))
+    # a window of null metrics has n = 0: index 1 of the empty list
+    # reads null (index 0 would raise even in try_element_at)
+    idx = F.greatest(idx, F.lit(0))
     return out.withColumn("metric", F.try_element_at("__m__", idx + 1)).drop("__m__")
 
 
@@ -316,8 +343,9 @@ def coll_count(
 ) -> DataFrame:
     """Count events per window (``coll-count``, action.clj:1465-1487,
     math.clj:28-36)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        F.count(F.lit(1)).cast("double").alias("metric")
+    return window_agg(
+        df, duration_s, by, time_col,
+        F.count(F.lit(1)).cast("double").alias("metric"),
     )
 
 
@@ -329,8 +357,9 @@ def coll_sum(
     metric_col: str = "metric",
 ) -> DataFrame:
     """Sum per window (``coll-sum``, math.clj:65-72)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        exact_sum(F.coalesce(F.col(metric_col), F.lit(0.0))).alias("metric")
+    return window_agg(
+        df, duration_s, by, time_col,
+        exact_sum(F.coalesce(F.col(metric_col), F.lit(0.0))).alias("metric"),
     )
 
 
@@ -343,8 +372,9 @@ def coll_mean(
 ) -> DataFrame:
     """Mean per window (``coll-mean``, math.clj:5-14)."""
     s = F.sum(F.coalesce(F.col(metric_col), F.lit(0.0)).cast(DEC)).cast("double")
-    return _grouped(df, duration_s, by, time_col).agg(
-        (s / F.count(F.lit(1))).alias("metric")
+    return window_agg(
+        df, duration_s, by, time_col,
+        (s / F.count(F.lit(1))).alias("metric"),
     )
 
 
@@ -356,9 +386,7 @@ def coll_max(
     metric_col: str = "metric",
 ) -> DataFrame:
     """Max metric per window (``coll-max``, math.clj:57-62)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        F.max(metric_col).alias("metric")
-    )
+    return window_agg(df, duration_s, by, time_col, F.max(metric_col).alias("metric"))
 
 
 def coll_min(
@@ -369,9 +397,7 @@ def coll_min(
     metric_col: str = "metric",
 ) -> DataFrame:
     """Min metric per window (``coll-min``, math.clj:74-78)."""
-    return _grouped(df, duration_s, by, time_col).agg(
-        F.min(metric_col).alias("metric")
-    )
+    return window_agg(df, duration_s, by, time_col, F.min(metric_col).alias("metric"))
 
 
 def coll_rate(
@@ -388,8 +414,9 @@ def coll_rate(
     span_us = F.max(F.unix_micros(F.col(time_col))) - F.min(
         F.unix_micros(F.col(time_col))
     )
-    g = _grouped(df, duration_s, by, time_col).agg(
-        s.alias("__s__"), span_us.alias("__span__")
+    g = window_agg(
+        df, duration_s, by, time_col,
+        s.alias("__s__"), span_us.alias("__span__"),
     )
     metric = F.when(F.col("__span__") == 0, F.col("__s__")).otherwise(
         F.col("__s__") / (F.col("__span__") / F.lit(1_000_000))
@@ -410,8 +437,9 @@ def coll_quotient(
     Sequential fold via the ``aggregate`` higher-order function —
     JVM-side, deterministic order from sort_array."""
     ev = F.struct(F.col(time_col), *_cols(order_cols), F.col(metric_col).alias("m"))
-    g = _grouped(df, duration_s, by, time_col).agg(
-        F.sort_array(F.collect_list(ev)).alias("__evs__")
+    g = window_agg(
+        df, duration_s, by, time_col,
+        F.sort_array(F.collect_list(ev)).alias("__evs__"),
     )
     ms = F.transform(F.col("__evs__"), lambda x: x["m"])
     quot = F.aggregate(
@@ -498,7 +526,8 @@ def coll_increase(
     t = F.unix_micros(F.col(time_col))
     newest_key = F.struct(t.alias("t"), *[(-F.col(c)).alias(f"o{i}") for i, c in enumerate(order_cols)])
     oldest_key = F.struct((-t).alias("t"), *[(-F.col(c)).alias(f"o{i}") for i, c in enumerate(order_cols)])
-    g = _grouped(df, duration_s, by, time_col).agg(
+    g = window_agg(
+        df, duration_s, by, time_col,
         F.max_by(F.col(metric_col), newest_key).alias("__new__"),
         F.max_by(F.col(metric_col), oldest_key).alias("__old__"),
         F.count(F.lit(1)).alias("__n__"),
@@ -523,10 +552,10 @@ def coll_sort(
     sorted by field)."""
     payload_cols = list(payload_cols or df.columns)
     ev = F.struct(F.col(field).alias("__k__"), *[F.col(c) for c in payload_cols])
-    g = _grouped(df, duration_s, by, time_col).agg(
-        F.sort_array(F.collect_list(ev)).alias("events")
+    return window_agg(
+        df, duration_s, by, time_col,
+        F.sort_array(F.collect_list(ev)).alias("events"),
     )
-    return g
 
 
 def ewma_timeless(

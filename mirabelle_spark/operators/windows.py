@@ -1,9 +1,12 @@
-"""Window operators (SURVEY.md §2.5) — batch realizations.
+"""Window operators (SURVEY.md §2.5).
 
 Event-time tumbling windows use integer-µs bucket math
 (:mod:`mirabelle_spark.timeutil`) matching the reference's floored
-window index (``action.clj:2380-2385``). Count windows use
-``row_number`` bucketing; sliding windows use rows/range frames.
+window index (``action.clj:2380-2385``); ``fixed_time_window``,
+``ssort``, ``project`` and ``sessionize`` also run on a watermarked
+stream (see :func:`~mirabelle_spark.operators.aggregations.window_agg`).
+Count windows use ``row_number`` bucketing; sliding windows use
+rows/range frames.
 
 Every operator threads ``by`` keys (the reference's ``by`` grouping,
 ``action.clj:1559-1641``) straight into ``partitionBy``/``groupBy``
@@ -20,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from mirabelle_spark.operators.aggregations import window_agg
 from mirabelle_spark.timeutil import US, window_start_s
 
 
@@ -43,13 +47,10 @@ def fixed_time_window(
     partial+final hash aggregate on (by…, bucket) — one shuffle.
     """
     event_cols = list(event_cols or df.columns)
-    bucket = window_start_s(time_col, duration_s).alias("window_start")
     ev = F.struct(*[F.col(c) for c in event_cols])
-    out = (
-        df.groupBy(*_cols(by), bucket)
-        .agg(F.sort_array(F.collect_list(ev)).alias("events"))
+    return window_agg(
+        df, duration_s, by, time_col, F.sort_array(F.collect_list(ev)).alias("events")
     )
-    return out
 
 
 def fixed_event_window(
@@ -134,10 +135,9 @@ def ssort(
     operator. Batch: per tumbling bucket, sort_array by (field,
     payload) and explode back to rows."""
     payload_cols = list(payload_cols or df.columns)
-    bucket = window_start_s(time_col, duration_s).alias("window_start")
     ev = F.struct(F.col(field).alias("__k__"), *[F.col(c) for c in payload_cols])
     sorted_list = F.sort_array(F.collect_list(ev))
-    out = df.groupBy(*_cols(by), bucket).agg(sorted_list.alias("__evs__"))
+    out = window_agg(df, duration_s, by, time_col, sorted_list.alias("__evs__"))
     exploded = out.select(
         *_cols(by), "window_start", F.posexplode("__evs__").alias("seq", "__e__")
     )
@@ -197,11 +197,10 @@ def project(
     Returns (window_start[, by…], metric_1 … metric_N): the metric of
     the latest event matching condition i within the window. ``by``
     is the fork isolation a `by` upstream implies (each fork
-    correlates its own events — same keying as the streaming twin).
+    correlates its own events).
     """
     from mirabelle_spark.conditions import compile_condition
 
-    bucket = window_start_s(time_col, duration_s).alias("window_start")
     ord_key = F.struct(F.col(time_col), *_cols(order_cols))
     aggs = []
     for i, cond in enumerate(conditions, start=1):
@@ -211,7 +210,8 @@ def project(
                 f"metric_{i}"
             )
         )
-    return df.groupBy(bucket, *_cols(by)).agg(*aggs)
+    out = window_agg(df, duration_s, by, time_col, *aggs)
+    return out.select("window_start", *_cols(by), *out.columns[len(by) + 1 :])
 
 
 def coalesce_ticks(

@@ -56,11 +56,12 @@ class Ctx:
 
     ``streaming=True`` compiles the SAME tree against a streaming
     DataFrame: stateless actions are streaming-transparent (identical
-    Catalyst ops), and stateful/windowed actions dispatch to their
-    Structured Streaming twins (keyed state / watermarked windows)
-    instead of the batch window-function realizations. ``delay_s``
-    is the default watermark tolerance for windowed twins (the
-    reference's per-op :delay overrides it via cfg). ``shards``
+    Catalyst ops), windowed actions run their batch operator on the
+    stream watermarked with their delay, and keyed stateful actions
+    dispatch to their keyed-state folds instead of the batch
+    window-function realizations. ``delay_s`` is the default
+    watermark delay of windowed actions (the reference's per-op
+    :delay overrides it via cfg). ``shards``
     (set per-fork via ``by``'s ``{"shards": N}`` config key, or
     session-wide here) is passed to every keyed-state twin: their
     keys route to N shard-mapped state groups, and None means the
@@ -507,10 +508,11 @@ action("stable")(
     lambda df, ctx, dt, fieldname: st.stable(df, dt, fieldname, **_stk(ctx))
 )
 
-# -- streaming twins -------------------------------------------------------
+# -- streaming dispatch ----------------------------------------------------
 # Same tree, streaming source: these entries replace the batch
 # realization when ctx.streaming is set. Stateless actions need no
-# entry (same Catalyst ops both ways). Keyed twins REQUIRE `by` keys:
+# entry (same Catalyst ops both ways); windowed actions run their
+# batch action on a watermarked stream. Keyed twins REQUIRE `by` keys:
 # unkeyed ordered state has no sane streaming shape (one global task
 # forever), so the compiler refuses instead of degrading silently.
 
@@ -535,59 +537,48 @@ def _need_by(ctx: Ctx, name: str) -> list:
     return list(ctx.by)
 
 
-def _stream_agg_kind(kind):
-    def fn(df, ctx, cfg):
-        from mirabelle_spark import streaming as stx
+def _s_watermarked(name):
+    """The streaming form of a windowed action: the batch action on
+    the stream watermarked with the node's ``:delay`` (cfg
+    ``"delay"``, else ``ctx.delay_s``) — its window grouping turns
+    into ``window()`` on a stream (aggregations.window_agg), so
+    windows seal once the watermark passes their end."""
 
-        return stx.stream_agg(
-            df, kind, cfg["duration"], delay_s=cfg.get("delay", ctx.delay_s),
-            by=list(ctx.by), time_col=ctx.time_col, metric_col=ctx.metric_col,
-        )
+    def fn(df, ctx, *params):
+        cfg = params[-1] if params and isinstance(params[-1], dict) else {}
+        delay = cfg.get("delay", ctx.delay_s)
+        src = df.withWatermark(ctx.time_col, f"{delay} seconds")
+        return _ACTIONS[name](src, ctx, *params)
 
     return fn
 
 
-for _kind, _names in {
-    "sum": ("sum", "coll-sum"),
-    "mean": ("mean", "coll-mean"),
-    "rate": ("rate", "coll-rate"),
-    "count": ("coll-count",),
-    "max": ("coll-max",),
-    "min": ("coll-min",),
-}.items():
-    for _n in _names:
-        stream_action(_n)(_stream_agg_kind(_kind))
+for _n in (
+    "sum", "mean", "rate", "top", "bottom", "ratio", "percentiles",
+    "coll-count", "coll-sum", "coll-mean", "coll-max", "coll-min",
+    "coll-rate", "coll-percentiles", "coll-quotient", "coll-increase",
+    "coll-sort", "fixed-time-window", "ssort", "project", "sessionize",
+):
+    stream_action(_n)(_s_watermarked(_n))
+
+# streaming `aggregation` aggr-fn -> the windowed action it runs
+_STREAM_AGGR = {
+    "sum": "sum", "mean": "mean", "rate": "rate", "count": "coll-count",
+    "max": "coll-max", "min": "coll-min", "ssort": "ssort",
+}
 
 
 @stream_action("aggregation")
 def _s_aggregation(df, ctx, cfg):
-    """Push-mode aggregation with :delay → watermarked streaming agg:
-    the watermark IS the late-drop rule (events later than delay are
-    dropped; windows seal delay seconds after their end —
-    action.clj:2420-2432). aggr-fn ssort maps to the ssort twin."""
-    from mirabelle_spark import streaming as stx
-
+    """Push-mode aggregation with :delay → the watermarked windowed
+    action: the watermark IS the late-drop rule (events later than
+    delay are dropped; windows seal delay seconds after their end —
+    action.clj:2420-2432). aggr-fn ssort sorts by event time."""
     kind = cfg.get("aggr-fn", "sum")
-    delay = cfg.get("delay", ctx.delay_s)
-    if kind == "ssort":
-        return stx.stream_ssort(
-            df, cfg["duration"], cfg.get("field", ctx.time_col),
-            by=list(ctx.by), delay_s=delay, time_col=ctx.time_col,
-        )
-    return stx.stream_agg(
-        df, kind, cfg["duration"], delay_s=delay, by=list(ctx.by),
-        time_col=ctx.time_col, metric_col=ctx.metric_col,
-    )
-
-
-@stream_action("fixed-time-window")
-def _s_ftw(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_fixed_time_window(
-        df, cfg["duration"], delay_s=cfg.get("delay", ctx.delay_s),
-        by=list(ctx.by), time_col=ctx.time_col,
-    )
+    if kind not in _STREAM_AGGR:
+        raise ValueError(f"unsupported streaming aggregate {kind!r}")
+    sub = dict(cfg, field=ctx.time_col)
+    return _STREAM_ACTIONS[_STREAM_AGGR[kind]](df, ctx, sub)
 
 
 @stream_action("fixed-event-window")
@@ -623,16 +614,6 @@ def _s_coalesce(df, ctx, cfg):
     )
 
 
-@stream_action("ssort")
-def _s_ssort(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_ssort(
-        df, cfg["duration"], cfg["field"], by=list(ctx.by),
-        delay_s=cfg.get("delay", ctx.delay_s), time_col=ctx.time_col,
-    )
-
-
 @stream_action("throttle")
 def _s_throttle(df, ctx, cfg):
     from mirabelle_spark import streaming as stx
@@ -650,16 +631,6 @@ def _s_ewma(df, ctx, r):
     return stx.stream_ewma(
         df, r, by=_need_by(ctx, "ewma-timeless"), time_col=ctx.time_col,
         metric_col=ctx.metric_col, shards=ctx.shards,
-    )
-
-
-@stream_action("sessionize")
-def _s_sessionize(df, ctx, cfg):
-    from mirabelle_spark.streaming import core as stx
-
-    return stx.stream_sessionize(
-        df, float(cfg["gap"]), delay_s=ctx.delay_s, by=list(ctx.by),
-        time_col=ctx.time_col, metric_col=ctx.metric_col,
     )
 
 
@@ -810,73 +781,24 @@ stream_action("critical-dt")(_s_cond_dt_vec(
 stream_action("cond-dt")(_s_cond_dt_vec(
     lambda ctx, cond, cfg: (cond, cfg["duration"])))
 
-def _s_windowed(fn_name):
-    def fn(df, ctx, *params):
+
+def _s_coll_topk(biggest):
+    # batch coll-top/coll-bottom rank with row_number, which streaming
+    # rejects: the streaming form slices a sorted collect_list
+    def fn(df, ctx, cfg):
         from mirabelle_spark import streaming as stx
 
-        cfg = params[-1] if params and isinstance(params[-1], dict) else {}
-        delay = cfg.get("delay", ctx.delay_s)
-        kw = dict(by=list(ctx.by), time_col=ctx.time_col, delay_s=delay)
-        if fn_name in ("top", "bottom"):
-            f = stx.stream_top if fn_name == "top" else stx.stream_bottom
-            return f(df, cfg["duration"], metric_col=ctx.metric_col, **kw)
-        if fn_name == "percentiles":
-            return stx.stream_percentiles(
-                df, cfg["quantiles"], cfg["duration"],
-                metric_col=ctx.metric_col, **kw,
-            )
-        if fn_name == "coll-quotient":
-            return stx.stream_coll_quotient(
-                df, cfg["duration"], metric_col=ctx.metric_col, **kw
-            )
-        if fn_name == "coll-increase":
-            return stx.stream_coll_increase(
-                df, cfg["duration"], metric_col=ctx.metric_col, **kw
-            )
-        if fn_name == "ratio":
-            conds = params[0]
-            return stx.stream_ratio(
-                df, conds[0], conds[1], cfg["duration"],
-                metric_col=ctx.metric_col,
-                use_metric=cfg.get("metric", False), **kw,
-            )
-        if fn_name in ("coll-top", "coll-bottom"):
-            return stx.stream_coll_topk(
-                df, cfg["nb"], cfg["duration"], metric_col=ctx.metric_col,
-                biggest=(fn_name == "coll-top"), **kw,
-            )
-        raise AssertionError(fn_name)
+        return stx.stream_coll_topk(
+            df, cfg["nb"], cfg["duration"], delay_s=cfg.get("delay", ctx.delay_s),
+            by=list(ctx.by), time_col=ctx.time_col, metric_col=ctx.metric_col,
+            biggest=biggest,
+        )
 
     return fn
 
 
-for _n in ("top", "bottom", "ratio", "coll-quotient", "coll-increase",
-           "coll-top", "coll-bottom"):
-    stream_action(_n)(_s_windowed(_n))
-stream_action("percentiles")(_s_windowed("percentiles"))
-stream_action("coll-percentiles")(_s_windowed("percentiles"))
-
-
-@stream_action("coll-sort")
-def _s_coll_sort(df, ctx, f):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_ssort(
-        df, 60.0, f, by=list(ctx.by), delay_s=ctx.delay_s,
-        time_col=ctx.time_col,
-    )
-
-
-@stream_action("project")
-def _s_project(df, ctx, conds, cfg=None):
-    from mirabelle_spark import streaming as stx
-
-    cfg = cfg or {}
-    return stx.stream_project(
-        df, conds, cfg.get("duration", 60.0),
-        delay_s=cfg.get("delay", ctx.delay_s), time_col=ctx.time_col,
-        metric_col=ctx.metric_col, by=list(ctx.by),
-    )
+stream_action("coll-top")(_s_coll_topk(True))
+stream_action("coll-bottom")(_s_coll_topk(False))
 
 
 @stream_action("moving-time-window")
@@ -907,12 +829,6 @@ def _s_not_expired(df, ctx):
         df, by=_need_by(ctx, "not-expired"), time_col=ctx.time_col,
         keep_expired=False, shards=ctx.shards,
     )
-
-
-# every remaining action is either stateless (streaming-transparent)
-# or mapped above; nothing refuses anymore, but keep the mechanism
-# for future batch-only shapes
-_STREAM_UNSUPPORTED: frozenset = frozenset()
 
 
 # -- structural / sinks ----------------------------------------------------
@@ -1025,12 +941,6 @@ def _walk(df: DataFrame, node: dict | list, ctx: Ctx) -> None:
         for child in children:
             _walk(out, child, ctx)
         return
-    if ctx.streaming and name in _STREAM_UNSUPPORTED:
-        raise NotImplementedError(
-            f"action {name!r} has no streaming twin; run it in batch mode "
-            "(its batch realization uses window functions, which "
-            "Structured Streaming rejects)"
-        )
     if name in _UNKEYED_SEQUENTIAL and not ctx.by:
         _LOG.warning(
             "action %r compiled with no `by` keys: the order-dependent "

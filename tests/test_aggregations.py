@@ -72,6 +72,18 @@ def test_percentiles_nearest_rank(make_events):
     assert got == {0.0: 1.0, 0.5: 3.0, 0.75: 4.0, 1.0: 4.0}
 
 
+def test_percentiles_window_of_null_metrics_is_null(make_events):
+    from mirabelle_spark.operators import aggregations as agg
+
+    # the [60, 120) window holds only a null metric: no rank exists
+    df = make_events([
+        {"time": 1, "metric": 2}, {"time": 61, "metric": None},
+    ])
+    p = agg.agg_percentiles(df, [0.0, 1.0], 60.0, time_col="time")
+    got = {(r.window_start, r.quantile): r.metric for r in p.collect()}
+    assert got == {(0.0, 0.0): 2.0, (0.0, 1.0): 2.0, (60.0, 0.0): None, (60.0, 1.0): None}
+
+
 def test_coll_rate_zero_interval(make_events):
     from mirabelle_spark.operators import aggregations as agg
 

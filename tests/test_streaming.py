@@ -30,15 +30,21 @@ def _write_input(path: str) -> list[dict]:
     return rows
 
 
+def _wm(stream, delay_s=0.0, time_col="time"):
+    """The stream watermarked as the DSL does for a windowed action."""
+    return stream.withWatermark(time_col, f"{delay_s} seconds")
+
+
 def test_stream_agg_sum_parity(spark, tmpdir):
     from mirabelle_spark import streaming as stx
+    from mirabelle_spark.operators import aggregations as agg
 
     src_dir = os.path.join(tmpdir, "in")
     _write_input(src_dir)
     schema = "time timestamp, metric double, host string"
     stream = stx.file_source(spark, src_dir, schema)
-    agg = stx.stream_agg(stream, "sum", 60.0, by=["host"], time_col="time")
-    q = stx.to_memory(agg, "sum_test", output_mode="complete")
+    out = agg.agg_sum(_wm(stream), 60.0, by=["host"], time_col="time")
+    q = stx.to_memory(out, "sum_test", output_mode="complete")
     q.awaitTermination(60)
     got = {
         (r.host, r.window_start): r.metric
@@ -53,13 +59,14 @@ def test_stream_agg_sum_parity(spark, tmpdir):
 
 def test_stream_fixed_time_window_parity(spark, tmpdir):
     from mirabelle_spark import streaming as stx
+    from mirabelle_spark.operators import windows as win
 
     src_dir = os.path.join(tmpdir, "in2")
     _write_input(src_dir)
     schema = "time timestamp, metric double, host string"
     stream = stx.file_source(spark, src_dir, schema)
-    win = stx.stream_fixed_time_window(stream, 60.0, delay_s=5.0, time_col="time")
-    q = stx.to_memory(win, "ftw_test", output_mode="complete")
+    out = win.fixed_time_window(_wm(stream, 5.0), 60.0, time_col="time")
+    q = stx.to_memory(out, "ftw_test", output_mode="complete")
     q.awaitTermination(60)
     rows = spark.sql("select * from ftw_test").collect()
     got = {r.window_start: [e.metric for e in r.events] for r in rows}
@@ -407,6 +414,7 @@ def test_watermark_drops_late_event(spark, tmpdir):
     micro-batch carrying an event older than watermark - delay is
     dropped from append output."""
     from mirabelle_spark import streaming as stx
+    from mirabelle_spark.operators import aggregations as agg
 
     src_dir = os.path.join(tmpdir, "late_in")
     out_dir = os.path.join(tmpdir, "late_out")
@@ -416,9 +424,9 @@ def test_watermark_drops_late_event(spark, tmpdir):
     def run_batch():
         schema = "time timestamp, metric double, host string"
         stream = stx.file_source(spark, src_dir, schema)
-        agg = stx.stream_agg(stream, "sum", 60.0, delay_s=30.0, by=["host"])
+        out = agg.agg_sum(_wm(stream, 30.0), 60.0, by=["host"])
         q = (
-            agg.writeStream.format("json").option("path", out_dir)
+            out.writeStream.format("json").option("path", out_dir)
             .outputMode("append")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
@@ -829,8 +837,8 @@ def test_stream_ssort_parity(spark, tmpdir):
     _write_rows(src_dir, rows)
     schema = "time timestamp, metric double, host string"
     stream = stx.file_source(spark, src_dir, schema)
-    out = stx.stream_ssort(
-        stream, 60.0, "metric", by=["host"], payload_cols=["metric"]
+    out = win.ssort(
+        _wm(stream), 60.0, "metric", by=["host"], payload_cols=["metric"]
     )
     q = stx.to_memory(out, "sso_test", output_mode="complete")
     q.awaitTermination(60)
@@ -1158,6 +1166,87 @@ def test_streaming_dsl_windowed_agg(spark, tmpdir):
     assert got == {("a", base): 3.0, ("b", base + 60): 10.0}
 
 
+def test_streaming_dsl_windowed_actions_equal_batch(spark, tmp_path):
+    """Every windowed action compiles to the same rows both ways: the
+    streaming compile runs the batch operator on the watermarked
+    stream. The second micro-batch holds one far-future event that
+    moves the watermark past every data window, so append mode seals
+    them all (the event's own window stays open); the batch compile
+    reads the data rows only. Covers the cases that used to differ:
+    coll-rate (sum ÷ time span), fractional durations and coll-sort's
+    ``events`` column."""
+    from pyspark.sql import functions as F
+
+    from mirabelle_spark.plans.builder import Ctx, compile_stream
+
+    base = 1_704_067_200.0  # 2024-01-01T00:00:00 UTC
+    far = 100_000.0
+    rows = [
+        ("a", 0.0, 4.0, "ok"), ("a", 1.0, 10.0, "error"), ("a", 2.0, 2.0, "ok"),
+        ("a", 4.0, 8.0, "error"), ("a", 7.0, 16.0, "ok"), ("a", 9.0, 5.0, "ok"),
+        ("b", 0.5, 3.0, "ok"), ("b", 3.5, 6.0, "error"), ("b", 5.5, None, "ok"),
+        ("b", 12.0, 1.0, "ok"), ("b", 70.0, 2.0, "ok"), ("z", far, 1.0, "ok"),
+    ]  # b's [5, 10) window holds one null metric: no percentile rank
+    df = spark.createDataFrame(
+        [(h, base + t, m, st) for h, t, m, st in rows],
+        "host string, t double, metric double, state string",
+    ).select(
+        F.timestamp_micros((F.col("t") * 1e6).cast("long")).alias("time"),
+        "metric", "host", "state",
+    )
+    conds = [[":=", "state", "error"], [":=", "state", "ok"]]
+    table = {
+        "w_sum": ("sum", [{"duration": 1.5, "delay": 2}]),
+        "w_mean": ("mean", [{"duration": 5}]),
+        "w_rate": ("rate", [{"duration": 5}]),
+        "w_top": ("top", [{"duration": 5}]),
+        "w_bottom": ("bottom", [{"duration": 5}]),
+        "w_ratio": ("ratio", [conds, {"duration": 5}]),
+        "w_pct": ("percentiles", [{"duration": 5, "quantiles": [0, 0.5, 1]}]),
+        "w_ccount": ("coll-count", [{"duration": 5}]),
+        "w_csum": ("coll-sum", [{"duration": 5}]),
+        "w_cmean": ("coll-mean", [{"duration": 5}]),
+        "w_cmax": ("coll-max", [{"duration": 5}]),
+        "w_cmin": ("coll-min", [{"duration": 5}]),
+        "w_crate": ("coll-rate", [{"duration": 5}]),
+        "w_cpct": ("coll-percentiles", [{"duration": 5, "quantiles": [0.5]}]),
+        "w_cquot": ("coll-quotient", [{"duration": 5}]),
+        "w_cincr": ("coll-increase", [{"duration": 5}]),
+        "w_csort": ("coll-sort", ["metric"]),
+        "w_ftw": ("fixed-time-window", [{"duration": 1.5}]),
+        "w_ssort": ("ssort", [{"duration": 5, "field": "metric"}]),
+        "w_proj": ("project", [conds, {"duration": 5}]),
+        "w_sess": ("sessionize", [{"gap": 3}]),
+    }
+    unkeyed = {"w_rate", "w_ccount", "w_cpct", "w_ftw"}
+
+    def tree(name):
+        node = {
+            "action": table[name][0], "params": table[name][1],
+            "children": [{"action": "tap", "params": ["out"]}],
+        }
+        if name in unkeyed:
+            return node
+        return {"action": "by", "params": [{"fields": ["host"]}], "children": [node]}
+
+    def compiled(src, name, streaming):
+        ctx = Ctx(streaming=streaming, test_mode=True)
+        return compile_stream(src, tree(name), ctx).taps["out"]
+
+    got = _two_batch_runs(
+        spark, tmp_path, df, f"time < timestamp_seconds({base + far})", "wdsl",
+        {name: lambda s, n=name: compiled(s, n, True) for name in table},
+    )
+    data = df.where(F.col("host") != "z")
+    for name in table:
+        exp = compiled(data, name, False)
+        assert spark.table(name).columns == exp.columns, name
+        assert sorted(map(repr, got[name])) == sorted(
+            map(repr, exp.collect())
+        ), name
+        assert got[name], name
+
+
 def test_streaming_dsl_refuses_unkeyed_state_and_unsupported(spark, tmpdir):
     from mirabelle_spark.plans.builder import Ctx, compile_stream
 
@@ -1279,9 +1368,10 @@ def test_stream_coalesce_reference_cases(spark, tmpdir):
 
 
 def test_stream_windowed_agg_twins_parity(spark, tmpdir):
-    """top/bottom/percentiles/coll-quotient/coll-increase/ratio/
-    coll-topk streaming twins match their batch twins over the same
-    finite input (complete mode, sealed tumbling windows)."""
+    """top/bottom/percentiles/coll-quotient/coll-increase/ratio run
+    on a watermarked stream, and the coll-topk streaming twin, match
+    the batch operators over the same finite input (complete mode,
+    sealed tumbling windows)."""
     from datetime import datetime
 
     from mirabelle_spark import streaming as stx
@@ -1321,23 +1411,23 @@ def test_stream_windowed_agg_twins_parity(spark, tmpdir):
 
     cases = [
         ("w_top",
-         lambda s: stx.stream_top(s, 60.0, by=["host"]),
+         lambda s: agg.agg_top(_wm(s), 60.0, by=["host"]),
          lambda d: agg.agg_top(d, 60.0, by=["host"])),
         ("w_bottom",
-         lambda s: stx.stream_bottom(s, 60.0, by=["host"]),
+         lambda s: agg.agg_bottom(_wm(s), 60.0, by=["host"]),
          lambda d: agg.agg_bottom(d, 60.0, by=["host"])),
         ("w_pct",
-         lambda s: stx.stream_percentiles(s, [0, 0.5, 1], 60.0, by=["host"]),
+         lambda s: agg.agg_percentiles(_wm(s), [0, 0.5, 1], 60.0, by=["host"]),
          lambda d: agg.agg_percentiles(d, [0, 0.5, 1], 60.0, by=["host"])),
         ("w_quot",
-         lambda s: stx.stream_coll_quotient(s, 60.0, by=["host"]),
+         lambda s: agg.coll_quotient(_wm(s), 60.0, by=["host"]),
          lambda d: agg.coll_quotient(d, 60.0, by=["host"])),
         ("w_incr",
-         lambda s: stx.stream_coll_increase(s, 60.0, by=["host"]),
+         lambda s: agg.coll_increase(_wm(s), 60.0, by=["host"]),
          lambda d: agg.coll_increase(d, 60.0, by=["host"])),
         ("w_ratio",
-         lambda s: stx.stream_ratio(
-             s, [":=", "state", "error"], [":true"], 60.0, by=["host"]),
+         lambda s: agg.agg_ratio(
+             _wm(s), [":=", "state", "error"], [":true"], 60.0, by=["host"]),
          lambda d: agg.agg_ratio(
              d, [":=", "state", "error"], [":true"], 60.0, by=["host"])),
         ("w_top2",
@@ -1397,7 +1487,7 @@ def test_stream_mtw_project_expired_parity(spark, tmpdir):
         os.path.join(tmpdir, "mtw")
     )
     q = (
-        stx.stream_project(stream, conds, 60.0)
+        win.project(_wm(stream), conds, 60.0)
         .writeStream.format("memory").queryName("proj_t")
         .outputMode("complete").trigger(availableNow=True).start()
     )
@@ -1440,14 +1530,14 @@ def test_stream_ftw_delay_reference_case(spark, tmpdir):
     seals once an event arrives ≥ end + delay; the tail window never
     flushes. Per-event batches reproduce the arrival order (the late
     t=14 event lands inside the still-open [10,20) window)."""
-    from mirabelle_spark import streaming as stx
+    from mirabelle_spark.operators import windows as win
 
     arrivals = [(0, 10), (7, 1), (19, 1), (14, -10), (20, 2), (23, 4),
                 (60, 1), (76, 1)]
     rows = _feed_batches(
         spark, tmpdir, "ftwd",
         [[_ev(t, m)] for t, m in arrivals],
-        lambda s: stx.stream_fixed_time_window(s, 10.0, delay_s=5.0),
+        lambda s: win.fixed_time_window(_wm(s, 5.0), 10.0),
     )
     got = {
         r.window_start: sorted(e.metric for e in r.events) for r in rows
@@ -1491,14 +1581,14 @@ def test_stream_rate_reference_case(spark, tmpdir):
     sealed window; the tail window (event 71) never flushes — the
     divergence vs the reference is only the label (window_start
     instead of last-event time), documented in COVERAGE.md."""
-    from mirabelle_spark import streaming as stx
+    from mirabelle_spark.operators import aggregations as agg
 
     arrivals = [(0, 10), (7, 1), (11, 3), (19, 1), (14, -10), (20, 2),
                 (23, 4), (60, 1), (71, 1)]
     rows = _feed_batches(
         spark, tmpdir, "rater",
         [[_ev(t, m)] for t, m in arrivals],
-        lambda s: stx.stream_agg(s, "rate", 10.0),
+        lambda s: agg.agg_rate(_wm(s), 10.0),
     )
     got = {r.window_start: r.metric for r in rows}
     assert got == {0.0: 0.2, 10.0: 0.3, 20.0: 0.2, 60.0: 0.1}
@@ -1891,11 +1981,10 @@ def test_metrics_endpoint_per_stream_timers(spark, tmpdir):
 
 
 def test_stream_sessionize_parity(spark, tmp_path):
-    """Batch sessionize vs the streaming twin on availableNow:
-    identical sessions (start/end/µs interval math, count,
-    decimal-exact metric sum)."""
+    """Batch sessionize vs the same operator on a watermarked stream
+    on availableNow: identical sessions (start/end/µs interval math,
+    count, decimal-exact metric sum)."""
     from mirabelle_spark.operators import windows as win
-    from mirabelle_spark.streaming import core
 
     rows = [
         (1, 0.0, 1.0), (1, 10.0, 2.0), (1, 100.0, 3.0),   # 2 sessions @gap 30
@@ -1914,7 +2003,7 @@ def test_stream_sessionize_parity(spark, tmp_path):
     st = spark.readStream.schema(
         spark.read.parquet(src_dir).schema
     ).parquet(src_dir)
-    out = core.stream_sessionize(st, 30.0, by=["user_id"], time_col="time", metric_col="value")
+    out = win.sessionize(_wm(st), 30.0, by=["user_id"], time_col="time", metric_col="value")
     q = (
         out.writeStream.format("memory").queryName("sess_parity")
         .option("checkpointLocation", str(tmp_path / "ck"))

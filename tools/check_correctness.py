@@ -7,18 +7,24 @@ sorted by name) — stricter than the driver's order-insensitive
 value hash, so green here implies green there.
 
 Usage: python tools/check_correctness.py [name ...]
+
+``--plans [name ...]`` prints each query's optimized logical plan
+instead, expression ids (``#123``) stripped, so the output of two
+checkouts diffs clean when a change leaves the batch plans alone.
 """
 
 from __future__ import annotations
 
 import math
 import os
+import re
 import sys
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -47,9 +53,7 @@ def canon(df: pd.DataFrame) -> list[tuple]:
     return sorted(rows)
 
 
-def main(names: list[str] | None = None) -> int:
-    import __spark_entry__ as entry_mod
-
+def _session():
     if os.environ.get("HOSTILE"):
         # driver-like session: vanilla confs (ANSI on by default in
         # Spark 4), 200 shuffle partitions, non-UTC timezone — catches
@@ -64,10 +68,27 @@ def main(names: list[str] | None = None) -> int:
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("WARN")
-    else:
-        from mirabelle_spark.session import get_spark
+        return spark
+    from mirabelle_spark.session import get_spark
 
-        spark = get_spark(cpus=8)
+    return get_spark(cpus=8)
+
+
+def plans(names: list[str] | None = None) -> int:
+    import __spark_entry__ as entry_mod
+
+    spark = _session()
+    qs = entry_mod.queries()
+    for name in names or list(qs):
+        plan = qs[name](spark, SF_DIR)._jdf.queryExecution().optimizedPlan()
+        print(f"== {name}\n{re.sub(r'#[0-9]+', '', plan.toString())}")
+    return 0
+
+
+def main(names: list[str] | None = None) -> int:
+    import __spark_entry__ as entry_mod
+
+    spark = _session()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -134,4 +155,6 @@ def main(names: list[str] | None = None) -> int:
 
 
 if __name__ == "__main__":
+    if sys.argv[1:2] == ["--plans"]:
+        sys.exit(plans(sys.argv[2:] or None))
     sys.exit(main(sys.argv[1:] or None))
