@@ -345,7 +345,7 @@ def _cap_buckets(
 
     Why dropping is the right call at 100 TB: a real corpus has
     exact-copy/boilerplate cliques (mirrors, templated pages) whose
-    band buckets hold 10^4-10^6 ids — O(b²) pair emission from a
+    band buckets hold 10^4-10^6 ids — O(b²) pair output from a
     single bucket is the classic LSH job-killer, and those pairs are
     near-duplicates of cliques exact dedup upstream already collapses
     (clean_corpus runs dedup_exact first for exactly this reason). A
@@ -917,7 +917,7 @@ def simhash_near_dups(
     # SELF-JOIN on (piece_id, piece_value), deliberately NOT the
     # bucket-groupBy used for MinHash bands: max_hamming=8 means
     # 64/9 ≈ 7-bit pieces, so piece buckets hold hundreds-to-
-    # thousands of docs, and a collect_set + array pair emission
+    # thousands of docs, and a collect_set + array pair expansion
     # materializes each bucket's full O(n²) pair array in one task
     # (measured 27 s vs 1.5 s at sf0.1). The join streams the same
     # quadratic probe without materializing it. MinHash keeps the

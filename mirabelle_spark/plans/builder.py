@@ -469,10 +469,8 @@ action("changed")(
 )
 action("ddt")(lambda df, ctx: st.ddt(df, metric_col=ctx.metric_col, **_stk(ctx)))
 action("ddt-pos")(lambda df, ctx: st.ddt_pos(df, metric_col=ctx.metric_col, **_stk(ctx)))
-# optional cfg ({"emission": ...}) is a streaming-tier knob; the
-# batch op is per-event by construction and ignores it
-action("smax")(lambda df, ctx, cfg=None: st.smax(df, metric_col=ctx.metric_col, **_stk(ctx)))
-action("smin")(lambda df, ctx, cfg=None: st.smin(df, metric_col=ctx.metric_col, **_stk(ctx)))
+action("smax")(lambda df, ctx: st.smax(df, metric_col=ctx.metric_col, **_stk(ctx)))
+action("smin")(lambda df, ctx: st.smin(df, metric_col=ctx.metric_col, **_stk(ctx)))
 action("above-dt")(
     lambda df, ctx, cfg: st.above_dt(
         df, cfg["threshold"], cfg["duration"], metric_col=ctx.metric_col, **_stk(ctx)
@@ -702,28 +700,23 @@ def _s_changed(df, ctx, cfg):
 
 
 @stream_action("smax")
-def _s_smax(df, ctx, cfg=None):
+def _s_smax(df, ctx):
     from mirabelle_spark import streaming as stx
 
-    kw = dict(by=_need_by(ctx, "smax"), time_col=ctx.time_col,
-              metric_col=ctx.metric_col)
-    if cfg and cfg.get("emission") == "per-batch":
-        # pure-JVM max_by tier: one best-so-far per key per touched
-        # micro-batch (update mode) — the 1M-key scale path (PERF
-        # §43); default stays the reference's per-event emission
-        return stx.stream_smax_jvm(df, **kw)
-    return stx.stream_smax(df, shards=ctx.shards, **kw)
+    return stx.stream_smax(
+        df, by=_need_by(ctx, "smax"), time_col=ctx.time_col,
+        metric_col=ctx.metric_col, shards=ctx.shards,
+    )
 
 
 @stream_action("smin")
-def _s_smin(df, ctx, cfg=None):
+def _s_smin(df, ctx):
     from mirabelle_spark import streaming as stx
 
-    kw = dict(by=_need_by(ctx, "smin"), time_col=ctx.time_col,
-              metric_col=ctx.metric_col)
-    if cfg and cfg.get("emission") == "per-batch":
-        return stx.stream_smin_jvm(df, **kw)
-    return stx.stream_smin(df, shards=ctx.shards, **kw)
+    return stx.stream_smin(
+        df, by=_need_by(ctx, "smin"), time_col=ctx.time_col,
+        metric_col=ctx.metric_col, shards=ctx.shards,
+    )
 
 
 def _s_ddt_any(name, remove_neg):
@@ -807,7 +800,7 @@ def _s_mtw(df, ctx, cfg):
 
     return stx.stream_moving_time_window(
         df, cfg["duration"], by=_need_by(ctx, "moving-time-window"),
-        time_col=ctx.time_col,
+        time_col=ctx.time_col, shards=ctx.shards,
     )
 
 

@@ -380,14 +380,8 @@ SPECS: dict[str, Sig] = {
                                      opt={"init": any_value}))),
     "ddt": Sig(),
     "ddt-pos": Sig(),
-    # optional config is a BEYOND-REFERENCE streaming knob:
-    # {"emission": "per-batch"} routes to the pure-JVM max_by tier
-    # (one best-so-far per key per micro-batch, update mode) instead
-    # of the per-event twin — the 1M-key scale path (PERF §43)
-    "smax": Sig(optional=(("config", config(
-        {}, opt={"emission": one_of("per-event", "per-batch")})),)),
-    "smin": Sig(optional=(("config", config(
-        {}, opt={"emission": one_of("per-event", "per-batch")})),)),
+    "smax": Sig(),
+    "smin": Sig(),
     "above-dt": Sig(("config", config({"threshold": number, **_DUR}))),
     "below-dt": Sig(("config", config({"threshold": number, **_DUR}))),
     "between-dt": Sig(("config", config({"low": number, "high": number,

@@ -16,9 +16,7 @@ from mirabelle_spark.streaming.core import (  # noqa: F401
     stream_moving_event_window,
     stream_moving_time_window,
     stream_smax,
-    stream_smax_jvm,
     stream_smin,
-    stream_smin_jvm,
     stream_stable,
     stream_throttle,
     stream_zscore,

@@ -622,22 +622,35 @@ def reinject_source(spark: SparkSession, topic_dir: str, schema: str) -> DataFra
 # constant ``_UNKEYED_COL``: one key in one shard.
 #
 # The shell owns the carry's format: one ``carry BINARY`` state per
-# shard holding the pickled {"c": carry, "n": N[, "t": seen]} blob
-# (protocol 5, the serializer PySpark itself moves every GroupState
-# with). A fold stores cells exactly as pandas hands them
-# (``Series.tolist()``/``.iloc``: float, int, str, bytes, Decimal,
+# shard holding the pickled {"c": carry, "n": N, "v": layout[, "t":
+# seen]} blob (protocol 5, the serializer PySpark itself moves every
+# GroupState with). A fold stores cells exactly as pandas hands them
+# (``Series.tolist()``: float, int, str, bytes, Decimal,
 # pd.Timestamp, pd.Timedelta, date, ndarray, tuples) and encodes
 # nothing, so a fold's per-key operation sequence is the same for
-# every column dtype. The batch twin (``_keyed_fold_batch``) is the
-# same fold with an empty carry: a sorted table partition is one more
-# key group. Key identity is Spark's groupBy identity in both shells:
-# a null key is a key of its own, a NaN key another, -0.0 is 0.0.
+# every column dtype. The row-buffer folds (smax, stable, the event
+# windows, coalesce) keep whole rows, and a buffered row has one
+# form: the tuple of its cells in the fold's input column order
+# (``_buffer_rows``); they build their output through
+# ``_emit_rows``. ``"v"`` is ``_CARRY_LAYOUT``, the version of what
+# the folds keep in ``"c"``: a blob with another version, or none,
+# raises at restart instead of being misread (an older smax carry
+# would unpack into the new one's shape). The batch twin
+# (``_keyed_fold_batch``) is the same fold with an empty carry: a
+# sorted table partition is one more key group. Key identity is
+# Spark's groupBy identity in both shells: a null key is a key of its
+# own, a NaN key another, -0.0 is 0.0.
 
 _SHARD_COL = "__shard__"
 _UNKEYED_COL = "__g__"  # the one constant key of an unkeyed fold
 _NULL_KEY = "\x00null"
 _NAN_KEY = "NaN"
 _KEY_SEP = "\x1f"
+# the carry layout version the blob records as "v": bump it whenever
+# a fold changes what it keeps per key (2: row-buffer folds keep cell
+# tuples; the unversioned layout before kept row dicts and columnar
+# maps)
+_CARRY_LAYOUT = 2
 
 # stream_ewma: key runs longer than this take the scalar loop — the
 # vectorized stepper costs O(max run) numpy dispatches per batch, so
@@ -785,6 +798,40 @@ def _keep_segments(keys, starts, keep):
     return [keys[i] for i in seg[first].tolist()], first
 
 
+def _buffer_rows(pdf, pos=None):
+    """Buffered rows of a slice, all of them or those at positions
+    ``pos``: per row the tuple of its cells in column order, the cells
+    ``Series.tolist()`` hands out (what ``pdf.itertuples(index=False,
+    name=None)`` yields)."""
+    src = pdf if pos is None else pdf.take(pos)
+    return list(zip(*[s.tolist() for _, s in src.items()]))
+
+
+def _emit_rows(pdf, pos, carried):
+    """A fold's output rows in order: ``pos[q] >= 0`` is row ``pos[q]``
+    of the slice ``pdf``, ``-1`` the next buffered row of ``carried``
+    (``_buffer_rows`` tuples from the carry). The slice rows are one
+    positional gather; buffered rows become one frame whose columns
+    pandas types from their cells."""
+    import numpy as np
+    import pandas as pd
+
+    pos = np.asarray(pos, dtype=np.int64)
+    if not carried:
+        return pdf.take(pos)
+    old = pd.DataFrame(carried, columns=pdf.columns)
+    batch = pos >= 0
+    nb = int(batch.sum())
+    if not nb:
+        return old
+    # concat row r holds the r-th batch row, then the buffered ones:
+    # map each output row to its concat row
+    at = np.empty(len(pos), dtype=np.int64)
+    at[batch] = np.arange(nb)
+    at[~batch] = np.arange(nb, len(pos))
+    return pd.concat([pdf.take(pos[batch]), old], ignore_index=True).take(at)
+
+
 def _keyed_fold_scan(
     df, by, time_col, shards, fold, extra_out=None, state_ttl_s=None,
     out_schema=None,
@@ -800,9 +847,9 @@ def _keyed_fold_scan(
     starts, pdf)`` runs with the routing columns dropped. ``fold``
     mutates ``carry`` and returns the output rows; it never sees an
     empty slice. ``extra_out`` appends DDL columns the fold adds
-    (e.g. zscore); ``out_schema`` replaces the whole output DDL
-    (window emission). Emitted rows show a NaN key as null: PySpark's
-    pandas→Arrow conversion turns a float NaN into null.
+    (e.g. zscore); ``out_schema`` replaces the whole output DDL (one
+    row per fixed event window). Output rows show a NaN key as null:
+    PySpark's pandas→Arrow conversion turns a float NaN into null.
 
     ``state_ttl_s`` is the fork GC (the reference's :fork-ttl) and
     needs no watermark: the shell tracks each key's last event time
@@ -811,12 +858,13 @@ def _keyed_fold_scan(
     event time); a key whose gap since its last event exceeds the ttl
     folds from scratch.
 
-    The blob records the shard count ``"n"``. A restart under another
-    count would route most keys to shards that never saw them and
-    silently restart their state, so a blob whose ``"n"`` differs
-    raises; a blob without ``"n"`` (written before the count was
-    recorded) is taken as it is. Only this shell writes the blob it
-    unpickles: a checkpoint with another state layout fails at
+    The blob records the carry layout version ``"v"`` and the shard
+    count ``"n"``, and a restart raises on either mismatch instead of
+    folding on: a blob of another layout, or of none (written before
+    the version was recorded), would be misread, and under another
+    shard count most keys would route to shards that never saw them
+    and silently restart their state. Only this shell writes the blob
+    it unpickles: a checkpoint with another state layout fails at
     restart with Spark's state schema check —
     STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE for per-key state groups,
     STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE for another state value
@@ -847,8 +895,17 @@ def _keyed_fold_scan(
         if not chunks:
             return
         pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        blob = pickle.loads(state.get[0]) if state.exists else {"c": {}}
-        if blob.setdefault("n", n_shards) != n_shards:
+        blob = (
+            pickle.loads(state.get[0]) if state.exists
+            else {"c": {}, "n": n_shards, "v": _CARRY_LAYOUT}
+        )
+        if blob.get("v") != _CARRY_LAYOUT:
+            raise ValueError(
+                f"keyed state was written in carry layout version "
+                f"{blob.get('v')} but this code reads version "
+                f"{_CARRY_LAYOUT}; a changed layout needs a new checkpoint"
+            )
+        if blob["n"] != n_shards:
             raise ValueError(
                 f"keyed state was written with {blob['n']} shards but the "
                 f"query now runs {n_shards} shards; a changed shard count "
@@ -1105,63 +1162,39 @@ def stream_smax(
     metric_col: str = "metric",
     shards: int | None = None,
 ) -> DataFrame:
-    """Streaming smax (action.clj:2742-2772): per input event emit
-    the best-so-far event of its key; strict > keeps the first
-    winner on ties (:func:`stream_smax_jvm` is the per-batch-grain
-    alternative). The stored-best row carries as one dict of cells per
-    key, the fold walks the slice with one carry reload per key
-    segment, and the output materializes as two positional gathers
-    (batch-sourced winners + carry-sourced re-emits) merged back into
-    event order — no per-event dict building. ``shards`` sets the
-    shard count (see ``_keyed_fold_scan``)."""
+    """Streaming smax (action.clj:2742-2772): per input event output
+    the best-so-far event of its key; strict > keeps the first winner
+    on ties. The carry holds (best metric, best row) per key; the fold
+    walks the slice with one carry reload per key segment, noting per
+    event the batch position of its best, or -1 while the carried best
+    still holds, and ``_emit_rows`` builds the output from those.
+    ``shards`` sets the shard count (see ``_keyed_fold_scan``)."""
     import numpy as np
-    import pandas as pd
 
     def fold(carry, keys, starts, pdf):
-        cols = list(pdf.columns)
-        raw = _RawCols(pdf)
-        v = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan)
+        v = pdf[metric_col].to_numpy(dtype="float64", na_value=np.nan).tolist()
         ends = np.append(starts[1:], len(pdf))
-        emit: list = []  # ("b", idx) batch winner | ("o", dict) carried best
+        pos: list = []
+        carried: list = []
+        won: dict = {}  # key -> batch position of its best at slice end
         for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
             st = carry.get(k)
-            if st is None:
-                have = False
-                best_v = -np.inf
-                best_ref = None
-            else:
-                have = True
-                best_v = -np.inf if st["m"] is None else float(st["m"])
-                best_ref = ("o", st["b"])
+            best = None if st is None else -1
+            best_v = -np.inf if st is None or st[0] is None else st[0]
             for i in range(s0, e0):
                 x = v[i]
-                if not have or (x == x and x > best_v):
-                    best_ref = ("b", i)
-                    have = True
+                if best is None or (x == x and x > best_v):
+                    best = i
                     if x == x:
                         best_v = x
-                emit.append(best_ref)
-            # save state: winner row serialized once per batch per key
-            if best_ref is not None and best_ref[0] == "b":
-                i = best_ref[1]
-                carry[k] = {
-                    "m": None if v[i] != v[i] else float(v[i]),
-                    "b": raw.row(cols, i),
-                }
-        b_pos = [p for p, e in enumerate(emit) if e[0] == "b"]
-        o_pos = [p for p, e in enumerate(emit) if e[0] == "o"]
-        frames = []
-        if b_pos:
-            frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
-        if o_pos:
-            odf = pd.DataFrame(
-                {c: [emit[p][1][c] for p in o_pos] for c in cols}, columns=cols
-            )
-            frames.append(odf)
-        if len(frames) == 1:
-            return frames[0]
-        out = pd.concat(frames, ignore_index=True)
-        return out.iloc[np.argsort(np.asarray(b_pos + o_pos), kind="stable")]
+                pos.append(best)
+                if best < 0:
+                    carried.append(st[1])
+            if best >= 0:
+                won[k] = best
+        for (k, i), row in zip(won.items(), _buffer_rows(pdf, list(won.values()))):
+            carry[k] = (None if v[i] != v[i] else v[i], row)
+        return _emit_rows(pdf, pos, carried)
 
     return _keyed_fold_scan(df, by, time_col, shards, fold)
 
@@ -1250,16 +1283,17 @@ def stream_stable(
     an unconfirmed buffer (flap suppression). Out-of-order events
     (time < the key's running max) are dropped, like the reference.
 
-    Each key's unconfirmed-run buffer carries as PARALLEL COLUMN
-    ARRAYS ({col: [values]}) instead of dict-per-row (VERDICT r7 ask
-    #1a). Python work per batch is O(value-runs), not O(rows): run
-    boundaries come from one vectorized null-safe shift compare,
-    confirmation points from searchsorted, confirmed-run emission
-    from slice coalescing (one concat at the end), and only
-    UNCONFIRMED rows (the flap buffer) are copied into the carry.
-    ``shards`` sets the shard count (see ``_keyed_fold_scan``)."""
+    The carry per key is ``[max_us, has, value, flip_us, confirmed,
+    buffer]``, the buffer being the unconfirmed run's rows
+    (``_buffer_rows`` tuples). Python work per batch is O(value-runs),
+    not O(rows): run boundaries come from one vectorized null-safe
+    shift compare, confirmation points from searchsorted, and
+    confirmed runs go out as position ranges of the slice. Only a
+    key's last run, if still unconfirmed, is copied into the carry:
+    an earlier unconfirmed run of the slice is always followed by a
+    value change that drops it. ``shards`` sets the shard count (see
+    ``_keyed_fold_scan``)."""
     import numpy as np
-    import pandas as pd
 
     dt_us = int(round(dt_s * 1_000_000))
 
@@ -1281,11 +1315,9 @@ def stream_stable(
         keep = np.ones(n, dtype=bool)
         for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
             st = carry.get(k)
-            if st is not None and st["s"][0] is not None:
-                keep[s0:e0] = t[s0:e0] >= st["s"][0]
-                st["s"][0] = max(st["s"][0], int(t[e0 - 1]))
-            elif st is not None:
-                st["s"][0] = int(t[e0 - 1])
+            if st is not None:
+                keep[s0:e0] = t[s0:e0] >= st[0]
+                st[0] = max(st[0], int(t[e0 - 1]))
         if not keep.all():
             pdf = pdf[keep].reset_index(drop=True)
             keys, starts = _keep_segments(keys, starts, keep)
@@ -1303,62 +1335,52 @@ def stream_stable(
         rends = np.append(rstarts[1:], n)
         rsegs = _segment_ids(starts, n)[rstarts]
         vals = fs.tolist()
-        cols = list(pdf.columns)
-        raw = _RawCols(pdf)
 
-        parts: list = []  # ordered mix of (i, j) slices and DataFrames
-
-        def emit_slice(i, j):
-            if parts and isinstance(parts[-1], list) and parts[-1][1] == i:
-                parts[-1][1] = j  # coalesce adjacent confirmed slices
-            else:
-                parts.append([i, j])
-
+        out = np.zeros(n, dtype=bool)  # confirmed slice rows
+        carried: list = []  # flushed buffered rows, in output order
+        flush_at: list = []  # per flushed row: the slice row it precedes
+        tail: dict = {}  # segment -> (state, run) buffered at slice end
         cur = -1  # segment of the runs being walked
         st = None
         for i, j, g in zip(rstarts.tolist(), rends.tolist(), rsegs.tolist()):
             if g != cur:
                 if cur >= 0:
                     carry[keys[cur]] = st
-                st = carry.get(keys[g])
-                if st is None:
-                    # s = [max_us, has, value, flip_us, confirmed]; the
-                    # max spans the FULL key segment (set above only
-                    # for existing states)
-                    st = {"s": [int(t[ends[g] - 1]), False, None, None, False],
-                          "b": None}
+                # the max spans the FULL key segment (set above only
+                # for existing states)
+                st = carry.get(keys[g]) or [
+                    int(t[ends[g] - 1]), False, None, None, False, []
+                ]
                 cur = g
             v = vals[i]
-            if not (st["s"][1] and _eq(v, st["s"][2])):
-                st["s"][1] = True
-                st["s"][2] = v
-                st["s"][3] = int(t[i])
-                st["s"][4] = False
-                st["b"] = None
-            if not st["s"][4]:
-                thresh = st["s"][3] + dt_us
+            if not (st[1] and _eq(v, st[2])):
+                st[1:] = [True, v, int(t[i]), False, []]
+                tail.pop(g, None)
+            if not st[4]:
+                thresh = st[3] + dt_us
                 kk = i + int(np.searchsorted(t[i:j], thresh, side="right"))
-                if kk == j:  # run not yet stable: buffer the segment
-                    if st["b"] is None:
-                        st["b"] = {c: [] for c in cols}
-                    for c in cols:
-                        st["b"][c].extend(raw.slice(c, i, j))
-                else:  # confirmed at kk: flush buffer + whole segment
-                    st["s"][4] = True
-                    if st["b"] is not None and next(iter(st["b"].values())):
-                        parts.append(pd.DataFrame(st["b"], columns=cols))
-                    st["b"] = None
-                    emit_slice(i, j)
-            else:
-                emit_slice(i, j)
+                if kk == j:  # run not yet stable: buffer it
+                    tail[g] = (st, i, j)
+                    continue
+                # confirmed at kk: flush buffer + whole run
+                st[4] = True
+                carried.extend(st[5])
+                flush_at.extend([i] * len(st[5]))
+                st[5] = []
+            out[i:j] = True
         if cur >= 0:
             carry[keys[cur]] = st
-        if not parts:
-            return pdf.iloc[0:0]
-        frames = [
-            pdf.iloc[p[0]:p[1]] if isinstance(p, list) else p for p in parts
-        ]
-        return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+        if tail:
+            rows = _buffer_rows(pdf, np.concatenate(
+                [np.arange(i, j) for _, i, j in tail.values()]))
+            o = 0
+            for buf_st, i, j in tail.values():
+                buf_st[5].extend(rows[o:o + j - i])
+                o += j - i
+        pos = np.flatnonzero(out)
+        if carried:
+            pos = np.insert(pos, np.searchsorted(pos, flush_at), -1)
+        return _emit_rows(pdf, pos, carried)
 
     return _keyed_fold_scan(df, by, time_col, shards, fold)
 
@@ -1385,10 +1407,10 @@ def stream_fixed_event_window(
 
     Events are processed in event-time order within a micro-batch
     (per-event batches degrade gracefully to the reference's arrival
-    order, which its out-of-order deftest relies on). Each key's
-    partial window carries COLUMNAR ({col: [...]}); batch rows are
-    referenced by position and serialize at most once — when they
-    emit into a window or remain buffered at batch end. ``shards``
+    order, which its out-of-order deftest relies on). The carry per
+    key is (last event µs, partial window), the window's rows being
+    ``_buffer_rows`` tuples; a full window's ``events`` array takes
+    them as they are, as structs in input column order. ``shards``
     sets the shard count (see ``_keyed_fold_scan``).
     """
     import numpy as np
@@ -1396,78 +1418,94 @@ def stream_fixed_event_window(
 
     ttl_us = int(round(fork_ttl_s * 1_000_000)) if fork_ttl_s else None
     key_cols = list(by)
-    ev_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
     by_struct = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
         if f.name in by
     )
-    out_schema = (
-        f"{by_struct}, window_start double, events array<struct<{ev_struct}>>"
-    )
+    out_schema = f"{by_struct}, window_start double, {_events_out(df)}"
 
     def fold(carry, keys, starts, pdf):
         cols = list(pdf.columns)
-        out_rows: list = []
-        raw = _RawCols(pdf)
-        t = _series_us(pdf[time_col])
+        t_at = cols.index(time_col)
+        key_at = [cols.index(c) for c in key_cols]
+        rows = _buffer_rows(pdf)
+        t = _series_us(pdf[time_col]).tolist()
         ends = np.append(starts[1:], len(pdf))
+        out_rows: list = []
         for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
-            st = carry.get(k)
-            if st is None:
-                last_us = None
-                buf: list = []
-            else:
-                last_us = st["l"]
-                bc = st["b"]
-                blen = len(next(iter(bc.values()))) if bc else 0
-                buf = [
-                    {c: bc[c][x] for c in cols} for x in range(blen)
-                ]
-            keyvals = {c: pdf.iloc[s0][c] for c in key_cols}
+            last_us, buf = carry.get(k, (None, []))
+            keyvals = [rows[s0][c] for c in key_at]
             for i in range(s0, e0):
-                ti = int(t[i])
                 if (
                     ttl_us is not None
                     and last_us is not None
-                    and ti - last_us > ttl_us
+                    and t[i] - last_us > ttl_us
                 ):
                     buf = []  # stale fork: GC dropped it pre-event
-                buf.append(i)
-                last_us = ti
+                buf.append(rows[i])
+                last_us = t[i]
                 if len(buf) == n:
-                    evs = [
-                        e if isinstance(e, dict) else raw.row(cols, e)
-                        for e in buf
-                    ]
-                    first = evs[0][time_col]
+                    first = buf[0][t_at]
                     start = (
                         first.timestamp()
                         if hasattr(first, "timestamp")
                         else float(first)
                     )
-                    out_rows.append(
-                        {**keyvals, "window_start": start, "events": evs}
-                    )
+                    out_rows.append((*keyvals, start, buf))
                     buf = []
-            rest = [
-                e if isinstance(e, dict) else raw.row(cols, e)
-                for e in buf
-            ]
-            carry[k] = {
-                "l": last_us,
-                "b": {c: [e[c] for e in rest] for c in cols} if rest else {},
-            }
-        if not out_rows:
-            return pd.DataFrame(
-                columns=key_cols + ["window_start", "events"]
-            )
-        return pd.DataFrame(out_rows)
+            carry[k] = (last_us, buf)
+        return pd.DataFrame(
+            out_rows, columns=key_cols + ["window_start", "events"]
+        )
 
     return _keyed_fold_scan(
         df, by, time_col, shards, fold, out_schema=out_schema
     )
+
+
+def _trailing_fold(time_col, trim):
+    """The trailing-buffer fold of moving-event-window and
+    moving-time-window: per event, append its row to the key's buffer,
+    cut the buffer with ``trim(buffer, t_us)`` (a list of (event µs,
+    row) pairs, oldest first; the new event is last) and add the
+    buffer's rows as the event's ``events`` array — structs in input
+    column order. The carry per key is the buffer's rows
+    (``_buffer_rows`` tuples); their times are read back from the time
+    cells with the batch rows' conversion."""
+    import numpy as np
+    import pandas as pd
+
+    def fold(carry, keys, starts, pdf):
+        t_at = list(pdf.columns).index(time_col)
+        rows = _buffer_rows(pdf)
+        t = _series_us(pdf[time_col]).tolist()
+        olds = [carry.get(k, []) for k in keys]
+        old_t = iter(_series_us(pd.Series(
+            [r[t_at] for rs in olds for r in rs], dtype=pdf[time_col].dtype
+        )).tolist())
+        events: list = [None] * len(rows)
+        ends = np.append(starts[1:], len(rows))
+        for k, old, s0, e0 in zip(keys, olds, starts.tolist(), ends.tolist()):
+            buf = [(next(old_t), r) for r in old]
+            for i in range(s0, e0):
+                buf.append((t[i], rows[i]))
+                buf = trim(buf, t[i])
+                events[i] = [r for _, r in buf]
+            carry[k] = events[e0 - 1]
+        out = pdf.copy()
+        out["events"] = events
+        return out
+
+    return fold
+
+
+def _events_out(df):
+    """DDL of an ``events`` array column holding ``df``'s rows as
+    structs."""
+    ev_struct = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+    )
+    return f"events array<struct<{ev_struct}>>"
 
 
 def stream_moving_event_window(
@@ -1478,41 +1516,15 @@ def stream_moving_event_window(
     shards: int | None = None,
 ) -> DataFrame:
     """Streaming ``moving-event-window`` (action.clj:1219-1246): on
-    every event, emit the trailing ``n`` events of its key as an
-    ``events`` array — the keyed-state sliding buffer, emitted
-    per-row like the batch twin's collect_list window. Emission cost
-    is O(rows·n) dict lists (the output shape demands it). ``shards``
-    sets the shard count (see ``_keyed_fold_scan``)."""
-    import numpy as np
-
-    ev_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    extra_out = f"events array<struct<{ev_struct}>>"
-
-    def fold(carry, keys, starts, pdf):
-        cols = list(pdf.columns)
-        events_col: list = [None] * len(pdf)
-        raw = _RawCols(pdf)
-        ends = np.append(starts[1:], len(pdf))
-        for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
-            bc = carry.get(k)
-            if bc:
-                blen = len(next(iter(bc.values())))
-                buf = [{c: bc[c][x] for c in cols} for x in range(blen)]
-            else:
-                buf = []
-            for i in range(s0, e0):
-                buf.append(raw.row(cols, i))
-                buf = buf[-n:]
-                events_col[i] = list(buf)
-            carry[k] = {c: [e[c] for e in buf] for c in cols} if buf else {}
-        out = pdf.copy()
-        out["events"] = events_col
-        return out
-
+    every event, add the trailing ``n`` events of its key as an
+    ``events`` array, like the batch twin's collect_list window — the
+    ``_trailing_fold`` keeping the last ``n`` rows. Output cost is
+    O(rows·n) (the output shape demands it). ``shards`` sets the shard
+    count (see ``_keyed_fold_scan``)."""
     return _keyed_fold_scan(
-        df, by, time_col, shards, fold, extra_out=extra_out
+        df, by, time_col, shards,
+        _trailing_fold(time_col, lambda buf, t_us: buf[-n:]),
+        extra_out=_events_out(df),
     )
 
 
@@ -1584,73 +1596,42 @@ def stream_coalesce(
     event.clj:12-19: state == "expired" or age > ttl (default 120 s).
 
     Without ``by`` this is the reference's single global coalesce:
-    one tick clock, one key in one shard.
-    Each key's buffer carries COLUMNAR, with batch rows referenced by
-    POSITION until the end of the batch: the per-event loop touches
-    only scalars/tuples (tick clock, dict upsert, expiry compare) —
-    no dict-per-row building; the rows still buffered at the end of
-    the batch are copied into the carry once, and emission is
-    two positional gathers (batch-sourced + carry-sourced) merged
-    back into flush order. ``shards`` sets the shard count (see
-    ``_keyed_fold_scan``).
+    one tick clock, one key in one shard. The carry per key is
+    ``(tick clock, last flush, {fields: (event µs, max age µs, row)})``,
+    the rows being ``_buffer_rows`` tuples and the max age the one
+    expiry needs (-1 for state == "expired"). Within a batch a kept
+    entry refers to its batch row by POSITION, so the per-event loop
+    touches only scalars and tuples; the batch rows still kept at the
+    end of the batch are copied into the carry once. ``shards`` sets
+    the shard count (see ``_keyed_fold_scan``).
     """
     import json as _json
 
     import numpy as np
-    import pandas as pd
 
     dur_us = int(round(duration_s * 1_000_000))
     default_ttl_us = int(round(default_ttl_s * 1_000_000))
-    has_ttl_col = ttl_col in df.columns
-    has_state_col = state_col in df.columns
 
     def fold(carry, keys, starts, pdf):
         n = len(pdf)
         t = _series_us(pdf[time_col])
         null_t = pdf[time_col].isna().to_numpy(dtype=bool)
-        cols = list(pdf.columns)
         f_arrs = [pdf[f].tolist() for f in fields]
-        st_arr = pdf[state_col].tolist() if has_state_col else None
-        ttl_arr = (
-            pdf[ttl_col].to_numpy(dtype="float64", na_value=np.nan)
-            if has_ttl_col
-            else None
-        )
+        # per row, the age past which it is expired: its ttl in µs, or
+        # -1 for state == "expired" (the tick clock is never behind a
+        # kept event, so such a row is always expired)
+        age = np.full(n, default_ttl_us, dtype=np.int64)
+        if ttl_col in pdf.columns:
+            ttl = pdf[ttl_col].to_numpy(dtype="float64", na_value=np.nan)
+            has = ttl == ttl
+            age[has] = np.round(ttl[has] * 1_000_000)
+        if state_col in pdf.columns:
+            age[(pdf[state_col] == "expired").to_numpy(dtype=bool)] = -1
+        age = age.tolist()
 
-        def batch_expired(i, ti, ct):
-            if st_arr is not None and st_arr[i] == "expired":
-                return True
-            ttl_us = default_ttl_us
-            if ttl_arr is not None and ttl_arr[i] == ttl_arr[i]:
-                ttl_us = int(round(float(ttl_arr[i]) * 1_000_000))
-            return ct - ti > ttl_us
-
-        def old_expired(store, idx, ti, ct):
-            if has_state_col and store[state_col][idx] == "expired":
-                return True
-            ttl_us = default_ttl_us
-            ttl = store[ttl_col][idx] if has_ttl_col else None
-            if ttl is not None and ttl == ttl:
-                ttl_us = int(round(float(ttl) * 1_000_000))
-            return ct - ti > ttl_us
-
-        raw = _RawCols(pdf)
-        emit: list = []  # (src 0=batch/1=old_of_key, row idx, store ref)
-        live: dict = {}  # key -> [ct, lt, buf{ftk: [src, idx, t_us]}, store]
-
-        def _load(k):
-            c = carry.get(k)
-            if c is None:
-                cur = [0, None, {}, None]
-            else:
-                store = c["bc"]
-                buf = {
-                    fk: [1, x, c["bt"][x]] for x, fk in enumerate(c["bf"])
-                }
-                cur = [c["ct"], c["lt"], buf, store]
-            live[k] = cur
-            return cur
-
+        pos: list = []  # per flushed entry: batch position, or -1
+        carried: list = []  # the flushed buffered rows, in order
+        live: dict = {}  # key -> [ct, lt, {ftk: (t_us, age, position | row)}]
         ends = np.append(starts[1:], n)
         for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
             cur = None  # loaded at the key's first timed row
@@ -1658,11 +1639,11 @@ def stream_coalesce(
                 if null_t[i]:
                     continue
                 if cur is None:
-                    cur = _load(k)
+                    cur = live[k] = list(carry.get(k, (0, None, {})))
                 ti = int(t[i])
                 if ti > cur[0]:
                     cur[0] = ti
-                if batch_expired(i, ti, cur[0]):
+                if cur[0] - ti > age[i]:
                     continue
                 # the fields tuple's identity key: JSON text, not
                 # pickle (pickle bytes of equal tuples can differ
@@ -1672,62 +1653,32 @@ def stream_coalesce(
                 buf = cur[2]
                 ent = buf.get(ftk)
                 # e/most-recent?: the stored event wins ties
-                if ent is None or ent[2] < ti:
-                    buf[ftk] = [0, i, ti]
+                if ent is None or ent[0] < ti:
+                    buf[ftk] = (ti, age[i], i)
                 if cur[1] is None:
                     cur[1] = ti
                 elif cur[0] >= cur[1] + dur_us:
                     alive = {}
                     for fk, e in buf.items():
-                        if e[0] == 0:
-                            dead = batch_expired(e[1], e[2], cur[0])
-                        else:
-                            dead = old_expired(cur[3], e[1], e[2], cur[0])
-                        if not dead:
+                        if cur[0] - e[0] <= e[1]:
                             alive[fk] = e
-                            emit.append((e[0], e[1], cur[3]))
+                            if type(e[2]) is int:
+                                pos.append(e[2])
+                            else:
+                                pos.append(-1)
+                                carried.append(e[2])
                     cur[2] = alive
                     cur[1] = cur[0]
-        # rebuild each touched key's carry: surviving buffer rows go
-        # columnar (batch-sourced rows are copied HERE, once)
-        for k, cur in live.items():
-            buf = cur[2]
-            if not buf:
-                carry[k] = {"ct": cur[0], "lt": cur[1], "bf": [], "bt": [],
-                            "bc": {c: [] for c in cols}}
-                continue
-            bf, bt = [], []
-            bc: dict = {c: [] for c in cols}
-            for fk, e in buf.items():
-                bf.append(fk)
-                bt.append(e[2])
-                if e[0] == 0:
-                    i = e[1]
-                    for c in cols:
-                        bc[c].append(raw.cell(c, i))
-                else:
-                    store = cur[3]
-                    for c in cols:
-                        bc[c].append(store[c][e[1]])
-            carry[k] = {"ct": cur[0], "lt": cur[1], "bf": bf, "bt": bt, "bc": bc}
-        if not emit:
-            return pdf.iloc[0:0]
-        b_pos = [p for p, e in enumerate(emit) if e[0] == 0]
-        o_pos = [p for p, e in enumerate(emit) if e[0] == 1]
-        frames = []
-        if b_pos:
-            frames.append(pdf.iloc[[emit[p][1] for p in b_pos]])
-        if o_pos:
-            frames.append(pd.DataFrame(
-                {c: [emit[p][2][c][emit[p][1]] for p in o_pos] for c in cols},
-                columns=cols,
-            ))
-        if len(frames) == 1:
-            return frames[0]
-        out = pd.concat(frames, ignore_index=True)
-        # concat row q holds emit position (b_pos+o_pos)[q]; restore
-        # flush order by sorting rows on that position
-        return out.iloc[np.argsort(np.asarray(b_pos + o_pos), kind="stable")]
+        # the batch rows still kept become buffered rows HERE, once
+        at = [e[2] for cur in live.values() for e in cur[2].values()
+              if type(e[2]) is int]
+        rows = dict(zip(at, _buffer_rows(pdf, at)))
+        for k, (ct, lt, buf) in live.items():
+            carry[k] = (ct, lt, {
+                fk: (tu, a, rows[r] if type(r) is int else r)
+                for fk, (tu, a, r) in buf.items()
+            })
+        return _emit_rows(pdf, pos, carried)
 
     return _keyed_fold_scan(df, by, time_col, shards, fold)
 
@@ -1760,41 +1711,23 @@ def stream_moving_time_window(
     duration_s: float,
     by: Sequence[str],
     time_col: str = "time",
+    shards: int | None = None,
 ) -> DataFrame:
     """Streaming ``moving-time-window`` (action.clj:2596-2639): per
     event, all of its key's events within the trailing ``duration``
-    seconds — a keyed-state fold whose ``carry[k]`` is the buffer of
-    (t_us, row) pairs trimmed by exact µs bound (same (-(dur-1µs), 0]
-    range as the batch twin's range frame), on the default shards."""
-    import numpy as np
-
+    seconds — the ``_trailing_fold`` keeping the rows with t ≥ tᵢ −
+    duration + 1 µs (the batch twin's (-(dur-1µs), 0] range frame, in
+    exact µs). ``shards`` sets the shard count (see
+    ``_keyed_fold_scan``)."""
     dur_us = int(round(duration_s * 1_000_000))
-    ev_struct = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
 
-    def fold(carry, keys, starts, pdf):
-        t = _series_us(pdf[time_col])
-        raw = _RawCols(pdf)
-        cols = list(pdf.columns)
-        events_col = []
-        ends = np.append(starts[1:], len(pdf))
-        for k, s0, e0 in zip(keys, starts.tolist(), ends.tolist()):
-            buf = carry.get(k, [])
-            for i in range(s0, e0):
-                ti = int(t[i])
-                buf.append((ti, raw.row(cols, i)))
-                lo = ti - dur_us + 1
-                buf = [(tb, e) for tb, e in buf if tb >= lo]
-                events_col.append([e for _, e in buf])
-            carry[k] = buf
-        out = pdf.copy()
-        out["events"] = events_col
-        return out
+    def trim(buf, t_us):
+        lo = t_us - dur_us + 1
+        return [p for p in buf if p[0] >= lo]
 
     return _keyed_fold_scan(
-        df, by, time_col, _DEFAULT_SHARDS, fold,
-        extra_out=f"events array<struct<{ev_struct}>>",
+        df, by, time_col, shards, _trailing_fold(time_col, trim),
+        extra_out=_events_out(df),
     )
 
 
@@ -1979,102 +1912,3 @@ def stream_zscore(
         df, by, time_col, shards, fold, extra_out=f"{out} double"
     )
 
-
-def stream_smax_jvm(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-) -> DataFrame:
-    """Pure-JVM smax tier (VERDICT r7 ask #1b): keyed streaming
-    aggregation ``max(struct(metric, -t, row))`` — scalar-struct
-    state in Spark's own state store, NO Python on the path at all.
-
-    Emission grain is the trade vs :func:`stream_smax`, which
-    forwards the best-so-far event for EVERY input event
-    (action.clj:2742-2772's per-event Riemann semantics); this tier
-    emits one best-so-far row per key per micro-batch that touched
-    the key (update output mode) — at 1M+ hot keys that is the
-    emission grain an alert consumer can absorb anyway, and the last
-    update per key is bit-equal to the batch twin's final best
-    (parity pytest). Tie-breaks deterministically: strictly greater
-    metric wins, then the EARLIEST event (stream_smax's
-    first-winner-on-ties rule under time-ordered arrival); a NULL
-    metric never beats a non-null one (struct ordering sorts nulls
-    lowest), diverging from stream_smax's "a null first event
-    occupies the slot" edge.
-
-    State per key is one struct row (bounded by key cardinality, no
-    row buffers); use ``.outputMode("update")`` on the writer."""
-    is_ts = dict(df.dtypes)[time_col].startswith("timestamp")
-    tnum = (
-        F.unix_micros(F.col(time_col))
-        if is_ts
-        else F.col(time_col).cast("double")
-    )
-    best = F.max(
-        F.struct(
-            F.col(metric_col).alias("__m__"),
-            (-tnum).alias("__nt__"),
-            F.struct(*[F.col(c) for c in df.columns]).alias("__row__"),
-        )
-    ).alias("__best__")
-    return df.groupBy(*[F.col(c) for c in by]).agg(best).select("__best__.__row__.*")
-
-
-def stream_smin_jvm(
-    df: DataFrame,
-    by: Sequence[str],
-    time_col: str = "time",
-    metric_col: str = "metric",
-) -> DataFrame:
-    """Pure-JVM smin tier: :func:`stream_smax_jvm` over the negated
-    metric, negated back (the same composition as
-    :func:`stream_smin`; -NULL = NULL so null metrics still lose)."""
-    neg = df.withColumn(metric_col, -F.col(metric_col))
-    out = stream_smax_jvm(neg, by, time_col, metric_col)
-    return out.withColumn(metric_col, -F.col(metric_col))
-
-
-class _RawCols:
-    """Cell access for the row-buffer folds, adaptive to the
-    touch density the batch size implies. ``pdf[c].iloc[i]`` per
-    touch pays a Series lookup + slice object; two regimes fix it:
-
-    - small/medium batches (≤ ``_DENSE_MAX`` rows — where a fold may
-      touch MOST rows, e.g. every key buffering at 1M distinct
-      keys): one lazy ``.tolist()`` per touched column, then plain
-      list indexing (measured 2-2.7× on the §43 worst case);
-    - huge batches (a 10M-row availableNow pass touching only a few
-      thousand buffered cells): cached-Series ``.iat``/``.iloc`` —
-      whole-column materialization there costs more than it saves.
-
-    Cells come back as pandas hands them (pd.Timestamp, Decimal,
-    bytes, ndarray, NaN for a null double); the shell's carry stores
-    them as they are."""
-
-    _DENSE_MAX = 2_000_000
-
-    def __init__(self, pdf):
-        self._pdf = pdf
-        self._dense = len(pdf) <= self._DENSE_MAX
-        self._cols: dict = {}
-
-    def _series(self, c):
-        got = self._cols.get(c)
-        if got is None:
-            got = self._cols[c] = (
-                self._pdf[c].tolist() if self._dense else self._pdf[c]
-            )
-        return got
-
-    def cell(self, c, i):
-        col = self._series(c)
-        return col[i] if self._dense else col.iat[i]
-
-    def row(self, cols, i):
-        return {c: self.cell(c, i) for c in cols}
-
-    def slice(self, c, i, j):
-        col = self._series(c)
-        return col[i:j] if self._dense else col.iloc[i:j].tolist()

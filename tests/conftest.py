@@ -133,7 +133,6 @@ SLOW_TESTS = {
     "test_properties.py::test_lm_bits_matches_reference_property",
     "test_properties.py::test_mixture_equals_hash_sample_at_uniform_rate",
     "test_properties.py::test_paragraph_dedup_matches_reference_loop",
-    "test_properties.py::test_stable_matches_reference_loop",
     "test_properties.py::test_throttle_matches_reference_loop",
     "test_properties.py::test_zscore_matches_reference_loop",
     "test_scale.py::test_ivf_trained_quantizer_sf1_recall",
@@ -143,28 +142,17 @@ SLOW_TESTS = {
     "test_streaming.py::test_riemann_tcp_tls_mtls",
     "test_streaming.py::test_state_ttl_evicts_idle_keys",
     "test_streaming.py::test_stream_changed_sharded_timestamp_field",
-    "test_streaming.py::test_stream_coalesce_reference_cases",
-    "test_streaming.py::test_stream_coalesce_sharded_timestamp_fields_parity",
     "test_streaming.py::test_stream_cond_dt_sharded_parity",
     "test_streaming.py::test_stream_curate_contamination_parity",
     "test_streaming.py::test_stream_curate_lm3_parity",
     "test_streaming.py::test_stream_curate_neardup_parity",
     "test_streaming.py::test_stream_curate_parity",
     "test_streaming.py::test_stream_expired_sharded_parity",
-    "test_streaming.py::test_stream_fixed_event_window_fork_ttl",
-    "test_streaming.py::test_stream_fixed_event_window_fork_ttl_out_of_order",
     "test_streaming.py::test_stream_ftw_delay_reference_case",
     "test_streaming.py::test_stream_image_neardup_dedup_parity",
-    "test_streaming.py::test_stream_mtw_project_expired_parity",
     "test_streaming.py::test_stream_neardup_dedup_parity",
     "test_streaming.py::test_stream_rate_reference_case",
-    "test_streaming.py::test_stream_smax_jvm_final_best_matches_batch",
-    "test_streaming.py::test_stream_smax_smin_reference_cases",
-    "test_streaming.py::test_stream_smax_smin_sharded_parity",
     "test_streaming.py::test_stream_smin_ddt_parity",
-    "test_streaming.py::test_stream_stable_sharded_nan_run_parity",
-    "test_streaming.py::test_stream_stable_sharded_out_of_order_drop",
-    "test_streaming.py::test_stream_stable_sharded_parity",
     "test_streaming.py::test_stream_throttle_sharded_parity",
     "test_streaming.py::test_stream_windowed_agg_twins_parity",
     "test_streaming.py::test_stream_zscore_huge_values_fold_exact",

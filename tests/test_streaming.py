@@ -3319,10 +3319,14 @@ def test_keyed_fold_rejects_pre_merge_per_key_state(spark, tmp_path):
 
 
 def test_keyed_fold_restart_under_other_shard_count_raises(spark, tmp_path):
-    """The carry blob records its shard count. A restart under another
-    ``shards`` would route most keys to shards that never saw them
-    and restart their state, so it raises an error naming both counts;
-    a blob written before the count was recorded restarts as it is."""
+    """The carry blob records its shard count and its layout version.
+    A restart under another ``shards`` would route most keys to shards
+    that never saw them and restart their state, so it raises an error
+    naming both counts. A blob of another layout would be misread, so
+    a blob without a layout version raises an error naming both
+    versions: one written before the shard count was recorded, and
+    one of the earlier row-buffer layout, whose smax carry {"m", "b"}
+    would otherwise unpack as the (metric, row) pair of today's."""
     import pickle
 
     from mirabelle_spark.streaming import core
@@ -3332,14 +3336,13 @@ def test_keyed_fold_restart_under_other_shard_count_raises(spark, tmp_path):
         "event_id bigint, host string, t double, metric double",
     ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
 
-    def legacy(s):  # a blob without "n", on the same shard grouping
+    def legacy(blob_of):  # an unversioned blob, on the same shard grouping
         def fn(key, pdfs, st):
             for pdf in pdfs:
-                hosts = pdf["host"].unique().tolist()
-                st.update((pickle.dumps({"c": {h: 0.5 for h in hosts}}),))
+                st.update((pickle.dumps(blob_of(pdf)),))
                 yield pdf[["event_id", "host", "metric", "time"]]
 
-        return s.withColumn(
+        return lambda s: s.withColumn(
             "__shard__", F.pmod(F.xxhash64("host"), F.lit(2))
         ).groupBy("__shard__").applyInPandasWithState(
             fn, outputStructType="event_id bigint, host string, "
@@ -3353,7 +3356,7 @@ def test_keyed_fold_restart_under_other_shard_count_raises(spark, tmp_path):
             s, 0.5, by=["host"], time_col="time", shards=n
         )
 
-    def run(tag, before, after, got=None):
+    def run(tag, before, after):
         """Run ``before`` over the first 12 events, then restart the
         checkpoint under ``after`` over the rest; return that query."""
         src_dir, ck = str(tmp_path / f"{tag}_in"), str(tmp_path / f"{tag}_ck")
@@ -3363,12 +3366,8 @@ def test_keyed_fold_restart_under_other_shard_count_raises(spark, tmp_path):
             .trigger(availableNow=True).start().awaitTermination()
         df.where("event_id >= 12").coalesce(1).write.mode("append").parquet(src_dir)
         stream = spark.readStream.schema(df.schema).parquet(src_dir)
-        w = after(stream).writeStream
-        if got is None:
-            w = w.format("noop")
-        else:
-            w = w.foreachBatch(lambda b, _: got.extend(b.collect()))
-        return w.option("checkpointLocation", ck).trigger(availableNow=True).start()
+        return after(stream).writeStream.format("noop") \
+            .option("checkpointLocation", ck).trigger(availableNow=True).start()
 
     q = run("grow", ewma(2), ewma(3))
     with pytest.raises(Exception, match="written with 2 shards but the query now runs 3"):
@@ -3376,11 +3375,18 @@ def test_keyed_fold_restart_under_other_shard_count_raises(spark, tmp_path):
     q = run("shrink", ewma(3), ewma(2))
     with pytest.raises(Exception, match="written with 3 shards but the query now runs 2"):
         q.awaitTermination()
-    got = []
-    run("legacy", legacy, ewma(2), got).awaitTermination()
-    # every host continues from the legacy carry: 0.5·1 + 0.5·0.5
-    assert sorted(r.event_id for r in got) == list(range(12, 24))
-    assert [r.metric for r in got] == [0.75] * 12
+    unversioned = "carry layout version None but this code reads version 2"
+    q = run("legacy", legacy(lambda pdf: {
+        "c": {h: 0.5 for h in pdf["host"].unique().tolist()}
+    }), ewma(2))
+    with pytest.raises(Exception, match=unversioned):
+        q.awaitTermination()
+    q = run("old_smax", legacy(lambda pdf: {"n": 2, "c": {
+        r["host"]: {"m": r["metric"], "b": r.to_dict()}
+        for _, r in pdf.drop(columns="__shard__").iterrows()
+    }}), lambda s: core.stream_smax(s, by=["host"], time_col="time", shards=2))
+    with pytest.raises(Exception, match=unversioned):
+        q.awaitTermination()
 
 
 def test_keyed_fold_nan_key_is_not_null_key(spark, tmp_path):
@@ -3634,114 +3640,6 @@ def test_row_buffer_folds_carry_every_column_dtype(spark, tmp_path):
     assert len(ids) > len(set(ids))
 
 
-def test_stream_smax_jvm_final_best_matches_batch(spark, tmp_path):
-    """The pure-JVM smax tier (update-mode max(struct(metric,-t,row))
-    aggregation): the best-so-far row it converges to per key is
-    bit-equal to the default-shard twin's FINAL emission (and the batch
-    smax's last row) — the per-event emission grain is the documented
-    trade. Also smin via negation."""
-    import pyspark.sql.functions as F
-
-    from mirabelle_spark.operators import stateful as st
-    from mirabelle_spark.streaming import core
-
-    rows = []
-    eid = 0
-    for h in range(30):
-        x = h + 3
-        for i in range(10):
-            x = (x * 48271) % 99991
-            v = None if (h + i) % 17 == 4 else float(x % 1000)
-            rows.append((eid, f"h{h:02d}", float(i * 2), v))
-            eid += 1
-    df = spark.createDataFrame(
-        rows, "event_id bigint, host string, t double, metric double"
-    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
-
-    run = _two_batch_runner(spark, tmp_path, df, "event_id % 10 < 5", "sxj")
-
-    def final_best(rows_, flip=1.0):
-        best = {}
-        for r in rows_:
-            key = r.host
-            cand = (
-                -float("inf") if r.metric is None else flip * r.metric,
-                -r.time.timestamp(),
-                r.event_id,
-            )
-            if key not in best or cand > best[key][0]:
-                best[key] = (cand, r)
-        return {k: (v[1].event_id, v[1].metric) for k, v in best.items()}
-
-    # default-shard twin: last emission per key is its final best
-    per_rows = run(lambda s: core.stream_smax(
-        s, by=["host"], time_col="time"), "sxj_pk")
-    jvm_rows = run(lambda s: core.stream_smax_jvm(
-        s, by=["host"], time_col="time"), "sxj_jvm", mode="update")
-    assert final_best(jvm_rows) == final_best(per_rows)
-    # and both equal the batch twin's final row per key
-    batch = st.smax(df, by=["host"], time_col="time")
-    last = {
-        r.host: (r.event_id, r.metric)
-        for r in batch.orderBy("time").collect()
-    }
-    assert final_best(jvm_rows) == last
-    # emission volume: at most one row per key per batch (2 batches)
-    from collections import Counter
-
-    c = Counter(r.host for r in jvm_rows)
-    assert max(c.values()) <= 2 and len(jvm_rows) < len(per_rows)
-
-    smin_rows = run(lambda s: core.stream_smin_jvm(
-        s, by=["host"], time_col="time"), "sxj_jmin", mode="update")
-    per_min = run(lambda s: core.stream_smin(
-        s, by=["host"], time_col="time"), "sxj_pmin")
-    assert final_best(smin_rows, flip=-1.0) == final_best(per_min, flip=-1.0)
-
-
-def test_dsl_smax_emission_per_batch_routes_jvm_tier(spark, tmp_path):
-    """`smax {"emission": "per-batch"}` in a streaming tree compiles
-    to the pure-JVM max_by tier (an Aggregate plan, zero Python);
-    default params keep the per-event twin (keyed-state plan). The
-    spec rejects unknown emission values, and the batch compile
-    accepts (and ignores) the knob."""
-    import pytest as _pytest
-
-    from mirabelle_spark.plans.builder import Ctx, compile_stream
-    from mirabelle_spark.plans.spec import InvalidActionParams
-
-    df = spark.createDataFrame(
-        [(0, "a", 1.0, 5.0)], "event_id bigint, host string, t double, metric double"
-    ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
-    src_dir = str(tmp_path / "sxe_in")
-    df.coalesce(1).write.mode("append").parquet(src_dir)
-    stream = spark.readStream.schema(df.schema).parquet(src_dir)
-
-    def tree(params):
-        return {"action": "by", "params": [{"fields": ["host"]}],
-                "children": [{"action": "smax", "params": params,
-                              "children": [{"action": "tap", "params": ["s"]}]}]}
-
-    ctx = compile_stream(stream, tree([{"emission": "per-batch"}]),
-                         Ctx(streaming=True, test_mode=True))
-    plan = ctx.taps["s"]._jdf.queryExecution().analyzed().toString()
-    assert "Aggregate" in plan  # JVM max_by tier, no Python eval node
-    assert "FlatMapGroupsInPandas" not in plan
-
-    ctx2 = compile_stream(stream, tree([]), Ctx(streaming=True, test_mode=True))
-    plan2 = ctx2.taps["s"]._jdf.queryExecution().analyzed().toString()
-    assert "Aggregate" not in plan2  # per-event keyed-state twin
-
-    with _pytest.raises(InvalidActionParams, match="emission"):
-        compile_stream(stream, tree([{"emission": "bogus"}]),
-                       Ctx(streaming=True, test_mode=True))
-
-    # batch compile accepts the knob and stays the per-event window op
-    bctx = compile_stream(df, tree([{"emission": "per-batch"}]),
-                          Ctx(order_cols=("event_id",), test_mode=True))
-    assert bctx.taps["s"].collect()[0].metric == 5.0
-
-
 def test_stream_event_window_sharded_parity(spark, tmp_path):
     """The sharded event-window twins emit exactly the default
     shard count's rows across a micro-batch boundary: fixed windows
@@ -3807,8 +3705,9 @@ def test_stream_event_window_sharded_parity(spark, tmp_path):
 
 
 def test_by_shards_dsl_dispatches_row_buffer_twins(spark):
-    """`by {"shards": N}` sets the shard count of the r8 row-buffer
-    actions (stable, keyed coalesce, fixed/moving-event-window) —
+    """`by {"shards": N}` sets the shard count of the row-buffer
+    actions (stable, keyed coalesce, fixed/moving-event-window,
+    moving-time-window, smax) —
     asserted structurally: the compiled plan groups on
     pmod(xxhash64(fork keys), N); without shards N is the default 64.
     Unkeyed coalesce must IGNORE shards (one global tick clock): it
@@ -3840,6 +3739,8 @@ def test_by_shards_dsl_dispatches_row_buffer_twins(spark):
         ("coalesce", [{"duration": 10, "fields": ["state"]}]),
         ("fixed-event-window", [{"size": 3}]),
         ("moving-event-window", [{"size": 3}]),
+        ("moving-time-window", [{"duration": 10}]),
+        ("smax", []),
     ]
     def shard_of(keys, n):
         return re.compile(

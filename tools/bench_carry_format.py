@@ -4,16 +4,19 @@
 Times one round trip of one shard's carry map (what the keyed-state
 shell pays per touched shard per micro-batch) in two formats:
 
-  json     ``json.dumps``/``json.loads`` of the map with cells in JSON
-           form (timestamps as isoformat strings)
-  pickle   ``pickle.dumps(protocol=5)``/``pickle.loads`` of the same
-           map with cells as pandas hands them (pd.Timestamp)
+  json     ``json.dumps``/``json.loads`` of the map the folds kept as
+           JSON text before the carry was pickled, cells in JSON form
+           (timestamps as isoformat strings)
+  pickle   ``pickle.dumps(protocol=5)``/``pickle.loads`` of the map the
+           folds keep today, cells as pandas hands them (pd.Timestamp)
 
 over two carry shapes:
 
-  ewma     {key: float}, the ewma/throttle-style scalar state
-  buffer   {key: {"l": t_us, "b": {col: [cells]}}}, a fixed-event-window
-           partial buffer of ``--rows`` rows with a timestamp column
+  ewma     {key: float}, the ewma/throttle-style scalar state (the same
+           map in both formats)
+  buffer   a fixed-event-window partial buffer of ``--rows`` rows with
+           a timestamp column: {key: (t_us, [row tuple])} as pickle,
+           {key: {"l": t_us, "b": {col: [cells]}}} as JSON text
 
 Usage:
   python tools/bench_carry_format.py [--keys 6250] [--rows 2] [--reps 30]
@@ -38,23 +41,33 @@ def _carries(keys: int, rows: int):
     ewma = {k: 0.5 + i / 7.0 for i, k in enumerate(names)}
     t0 = pd.Timestamp("2024-01-01T00:00:00")
 
-    def buf(i, ts):
-        cells = [t0 + pd.Timedelta(seconds=i + j) for j in range(rows)]
+    def cells(i):
+        return [t0 + pd.Timedelta(seconds=i + j) for j in range(rows)]
+
+    def as_json(i):
+        ts = cells(i)
         return {
-            "l": int(cells[-1].value // 1000),
+            "l": int(ts[-1].value // 1000),
             "b": {
-                "time": [ts(c) for c in cells],
+                "time": [c.isoformat() for c in ts],
                 "host": [names[i]] * rows,
                 "service": ["cpu"] * rows,
                 "metric": [float(i + j) for j in range(rows)],
             },
         }
 
+    def as_rows(i):
+        ts = cells(i)
+        return (
+            int(ts[-1].value // 1000),
+            [(c, names[i], "cpu", float(i + j)) for j, c in enumerate(ts)],
+        )
+
     return {
         "ewma": ({"c": ewma}, {"c": ewma}),
         "buffer": (
-            {"c": {k: buf(i, lambda c: c.isoformat()) for i, k in enumerate(names)}},
-            {"c": {k: buf(i, lambda c: c) for i, k in enumerate(names)}},
+            {"c": {k: as_json(i) for i, k in enumerate(names)}},
+            {"c": {k: as_rows(i) for i, k in enumerate(names)}},
         ),
     }
 

@@ -10,8 +10,6 @@ Measures events/s through one availableNow pass for each mode:
   few, mew, expired, smax
                    the other keyed twins with shards=N (few/mew:
                    fixed/moving event windows)
-  smax_jvm         the pure-JVM max_by tier (update mode; per-batch
-                   emission grain)
 
 Usage:
   python tools/bench_streaming_state.py [--events 1000000]
@@ -121,10 +119,6 @@ def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int)
         out = keyed["ewma"](stream, shards=shards)
     elif mode == "sharded_ttl":
         out = keyed["ewma"](stream, shards=shards, state_ttl_s=3600.0)
-    elif mode == "smax_jvm":
-        from mirabelle_spark.streaming import stream_smax_jvm
-
-        out = stream_smax_jvm(stream, by=["host"], time_col="time")
     elif mode in keyed:
         out = keyed[mode](stream, shards=shards)
     else:
@@ -141,7 +135,7 @@ def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int)
     q = (
         out.writeStream.format("noop")
         .option("checkpointLocation", ck)
-        .outputMode("update" if mode in ("jvm", "smax_jvm") else "append")
+        .outputMode("update" if mode == "jvm" else "append")
         .trigger(availableNow=True)
         .start()
     )
