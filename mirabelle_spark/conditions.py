@@ -4,10 +4,15 @@ The reference shares one condition vocabulary between ``where``,
 ``split``, ``ratio``, ``project`` and websocket queries: vectors of
 ``[op field-or-path & args]`` plus ``:and``/``:or`` combinators
 (reference: ``action/condition.clj:4-22``, compiler at
-``condition.clj:50-93``). We compile the same vectors straight to
-Catalyst ``Column`` expressions, so every condition benefits from
-predicate pushdown, codegen and partition pruning instead of a
-per-event interpreted closure.
+``condition.clj:50-93``). The vocabulary has two forms here:
+
+- :func:`compile_condition` compiles a vector straight to a Catalyst
+  ``Column``. It is the one executable form: every engine consumer,
+  batch and streaming (the keyed-state folds read its value as a
+  column), evaluates it in Spark, with predicate pushdown and codegen
+  instead of a per-event interpreted closure.
+- :func:`condition_to_sql` renders the same vector as SQL text for
+  the DuckDB oracles.
 
 Field addressing: a plain string names a top-level column; a
 list/tuple of strings is a nested path (struct fields or map keys),
@@ -125,97 +130,6 @@ def compile_condition(cond: Sequence) -> Column:
     if op == "not-nil?":
         return col.isNotNull()
     raise ValueError(f"unknown condition op {op!r} in {cond!r}")
-
-
-def compile_condition_pandas(cond: Sequence):
-    """Compile a condition vector to a VECTORIZED pandas predicate:
-    ``fn(pdf) -> bool Series`` (null ⇒ False, like a SQL filter).
-
-    This is the third backend of the one condition vocabulary
-    (Catalyst Column / SQL string / pandas Series) and exists so the
-    streaming keyed-state twins accept the same vectors as batch
-    operators — evaluated per micro-batch with Kleene-logic nullable
-    booleans, mirroring :func:`compile_condition` semantics op-for-op
-    (condition.clj:50-93). No per-row Python: comparisons run on
-    whole Series.
-    """
-    import pandas as pd
-
-    def _field(pdf: "pd.DataFrame", field: FieldRef) -> "pd.Series":
-        if isinstance(field, str):
-            return pdf[field]
-        path = list(field)
-        s = pdf[path[0]]
-        for part in path[1:]:
-            s = s.apply(lambda v, p=part: None if v is None else v.get(p))
-        return s
-
-    def _tri(s: "pd.Series", fn) -> "pd.Series":
-        """Apply fn on non-null values; nulls stay NA (SQL 3VL)."""
-        out = pd.Series(pd.NA, index=s.index, dtype="boolean")
-        mask = s.notna()
-        if mask.any():
-            out[mask] = pd.array(fn(s[mask]), dtype="boolean")
-        return out
-
-    def _eval(c: Sequence, pdf: "pd.DataFrame") -> "pd.Series":
-        if not isinstance(c, (list, tuple)) or not c:
-            raise ValueError(f"condition must be a non-empty sequence, got {c!r}")
-        op = _norm_op(c[0])
-        if op == "and":
-            out = _eval(c[1], pdf)
-            for sub in c[2:]:
-                out = out & _eval(sub, pdf)  # Kleene & on nullable boolean
-            return out
-        if op == "or":
-            out = _eval(c[1], pdf)
-            for sub in c[2:]:
-                out = out | _eval(sub, pdf)
-            return out
-        if op == "not":
-            return ~_eval(c[1], pdf).fillna(False)
-        if op in ("always-true", "true") and len(c) == 1:
-            return pd.Series(True, index=pdf.index, dtype="boolean")
-
-        s = _field(pdf, c[1])
-        args = list(c[2:])
-        if op == "pos?":
-            return _tri(s, lambda v: v > 0)
-        if op == "neg?":
-            return _tri(s, lambda v: v < 0)
-        if op == "zero?":
-            return _tri(s, lambda v: v == 0)
-        if op in (">", ">=", "<", "<=", "="):
-            import operator as _op
-
-            fns = {">": _op.gt, ">=": _op.ge, "<": _op.lt, "<=": _op.le, "=": _op.eq}
-            return _tri(s, lambda v, f=fns[op]: f(v, args[0]))
-        if op == "not=":
-            # null-safe: differs OR exactly one side null
-            if args[0] is None:
-                return s.notna().astype("boolean")
-            eq = _tri(s, lambda v: v == args[0]).fillna(False)
-            return ~eq
-        if op == "true":
-            return _tri(s, lambda v: v == True)  # noqa: E712
-        if op == "contains":
-            return _tri(s, lambda v: v.apply(lambda a: args[0] in a))
-        if op == "absent":
-            return _tri(s, lambda v: v.apply(lambda a: args[0] not in a)).fillna(True)
-        if op == "regex":
-            return _tri(s, lambda v: v.astype(str).str.fullmatch(args[0]))
-        if op == "nil?":
-            return s.isna().astype("boolean")
-        if op == "not-nil?":
-            return s.notna().astype("boolean")
-        raise ValueError(f"unknown condition op {op!r} in {c!r}")
-
-    def predicate(pdf):
-        if len(pdf) == 0:
-            return pd.Series([], dtype=bool)
-        return _eval(cond, pdf).fillna(False).astype(bool)
-
-    return predicate
 
 
 def condition_to_sql(cond: Sequence) -> str:

@@ -22,9 +22,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mirabelle_spark.conditions import compile_condition
 from mirabelle_spark.operators.aggregations import window_agg
 
 # Every keyed-state operator routes its keys to pmod(xxhash64(by), N)
@@ -1000,7 +1001,8 @@ def _throttle_fold(count, duration_s, time_col):
     over a primitive int64 array (the anchored recurrence is
     inherently sequential) and reloads the carry once per key
     segment; it never builds per-row dicts/Series. Rows must have a
-    time."""
+    time: ``throttle_batch`` and ``stream_throttle`` filter out
+    null-time rows before their shells."""
     import numpy as np
 
     dur_us = int(round(duration_s * 1_000_000))
@@ -1127,10 +1129,12 @@ def stream_throttle(
     shards: int | None = None,
 ) -> DataFrame:
     """Streaming anchored-window throttle (action.clj:1163-1217): the
-    ``_throttle_fold`` that ``throttle_batch`` also runs. ``shards``
-    sets the shard count (see ``_keyed_fold_scan``)."""
+    ``_throttle_fold`` that ``throttle_batch`` also runs, on the rows
+    that have a time (the batch twin's filter). ``shards`` sets the
+    shard count (see ``_keyed_fold_scan``)."""
     return _keyed_fold_scan(
-        df, by, time_col, shards, _throttle_fold(count, duration_s, time_col)
+        df.filter(F.col(time_col).isNotNull()), by, time_col, shards,
+        _throttle_fold(count, duration_s, time_col),
     )
 
 
@@ -1228,29 +1232,25 @@ def stream_cond_dt(
     continuously for more than dt seconds. PERF §39 (sharded): 552k
     ev/s at 1M keys; 1.73M ev/s at 10M events / 10k keys.
 
-    ``cond`` accepts the SAME condition vectors as the batch twins
-    (``[":>", "metric", 100]`` — compiled per micro-batch by
-    :func:`mirabelle_spark.conditions.compile_condition_pandas`,
-    fully vectorized over the whole slice) or a python row-predicate
-    for custom logic (applied row-wise, the slow path). ``shards``
-    sets the shard count (see ``_keyed_fold_scan``)."""
+    ``cond`` is what batch ``cond_dt`` takes: a condition vector
+    (``[":>", "metric", 100]``, compiled by
+    :func:`mirabelle_spark.conditions.compile_condition`) or a
+    ``Column``. Spark evaluates it once per row into a ``__valid__``
+    column (null ⇒ invalid) that the fold reads and the output drops.
+    Null-time events are filtered out before the shell, as in batch
+    (reference ``when event-time``). ``shards`` sets the shard count
+    (see ``_keyed_fold_scan``)."""
     import numpy as np
 
     dt_us = int(round(dt_s * 1_000_000))
-    if callable(cond):
-        def valid_series(pdf):
-            return pdf.apply(cond, axis=1).to_numpy(dtype=bool)
-    else:
-        from mirabelle_spark.conditions import compile_condition_pandas
-
-        _pred = compile_condition_pandas(cond)
-
-        def valid_series(pdf):
-            return _pred(pdf).to_numpy(dtype=bool)
+    c = cond if isinstance(cond, Column) else compile_condition(cond)
+    src = df.filter(F.col(time_col).isNotNull()).withColumn(
+        "__valid__", F.coalesce(c, F.lit(False))
+    )
 
     def fold(carry, keys, starts, pdf):
         tv = _series_us(pdf[time_col]).tolist()
-        valid = valid_series(pdf).tolist()
+        valid = pdf["__valid__"].tolist()
         keep = np.empty(len(tv), dtype=bool)
         ends = np.append(starts[1:], len(tv)).tolist()
         for k, s0, e0 in zip(keys, starts.tolist(), ends):
@@ -1265,7 +1265,7 @@ def stream_cond_dt(
             carry[k] = (ok, flip)
         return pdf[keep]
 
-    return _keyed_fold_scan(df, by, time_col, shards, fold)
+    return _keyed_fold_scan(src, by, time_col, shards, fold).drop("__valid__")
 
 
 def stream_stable(
@@ -1291,8 +1291,9 @@ def stream_stable(
     confirmed runs go out as position ranges of the slice. Only a
     key's last run, if still unconfirmed, is copied into the carry:
     an earlier unconfirmed run of the slice is always followed by a
-    value change that drops it. ``shards`` sets the shard count (see
-    ``_keyed_fold_scan``)."""
+    value change that drops it. Null-time events are filtered out
+    before the shell, as in batch. ``shards`` sets the shard count
+    (see ``_keyed_fold_scan``)."""
     import numpy as np
 
     dt_us = int(round(dt_s * 1_000_000))
@@ -1382,7 +1383,9 @@ def stream_stable(
             pos = np.insert(pos, np.searchsorted(pos, flush_at), -1)
         return _emit_rows(pdf, pos, carried)
 
-    return _keyed_fold_scan(df, by, time_col, shards, fold)
+    return _keyed_fold_scan(
+        df.filter(F.col(time_col).isNotNull()), by, time_col, shards, fold
+    )
 
 
 def stream_fixed_event_window(
@@ -1542,17 +1545,13 @@ def stream_ddt(
     slice with the previous (t, metric) injected from the carry at
     segment starts only — O(distinct keys) Python, O(rows) numpy.
     Null-metric events are skipped entirely (they never become the
-    new previous); zero time delta is skipped. ``shards`` sets the
-    shard count (see ``_keyed_fold_scan``)."""
+    new previous): Spark filters them out before the shell, as batch
+    ``ddt`` does, and NaN metrics with them, since pandas reads a
+    null double as NaN. Zero time delta is skipped. ``shards`` sets
+    the shard count (see ``_keyed_fold_scan``)."""
     import numpy as np
 
     def fold(carry, keys, starts, pdf):
-        keepna = pdf[metric_col].notna().to_numpy(dtype=bool)
-        if not keepna.all():
-            pdf = pdf[keepna].reset_index(drop=True)
-            keys, starts = _keep_segments(keys, starts, keepna)
-        if not len(pdf):
-            return pdf
         t = _series_us(pdf[time_col]).astype("float64")
         m = pdf[metric_col].to_numpy(dtype="float64")
         prev_t = np.concatenate(([np.nan], t[:-1]))
@@ -1575,7 +1574,8 @@ def stream_ddt(
         out[metric_col] = diff[ok]
         return out
 
-    return _keyed_fold_scan(df, by, time_col, shards, fold)
+    src = df.filter(F.col(metric_col).isNotNull() & ~F.isnan(metric_col))
+    return _keyed_fold_scan(src, by, time_col, shards, fold)
 
 
 def stream_coalesce(

@@ -67,7 +67,7 @@ def test_invalid_conditions_raise():
     compile time, not silently mis-evaluated."""
     import pytest
 
-    from mirabelle_spark.conditions import compile_condition, compile_condition_pandas
+    from mirabelle_spark.conditions import compile_condition
 
     bad = [
         [[":>", "metric", 10]],          # nested instead of op-first
@@ -79,7 +79,3 @@ def test_invalid_conditions_raise():
     for cond in bad:
         with pytest.raises((ValueError, TypeError)):
             compile_condition(cond)
-        with pytest.raises((ValueError, TypeError)):
-            import pandas as pd
-
-            compile_condition_pandas(cond)(pd.DataFrame({"metric": [1.0]}))

@@ -214,17 +214,25 @@ def test_stream_cond_dt(spark, tmpdir):
     schema = "time timestamp, metric double, host string"
     stream = stx.file_source(spark, src_dir, schema)
     out = stx.stream_cond_dt(
-        stream, lambda r: r["metric"] > 100, dt_s=10.0, by=["host"]
+        stream, F.col("metric") > 100, dt_s=10.0, by=["host"]
     )
+    assert out.columns == stream.columns
     q = stx.to_memory(out, "cdt_test")
     q.awaitTermination(60)
     got = sorted(r.time.second for r in spark.sql("select * from cdt_test").collect())
     assert got == [11, 30]
+    # the condition is evaluated in Spark: a python row-predicate is
+    # rejected when the plan is built
+    with pytest.raises(ValueError):
+        stx.stream_cond_dt(stream, lambda r: r["metric"] > 100, 10.0, by=["host"])
 
 
 def test_stream_cond_dt_condition_vector(spark, tmpdir):
     """The streaming twin accepts the SAME condition vector as batch
-    cond-dt — parity with batch above_dt over identical input."""
+    cond-dt — parity with batch above_dt over identical input, and
+    with batch cond_dt for a condition that holds on a null metric."""
+    import datetime
+
     from mirabelle_spark import streaming as stx
     from mirabelle_spark.operators import stateful as st
 
@@ -238,71 +246,40 @@ def test_stream_cond_dt_condition_vector(spark, tmpdir):
         {"time": "2024-01-01T00:00:30", "metric": 200.0, "host": "a"},  # pass
         {"time": "2024-01-01T00:00:02", "metric": 200.0, "host": "b"},  # flip
         {"time": "2024-01-01T00:00:20", "metric": 200.0, "host": "b"},  # pass
+        {"time": "2024-01-01T00:00:00", "metric": None, "host": "c"},
+        {"time": "2024-01-01T00:00:05", "metric": 200.0, "host": "c"},
+        {"time": "2024-01-01T00:00:12", "metric": 200.0, "host": "c"},
+        {"time": "2024-01-01T00:00:13", "metric": 1.0, "host": "c"},
     ]
     _write_rows(src_dir, rows)
     schema = "time timestamp, metric double, host string"
-    cond = [":>", "metric", 100]
-    stream = stx.file_source(spark, src_dir, schema)
-    out = stx.stream_cond_dt(stream, cond, dt_s=10.0, by=["host"])
-    q = stx.to_memory(out, "cdtv_test")
-    q.awaitTermination(60)
-    got = sorted(
-        (r.host, r.time.second)
-        for r in spark.sql("select * from cdtv_test").collect()
-    )
     batch_df = spark.createDataFrame(
-        [(__import__("datetime").datetime.fromisoformat(r["time"]), r["metric"], r["host"]) for r in rows],
+        [(datetime.datetime.fromisoformat(r["time"]), r["metric"], r["host"]) for r in rows],
         schema,
     )
-    batch_out = st.cond_dt(batch_df, cond, 10.0, by=["host"], time_col="time")
-    want = sorted((r.host, r.time.second) for r in batch_out.collect())
-    assert got == want == [("a", 11), ("a", 30), ("b", 20)]
-
-
-def test_compile_condition_pandas_matches_column_backend(spark):
-    """The pandas backend of the condition mini-language agrees with
-    the Catalyst backend on every op, including null handling."""
-    import pandas as pd
-
-    from mirabelle_spark.conditions import compile_condition, compile_condition_pandas
-
-    rows = [
-        {"m": 5.0, "s": "ok", "tags": ["a", "b"]},
-        {"m": -3.0, "s": "critical", "tags": ["b"]},
-        {"m": None, "s": None, "tags": None},
-        {"m": 0.0, "s": "warn", "tags": []},
-    ]
-    sdf = spark.createDataFrame(
-        rows, "m double, s string, tags array<string>"
-    )
-    pdf = pd.DataFrame(rows)
-    conds = [
-        [":>", "m", 0],
-        [":<=", "m", 0],
-        [":=", "s", "ok"],
-        [":not=", "s", "ok"],
-        [":pos?", "m"],
-        [":neg?", "m"],
-        [":zero?", "m"],
-        [":nil?", "s"],
-        [":not-nil?", "m"],
-        [":regex", "s", "crit.*"],
-        [":contains", "tags", "a"],
-        [":absent", "tags", "a"],
-        [":not", [":>", "m", 0]],
-        [":and", [":>", "m", -10], [":=", "s", "critical"]],
-        [":or", [":nil?", "m"], [":>", "m", 4]],
-        [":always-true"],
-    ]
-    for cond in conds:
-        want = [
-            bool(r[0])
-            for r in sdf.withColumn(
-                "__c__", F.coalesce(compile_condition(cond), F.lit(False))
-            ).select("__c__").collect()
-        ]
-        got = compile_condition_pandas(cond)(pdf).tolist()
-        assert got == want, f"{cond}: pandas={got} column={want}"
+    cases = {
+        # host c: the null metric is invalid, so 5 s flips and 12 s is
+        # within dt
+        "cdtv_gt": ([":>", "metric", 100], []),
+        # host c: the null metric is valid and flips at 0 s
+        "cdtv_or_nil": (
+            [":or", [":nil?", "metric"], [":>", "metric", 100]], [("c", 12)]
+        ),
+    }
+    for name, (cond, extra) in cases.items():
+        stream = stx.file_source(spark, src_dir, schema)
+        out = stx.stream_cond_dt(stream, cond, dt_s=10.0, by=["host"])
+        q = stx.to_memory(out, name)
+        q.awaitTermination(60)
+        got = sorted(
+            (r.host, r.time.second)
+            for r in spark.sql(f"select * from {name}").collect()
+        )
+        batch_out = st.cond_dt(batch_df, cond, 10.0, by=["host"], time_col="time")
+        want = sorted((r.host, r.time.second) for r in batch_out.collect())
+        assert got == want == sorted(
+            [("a", 11), ("a", 30), ("b", 20), *extra]
+        ), name
 
 
 def test_reinject_streaming_loopback(spark, tmpdir):
@@ -3020,6 +2997,54 @@ def _two_batch_runs(spark, tmp_path, df, split_pred, tag, builds):
     return {
         name: spark.sql(f"SELECT * FROM {name}").collect() for name in builds
     }
+
+
+def test_stream_null_time_rows_dropped_like_batch(spark, tmp_path):
+    """throttle, cond-dt and stable skip a null-time event in both
+    twins (the reference's ``when (:time event)``): the streams filter
+    it out before the shell, as the batch operators do, so it neither
+    passes nor touches a key's state."""
+    import pyspark.sql.functions as F
+
+    from mirabelle_spark.operators import stateful as st
+    from mirabelle_spark.operators.filters import throttle_batch
+    from mirabelle_spark.streaming import core
+
+    rows = [
+        # throttle, 2 per 60 s: host tb's null-time event
+        (0, "tb", 1.0, 1.0), (1, "tb", None, 1.0),
+        # cond-dt > 100 for 10 s: the null-time valid event of batch 1
+        # must not flip the state that the 5 s and 8 s events see
+        (2, "cd", 0.0, 1.0), (3, "cd", None, 200.0),
+        (4, "cd", 5.0, 200.0), (5, "cd", 8.0, 200.0),
+        # stable 10 s: the null-time event joins no confirmed run
+        (6, "st", 0.0, 1.0), (7, "st", 20.0, 1.0), (8, "st", None, 1.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id bigint, host string, t double, metric double"
+    ).withColumn(
+        "time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))
+    ).withColumn("status", F.lit("up")).drop("t")
+    k = dict(by=["host"], time_col="time")
+    cond = [":>", "metric", 100]
+    got = _two_batch_runs(spark, tmp_path, df, "event_id < 4", "nt", {
+        "nt_throttle": lambda s: core.stream_throttle(s, 2, 60.0, **k),
+        "nt_cond_dt": lambda s: core.stream_cond_dt(s, cond, 10.0, **k),
+        "nt_stable": lambda s: core.stream_stable(s, 10.0, "status", **k),
+    })
+    want = {
+        "nt_throttle": throttle_batch(df, 2, 60.0, **k),
+        "nt_cond_dt": st.cond_dt(df, cond, 10.0, **k),
+        "nt_stable": st.stable(df, 10.0, "status", **k),
+    }
+    ids = {name: sorted(r.event_id for r in rs) for name, rs in got.items()}
+    assert ids == {
+        name: sorted(r.event_id for r in batch.collect())
+        for name, batch in want.items()
+    }
+    assert ids["nt_throttle"] == [0, 2, 4, 6, 7]
+    assert ids["nt_stable"] == [6, 7]
+    assert ids["nt_cond_dt"] == []
 
 
 def test_keyed_fold_sorts_group_once_across_arrow_chunks(spark, tmp_path):

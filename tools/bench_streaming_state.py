@@ -17,11 +17,19 @@ Usage:
       [--cpus 32] [--shards 64]
 
 Prints one JSON line: {"events": N, "keys": K,
-"modes": {name: {"sec": s, "ev_per_s": r}}}.
+"modes": {name: {"sec": s, "ev_per_s": r, "rows_out": n}}}; a mode
+named twice keeps its last run there, and each run's "# mode" line
+shows it. ``rows_out`` is the sink's row count summed over the
+query's progress reports, so a mode that emits nothing shows.
 
 Notes: the generator writes one parquet dir per run; all modes read
 the same files through the same file source into a noop sink, so the
-delta between modes is the operator, not I/O.
+delta between modes is the operator, not I/O. Events are 1 ms apart
+and a key's events ``--keys`` ms apart.
+
+``BENCH_STATE_MEM`` sets the driver heap (default 4g, enough for the
+10k- and 16-key shapes); 1M-key runs of the HDFS-backed state store
+set it higher.
 """
 
 from __future__ import annotations
@@ -45,8 +53,9 @@ def make_spark(cpus: int):
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("bench-streaming-state")
         # the HDFS-backed state store holds every key's state on the
-        # heap; 1M keys x windowed-agg entries OOM the 1g default
-        .config("spark.driver.memory", os.environ.get("BENCH_STATE_MEM", "16g"))
+        # heap; 1M keys x windowed-agg entries OOM the 1g default and
+        # need BENCH_STATE_MEM above this 4g default
+        .config("spark.driver.memory", os.environ.get("BENCH_STATE_MEM", "4g"))
         .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
@@ -73,8 +82,10 @@ def gen_events(spark, path: str, n: int, keys: int, files: int = 8) -> None:
     )
 
 
-def _keyed_ops():
-    """Keyed twin builders by mode name; each takes ``shards``."""
+def _keyed_ops(keys: int):
+    """Keyed twin builders by mode name; each takes ``shards``.
+    ``keys`` sets the per-key event spacing (``keys`` ms) that
+    ``stable`` scales its dt from."""
     from pyspark.sql import functions as F
 
     from mirabelle_spark import streaming as stx
@@ -92,11 +103,13 @@ def _keyed_ops():
             s, 60.0, fields=["host"], **k, **kw),
         # status flips when the metric ramp crosses the threshold —
         # long confirmed runs (the steady-state fast path) with
-        # periodic flaps that exercise the buffer machinery
+        # periodic flaps that exercise the buffer machinery; dt is 8
+        # per-key event spacings, so runs of ~15-30 events confirm at
+        # 16 and at 10k keys alike
         "stable": lambda s, **kw: stx.stream_stable(
             s.withColumn("status", F.when(F.col("metric") > 70.0, "hi")
                          .otherwise("lo")),
-            5.0, "status", **k, **kw),
+            8 * keys / 1000.0, "status", **k, **kw),
         "few": lambda s, **kw: stx.stream_fixed_event_window(s, 5, **k, **kw),
         "mew": lambda s, **kw: stx.stream_moving_event_window(s, 5, **k, **kw),
         "expired": lambda s, **kw: stx.stream_expired(s, **k, **kw),
@@ -104,11 +117,14 @@ def _keyed_ops():
     }
 
 
-def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int):
+def run_mode(
+    spark, mode: str, src: str, schema: str, ck_root: str, shards: int, keys: int
+):
+    """Run ``mode`` once; return (seconds, rows the sink wrote)."""
     from pyspark.sql import functions as F
 
     stream = spark.readStream.schema(schema).parquet(src)
-    keyed = _keyed_ops()
+    keyed = _keyed_ops(keys)
     if mode == "jvm":
         out = (
             stream.withWatermark("time", "0 seconds")
@@ -140,7 +156,8 @@ def run_mode(spark, mode: str, src: str, schema: str, ck_root: str, shards: int)
         .start()
     )
     q.awaitTermination()
-    return time.monotonic() - t0
+    sec = time.monotonic() - t0
+    return sec, sum(p["sink"]["numOutputRows"] for p in q.recentProgress)
 
 
 def main() -> None:
@@ -162,12 +179,20 @@ def main() -> None:
         results = {}
         for mode in args.modes.split(","):
             mode = mode.strip()
-            sec = run_mode(spark, mode, src, schema, os.path.join(work, "ck"), args.shards)
+            sec, rows = run_mode(
+                spark, mode, src, schema, os.path.join(work, "ck"),
+                args.shards, args.keys,
+            )
             results[mode] = {
                 "sec": round(sec, 2),
                 "ev_per_s": int(args.events / sec),
+                "rows_out": rows,
             }
-            print(f"# {mode}: {sec:.2f}s = {int(args.events/sec):,} ev/s", flush=True)
+            print(
+                f"# {mode}: {sec:.2f}s = {int(args.events/sec):,} ev/s, "
+                f"{rows:,} rows out",
+                flush=True,
+            )
         print(
             json.dumps(
                 {"events": args.events, "keys": args.keys, "modes": results}
