@@ -30,21 +30,21 @@ def entry(spark: SparkSession) -> DataFrame:
 # so ordering is coverage policy: the oldest last-gated queries come
 # first, and a query whose engine path changed leads the next gate.
 # Current rotation ("gated" = named in the CORRECTNESS_r*.json record):
-# (a) the 25 r14-gated entries the previous rotation left out
-#     (registry order);
-# (b) the 22 entries last gated in r13, the oldest record of any
-#     oracle-backed entry (registry order);
-# (c) the first 3 entries last gated in r14 (registry order), filling
-#     to exactly 50.
-# The remaining 22 r14-gated entries (registry order: stable_states,
-# with_const, default_missing, scale_metric, coll_increase_daily,
-# ddt_rate, coll_where_inside_window, coll_sum_hourly,
-# coll_mean_hourly, coll_percentiles_hourly, sessionize_user_events,
-# zscore_events, dedup_exact_docs, minhash_lsh_pairs,
-# ngram_jaccard_pairs, simhash_pairs, dedup_clusters,
-# dedup_survivors_docs, ann_bruteforce_topk, ann_bruteforce_l2_topk,
-# ann_lsh_topk, ann_ivf_topk) lead the next rotation, then the r15
-# record.
+# (a) the 22 r14-gated entries the previous rotation left out
+#     (registry order); many cross the Python worker boundary
+#     (minhash, dedup, the ann_* queries, zscore), whose daemon
+#     changed;
+# (b) the first 28 entries last gated in r15 (registry order),
+#     filling to exactly 50.
+# The remaining 22 r15-gated entries (registry order:
+# text_bpe_token_count, text_repetition, gopher_quality_docs,
+# vocab_top100, token_rarity_docs, mixture_sample_docs,
+# clean_corpus_docs, paragraph_dedup_docs, multimodal_features,
+# video_frame_sample, linear_quality_docs, ivf_centroid_update,
+# best_docs_per_lang, token_chunks_docs, ann_sq_topk, ann_ivfpq_topk,
+# ann_ivfpq_rerank_topk, ann_ivfpq_cosine_topk, lm_bits_docs,
+# lm_quality_docs, tpch_pricing_summary, revenue_by_nation) lead the
+# next rotation, then the r16/r17 record.
 #
 # winnow_dedup_pairs_fast is rows-only BY DESIGN (no xxhash64 in
 # DuckDB; overlap vs the portable path is pytest-pinned) — it must
@@ -52,29 +52,24 @@ def entry(spark: SparkSession) -> DataFrame:
 # an `err` for its missing oracle. It stays below slot 50 because
 # this list holds exactly 50 oracle-backed names.
 GATE_PRIORITY = [
-    # (a) the 25 r14-gated entries left out last rotation (registry order)
-    "split_routing", "throttle", "ewma_smoothed", "ann_pq_topk",
-    "embedding_near_dups", "semantic_dedup_survivors",
-    "stratified_sample_docs", "contamination_docs", "pack_docs",
-    "boilerplate_removed_docs", "ann_ivfpq_trained_topk",
-    "winnow_dedup_pairs", "bpe_top_pairs", "pca_power_iter",
-    "pca_project_trained", "tfidf_top_terms", "dup_span_fraction_docs",
-    "curate_head_lm_docs", "curate_head_lm3_docs", "lm3_bits_docs",
-    "lm3_quality_docs", "top_suppliers", "priority_conditional_counts",
-    "brand_part_revenue", "segment_top_orders",
-    # (b) the 22 entries last gated in r13 (registry order)
-    "coll_top3", "coll_bottom3", "coll_sort_ids", "by_sum_daily",
-    "smax_running", "semdedup_survivors", "semdedup_arrow_survivors",
-    "semdedup_prod_survivors", "semdedup_prod_arrow_survivors",
-    "ngram_containment_pairs", "contamination_bloom_docs",
-    "dsir_logweight_docs", "dsir_top_docs", "temperature_sample_docs",
-    "bpe_fertility_by_lang", "curate_head_dsir_docs",
-    "dup_span_removed_prefilter_docs",
-    "dup_span_removed_char_prefilter_docs",
-    "dup_span_removed_twophase_docs", "vocab_cardinality_by_lang",
-    "corpus_datasheet", "volume_shipping",
-    # (c) the first 3 entries last gated in r14 (registry order)
-    "where_basic", "over_filter", "tagged_all",
+    # (a) the 22 r14-gated entries left out last rotation (registry order)
+    "stable_states", "with_const", "default_missing", "scale_metric",
+    "coll_increase_daily", "ddt_rate", "coll_where_inside_window",
+    "coll_sum_hourly", "coll_mean_hourly", "coll_percentiles_hourly",
+    "sessionize_user_events", "zscore_events", "dedup_exact_docs",
+    "minhash_lsh_pairs", "ngram_jaccard_pairs", "simhash_pairs",
+    "dedup_clusters", "dedup_survivors_docs", "ann_bruteforce_topk",
+    "ann_bruteforce_l2_topk", "ann_lsh_topk", "ann_ivf_topk",
+    # (b) the first 28 entries last gated in r15 (registry order)
+    "increment_metric", "decrement_metric", "sformat_label",
+    "to_string_field", "base64_roundtrip", "from_json_props",
+    "rename_keys_proj", "keep_keys_proj", "sdissoc_proj", "tag_untag",
+    "iterate_on_explode", "fixed_time_window_ids", "fixed_event_window_ids",
+    "moving_event_window_vals", "ssort_sorted", "project_correlate",
+    "smin_running", "ddt_pos_rate", "below_dt_alert", "between_dt_alert",
+    "critical_dt_alert", "dsl_pipeline", "coalesce_fill",
+    "ann_ivf_trained_topk", "ann_pq_trained_topk", "hash_sample_docs",
+    "mask_pii_docs", "text_token_count",
 ]
 
 

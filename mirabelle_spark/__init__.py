@@ -13,11 +13,13 @@ Layout
 - ``plans``        — action-tree DSL → DataFrame pipeline builder
 - ``streaming``    — Structured Streaming twins (watermark, state)
 - ``pipeline``     — large-scale training-data ops (dedup, ANN, text)
+- ``worker_daemon`` — the sessions' Python worker daemon
+
+The package itself imports no pyspark: the worker daemon imports it
+before it sets up the path pyspark is imported from.
 
 Reference parity citations point into the read-only snapshot at
 ``/root/reference`` (mirabelle 0.14.0), e.g. ``action.clj:2387``.
 """
 
 __version__ = "0.1.0"
-
-from mirabelle_spark.conditions import compile_condition  # noqa: F401

@@ -26,6 +26,12 @@ def get_spark(
     coalesce small shuffle partitions, Arrow on for any pandas
     interchange, UTC session TZ so results compare bit-for-bit with
     the DuckDB oracle.
+
+    Python workers start through :mod:`mirabelle_spark.worker_daemon`
+    (``spark.python.daemon.module``), which drops Spark's pyspark/py4j
+    archives from the workers' path when the installed packages are
+    the same versions, so no task re-reads a zip directory;
+    ``extra_conf`` can name another daemon module.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or cpus
@@ -39,6 +45,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.python.daemon.module", "mirabelle_spark.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -1544,12 +1544,16 @@ def stream_ddt(
     micro-batches; the derivative is one vectorized diff over the
     slice with the previous (t, metric) injected from the carry at
     segment starts only — O(distinct keys) Python, O(rows) numpy.
-    Null-metric events are skipped entirely (they never become the
-    new previous): Spark filters them out before the shell, as batch
-    ``ddt`` does, and NaN metrics with them, since pandas reads a
-    null double as NaN. Zero time delta is skipped. ``shards`` sets
-    the shard count (see ``_keyed_fold_scan``)."""
+    Null-metric and null-time events are skipped entirely (they never
+    become the new previous): Spark filters them out before the shell,
+    as batch ``ddt`` drops them, so a NaN the fold sees is a real NaN
+    metric and folds like any number. An event emits when it has a
+    previous event and a nonzero time delta, as batch ``try_divide`` +
+    ``isNotNull`` does; ``remove_neg`` keeps NaN, which Spark orders
+    above every number. ``shards`` sets the shard count (see
+    ``_keyed_fold_scan``)."""
     import numpy as np
+    import pandas as pd
 
     def fold(carry, keys, starts, pdf):
         t = _series_us(pdf[time_col]).astype("float64")
@@ -1564,17 +1568,19 @@ def stream_ddt(
         dt = (t - prev_t) / 1_000_000.0
         with np.errstate(divide="ignore", invalid="ignore"):
             diff = (m - prev_m) / dt
-        ok = np.isfinite(diff)
+        ok = ~np.isnan(prev_t) & (dt != 0)
         if remove_neg:
-            ok &= diff >= 0
+            ok &= (diff >= 0) | np.isnan(diff)
         ends = np.append(starts[1:], len(pdf)) - 1
         for k, e in zip(keys, ends.tolist()):
             carry[k] = (int(t[e]), float(m[e]))
         out = pdf[ok].copy()
-        out[metric_col] = diff[ok]
+        # a masked array, so Arrow keeps a NaN derivative NaN, not null
+        kept = diff[ok]
+        out[metric_col] = pd.arrays.FloatingArray(kept, np.zeros(kept.size, bool))
         return out
 
-    src = df.filter(F.col(metric_col).isNotNull() & ~F.isnan(metric_col))
+    src = df.filter(F.col(metric_col).isNotNull() & F.col(time_col).isNotNull())
     return _keyed_fold_scan(src, by, time_col, shards, fold)
 
 

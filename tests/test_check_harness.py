@@ -4,13 +4,16 @@ canon/norm machinery from tools/check_correctness.py directly."""
 
 import importlib.util
 import sys
+from pathlib import Path
 
 import pandas as pd
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def _load():
     spec = importlib.util.spec_from_file_location(
-        "check_correctness", "/root/repo/tools/check_correctness.py"
+        "check_correctness", ROOT / "tools" / "check_correctness.py"
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules.setdefault("check_correctness", mod)
@@ -64,7 +67,7 @@ def test_canon_catches_sign_of_negative_zero_collapse():
 
 def _load_bench():
     spec = importlib.util.spec_from_file_location(
-        "bench_mod", "/root/repo/bench.py"
+        "bench_mod", ROOT / "bench.py"
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules.setdefault("bench_mod", mod)

@@ -3000,7 +3000,7 @@ def _two_batch_runs(spark, tmp_path, df, split_pred, tag, builds):
 
 
 def test_stream_null_time_rows_dropped_like_batch(spark, tmp_path):
-    """throttle, cond-dt and stable skip a null-time event in both
+    """throttle, cond-dt, stable and ddt skip a null-time event in both
     twins (the reference's ``when (:time event)``): the streams filter
     it out before the shell, as the batch operators do, so it neither
     passes nor touches a key's state."""
@@ -3019,6 +3019,10 @@ def test_stream_null_time_rows_dropped_like_batch(spark, tmp_path):
         (4, "cd", 5.0, 200.0), (5, "cd", 8.0, 200.0),
         # stable 10 s: the null-time event joins no confirmed run
         (6, "st", 0.0, 1.0), (7, "st", 20.0, 1.0), (8, "st", None, 1.0),
+        # ddt: the null-time event of batch 1 is neither emitted nor
+        # the previous event of the 2 s one
+        (9, "dd", 0.0, 1.0), (10, "dd", None, 2.0),
+        (11, "dd", 2.0, 3.0), (12, "dd", 3.0, 5.0),
     ]
     df = spark.createDataFrame(
         rows, "event_id bigint, host string, t double, metric double"
@@ -3027,24 +3031,86 @@ def test_stream_null_time_rows_dropped_like_batch(spark, tmp_path):
     ).withColumn("status", F.lit("up")).drop("t")
     k = dict(by=["host"], time_col="time")
     cond = [":>", "metric", 100]
-    got = _two_batch_runs(spark, tmp_path, df, "event_id < 4", "nt", {
+    split = "event_id < 4 OR event_id IN (9, 10)"
+    got = _two_batch_runs(spark, tmp_path, df, split, "nt", {
         "nt_throttle": lambda s: core.stream_throttle(s, 2, 60.0, **k),
         "nt_cond_dt": lambda s: core.stream_cond_dt(s, cond, 10.0, **k),
         "nt_stable": lambda s: core.stream_stable(s, 10.0, "status", **k),
+        "nt_ddt": lambda s: core.stream_ddt(s, **k),
     })
     want = {
         "nt_throttle": throttle_batch(df, 2, 60.0, **k),
         "nt_cond_dt": st.cond_dt(df, cond, 10.0, **k),
         "nt_stable": st.stable(df, 10.0, "status", **k),
+        "nt_ddt": st.ddt(df, **k),
     }
-    ids = {name: sorted(r.event_id for r in rs) for name, rs in got.items()}
-    assert ids == {
-        name: sorted(r.event_id for r in batch.collect())
+    out = {
+        name: sorted((r.event_id, r.metric) for r in rs)
+        for name, rs in got.items()
+    }
+    assert out == {
+        name: sorted((r.event_id, r.metric) for r in batch.collect())
         for name, batch in want.items()
     }
-    assert ids["nt_throttle"] == [0, 2, 4, 6, 7]
+    ids = {name: [i for i, _ in rs] for name, rs in out.items()}
+    assert ids["nt_throttle"] == [0, 2, 4, 6, 7, 9, 11]
     assert ids["nt_stable"] == [6, 7]
     assert ids["nt_cond_dt"] == []
+    assert [r for r in out["nt_ddt"] if r[0] >= 9] == [(11, 1.0), (12, 2.0)]
+
+
+def test_stream_ddt_nan_metric_like_batch(spark, tmp_path):
+    """A NaN metric is a number to ddt and ddt-pos in both twins: only
+    null metrics are skipped, and every event with a previous event
+    and a nonzero time delta emits, NaN and infinite derivatives
+    included. ddt-pos keeps NaN, which Spark orders above every
+    number. The split puts a NaN previous event in the carry."""
+    import math
+
+    import pyspark.sql.functions as F
+
+    from mirabelle_spark.operators import stateful as st
+    from mirabelle_spark.streaming import core
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        # batch ddt: NaN, NaN, 2.0
+        (0, "a", 0.0, 1.0), (1, "a", 1.0, nan),
+        (2, "a", 2.0, 3.0), (3, "a", 3.0, 5.0),
+        # a negative, then NaN from and to a number, then a number
+        (4, "b", 0.0, 5.0), (5, "b", 1.0, 3.0), (6, "b", 2.0, nan),
+        (7, "b", 3.0, 1.0), (8, "b", 4.0, 4.0),
+        # infinite metrics give infinite derivatives
+        (9, "c", 0.0, 1.0), (10, "c", 1.0, inf), (11, "c", 2.0, 2.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id bigint, host string, t double, metric double"
+    ).withColumn(
+        "time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))
+    ).drop("t")
+    k = dict(by=["host"], time_col="time")
+    got = _two_batch_runs(
+        spark, tmp_path, df, "event_id IN (0, 1, 4, 5, 6, 9, 10)", "nan", {
+            "nan_ddt": lambda s: core.stream_ddt(s, **k),
+            "nan_ddt_pos": lambda s: core.stream_ddt(s, remove_neg=True, **k),
+        })
+    want = {"nan_ddt": st.ddt(df, **k), "nan_ddt_pos": st.ddt_pos(df, **k)}
+
+    def canon(rs):
+        return sorted(
+            (r.event_id, "nan" if math.isnan(r.metric) else r.metric) for r in rs
+        )
+
+    got = {name: canon(rs) for name, rs in got.items()}
+    assert got == {name: canon(b.collect()) for name, b in want.items()}
+    assert got["nan_ddt"] == [
+        (1, "nan"), (2, "nan"), (3, 2.0), (5, -2.0), (6, "nan"), (7, "nan"),
+        (8, 3.0), (10, inf), (11, -inf),
+    ]
+    assert got["nan_ddt_pos"] == [
+        (1, "nan"), (2, "nan"), (3, 2.0), (6, "nan"), (7, "nan"), (8, 3.0),
+        (10, inf),
+    ]
 
 
 def test_keyed_fold_sorts_group_once_across_arrow_chunks(spark, tmp_path):

@@ -47,20 +47,17 @@ os.environ.setdefault("SPARK_GRAFT_SILENT", "1")
 
 
 def make_spark(cpus: int):
-    from pyspark.sql import SparkSession
+    """The engine's own session (``session.get_spark``), so the modes
+    run through its Python worker setup. The HDFS-backed state store
+    holds every key's state on the heap; 1M keys x windowed-agg
+    entries OOM a 1g heap and need BENCH_STATE_MEM above the 4g
+    default."""
+    from mirabelle_spark.session import get_spark
 
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench-streaming-state")
-        # the HDFS-backed state store holds every key's state on the
-        # heap; 1M keys x windowed-agg entries OOM the 1g default and
-        # need BENCH_STATE_MEM above this 4g default
-        .config("spark.driver.memory", os.environ.get("BENCH_STATE_MEM", "4g"))
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
+    return get_spark(
+        app_name="bench-streaming-state",
+        cpus=cpus,
+        extra_conf={"spark.driver.memory": os.environ.get("BENCH_STATE_MEM", "4g")},
     )
 
 
@@ -85,7 +82,7 @@ def gen_events(spark, path: str, n: int, keys: int, files: int = 8) -> None:
 def _keyed_ops(keys: int):
     """Keyed twin builders by mode name; each takes ``shards``.
     ``keys`` sets the per-key event spacing (``keys`` ms) that
-    ``stable`` scales its dt from."""
+    ``cond_dt`` and ``stable`` scale their dt from."""
     from pyspark.sql import functions as F
 
     from mirabelle_spark import streaming as stx
@@ -93,8 +90,10 @@ def _keyed_ops(keys: int):
     k = dict(by=["host"], time_col="time")
     return {
         "ewma": lambda s, **kw: stx.stream_ewma(s, 0.25, **k, **kw),
+        # a key's valid run (metric > 60) lasts ~36 events; dt is 8
+        # per-key event spacings, so runs pass at 16 and at 10k keys
         "cond_dt": lambda s, **kw: stx.stream_cond_dt(
-            s, [":>", "metric", 60.0], 5.0, **k, **kw),
+            s, [":>", "metric", 60.0], 8 * keys / 1000.0, **k, **kw),
         "changed": lambda s, **kw: stx.stream_changed(s, "metric", **k, **kw),
         "ddt": lambda s, **kw: stx.stream_ddt(s, **k, **kw),
         "zscore": lambda s, **kw: stx.stream_zscore(s, 30.0, **k, **kw),
@@ -170,7 +169,6 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = make_spark(args.cpus)
-    spark.sparkContext.setLogLevel("WARN")
     work = tempfile.mkdtemp(prefix="bench_state_")
     src = os.path.join(work, "events")
     schema = "host string, time timestamp, metric double"
