@@ -30,21 +30,21 @@ def entry(spark: SparkSession) -> DataFrame:
 # so ordering is coverage policy: the oldest last-gated queries come
 # first, and a query whose engine path changed leads the next gate.
 # Current rotation ("gated" = named in the CORRECTNESS_r*.json record):
-# (a) the 22 r14-gated entries the previous rotation left out
-#     (registry order); many cross the Python worker boundary
-#     (minhash, dedup, the ann_* queries, zscore), whose daemon
-#     changed;
-# (b) the first 28 entries last gated in r15 (registry order),
-#     filling to exactly 50.
-# The remaining 22 r15-gated entries (registry order:
-# text_bpe_token_count, text_repetition, gopher_quality_docs,
-# vocab_top100, token_rarity_docs, mixture_sample_docs,
-# clean_corpus_docs, paragraph_dedup_docs, multimodal_features,
-# video_frame_sample, linear_quality_docs, ivf_centroid_update,
-# best_docs_per_lang, token_chunks_docs, ann_sq_topk, ann_ivfpq_topk,
-# ann_ivfpq_rerank_topk, ann_ivfpq_cosine_topk, lm_bits_docs,
-# lm_quality_docs, tpch_pricing_summary, revenue_by_nation) lead the
-# next rotation, then the r16/r17 record.
+# (a) the 22 r15-gated entries the previous rotation left out
+#     (registry order);
+# (b) the first 28 entries last gated in r16 (registry order; the r17
+#     record gated the same 50), filling to exactly 50.
+# The remaining 22 r16-gated entries (registry order:
+# text_rolling_fp, image_dhash_docs, image_near_dups,
+# video_near_dups, audio_dhash_docs, audio_near_dups,
+# neardup_degree_histogram, soft_dedup_docs, corpus_split_docs,
+# search_quality_docs, doc_length_profile, split_token_budget,
+# bpe_segment_trained, scrubbed_corpus_docs,
+# curate_head_logreg_docs, logreg_quality_docs, curate_head_docs,
+# dup_span_removed_docs, dup_span_removed_char_docs,
+# order_priority_counts, returned_item_customers,
+# large_order_customers) lead the next rotation, then the record of
+# the rounds after r17.
 #
 # winnow_dedup_pairs_fast is rows-only BY DESIGN (no xxhash64 in
 # DuckDB; overlap vs the portable path is pytest-pinned) — it must
@@ -52,24 +52,25 @@ def entry(spark: SparkSession) -> DataFrame:
 # an `err` for its missing oracle. It stays below slot 50 because
 # this list holds exactly 50 oracle-backed names.
 GATE_PRIORITY = [
-    # (a) the 22 r14-gated entries left out last rotation (registry order)
-    "stable_states", "with_const", "default_missing", "scale_metric",
-    "coll_increase_daily", "ddt_rate", "coll_where_inside_window",
-    "coll_sum_hourly", "coll_mean_hourly", "coll_percentiles_hourly",
-    "sessionize_user_events", "zscore_events", "dedup_exact_docs",
-    "minhash_lsh_pairs", "ngram_jaccard_pairs", "simhash_pairs",
-    "dedup_clusters", "dedup_survivors_docs", "ann_bruteforce_topk",
-    "ann_bruteforce_l2_topk", "ann_lsh_topk", "ann_ivf_topk",
-    # (b) the first 28 entries last gated in r15 (registry order)
-    "increment_metric", "decrement_metric", "sformat_label",
-    "to_string_field", "base64_roundtrip", "from_json_props",
-    "rename_keys_proj", "keep_keys_proj", "sdissoc_proj", "tag_untag",
-    "iterate_on_explode", "fixed_time_window_ids", "fixed_event_window_ids",
-    "moving_event_window_vals", "ssort_sorted", "project_correlate",
-    "smin_running", "ddt_pos_rate", "below_dt_alert", "between_dt_alert",
-    "critical_dt_alert", "dsl_pipeline", "coalesce_fill",
-    "ann_ivf_trained_topk", "ann_pq_trained_topk", "hash_sample_docs",
-    "mask_pii_docs", "text_token_count",
+    # (a) the 22 remaining r15-gated entries (registry order)
+    "text_bpe_token_count", "text_repetition", "gopher_quality_docs",
+    "vocab_top100", "token_rarity_docs", "mixture_sample_docs",
+    "clean_corpus_docs", "paragraph_dedup_docs", "multimodal_features",
+    "video_frame_sample", "linear_quality_docs", "ivf_centroid_update",
+    "best_docs_per_lang", "token_chunks_docs", "ann_sq_topk",
+    "ann_ivfpq_topk", "ann_ivfpq_rerank_topk", "ann_ivfpq_cosine_topk",
+    "lm_bits_docs", "lm_quality_docs", "tpch_pricing_summary",
+    "revenue_by_nation",
+    # (b) the first 28 entries last gated in r16 (registry order)
+    "where_not", "where_regex", "under_filter", "expired_events",
+    "not_expired_events", "changed_transitions", "above_dt_alert",
+    "outside_dt_alert", "extract_nested", "sflatten_roundtrip",
+    "moving_time_window_count", "coalesce_latest", "agg_sum_hourly",
+    "agg_sum_delayed_hourly", "agg_mean_hourly", "agg_top_event",
+    "agg_bottom_event", "agg_rate_hourly", "agg_ratio_error_click",
+    "agg_percentiles_hourly", "coll_count_hourly", "coll_max_hourly",
+    "coll_min_hourly", "coll_rate_hourly", "coll_quotient_daily",
+    "text_quality", "text_lang_id", "text_fingerprint",
 ]
 
 

@@ -12,7 +12,10 @@ Spark twin: a :class:`StreamMetricsListener` —
 each named query's micro-batch durations and input rows; the batch is
 the engine's unit of work the way the event is the reference's, so
 ``stream_duration_seconds`` quantiles are computed over micro-batch
-trigger executions. Rendering is dependency-free Prometheus text
+trigger executions. Each batch's ``durationMs`` phases (addBatch,
+walCommit, commitOffsets, ...) add to ``stream_phase_seconds``, and
+its state operators report commit time, rows, memory and rows dropped
+by the watermark. Rendering is dependency-free Prometheus text
 exposition; :class:`mirabelle_spark.streaming.http_api.StreamApi`
 serves it on GET ``/metrics`` when given a listener.
 """
@@ -67,6 +70,13 @@ class StreamMetricsListener(StreamingQueryListener):
     def __init__(self):
         self._lock = threading.Lock()
         self._timers: dict[str, _Timer] = defaultdict(_Timer)
+        # (stream, phase) -> [count, seconds]
+        self._phases: dict[tuple[str, str], list] = defaultdict(lambda: [0, 0.0])
+        # (stream, operator index, operator name) -> [commits, commit
+        # seconds, rows (latest), memory bytes (latest), rows dropped]
+        self._state: dict[tuple[str, str, str], list] = defaultdict(
+            lambda: [0, 0.0, 0, 0, 0]
+        )
         self._http: dict[tuple[str, str, str], int] = defaultdict(int)
 
     # -- StreamingQueryListener callbacks -----------------------------------
@@ -81,6 +91,17 @@ class StreamMetricsListener(StreamingQueryListener):
         ms = dur.get("triggerExecution", sum(dur.values()))
         with self._lock:
             self._timers[name].record(ms / 1000.0, int(p.numInputRows or 0))
+            for phase, v in dur.items():
+                acc = self._phases[(name, phase)]
+                acc[0] += 1
+                acc[1] += v / 1000.0
+            for i, op in enumerate(p.stateOperators or ()):
+                acc = self._state[(name, str(i), op.operatorName)]
+                acc[0] += 1
+                acc[1] += op.commitTimeMs / 1000.0
+                acc[2] = op.numRowsTotal
+                acc[3] = op.memoryUsedBytes
+                acc[4] += op.numRowsDroppedByWatermark
 
     def onQueryIdle(self, event):  # noqa: N802
         pass
@@ -133,7 +154,42 @@ class StreamMetricsListener(StreamingQueryListener):
                 f'stream_input_rows_total{{name="{name}"}} {s["rows"]}'
             )
         with self._lock:
+            phases = sorted((k, tuple(v)) for k, v in self._phases.items())
+            state = sorted((k, tuple(v)) for k, v in self._state.items())
             http = dict(self._http)
+        if phases:
+            out.append(
+                "# HELP stream_phase_seconds Micro-batch time per phase "
+                "(Spark's durationMs) per stream."
+            )
+            out.append("# TYPE stream_phase_seconds summary")
+            for (name, phase), (n, total) in phases:
+                lbl = f'name="{name}",phase="{phase}"'
+                out.append(f"stream_phase_seconds_sum{{{lbl}}} {total:.9g}")
+                out.append(f"stream_phase_seconds_count{{{lbl}}} {n}")
+        if state:
+            out.append(
+                "# HELP stream_state_commit_seconds State-store commit time "
+                "per stateful operator."
+            )
+            out.append("# TYPE stream_state_commit_seconds summary")
+        for (name, idx, op), (n, commit_s, _, _, _) in state:
+            lbl = f'name="{name}",operator="{op}",index="{idx}"'
+            out.append(f"stream_state_commit_seconds_sum{{{lbl}}} {commit_s:.9g}")
+            out.append(f"stream_state_commit_seconds_count{{{lbl}}} {n}")
+        for col, metric, kind, help_ in (
+            (2, "stream_state_rows", "gauge", "Rows held in state."),
+            (3, "stream_state_memory_bytes", "gauge", "Memory used by the state store."),
+            (4, "stream_state_rows_dropped_by_watermark_total", "counter",
+             "Rows a stateful operator dropped as later than the watermark."),
+        ):
+            if state:
+                out.append(f"# HELP {metric} {help_}")
+                out.append(f"# TYPE {metric} {kind}")
+            for (name, idx, op), acc in state:
+                out.append(
+                    f'{metric}{{name="{name}",operator="{op}",index="{idx}"}} {acc[col]}'
+                )
         if http:
             out.append(
                 "# HELP http_responses_total HTTP responses count."

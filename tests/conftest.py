@@ -137,7 +137,6 @@ SLOW_TESTS = {
     "test_properties.py::test_zscore_matches_reference_loop",
     "test_scale.py::test_ivf_trained_quantizer_sf1_recall",
     "test_streaming.py::test_control_plane_soak_small",
-    "test_streaming.py::test_lifecycle_reload_preserves_state",
     "test_streaming.py::test_lifecycle_reload_survives_uncommitted_batch0",
     "test_streaming.py::test_riemann_tcp_tls_mtls",
     "test_streaming.py::test_state_ttl_evicts_idle_keys",

@@ -1946,6 +1946,8 @@ def test_metrics_endpoint_per_stream_timers(spark, tmpdir):
         assert 'stream_duration_seconds{name="obs",quantile="0.5"}' in body
         assert 'stream_duration_seconds_count{name="obs"}' in body
         assert 'stream_input_rows_total{name="obs"}' in body
+        assert 'stream_phase_seconds_count{name="obs",phase="addBatch"}' in body
+        assert 'stream_state_rows{name="obs",operator="stateStoreSave",index="0"}' in body
         # the /metrics scrape itself shows up in the HTTP counters
         with urllib.request.urlopen(base + "/metrics", timeout=10) as resp:
             body2 = resp.read().decode()
@@ -1955,6 +1957,51 @@ def test_metrics_endpoint_per_stream_timers(spark, tmpdir):
         api.stop()
         handler.stop_all()
         spark.streams.removeListener(listener)
+
+
+def test_metrics_render_phases_and_state_operators():
+    """Each progress event adds its ``durationMs`` phases to
+    ``stream_phase_seconds`` and its state operators' commit time, rows,
+    memory and watermark drops to the ``stream_state_*`` series."""
+    import uuid
+
+    from pyspark.sql.streaming.listener import QueryProgressEvent
+
+    from mirabelle_spark.streaming import StreamMetricsListener
+
+    def event(batch_id, commit_ms, rows, dropped):
+        op = {
+            "operatorName": "transformWithStateInPandasExec", "numRowsTotal": rows,
+            "numRowsUpdated": 3, "numRowsRemoved": 0, "allUpdatesTimeMs": 1,
+            "allRemovalsTimeMs": 0, "commitTimeMs": commit_ms,
+            "memoryUsedBytes": 4096 + rows, "numRowsDroppedByWatermark": dropped,
+            "numShufflePartitions": 4, "numStateStoreInstances": 4,
+        }
+        return QueryProgressEvent.fromJson({"progress": {
+            "id": str(uuid.UUID(int=1)), "runId": str(uuid.UUID(int=2)),
+            "name": "alerts", "timestamp": "2024-01-01T00:00:00.000Z",
+            "batchId": batch_id, "batchDuration": 300, "numInputRows": 10,
+            "durationMs": {"addBatch": 250, "walCommit": 20, "triggerExecution": 300},
+            "stateOperators": [op], "sources": [],
+            "sink": {"description": "noop", "numOutputRows": 10},
+        }})
+
+    listener = StreamMetricsListener()
+    listener.onQueryProgress(event(0, 18, 5, 0))
+    listener.onQueryProgress(event(1, 24, 7, 2))
+    lines = listener.render().splitlines()
+    assert 'stream_phase_seconds_sum{name="alerts",phase="addBatch"} 0.5' in lines
+    assert 'stream_phase_seconds_count{name="alerts",phase="addBatch"} 2' in lines
+    assert 'stream_phase_seconds_sum{name="alerts",phase="walCommit"} 0.04' in lines
+    assert 'stream_duration_seconds_count{name="alerts"} 2' in lines
+    lbl = 'name="alerts",operator="transformWithStateInPandasExec",index="0"'
+    assert f"stream_state_commit_seconds_sum{{{lbl}}} 0.042" in lines
+    assert f"stream_state_commit_seconds_count{{{lbl}}} 2" in lines
+    # rows and memory are the latest batch's; drops add up
+    assert f"stream_state_rows{{{lbl}}} 7" in lines
+    assert f"stream_state_memory_bytes{{{lbl}}} 4103" in lines
+    assert f"stream_state_rows_dropped_by_watermark_total{{{lbl}}} 2" in lines
+    assert "# TYPE stream_state_rows gauge" in lines
 
 
 def test_stream_sessionize_parity(spark, tmp_path):

@@ -111,7 +111,13 @@ def _keyed_ops(keys: int):
             8 * keys / 1000.0, "status", **k, **kw),
         "few": lambda s, **kw: stx.stream_fixed_event_window(s, 5, **k, **kw),
         "mew": lambda s, **kw: stx.stream_moving_event_window(s, 5, **k, **kw),
-        "expired": lambda s, **kw: stx.stream_expired(s, **k, **kw),
+        # one event in 10 carries state "expired", so the expiry branch
+        # emits rows (no event here ages past the 120 s default ttl)
+        "expired": lambda s, **kw: stx.stream_expired(
+            s.withColumn("state", F.when(
+                F.expr("unix_micros(time) DIV 1000 % 10 = 0"), "expired")
+                .otherwise("ok")),
+            **k, **kw),
         "smax": lambda s, **kw: stx.stream_smax(s, **k, **kw),
     }
 
