@@ -15,6 +15,15 @@ list}``. ``by`` is special-cased exactly like the reference
 grouping keys into every windowed/stateful descendant via the
 compile context.
 
+One action table, ``_ACTIONS``, serves batch and streaming compiles
+alike (the reference's one registry): each entry decodes its params
+once and returns its batch operator or, under ``Ctx.streaming``, its
+streaming form — the same operator on a watermarked stream for a
+windowed action, the keyed-state twin (``mirabelle_spark.streaming``)
+for a keyed stateful one. ``register_action``, ``custom`` and the
+param specs all read that one table, so a user action or a
+``custom`` call resolves the same way in both modes.
+
 No optimizer pass lives here on purpose — the fold emits declarative
 DataFrame ops and Catalyst does the optimizing (predicate pushdown
 through our `where` nodes, projection pruning through `keep-keys`,
@@ -24,7 +33,7 @@ etc.).
 from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
-from typing import Any, Callable
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -55,11 +64,14 @@ class Ctx:
     """Compile context threaded through the tree.
 
     ``streaming=True`` compiles the SAME tree against a streaming
-    DataFrame: stateless actions are streaming-transparent (identical
+    DataFrame: every action's one table entry returns its streaming
+    form — stateless actions are streaming-transparent (identical
     Catalyst ops), windowed actions run their batch operator on the
     stream watermarked with their delay, and keyed stateful actions
-    dispatch to their keyed-state folds instead of the batch
-    window-function realizations. ``delay_s`` is the default
+    run their keyed-state folds instead of the batch window-function
+    realizations (they need `by` keys; the flag selects, not
+    ``df.isStreaming``, so a batch df compiles the streaming plan
+    for inspection). ``delay_s`` is the default
     watermark delay of windowed actions (the reference's per-op
     :delay overrides it via cfg). ``shards``
     (set per-fork via ``by``'s ``{"shards": N}`` config key, or
@@ -83,7 +95,55 @@ def _tw(ctx: Ctx) -> dict:
     return dict(by=list(ctx.by), time_col=ctx.time_col)
 
 
-# action name -> fn(df, ctx, *params) -> DataFrame (or None for sinks)
+def _aggk(ctx: Ctx) -> dict:
+    return dict(by=list(ctx.by), time_col=ctx.time_col, metric_col=ctx.metric_col)
+
+
+def _stk(ctx: Ctx) -> dict:
+    return dict(by=list(ctx.by), time_col=ctx.time_col, order_cols=list(ctx.order_cols))
+
+
+def _keyed(ctx: Ctx, name: str) -> dict:
+    """Context kwargs of a keyed-state twin: its `by` keys route to
+    ``ctx.shards`` shard-mapped state groups, so it refuses unkeyed
+    use."""
+    if not ctx.by:
+        raise ValueError(
+            f"streaming {name!r} needs `by` keys (keyed state shards per "
+            "key; unkeyed ordered state would be one global task forever) "
+            "— wrap it in a `by` node"
+        )
+    return dict(by=list(ctx.by), time_col=ctx.time_col, shards=ctx.shards)
+
+
+def _stx():
+    """The streaming module, imported by streaming compiles only."""
+    from mirabelle_spark.streaming import core
+
+    return core
+
+
+def _wm(df: DataFrame, ctx: Ctx, cfg: dict | None = None) -> DataFrame:
+    """A windowed action's input: under ``ctx.streaming`` the stream
+    watermarked with the node's ``:delay`` (cfg ``"delay"``, else
+    ``ctx.delay_s``) — the operator's window grouping turns into
+    ``window()`` on a stream (aggregations.window_agg), so windows
+    seal once the watermark passes their end."""
+    if not ctx.streaming:
+        return df
+    delay = (cfg or {}).get("delay", ctx.delay_s)
+    return df.withWatermark(ctx.time_col, f"{delay} seconds")
+
+
+# action name -> fn(df, ctx, *params) -> DataFrame (or None for sinks).
+# One entry per action serves both compile modes: it decodes its
+# params once and, under ctx.streaming, returns the streaming form.
+# Stateless actions are the same Catalyst ops both ways; windowed
+# actions run their batch operator on the watermarked stream (_wm);
+# keyed stateful actions run their keyed-state twin, which REQUIRES
+# `by` keys (_keyed): unkeyed ordered state has no sane streaming
+# shape (one global task forever), so the compiler refuses instead of
+# degrading silently.
 _ACTIONS: dict[str, Callable] = {}
 
 
@@ -102,7 +162,8 @@ _USER_ACTIONS: set[str] = set()
 
 def register_action(name: str, fn: Callable) -> None:
     """User-supplied custom action (the reference's `custom`/
-    requiring-resolve surface, stream.clj:29-34)."""
+    requiring-resolve surface, stream.clj:29-34). It replaces any
+    built-in of the same name in both compile modes."""
     _ACTIONS[name] = fn
     _USER_ACTIONS.add(name)
 
@@ -113,22 +174,32 @@ action("where")(lambda df, ctx, cond: flt.where(df, cond))
 action("over")(lambda df, ctx, n: flt.over(df, n, ctx.metric_col))
 action("under")(lambda df, ctx, n: flt.under(df, n, ctx.metric_col))
 action("tagged-all")(lambda df, ctx, tags: flt.tagged_all(df, tags))
-action("expired")(
-    lambda df, ctx: flt.expired(
-        df, ctx.time_col, arrival_cols=list(ctx.order_cols), by=list(ctx.by)
-    )
-)
-action("not-expired")(
-    lambda df, ctx: flt.not_expired(
-        df, ctx.time_col, arrival_cols=list(ctx.order_cols), by=list(ctx.by)
-    )
-)
-action("throttle")(
-    lambda df, ctx, cfg: flt.throttle_batch(
-        df, cfg["count"], cfg["duration"], by=list(ctx.by), time_col=ctx.time_col,
-        order_cols=list(ctx.order_cols),
-    )
-)
+
+
+def _expiry(name: str, batch: Callable, keep_expired: bool) -> Callable:
+    def fn(df, ctx):
+        if ctx.streaming:
+            return _stx().stream_expired(
+                df, keep_expired=keep_expired, **_keyed(ctx, name)
+            )
+        return batch(
+            df, ctx.time_col, arrival_cols=list(ctx.order_cols), by=list(ctx.by)
+        )
+
+    return fn
+
+
+action("expired")(_expiry("expired", flt.expired, True))
+action("not-expired")(_expiry("not-expired", flt.not_expired, False))
+
+
+@action("throttle")
+def _throttle(df, ctx, cfg):
+    n, dt = cfg["count"], cfg["duration"]
+    if ctx.streaming:
+        return _stx().stream_throttle(df, n, dt, **_keyed(ctx, "throttle"))
+    return flt.throttle_batch(df, n, dt, **_stk(ctx))
+
 
 # -- transforms ------------------------------------------------------------
 
@@ -159,86 +230,105 @@ action("custom")(lambda df, ctx, name, *a: _ACTIONS[name](df, ctx, *a))
 # -- windows ---------------------------------------------------------------
 
 action("fixed-time-window")(
-    lambda df, ctx, cfg: win.fixed_time_window(df, cfg["duration"], **_tw(ctx))
-)
-action("fixed-event-window")(
-    lambda df, ctx, cfg: win.fixed_event_window(
-        df, cfg["size"], by=list(ctx.by), time_col=ctx.time_col,
-        order_cols=list(ctx.order_cols),
+    lambda df, ctx, cfg: win.fixed_time_window(
+        _wm(df, ctx, cfg), cfg["duration"], **_tw(ctx)
     )
 )
-action("moving-event-window")(
-    lambda df, ctx, cfg: win.moving_event_window(
-        df, cfg["size"], by=list(ctx.by), time_col=ctx.time_col,
-        order_cols=list(ctx.order_cols),
-    )
-)
-action("moving-time-window")(
-    lambda df, ctx, cfg: win.moving_time_window(df, cfg["duration"], **_tw(ctx))
-)
+
+
+def _event_window(name: str, batch: Callable, twin: str) -> Callable:
+    def fn(df, ctx, cfg):
+        if ctx.streaming:
+            return getattr(_stx(), twin)(df, cfg["size"], **_keyed(ctx, name))
+        return batch(df, cfg["size"], **_stk(ctx))
+
+    return fn
+
+
+action("fixed-event-window")(_event_window(
+    "fixed-event-window", win.fixed_event_window, "stream_fixed_event_window"))
+action("moving-event-window")(_event_window(
+    "moving-event-window", win.moving_event_window, "stream_moving_event_window"))
+
+
+@action("moving-time-window")
+def _moving_time_window(df, ctx, cfg):
+    if ctx.streaming:
+        return _stx().stream_moving_time_window(
+            df, cfg["duration"], **_keyed(ctx, "moving-time-window")
+        )
+    return win.moving_time_window(df, cfg["duration"], **_tw(ctx))
+
+
 action("ssort")(
-    lambda df, ctx, cfg: win.ssort(df, cfg["duration"], cfg["field"], **_tw(ctx))
-)
-# fork isolation (stream.clj:38-44): a `by` upstream gives every fork
-# its own coalesce state in the reference, so the fork keys join the
-# latest-per-fields grouping — without this, two forks sharing a
-# fields-combination would elect ONE survivor across forks
-action("coalesce")(
-    lambda df, ctx, cfg: win.coalesce_op(
-        df, cfg["duration"],
-        list(dict.fromkeys(list(ctx.by) + list(cfg["fields"]))),
-        time_col=ctx.time_col,
-        order_cols=list(ctx.order_cols),
+    lambda df, ctx, cfg: win.ssort(
+        _wm(df, ctx, cfg), cfg["duration"], cfg["field"], **_tw(ctx)
     )
 )
+
+
+@action("coalesce")
+def _coalesce(df, ctx, cfg):
+    dt, fields = cfg["duration"], cfg["fields"]
+    if ctx.streaming:
+        # the UNKEYED form has ONE global tick clock: stream_coalesce
+        # keeps it one key in one shard whatever ctx.shards says
+        return _stx().stream_coalesce(
+            df, dt, fields, by=list(ctx.by), time_col=ctx.time_col,
+            shards=ctx.shards,
+        )
+    # fork isolation (stream.clj:38-44): a `by` upstream gives every
+    # fork its own coalesce state in the reference, so the fork keys
+    # join the latest-per-fields grouping — without this, two forks
+    # sharing a fields-combination would elect ONE survivor across forks
+    return win.coalesce_op(
+        df, dt, list(dict.fromkeys(list(ctx.by) + list(fields))),
+        time_col=ctx.time_col, order_cols=list(ctx.order_cols),
+    )
+
+
 action("project")(
     lambda df, ctx, conds, cfg=None: win.project(
-        df, conds, (cfg or {}).get("duration", 60.0), time_col=ctx.time_col,
-        metric_col=ctx.metric_col, order_cols=list(ctx.order_cols),
+        _wm(df, ctx, cfg), conds, (cfg or {}).get("duration", 60.0),
+        time_col=ctx.time_col, metric_col=ctx.metric_col,
+        order_cols=list(ctx.order_cols),
         by=list(ctx.by),  # fork isolation, same keying as the twin
     )
 )
 
 # -- aggregations ----------------------------------------------------------
 
-
-def _aggk(ctx: Ctx) -> dict:
-    return dict(by=list(ctx.by), time_col=ctx.time_col, metric_col=ctx.metric_col)
-
-
-action("sum")(lambda df, ctx, cfg: agg.agg_sum(df, cfg["duration"], **_aggk(ctx)))
-action("aggregation")(
-    lambda df, ctx, cfg: agg.aggregation_delayed(
-        df, cfg["duration"], cfg.get("delay", 0), aggr=cfg.get("aggr-fn", "sum"),
-        **_aggk(ctx), arrival_cols=list(ctx.order_cols),
-    )
+action("sum")(
+    lambda df, ctx, cfg: agg.agg_sum(_wm(df, ctx, cfg), cfg["duration"], **_aggk(ctx))
 )
-action("mean")(lambda df, ctx, cfg: agg.agg_mean(df, cfg["duration"], **_aggk(ctx)))
+action("mean")(
+    lambda df, ctx, cfg: agg.agg_mean(_wm(df, ctx, cfg), cfg["duration"], **_aggk(ctx))
+)
 action("top")(
     lambda df, ctx, cfg: agg.agg_top(
-        df, cfg["duration"], **_aggk(ctx), order_cols=list(ctx.order_cols)
+        _wm(df, ctx, cfg), cfg["duration"], **_aggk(ctx),
+        order_cols=list(ctx.order_cols),
     )
 )
 action("bottom")(
     lambda df, ctx, cfg: agg.agg_bottom(
-        df, cfg["duration"], **_aggk(ctx), order_cols=list(ctx.order_cols)
+        _wm(df, ctx, cfg), cfg["duration"], **_aggk(ctx),
+        order_cols=list(ctx.order_cols),
     )
 )
 action("rate")(
-    lambda df, ctx, cfg: agg.agg_rate(
-        df, cfg["duration"], by=list(ctx.by), time_col=ctx.time_col
-    )
+    lambda df, ctx, cfg: agg.agg_rate(_wm(df, ctx, cfg), cfg["duration"], **_tw(ctx))
 )
 action("ratio")(
     lambda df, ctx, conds, cfg: agg.agg_ratio(
-        df, conds[0], conds[1], cfg["duration"], by=list(ctx.by),
+        _wm(df, ctx, cfg), conds[0], conds[1], cfg["duration"], by=list(ctx.by),
         time_col=ctx.time_col, metric_col=ctx.metric_col,
         use_metric=cfg.get("metric", False),
     )
 )
 action("percentiles")(
     lambda df, ctx, cfg: agg.agg_percentiles(
-        df, cfg["quantiles"], cfg["duration"], **_aggk(ctx)
+        _wm(df, ctx, cfg), cfg["quantiles"], cfg["duration"], **_aggk(ctx)
     )
 )
 for _name, _fn in {
@@ -249,64 +339,102 @@ for _name, _fn in {
     "coll-min": agg.coll_min,
     "coll-rate": agg.coll_rate,
 }.items():
-    if _fn in (agg.coll_count,):
-        action(_name)(
-            lambda df, ctx, cfg, f=_fn: f(
-                df, cfg["duration"], by=list(ctx.by), time_col=ctx.time_col
-            )
+    action(_name)(
+        lambda df, ctx, cfg, f=_fn, kw=_tw if _fn is agg.coll_count else _aggk: f(
+            _wm(df, ctx, cfg), cfg["duration"], **kw(ctx)
         )
-    else:
-        action(_name)(lambda df, ctx, cfg, f=_fn: f(df, cfg["duration"], **_aggk(ctx)))
+    )
 action("coll-quotient")(
     lambda df, ctx, cfg: agg.coll_quotient(
-        df, cfg["duration"], **_aggk(ctx), order_cols=list(ctx.order_cols)
+        _wm(df, ctx, cfg), cfg["duration"], **_aggk(ctx),
+        order_cols=list(ctx.order_cols),
     )
 )
 action("coll-percentiles")(
     lambda df, ctx, cfg: agg.coll_percentiles(
-        df, cfg["quantiles"], cfg["duration"], **_aggk(ctx)
+        _wm(df, ctx, cfg), cfg["quantiles"], cfg["duration"], **_aggk(ctx)
     )
 )
-action("coll-top")(
-    lambda df, ctx, cfg: agg.coll_top(
-        df, cfg["nb"], cfg["duration"], **_aggk(ctx),
-        order_cols=list(ctx.order_cols),
-    )
-)
-action("coll-bottom")(
-    lambda df, ctx, cfg: agg.coll_bottom(
-        df, cfg["nb"], cfg["duration"], **_aggk(ctx),
-        order_cols=list(ctx.order_cols),
-    )
-)
+
+
+def _coll_topk(batch: Callable, biggest: bool) -> Callable:
+    def fn(df, ctx, cfg):
+        nb, dt = cfg["nb"], cfg["duration"]
+        if ctx.streaming:
+            # the batch form ranks with row_number, which streaming
+            # rejects: the streaming form slices a sorted collect_list
+            return _stx().stream_coll_topk(
+                df, nb, dt, delay_s=cfg.get("delay", ctx.delay_s),
+                biggest=biggest, **_aggk(ctx),
+            )
+        return batch(df, nb, dt, **_aggk(ctx), order_cols=list(ctx.order_cols))
+
+    return fn
+
+
+action("coll-top")(_coll_topk(agg.coll_top, True))
+action("coll-bottom")(_coll_topk(agg.coll_bottom, False))
 action("coll-increase")(
     lambda df, ctx, cfg=None: agg.coll_increase(
-        df, (cfg or {}).get("duration", 60.0), **_aggk(ctx),
+        _wm(df, ctx, cfg), (cfg or {}).get("duration", 60.0), **_aggk(ctx),
         order_cols=list(ctx.order_cols),
     )
 )
 action("coll-sort")(
-    lambda df, ctx, f: agg.coll_sort(df, f, 60.0, by=list(ctx.by), time_col=ctx.time_col)
+    lambda df, ctx, f: agg.coll_sort(_wm(df, ctx), f, 60.0, **_tw(ctx))
 )
-action("ewma-timeless")(
-    lambda df, ctx, r: agg.ewma_timeless(
-        df, r, by=list(ctx.by), time_col=ctx.time_col, metric_col=ctx.metric_col,
-        order_cols=list(ctx.order_cols),
-    )
-)
+
+# streaming `aggregation` aggr-fn -> the windowed action it runs
+_STREAM_AGGR = {
+    "sum": "sum", "mean": "mean", "rate": "rate", "count": "coll-count",
+    "max": "coll-max", "min": "coll-min", "ssort": "ssort",
+}
+
+
+@action("aggregation")
+def _aggregation(df, ctx, cfg):
+    """Push-mode aggregation with :delay (action.clj:2387-2454). In
+    streaming it is the watermarked windowed action: the watermark IS
+    the late-drop rule (events later than delay are dropped; windows
+    seal delay seconds after their end — action.clj:2420-2432).
+    aggr-fn ssort sorts by event time."""
+    kind = cfg.get("aggr-fn", "sum")
+    if not ctx.streaming:
+        return agg.aggregation_delayed(
+            df, cfg["duration"], cfg.get("delay", 0), aggr=kind, **_aggk(ctx),
+            arrival_cols=list(ctx.order_cols),
+        )
+    if kind not in _STREAM_AGGR:
+        raise ValueError(f"unsupported streaming aggregate {kind!r}")
+    return _ACTIONS[_STREAM_AGGR[kind]](df, ctx, dict(cfg, field=ctx.time_col))
+
+
+@action("ewma-timeless")
+def _ewma(df, ctx, r):
+    if ctx.streaming:
+        return _stx().stream_ewma(
+            df, r, metric_col=ctx.metric_col, **_keyed(ctx, "ewma-timeless")
+        )
+    return agg.ewma_timeless(df, r, metric_col=ctx.metric_col, **_stk(ctx))
+
+
 # beyond-reference windowed ops, DSL-exposed for parity of surface
 action("sessionize")(
     lambda df, ctx, cfg: win.sessionize(
-        df, float(cfg["gap"]), by=list(ctx.by), time_col=ctx.time_col,
-        metric_col=ctx.metric_col,
+        _wm(df, ctx, cfg), float(cfg["gap"]), **_aggk(ctx)
     )
 )
-action("zscore")(
-    lambda df, ctx, cfg: st.zscore(
-        df, float(cfg["window"]), by=list(ctx.by), time_col=ctx.time_col,
-        metric_col=ctx.metric_col, min_n=int(cfg.get("min-n", 2)),
-    )
-)
+
+
+@action("zscore")
+def _zscore(df, ctx, cfg):
+    window, min_n = float(cfg["window"]), int(cfg.get("min-n", 2))
+    if ctx.streaming:
+        return _stx().stream_zscore(
+            df, window, metric_col=ctx.metric_col, min_n=min_n,
+            **_keyed(ctx, "zscore"),
+        )
+    return st.zscore(df, window, min_n=min_n, **_aggk(ctx))
 
 
 def _curate_model(cfg):
@@ -437,244 +565,32 @@ def _curate(df, ctx, cfg=None):
     (deterministic min-id winner) -> PII masking. cfg keys:
     text-col, id-col, min-words, rules, quality, domain,
     domain-min-logw, perplexity, perplexity-max-bpt,
-    perplexity-min-bigrams."""
-    from mirabelle_spark.pipeline import sampling as smp
+    perplexity-min-bigrams.
 
-    cfg = cfg or {}
-    model, dim = _curate_model(cfg)
-    lm_gate, lm3_gate = _curate_lm(cfg)
-    return smp.curate_head(
-        df,
-        text_col=cfg.get("text-col", "text"),
-        id_col=cfg.get("id-col", "doc_id"),
-        min_words=int(cfg.get("min-words", 50)),
-        rules=tuple(cfg.get("rules", ["passes"])),
-        model=model,
-        dim=dim,
-        dsir=_curate_dsir(cfg),
-        lm_gate=lm_gate,
-        lm3_gate=lm3_gate,
-        contamination=_curate_contamination(cfg),
-    )
-
-# -- stateful --------------------------------------------------------------
-
-
-def _stk(ctx: Ctx) -> dict:
-    return dict(by=list(ctx.by), time_col=ctx.time_col, order_cols=list(ctx.order_cols))
-
-
-action("changed")(
-    lambda df, ctx, cfg: st.changed(df, cfg["field"], cfg.get("init"), **_stk(ctx))
-)
-action("ddt")(lambda df, ctx: st.ddt(df, metric_col=ctx.metric_col, **_stk(ctx)))
-action("ddt-pos")(lambda df, ctx: st.ddt_pos(df, metric_col=ctx.metric_col, **_stk(ctx)))
-action("smax")(lambda df, ctx: st.smax(df, metric_col=ctx.metric_col, **_stk(ctx)))
-action("smin")(lambda df, ctx: st.smin(df, metric_col=ctx.metric_col, **_stk(ctx)))
-action("above-dt")(
-    lambda df, ctx, cfg: st.above_dt(
-        df, cfg["threshold"], cfg["duration"], metric_col=ctx.metric_col, **_stk(ctx)
-    )
-)
-action("below-dt")(
-    lambda df, ctx, cfg: st.below_dt(
-        df, cfg["threshold"], cfg["duration"], metric_col=ctx.metric_col, **_stk(ctx)
-    )
-)
-action("between-dt")(
-    lambda df, ctx, cfg: st.between_dt(
-        df, cfg["low"], cfg["high"], cfg["duration"], metric_col=ctx.metric_col,
-        **_stk(ctx),
-    )
-)
-action("outside-dt")(
-    lambda df, ctx, cfg: st.outside_dt(
-        df, cfg["low"], cfg["high"], cfg["duration"], metric_col=ctx.metric_col,
-        **_stk(ctx),
-    )
-)
-action("critical-dt")(
-    lambda df, ctx, cfg: st.critical_dt(df, cfg["duration"], **_stk(ctx))
-)
-action("cond-dt")(
-    lambda df, ctx, cond, cfg: st.cond_dt(df, cond, cfg["duration"], **_stk(ctx))
-)
-action("coll-where")(
-    lambda df, ctx, cond_sql, col="events": flt.coll_where(df, col, cond_sql)
-)
-action("stable")(
-    lambda df, ctx, dt, fieldname: st.stable(df, dt, fieldname, **_stk(ctx))
-)
-
-# -- streaming dispatch ----------------------------------------------------
-# Same tree, streaming source: these entries replace the batch
-# realization when ctx.streaming is set. Stateless actions need no
-# entry (same Catalyst ops both ways); windowed actions run their
-# batch action on a watermarked stream. Keyed twins REQUIRE `by` keys:
-# unkeyed ordered state has no sane streaming shape (one global task
-# forever), so the compiler refuses instead of degrading silently.
-
-_STREAM_ACTIONS: dict[str, Callable] = {}
-
-
-def stream_action(name: str):
-    def deco(fn):
-        _STREAM_ACTIONS[name] = fn
-        return fn
-
-    return deco
-
-
-def _need_by(ctx: Ctx, name: str) -> list:
-    if not ctx.by:
-        raise ValueError(
-            f"streaming {name!r} needs `by` keys (keyed state shards per "
-            "key; unkeyed ordered state would be one global task forever) "
-            "— wrap it in a `by` node"
-        )
-    return list(ctx.by)
-
-
-def _s_watermarked(name):
-    """The streaming form of a windowed action: the batch action on
-    the stream watermarked with the node's ``:delay`` (cfg
-    ``"delay"``, else ``ctx.delay_s``) — its window grouping turns
-    into ``window()`` on a stream (aggregations.window_agg), so
-    windows seal once the watermark passes their end."""
-
-    def fn(df, ctx, *params):
-        cfg = params[-1] if params and isinstance(params[-1], dict) else {}
-        delay = cfg.get("delay", ctx.delay_s)
-        src = df.withWatermark(ctx.time_col, f"{delay} seconds")
-        return _ACTIONS[name](src, ctx, *params)
-
-    return fn
-
-
-for _n in (
-    "sum", "mean", "rate", "top", "bottom", "ratio", "percentiles",
-    "coll-count", "coll-sum", "coll-mean", "coll-max", "coll-min",
-    "coll-rate", "coll-percentiles", "coll-quotient", "coll-increase",
-    "coll-sort", "fixed-time-window", "ssort", "project", "sessionize",
-):
-    stream_action(_n)(_s_watermarked(_n))
-
-# streaming `aggregation` aggr-fn -> the windowed action it runs
-_STREAM_AGGR = {
-    "sum": "sum", "mean": "mean", "rate": "rate", "count": "coll-count",
-    "max": "coll-max", "min": "coll-min", "ssort": "ssort",
-}
-
-
-@stream_action("aggregation")
-def _s_aggregation(df, ctx, cfg):
-    """Push-mode aggregation with :delay → the watermarked windowed
-    action: the watermark IS the late-drop rule (events later than
-    delay are dropped; windows seal delay seconds after their end —
-    action.clj:2420-2432). aggr-fn ssort sorts by event time."""
-    kind = cfg.get("aggr-fn", "sum")
-    if kind not in _STREAM_AGGR:
-        raise ValueError(f"unsupported streaming aggregate {kind!r}")
-    sub = dict(cfg, field=ctx.time_col)
-    return _STREAM_ACTIONS[_STREAM_AGGR[kind]](df, ctx, sub)
-
-
-@stream_action("fixed-event-window")
-def _s_few(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_fixed_event_window(
-        df, cfg["size"], by=_need_by(ctx, "fixed-event-window"),
-        time_col=ctx.time_col, fork_ttl_s=cfg.get("fork-ttl"),
-        shards=ctx.shards,
-    )
-
-
-@stream_action("moving-event-window")
-def _s_mew(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_moving_event_window(
-        df, cfg["size"], by=_need_by(ctx, "moving-event-window"),
-        time_col=ctx.time_col, shards=ctx.shards,
-    )
-
-
-@stream_action("coalesce")
-def _s_coalesce(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    # the UNKEYED form has ONE global tick clock: stream_coalesce
-    # keeps it one key in one shard whatever ctx.shards says
-    return stx.stream_coalesce(
-        df, cfg["duration"], cfg["fields"], by=list(ctx.by),
-        time_col=ctx.time_col, shards=ctx.shards,
-    )
-
-
-@stream_action("throttle")
-def _s_throttle(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_throttle(
-        df, cfg["count"], cfg["duration"], by=_need_by(ctx, "throttle"),
-        time_col=ctx.time_col, shards=ctx.shards,
-    )
-
-
-@stream_action("ewma-timeless")
-def _s_ewma(df, ctx, r):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_ewma(
-        df, r, by=_need_by(ctx, "ewma-timeless"), time_col=ctx.time_col,
-        metric_col=ctx.metric_col, shards=ctx.shards,
-    )
-
-
-@stream_action("zscore")
-def _s_zscore(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_zscore(
-        df, float(cfg["window"]), by=_need_by(ctx, "zscore"),
-        time_col=ctx.time_col, metric_col=ctx.metric_col,
-        min_n=int(cfg.get("min-n", 2)), shards=ctx.shards,
-    )
-
-
-@stream_action("curate")
-def _s_curate(df, ctx, cfg=None):
-    """Streaming curation head: first-arrival dedup replaces the
-    batch min-id winner (see stream_curate's divergence note);
-    cfg key dedup-within (seconds) bounds state via
+    The streaming head (stream_curate) replaces the batch min-id
+    winner with first-arrival dedup (see stream_curate's divergence
+    note); cfg key dedup-within (seconds) bounds its state via
     dropDuplicatesWithinWatermark using the pipeline time column.
     cfg {"near-dup": true} (r13) adds the incremental banded-MinHash
     near-dup stage (stream_neardup_dedup; state = band hashes on the
     dedup-within horizon, never bodies) — requires dedup-within;
     "near-dup-bands"/"near-dup-shards" tune it.
     cfg {"contamination-bloom": [words...]} (r14) adds the pinned
-    benchmark-Bloom decontamination gate in-stream (see
-    _curate_contamination — stateless, no false negatives, bounded
-    FP over-drop)."""
-    from mirabelle_spark.streaming import core as stx
-
+    benchmark-Bloom decontamination gate (see _curate_contamination
+    — stateless, no false negatives, bounded FP over-drop)."""
     cfg = cfg or {}
     within = cfg.get("dedup-within")
     neardup = bool(cfg.get("near-dup", False))
-    if neardup and within is None:
+    if ctx.streaming and neardup and within is None:
         raise ValueError(
             "curate: {\"near-dup\": true} requires \"dedup-within\" "
             "(the band-hash state evicts on that event-time horizon)"
         )
     model, dim = _curate_model(cfg)
     lm_gate, lm3_gate = _curate_lm(cfg)
-    return stx.stream_curate(
-        df,
+    kw = dict(
         text_col=cfg.get("text-col", "text"),
         id_col=cfg.get("id-col", "doc_id"),
-        time_col=ctx.time_col if within is not None else None,
-        dedup_within_s=float(within) if within is not None else None,
         min_words=int(cfg.get("min-words", 50)),
         rules=tuple(cfg.get("rules", ["passes"])),
         model=model,
@@ -683,145 +599,107 @@ def _s_curate(df, ctx, cfg=None):
         lm_gate=lm_gate,
         lm3_gate=lm3_gate,
         contamination=_curate_contamination(cfg),
+    )
+    if not ctx.streaming:
+        from mirabelle_spark.pipeline import sampling as smp
+
+        return smp.curate_head(df, **kw)
+    stx = _stx()
+    return stx.stream_curate(
+        df,
+        time_col=ctx.time_col if within is not None else None,
+        dedup_within_s=float(within) if within is not None else None,
         neardup=neardup,
         neardup_bands=int(cfg.get("near-dup-bands", 8)),
         neardup_shards=int(cfg.get("near-dup-shards", stx._DEFAULT_SHARDS)),
+        **kw,
     )
 
-
-@stream_action("changed")
-def _s_changed(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_changed(
-        df, cfg["field"], by=_need_by(ctx, "changed"), time_col=ctx.time_col,
-        init=cfg.get("init"), shards=ctx.shards,
-    )
+# -- stateful --------------------------------------------------------------
 
 
-@stream_action("smax")
-def _s_smax(df, ctx):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_smax(
-        df, by=_need_by(ctx, "smax"), time_col=ctx.time_col,
-        metric_col=ctx.metric_col, shards=ctx.shards,
-    )
-
-
-@stream_action("smin")
-def _s_smin(df, ctx):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_smin(
-        df, by=_need_by(ctx, "smin"), time_col=ctx.time_col,
-        metric_col=ctx.metric_col, shards=ctx.shards,
-    )
+@action("changed")
+def _changed(df, ctx, cfg):
+    fieldname, init = cfg["field"], cfg.get("init")
+    if ctx.streaming:
+        return _stx().stream_changed(
+            df, fieldname, init=init, **_keyed(ctx, "changed")
+        )
+    return st.changed(df, fieldname, init, **_stk(ctx))
 
 
-def _s_ddt_any(name, remove_neg):
+def _metric_fold(name: str, batch: Callable, twin: str, **twin_kw) -> Callable:
     def fn(df, ctx):
-        from mirabelle_spark import streaming as stx
-
-        return stx.stream_ddt(
-            df, by=_need_by(ctx, name), time_col=ctx.time_col,
-            metric_col=ctx.metric_col, remove_neg=remove_neg,
-            shards=ctx.shards,
-        )
+        if ctx.streaming:
+            return getattr(_stx(), twin)(
+                df, metric_col=ctx.metric_col, **twin_kw, **_keyed(ctx, name)
+            )
+        return batch(df, metric_col=ctx.metric_col, **_stk(ctx))
 
     return fn
 
 
-stream_action("ddt")(_s_ddt_any("ddt", False))
-stream_action("ddt-pos")(_s_ddt_any("ddt-pos", True))
+action("ddt")(_metric_fold("ddt", st.ddt, "stream_ddt", remove_neg=False))
+action("ddt-pos")(_metric_fold("ddt-pos", st.ddt_pos, "stream_ddt", remove_neg=True))
+action("smax")(_metric_fold("smax", st.smax, "stream_smax"))
+action("smin")(_metric_fold("smin", st.smin, "stream_smin"))
 
 
-@stream_action("stable")
-def _s_stable(df, ctx, dt, fieldname):
-    from mirabelle_spark import streaming as stx
+def _threshold_dt(name: str, batch: Callable, cond: Callable, *keys: str) -> Callable:
+    """A metric-threshold cond-dt: the batch operator over cfg's
+    ``keys``, or stream_cond_dt over the condition vector
+    ``cond(metric_col, *values)``."""
 
-    return stx.stream_stable(
-        df, dt, fieldname, by=_need_by(ctx, "stable"), time_col=ctx.time_col,
-        shards=ctx.shards,
-    )
-
-
-def _s_cond_dt_vec(vec_fn):
-    def fn(df, ctx, *params):
-        from mirabelle_spark import streaming as stx
-
-        cond, dt = vec_fn(ctx, *params)
-        return stx.stream_cond_dt(
-            df, cond, dt, by=_need_by(ctx, "cond-dt"), time_col=ctx.time_col,
-            shards=ctx.shards,
-        )
-
-    return fn
-
-
-stream_action("above-dt")(_s_cond_dt_vec(
-    lambda ctx, cfg: ([":>", ctx.metric_col, cfg["threshold"]], cfg["duration"])))
-stream_action("below-dt")(_s_cond_dt_vec(
-    lambda ctx, cfg: ([":<", ctx.metric_col, cfg["threshold"]], cfg["duration"])))
-stream_action("between-dt")(_s_cond_dt_vec(
-    lambda ctx, cfg: ([":and", [":>", ctx.metric_col, cfg["low"]],
-                       [":<", ctx.metric_col, cfg["high"]]], cfg["duration"])))
-stream_action("outside-dt")(_s_cond_dt_vec(
-    lambda ctx, cfg: ([":or", [":<", ctx.metric_col, cfg["low"]],
-                       [":>", ctx.metric_col, cfg["high"]]], cfg["duration"])))
-stream_action("critical-dt")(_s_cond_dt_vec(
-    lambda ctx, cfg: ([":=", "state", "critical"], cfg["duration"])))
-stream_action("cond-dt")(_s_cond_dt_vec(
-    lambda ctx, cond, cfg: (cond, cfg["duration"])))
-
-
-def _s_coll_topk(biggest):
-    # batch coll-top/coll-bottom rank with row_number, which streaming
-    # rejects: the streaming form slices a sorted collect_list
     def fn(df, ctx, cfg):
-        from mirabelle_spark import streaming as stx
-
-        return stx.stream_coll_topk(
-            df, cfg["nb"], cfg["duration"], delay_s=cfg.get("delay", ctx.delay_s),
-            by=list(ctx.by), time_col=ctx.time_col, metric_col=ctx.metric_col,
-            biggest=biggest,
-        )
+        vals, dt = [cfg[k] for k in keys], cfg["duration"]
+        if ctx.streaming:
+            return _stx().stream_cond_dt(
+                df, cond(ctx.metric_col, *vals), dt, **_keyed(ctx, name)
+            )
+        return batch(df, *vals, dt, metric_col=ctx.metric_col, **_stk(ctx))
 
     return fn
 
 
-stream_action("coll-top")(_s_coll_topk(True))
-stream_action("coll-bottom")(_s_coll_topk(False))
+action("above-dt")(_threshold_dt(
+    "above-dt", st.above_dt, lambda m, t: [":>", m, t], "threshold"))
+action("below-dt")(_threshold_dt(
+    "below-dt", st.below_dt, lambda m, t: [":<", m, t], "threshold"))
+action("between-dt")(_threshold_dt(
+    "between-dt", st.between_dt,
+    lambda m, lo, hi: [":and", [":>", m, lo], [":<", m, hi]], "low", "high"))
+action("outside-dt")(_threshold_dt(
+    "outside-dt", st.outside_dt,
+    lambda m, lo, hi: [":or", [":<", m, lo], [":>", m, hi]], "low", "high"))
 
 
-@stream_action("moving-time-window")
-def _s_mtw(df, ctx, cfg):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_moving_time_window(
-        df, cfg["duration"], by=_need_by(ctx, "moving-time-window"),
-        time_col=ctx.time_col, shards=ctx.shards,
-    )
-
-
-@stream_action("expired")
-def _s_expired(df, ctx):
-    from mirabelle_spark import streaming as stx
-
-    return stx.stream_expired(
-        df, by=_need_by(ctx, "expired"), time_col=ctx.time_col,
-        keep_expired=True, shards=ctx.shards,
-    )
+@action("critical-dt")
+def _critical_dt(df, ctx, cfg):
+    if ctx.streaming:
+        return _stx().stream_cond_dt(
+            df, [":=", "state", "critical"], cfg["duration"],
+            **_keyed(ctx, "critical-dt"),
+        )
+    return st.critical_dt(df, cfg["duration"], **_stk(ctx))
 
 
-@stream_action("not-expired")
-def _s_not_expired(df, ctx):
-    from mirabelle_spark import streaming as stx
+@action("cond-dt")
+def _cond_dt(df, ctx, cond, cfg):
+    if ctx.streaming:
+        return _stx().stream_cond_dt(df, cond, cfg["duration"], **_keyed(ctx, "cond-dt"))
+    return st.cond_dt(df, cond, cfg["duration"], **_stk(ctx))
 
-    return stx.stream_expired(
-        df, by=_need_by(ctx, "not-expired"), time_col=ctx.time_col,
-        keep_expired=False, shards=ctx.shards,
-    )
+
+action("coll-where")(
+    lambda df, ctx, cond_sql, col="events": flt.coll_where(df, col, cond_sql)
+)
+
+
+@action("stable")
+def _stable(df, ctx, dt, fieldname):
+    if ctx.streaming:
+        return _stx().stream_stable(df, dt, fieldname, **_keyed(ctx, "stable"))
+    return st.stable(df, dt, fieldname, **_stk(ctx))
 
 
 # -- structural / sinks ----------------------------------------------------
@@ -929,12 +807,7 @@ def _walk(df: DataFrame, node: dict | list, ctx: Ctx) -> None:
 
     if name not in _ACTIONS:
         raise ValueError(f"unknown action {name!r}")
-    if ctx.streaming and name in _STREAM_ACTIONS:
-        out = _STREAM_ACTIONS[name](df, ctx, *params)
-        for child in children:
-            _walk(out, child, ctx)
-        return
-    if name in _UNKEYED_SEQUENTIAL and not ctx.by:
+    if name in _UNKEYED_SEQUENTIAL and not ctx.by and not ctx.streaming:
         _LOG.warning(
             "action %r compiled with no `by` keys: the order-dependent "
             "scan degrades to ONE task (single ordered group) — same as "

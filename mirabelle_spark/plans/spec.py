@@ -220,8 +220,7 @@ def list_of(item: Validator, min_len: int = 1, max_len: int | None = None):
     return check
 
 
-def config(req: dict[str, Validator], opt: dict[str, Validator] | None = None,
-           open_keys: bool = False):
+def config(req: dict[str, Validator], opt: dict[str, Validator] | None = None):
     """The reference's ``(s/keys :req-un [...])`` config-map shape."""
     opt = opt or {}
 
@@ -239,10 +238,9 @@ def config(req: dict[str, Validator], opt: dict[str, Validator] | None = None,
                 r = val_fn(v[k])
                 if r:
                     return f"key {k!r}: {r}"
-        if not open_keys:
-            extra = set(v) - set(req) - set(opt)
-            if extra:
-                return f"unknown key(s) {sorted(extra)!r}"
+        extra = set(v) - set(req) - set(opt)
+        if extra:
+            return f"unknown key(s) {sorted(extra)!r}"
         return None
 
     return check
@@ -393,7 +391,7 @@ SPECS: dict[str, Sig] = {
     "stable": Sig(("dt", pos_number), ("field", ne_string)),
     # structural / sinks (handled in _walk but validated here)
     "by": Sig(("config", config({"fields": fields_list},
-                                open_keys=True))),
+                                opt={"shards": pos_int}))),
     "split": Sig(("conditions", list_of(condition)), var=True),
     "tap": Sig(("name", ne_string)),
     "test-action": Sig(("name", ne_string)),

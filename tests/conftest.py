@@ -78,7 +78,11 @@ def collect_sorted():
 # test_dedup_leaves_no_persistent_rdds (CacheManager emptiness — the
 # no-cross-run-caching pin), test_collapse_exact_signatures_components_identical
 # and test_ivf_probe_scores_kernel_matches_relational (Arrow-kernel
-# exactness vs their relational twins). The list is centralized here
+# exactness vs their relational twins). Two more run by default because
+# they guard the DSL compiler's batch/streaming dispatch end to end:
+# test_streaming_dsl_compile_parity (one tree, streaming vs batch
+# rows) and test_launch_tests_directory_runner (every golden case in
+# both modes), ~6 s and ~8 s. The list is centralized here
 # (not per-file decorators) so the selection is auditable in one
 # place against the committed durations ranking. Entries are
 # ``file::test name`` (parametrized ids match on the base name).
@@ -89,7 +93,6 @@ SLOW_TESTS = {
     "test_builder.py::test_curate_dsl_neardup",
     "test_builder.py::test_curate_dsl_perplexity_warnings",
     "test_golden_reference.py::test_aggregation_delay_golden",
-    "test_golden_reference.py::test_launch_tests_directory_runner",
     "test_pipeline.py::test_ann_lsh_recall_vs_bruteforce",
     "test_pipeline.py::test_bpe_32k_merges_end_to_end",
     "test_pipeline.py::test_bpe_4k_merges_end_to_end",
@@ -155,7 +158,6 @@ SLOW_TESTS = {
     "test_streaming.py::test_stream_throttle_sharded_parity",
     "test_streaming.py::test_stream_windowed_agg_twins_parity",
     "test_streaming.py::test_stream_zscore_huge_values_fold_exact",
-    "test_streaming.py::test_streaming_dsl_compile_parity",
     "test_streaming.py::test_watermark_drops_late_event",
 }
 

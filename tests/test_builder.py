@@ -296,6 +296,10 @@ def test_spec_rejects_bad_types(spark):
     with pytest.raises(InvalidActionParams, match="'fixed-event-window'.*size"):
         _compile(spark, {"action": "fixed-event-window",
                          "params": [{"size": 0}], "children": []})
+    with pytest.raises(InvalidActionParams, match="'by'.*shards.*positive"):
+        _compile(spark, {"action": "by", "params": [{"fields": ["host"],
+                                                     "shards": 0}],
+                         "children": []})
 
 
 def test_spec_rejects_missing_and_unknown_config_keys(spark):
@@ -309,6 +313,76 @@ def test_spec_rejects_missing_and_unknown_config_keys(spark):
                          "params": [{"duration": 60, "fields": ["host"],
                                      "durration": 60}],
                          "children": []})
+    # `by` takes fields and shards only: the reference's fork GC keys
+    # and typos are rejected by name instead of silently ignored
+    for key in ("fork-ttl", "gc-interval", "shard"):
+        with pytest.raises(InvalidActionParams, match=f"'by'.*unknown.*{key}'"):
+            _compile(spark, {"action": "by",
+                             "params": [{"fields": ["host"], key: 4}],
+                             "children": []})
+
+
+def _plan(df):
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def test_user_action_over_builtin_keyed_name_runs_in_both_modes(spark):
+    """register_action over a built-in keyed name replaces it in the
+    batch AND the streaming compile: one action table serves both
+    modes, so the streaming compile never runs the built-in twin on
+    the user's params."""
+    from mirabelle_spark.plans import builder as b
+
+    df = spark.createDataFrame(
+        [("a", 1.0, "2024-01-01T00:00:00"), ("a", 3.0, "2024-01-01T00:00:01")],
+        "host string, metric double, t string",
+    ).withColumn("time", F.to_timestamp("t"))
+    tree = {"action": "by", "params": [{"fields": ["host"]}], "children": [{
+        "action": "throttle", "params": [{"count": 2, "duration": 5}],
+        "children": [{"action": "tap", "params": ["x"]}]}]}
+    builtin = b._ACTIONS["throttle"]
+    b.register_action(
+        "throttle",
+        lambda d, ctx, cfg: d.where(F.col("metric") > cfg["count"])
+        .withColumn("mine", F.lit(True)),
+    )
+    try:
+        for streaming in (False, True):
+            ctx = b.compile_stream(
+                df, tree, b.Ctx(streaming=streaming, test_mode=True))
+            out = ctx.taps["x"]
+            assert "mine" in out.columns, streaming
+            assert "__shard__" not in _plan(out), streaming
+        assert [r.metric for r in out.collect()] == [3.0]
+    finally:
+        b._ACTIONS["throttle"] = builtin
+        b._USER_ACTIONS.discard("throttle")
+
+
+def test_custom_keyed_action_compiles_its_streaming_twin(spark):
+    """["custom", "ewma-timeless", r] under `by` resolves through the
+    same entry as a plain ewma-timeless node: the streaming compile
+    plans the keyed-state twin's shard grouping, the batch compile
+    plans none."""
+    import re
+
+    from mirabelle_spark.plans.builder import Ctx, compile_stream
+
+    df = spark.createDataFrame(
+        [("a", 1.0, "2024-01-01T00:00:00")], "host string, metric double, t string"
+    ).withColumn("time", F.to_timestamp("t"))
+    shard = re.compile(
+        r"pmod\(xxhash64\(host#\d+, 42\), cast\(64 as bigint\)\) AS __shard__"
+    )
+    for node in ({"action": "custom", "params": ["ewma-timeless", 0.5]},
+                 {"action": "ewma-timeless", "params": [0.5]}):
+        tree = {"action": "by", "params": [{"fields": ["host"]}],
+                "children": [dict(node, children=[
+                    {"action": "tap", "params": ["x"]}])]}
+        stream = compile_stream(df, tree, Ctx(streaming=True, test_mode=True))
+        assert shard.search(_plan(stream.taps["x"])), node
+        batch = compile_stream(df, tree, Ctx(test_mode=True))
+        assert "__shard__" not in _plan(batch.taps["x"]), node
 
 
 def test_spec_rejects_malformed_condition(spark):
@@ -397,10 +471,11 @@ def test_sessionize_and_zscore_dsl_actions(spark, make_events):
                               "children": []})
 
 
-def test_curate_dsl_action(spark):
+def test_curate_dsl_action(spark, monkeypatch):
     """The curation head is a first-class DSL action (r11): batch
     compile realizes the deterministic min-id compose, the streaming
-    dispatch exists, and the param spec rejects a bad min-words."""
+    compile calls stream_curate, and the param spec rejects a bad
+    min-words."""
     import pytest as _pytest
 
     from mirabelle_spark.plans import builder as b
@@ -422,7 +497,15 @@ def test_curate_dsl_action(spark):
     got = {(r.doc_id, r.text_masked) for r in taps["cur"].collect()}
     assert got == {(1, good.replace("alice@example.com", "<EMAIL>"))}
 
-    assert "curate" in b._STREAM_ACTIONS  # streaming twin dispatches
+    # the streaming compile dispatches to the streaming head
+    from mirabelle_spark.streaming import core as stx
+
+    calls = []
+    monkeypatch.setattr(
+        stx, "stream_curate", lambda d, **kw: calls.append(kw) or d
+    )
+    b.compile_stream(df, tree, b.Ctx(streaming=True))
+    assert [c["min_words"] for c in calls] == [5]
     with _pytest.raises(InvalidActionParams, match="min-words"):
         b.compile_stream(df, {"action": "curate",
                               "params": [{"min-words": 0}],

@@ -3843,13 +3843,16 @@ def test_stream_event_window_sharded_parity(spark, tmp_path):
 
 
 def test_by_shards_dsl_dispatches_row_buffer_twins(spark):
-    """`by {"shards": N}` sets the shard count of the row-buffer
-    actions (stable, keyed coalesce, fixed/moving-event-window,
-    moving-time-window, smax) —
-    asserted structurally: the compiled plan groups on
-    pmod(xxhash64(fork keys), N); without shards N is the default 64.
-    Unkeyed coalesce must IGNORE shards (one global tick clock): it
-    keys on one constant column, so all its state is one key."""
+    """`by {"shards": N}` sets the shard count of every keyed action's
+    twin (the row-buffer actions stable, keyed coalesce,
+    fixed/moving-event-window, moving-time-window, smax; and
+    throttle, ewma-timeless, zscore, changed, smin, ddt, ddt-pos, the
+    cond-dt family, expired, not-expired) — asserted structurally:
+    the streaming compile groups on pmod(xxhash64(fork keys), N);
+    without shards N is the default 64; the batch compile of the same
+    tree plans no shard column. Unkeyed coalesce must IGNORE shards
+    (one global tick clock): it keys on one constant column, so all
+    its state is one key."""
     import re
 
     import pyspark.sql.functions as F
@@ -3862,14 +3865,15 @@ def test_by_shards_dsl_dispatches_row_buffer_twins(spark):
     ).withColumn("time", F.timestamp_micros((F.col("t") * 1e6).cast("long"))).drop("t")
     src = df  # batch df is enough: dispatch happens at compile time
 
-    def plan_of(action, params, shards, by_fields=("host",)):
+    def plan_of(action, params, shards, by_fields=("host",), streaming=True):
         by_cfg = {"fields": list(by_fields)}
         if shards:
             by_cfg["shards"] = shards
         tree = {"action": "by", "params": [by_cfg], "children": [{
             "action": action, "params": params,
             "children": [{"action": "tap", "params": ["x"]}]}]}
-        ctx = compile_stream(src, tree, Ctx(streaming=True, test_mode=True))
+        ctx = compile_stream(
+            src, tree, Ctx(streaming=streaming, test_mode=True))
         return ctx.taps["x"]._jdf.queryExecution().analyzed().toString()
 
     cases = [
@@ -3879,6 +3883,21 @@ def test_by_shards_dsl_dispatches_row_buffer_twins(spark):
         ("moving-event-window", [{"size": 3}]),
         ("moving-time-window", [{"duration": 10}]),
         ("smax", []),
+        ("throttle", [{"count": 1, "duration": 5}]),
+        ("ewma-timeless", [0.5]),
+        ("zscore", [{"window": 60, "min-n": 2}]),
+        ("changed", [{"field": "state", "init": "ok"}]),
+        ("smin", []),
+        ("ddt", []),
+        ("ddt-pos", []),
+        ("above-dt", [{"threshold": 1, "duration": 5}]),
+        ("below-dt", [{"threshold": 1, "duration": 5}]),
+        ("between-dt", [{"low": 1, "high": 3, "duration": 5}]),
+        ("outside-dt", [{"low": 1, "high": 3, "duration": 5}]),
+        ("critical-dt", [{"duration": 5}]),
+        ("cond-dt", [[":>", "metric", 0], {"duration": 5}]),
+        ("expired", []),
+        ("not-expired", []),
     ]
     def shard_of(keys, n):
         return re.compile(
@@ -3888,6 +3907,8 @@ def test_by_shards_dsl_dispatches_row_buffer_twins(spark):
     for action, params in cases:
         assert shard_of("host", 2).search(plan_of(action, params, 2)), action
         assert shard_of("host", 64).search(plan_of(action, params, None)), action
+        batch = plan_of(action, params, 2, streaming=False)
+        assert "__shard__" not in batch, action
 
     # unkeyed coalesce: one constant key, shards ignored
     tree = {"action": "coalesce",
