@@ -30,28 +30,30 @@ def entry(spark: SparkSession) -> DataFrame:
 # so ordering is coverage policy: the oldest last-gated queries come
 # first, and a query whose engine path changed leads the next gate.
 # Current rotation ("gated" = named in the CORRECTNESS_r*.json record):
-# (a) the 22 r16-gated entries the previous rotation left out
-#     (registry order; the r17 record gated the same 50 as r16);
-# (b) the 22 entries last gated in r13, the oldest record of any
+# (a) the 44 entries last gated in r14, the oldest record of any
 #     oracle-backed entry (registry order);
-# (c) the first 6 entries last gated in r14 (registry order), filling
+# (b) the four other queries that resolve near-dup clusters through
+#     dedup.resolve_clusters, whose engine path changed (the union-find
+#     task); dedup_clusters, dedup_survivors_docs and
+#     semantic_dedup_survivors are already in (a);
+# (c) the first 2 entries last gated in r15 (registry order), filling
 #     to exactly 50.
-# The remaining 44 r14-gated entries (registry order:
-# with_const, default_missing, scale_metric, coll_increase_daily,
-# ddt_rate, ewma_smoothed, coll_where_inside_window, coll_sum_hourly,
-# coll_mean_hourly, coll_percentiles_hourly, sessionize_user_events,
-# zscore_events, dedup_exact_docs, minhash_lsh_pairs,
-# ngram_jaccard_pairs, simhash_pairs, dedup_clusters,
-# dedup_survivors_docs, ann_bruteforce_topk, ann_bruteforce_l2_topk,
-# ann_lsh_topk, ann_ivf_topk, ann_pq_topk, embedding_near_dups,
-# semantic_dedup_survivors, stratified_sample_docs,
-# contamination_docs, pack_docs, boilerplate_removed_docs,
-# ann_ivfpq_trained_topk, winnow_dedup_pairs, bpe_top_pairs,
-# pca_power_iter, pca_project_trained, tfidf_top_terms,
-# dup_span_fraction_docs, curate_head_lm_docs, curate_head_lm3_docs,
-# lm3_bits_docs, lm3_quality_docs, top_suppliers,
-# priority_conditional_counts, brand_part_revenue,
-# segment_top_orders) lead the next rotation, then the r15 record.
+# The remaining 47 r15-gated entries (registry order:
+# sformat_label, to_string_field, base64_roundtrip, from_json_props,
+# rename_keys_proj, keep_keys_proj, sdissoc_proj, tag_untag,
+# iterate_on_explode, fixed_time_window_ids, fixed_event_window_ids,
+# moving_event_window_vals, ssort_sorted, project_correlate,
+# smin_running, ddt_pos_rate, below_dt_alert, between_dt_alert,
+# critical_dt_alert, dsl_pipeline, coalesce_fill, ann_ivf_trained_topk,
+# ann_pq_trained_topk, hash_sample_docs, mask_pii_docs,
+# text_token_count, text_bpe_token_count, text_repetition,
+# gopher_quality_docs, vocab_top100, token_rarity_docs,
+# mixture_sample_docs, paragraph_dedup_docs, multimodal_features,
+# video_frame_sample, linear_quality_docs, ivf_centroid_update,
+# best_docs_per_lang, token_chunks_docs, ann_sq_topk, ann_ivfpq_topk,
+# ann_ivfpq_rerank_topk, ann_ivfpq_cosine_topk, lm_bits_docs,
+# lm_quality_docs, tpch_pricing_summary, revenue_by_nation) lead the
+# next rotation, then the r17 record.
 #
 # winnow_dedup_pairs_fast is rows-only BY DESIGN (no xxhash64 in
 # DuckDB; overlap vs the portable path is pytest-pinned) — it must
@@ -59,30 +61,27 @@ def entry(spark: SparkSession) -> DataFrame:
 # an `err` for its missing oracle. It stays below slot 50 because
 # this list holds exactly 50 oracle-backed names.
 GATE_PRIORITY = [
-    # (a) the 22 r16-gated entries left out last rotation (registry order)
-    "text_rolling_fp", "image_dhash_docs", "image_near_dups",
-    "video_near_dups", "audio_dhash_docs", "audio_near_dups",
-    "neardup_degree_histogram", "soft_dedup_docs", "corpus_split_docs",
-    "search_quality_docs", "doc_length_profile", "split_token_budget",
-    "bpe_segment_trained", "scrubbed_corpus_docs",
-    "curate_head_logreg_docs", "logreg_quality_docs", "curate_head_docs",
-    "dup_span_removed_docs", "dup_span_removed_char_docs",
-    "order_priority_counts", "returned_item_customers",
-    "large_order_customers",
-    # (b) the 22 entries last gated in r13 (registry order)
-    "coll_top3", "coll_bottom3", "coll_sort_ids", "by_sum_daily",
-    "smax_running", "semdedup_survivors", "semdedup_arrow_survivors",
-    "semdedup_prod_survivors", "semdedup_prod_arrow_survivors",
-    "ngram_containment_pairs", "contamination_bloom_docs",
-    "dsir_logweight_docs", "dsir_top_docs", "temperature_sample_docs",
-    "bpe_fertility_by_lang", "curate_head_dsir_docs",
-    "dup_span_removed_prefilter_docs",
-    "dup_span_removed_char_prefilter_docs",
-    "dup_span_removed_twophase_docs", "vocab_cardinality_by_lang",
-    "corpus_datasheet", "volume_shipping",
-    # (c) the first 6 entries last gated in r14 (registry order)
-    "where_basic", "over_filter", "tagged_all", "split_routing", "throttle",
-    "stable_states",
+    # (a) the 44 entries last gated in r14 (registry order)
+    "with_const", "default_missing", "scale_metric", "coll_increase_daily",
+    "ddt_rate", "ewma_smoothed", "coll_where_inside_window",
+    "coll_sum_hourly", "coll_mean_hourly", "coll_percentiles_hourly",
+    "sessionize_user_events", "zscore_events", "dedup_exact_docs",
+    "minhash_lsh_pairs", "ngram_jaccard_pairs", "simhash_pairs",
+    "dedup_clusters", "dedup_survivors_docs", "ann_bruteforce_topk",
+    "ann_bruteforce_l2_topk", "ann_lsh_topk", "ann_ivf_topk", "ann_pq_topk",
+    "embedding_near_dups", "semantic_dedup_survivors",
+    "stratified_sample_docs", "contamination_docs", "pack_docs",
+    "boilerplate_removed_docs", "ann_ivfpq_trained_topk",
+    "winnow_dedup_pairs", "bpe_top_pairs", "pca_power_iter",
+    "pca_project_trained", "tfidf_top_terms", "dup_span_fraction_docs",
+    "curate_head_lm_docs", "curate_head_lm3_docs", "lm3_bits_docs",
+    "lm3_quality_docs", "top_suppliers", "priority_conditional_counts",
+    "brand_part_revenue", "segment_top_orders",
+    # (b) the other resolve_clusters queries
+    "clean_corpus_docs", "image_near_dups", "video_near_dups",
+    "audio_near_dups",
+    # (c) the first 2 entries last gated in r15 (registry order)
+    "increment_metric", "decrement_metric",
 ]
 
 

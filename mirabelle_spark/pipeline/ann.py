@@ -439,7 +439,8 @@ def semdedup(
 
     Contrast with :func:`embedding_near_dups` +
     ``resolve_clusters`` (the engine's LSH + connected-components
-    path): SemDeDup never builds global components, so two vectors
+    path, whose union-find sees the whole pair graph in one task):
+    SemDeDup never builds global components, so two vectors
     at cosine 0.99 in DIFFERENT clusters both survive — by design
     (the paper accepts boundary loss for the cluster-local pair
     bound).

@@ -13,14 +13,19 @@ Scale design (the point of these at 100 TB):
 - **SimHash**: 64-bit signature via exploded tokens → 64 ±1
   conditional sums → bit-pack, all Catalyst; exact Hamming-ball
   lookup via banding the 64 bits into chunks (same equi-join trick).
+- **clusters**: connected components of the verified pair graph
+  run as one ``mapInArrow`` union-find task over the pair endpoints
+  (:func:`resolve_clusters`); the corpus itself never leaves Catalyst.
 
-Everything is a plain DataFrame op — zero Python UDFs anywhere.
+Everything else is a plain DataFrame op, with no Python UDFs.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 
@@ -827,7 +832,7 @@ def simhash_near_dups(
     # stage, and this is the in-query form of the write-once
     # signature table a production pipeline would materialize. The
     # blocks belong to the returned handle (context-cleaner frees
-    # them on release), the same contract as resolve_clusters.
+    # them on release).
     # ensure_parallelism AFTER the checkpoint matters even though the
     # table is tiny: AQE coalesces the signature groupBy's output to
     # ONE partition at local SF, and the piece-join probe below then
@@ -1078,11 +1083,68 @@ def collapse_exact_signatures(
     return reps.select(id_col, *key_cols), star
 
 
+def _hook_components(a, b, n: int):
+    """Connected components of the graph on nodes ``0..n-1`` with
+    edges ``(a[i], b[i])`` (int arrays). Returns ``(root, rounds)``:
+    ``root[v]`` is the smallest node of v's component, ``rounds`` the
+    number of hooking rounds it took.
+
+    Every round hooks each tree root that a live edge (one whose
+    endpoints sit in different trees) touches under the smallest root
+    across its live edges, then pointer-jumps until every node points
+    at its root. Parents only ever point to smaller nodes, so a tree's
+    root is its minimum; an edge whose endpoints share a root stays
+    dead, so each round works on the live edges only. Trees merge in
+    O(log n) rounds on the path-like graphs near-dup chains make (a
+    shuffled 1M-node path takes 14), where moving labels one hop per
+    round takes O(diameter)."""
+    root = np.arange(n)
+    rounds = 0
+    while True:
+        ra, rb = root[a], root[b]
+        live = ra != rb
+        if not live.any():
+            return root, rounds
+        a, b, ra, rb = a[live], b[live], ra[live], rb[live]
+        np.minimum.at(root, np.maximum(ra, rb), np.minimum(ra, rb))
+        rounds += 1
+        while True:
+            jumped = root[root]
+            if np.array_equal(jumped, root):
+                break
+            root = jumped
+
+
+def _component_labels(batches):
+    """``mapInArrow`` body over ALL (id_a, id_b) edges in one task:
+    factorize the endpoints, run :func:`_hook_components`, and emit
+    (id, min id of its component) for every endpoint that is not its
+    component's minimum (the caller's left join self-labels the
+    rest). ``np.unique`` returns the ids sorted, so the smallest node
+    index of a component is its smallest id."""
+    import pyarrow as pa
+
+    cols_a, cols_b, typ = [], [], None
+    for batch in batches:
+        cols_a.append(batch.column(0).to_numpy(zero_copy_only=False))
+        cols_b.append(batch.column(1).to_numpy(zero_copy_only=False))
+        typ = batch.schema.field(0).type
+    if typ is None:
+        return
+    a, b = np.concatenate(cols_a), np.concatenate(cols_b)
+    uniq, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    root, _ = _hook_components(inv[: a.size], inv[a.size :], uniq.size)
+    moved = np.flatnonzero(root != np.arange(uniq.size))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(uniq[moved], type=typ), pa.array(uniq[root[moved]], type=typ)],
+        names=["__id__", "__label__"],
+    )
+
+
 def resolve_clusters(
     pairs: DataFrame,
     ids: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 20,
     clean_pairs: bool = False,
 ) -> DataFrame:
     """Near-dup pairs → connected components → canonical doc per
@@ -1091,157 +1153,44 @@ def resolve_clusters(
     representative" works across transitive chains (A~B, B~C ⇒ one
     survivor of {A,B,C}), not just pairwise.
 
-    Each round does (a) a neighbor-min step — every node takes the
-    min of its own and its neighbors' labels — and (b) a
-    POINTER-JUMPING step — label ← label(label) — so convergence is
-    O(log diameter), not O(diameter): duplicate chains are exactly
-    the pathological long-path case (measured: plain propagation hit
-    25 rounds / 61 s on sf0.1's chains; with jumping, 4 rounds /
-    ~3 s). Each round is two shuffles; each generation is
-    localCheckpoint'ed — this truncates the LOGICAL plan as well as
-    the lineage, which matters because every round references the
-    previous generation twice (neighbor join + jump map): with a
-    mere persist() the analyzed tree doubles per round and a
-    slow-converging graph OOMs the driver just RENDERING the plan
-    for the UI (found via the embedding pair graph, which needs more
-    rounds than the text chains). Old generations' blocks are freed
-    by the context cleaner; the driver holds one decimal per round
-    (the monotone label-sum fixpoint probe), never the labels.
+    One plan, no driver-side action and no rounds of Spark jobs: the
+    pairs (null endpoints dropped) exchange into ONE partition, where
+    a single ``mapInArrow`` task runs the root-hooking union-find
+    :func:`_hook_components` to completion and emits (id, label) for
+    the pair-graph nodes whose label is not their own id; ``ids`` left-
+    joins that table and keeps its own id where no label matched.
+    The bound is the one task: every touched pair endpoint sits in one
+    Python worker, at ~100 B of numpy working memory per edge — PERF.md
+    lists it among the single-node-only shapes. Nothing is persisted
+    or checkpointed.
 
-    ``clean_pairs=True`` is a caller contract: ``pairs`` is distinct
-    with both endpoints drawn from ``ids``, and ``ids`` holds
-    DISTINCT ids. Ids in no pair pass through one final anti-join
-    as they are, so a duplicated id yields duplicate output rows
-    (the default path's per-round groupBy collapses them).
+    ``clean_pairs=True`` is a caller contract: ``pairs`` has both
+    endpoints drawn from ``ids``, and ``ids`` holds DISTINCT ids
+    (each output row is one ``ids`` row). With ``clean_pairs=False``
+    both endpoints are semi-joined to the distinct ``ids`` first, so
+    a foreign id never joins and duplicate ids collapse to one row.
     """
-    # pin the PAIR table ONCE before symmetrizing (r16): the
-    # two-direction union references ``pairs`` twice, so an unpinned
-    # candidate plan — usually the most expensive subtree of the
-    # whole query — executed twice inside the edge build. Eager, so
-    # both union arms are guaranteed to read the one materialization.
-    p = pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-    # labels materialize lazily: the label-sum probe right below is
-    # the first action and doubles as the materializer — one job,
-    # not two (r16: every extra driver action here is paid per
-    # query run).
-    #
-    # r17 (VERDICT r16 ask #3): with ``clean_pairs=True`` the rounds
-    # run over the TOUCHED subgraph only — a node in no pair keeps
-    # label = id through every round (neighbor-min of an isolated
-    # node is its own label; its jump is the identity), so ids
-    # outside the pair table ride one final anti-join union instead
-    # of paying every round's join/aggregate shuffles and the
-    # per-round label-sum probe. Near-dup pair graphs touch a small
-    # fraction of a real corpus, so at scale this shrinks each
-    # round from corpus-size to pair-graph-size; measured sf1
-    # (50k ids, 2.5k pairs): rounds 1.46+0.90 → sub-second, full
-    # dedup_clusters 4.27 → 4.09 warm. The distinct is required:
-    # duplicate label rows would inflate the initial label_sum and
-    # could coincidentally equal a post-dedup round sum.
-    touched = None
-    if clean_pairs:
-        touched = (
-            p.select(F.col("id_a").alias("id"))
-            .unionByName(p.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        seed = touched.select("id", F.col("id").alias("label"))
-    else:
-        seed = ids.select(
-            F.col(id_col).alias("id"), F.col(id_col).alias("label")
-        )
-    labels = seed.localCheckpoint(eager=False)
-    # the src semi-join pins the old contract — output rows come
-    # from ``ids`` ONLY, a pair id outside ``ids`` never injects a
-    # row (the fused union step below would otherwise emit it).
-    # Lazy persist: materializes from the p-checkpoint inside round
-    # 0 and is cached for every later round.
-    # ``clean_pairs=True`` asserts the caller's pair table is
-    # already DISTINCT with both endpoints drawn from ``ids`` (true
-    # for every candidate generator in this repo — they all end in
-    # distinct()/groupBy over the id table) and skips the dedup
-    # shuffle + semi-join of the edge build (r16: one less exchange
-    # and one less stage wave before round 0; duplicates/foreign ids
-    # would only cost redundant min() inputs / extra rows, so the
-    # flag trades validation, not correctness of honest input).
-    edges = p.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionByName(
-        p.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+    id_type = ids.schema[id_col].dataType
+    p = pairs.select("id_a", "id_b").filter(
+        F.col("id_a").isNotNull() & F.col("id_b").isNotNull()
     )
     if not clean_pairs:
-        edges = edges.distinct().join(
-            labels.select(F.col("id").alias("src")), "src", "left_semi"
+        ids = ids.select(id_col).distinct()
+        for end in ("id_a", "id_b"):
+            p = p.join(ids.select(F.col(id_col).alias(end)), end, "left_semi")
+    labels = (
+        p.select(F.col("id_a").cast(id_type), F.col("id_b").cast(id_type))
+        .repartition(1)
+        .mapInArrow(
+            _component_labels,
+            T.StructType(
+                [T.StructField("__id__", id_type), T.StructField("__label__", id_type)]
+            ),
         )
-    edges = edges.persist()
-    label_sum = labels.agg(
-        F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
-    try:
-        for _ in range(max_iter):
-            # neighbor-min step fused into ONE join + ONE aggregate
-            # (r16; was join + groupBy + a second left join): every
-            # node's own label rides the union, so min(own ∪ neighbor
-            # labels) ≡ least(own, coalesce(min(neighbors), own)).
-            stepped = (
-                edges.join(labels, edges.dst == labels.id)
-                .select(F.col("src").alias("id"), "label")
-                .unionByName(labels)
-                .groupBy("id")
-                .agg(F.min("label").alias("label"))
-                .persist()
-            )
-            # pointer jump: label ← label(label) (path halving).
-            # stepped is referenced on BOTH sides; the persist()
-            # makes the round job compute it once and read the cache
-            # for the second reference (measured r16: the duplicated
-            # subtree was the bulk of each round's cost).
-            lmap = stepped.select(
-                F.col("id").alias("__lid__"), F.col("label").alias("__ll__")
-            )
-            jumped = (
-                stepped.join(lmap, stepped.label == F.col("__lid__"), "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("__ll__"), F.col("label")),
-                    ).alias("label"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # fixpoint probe: labels are per-node monotone non-
-            # increasing, so the label sum strictly decreases iff ANY
-            # node changed — one narrow aggregate over the new
-            # generation. It is ALSO the generation's materializing
-            # action (eager=False checkpoint): one job per round
-            # computes step + jump + checkpoint + probe. DECIMAL(38,0)
-            # keeps the sum exact at any corpus size (10^12 ids ×
-            # 10^12 docs overflows a bigint).
-            new_sum = jumped.agg(
-                F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-            ).collect()[0]["s"]
-            stepped.unpersist()
-            labels = jumped
-            if new_sum == label_sum:
-                break
-            label_sum = new_sum
-        # the converged generation is checkpoint-pinned; old
-        # generations' blocks are freed by the context cleaner
-        if touched is not None:
-            # untouched ids (the corpus majority) self-label via one
-            # broadcast anti-join — they never entered a round
-            untouched = ids.select(F.col(id_col).alias("id")).join(
-                touched, "id", "left_anti"
-            )
-            labels = labels.unionByName(
-                untouched.select("id", F.col("id").alias("label"))
-            )
-        return labels.select(
-            F.col("id").alias(id_col), F.col("label").alias("cluster_id")
-        )
-    finally:
-        edges.unpersist()
+    )
+    return ids.join(labels, F.col(id_col) == F.col("__id__"), "left").select(
+        F.col(id_col), F.coalesce("__label__", id_col).alias("cluster_id")
+    )
 
 
 def paragraph_dedup(

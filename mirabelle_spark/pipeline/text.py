@@ -693,9 +693,8 @@ def bpe_train(
     Algorithm 1 — canonical greedy merges, see _BPE_SEP note): each
     round is one pair-count aggregate over the VOCABULARY table plus
     one literal-replace projection, and the vocab is
-    localCheckpoint-ed per round so lineage stays flat (the
-    resolve_clusters discipline). Stops early when no pair reaches
-    ``min_weight``. At 100 TB the vocab table is distributed and
+    localCheckpoint-ed per round so lineage stays flat. Stops early
+    when no pair reaches ``min_weight``. At 100 TB the vocab table is distributed and
     bodies never shuffle — only (word-hash, count) rows build it.
 
     ``batch`` > 1 cuts the driver-loop round count (the r9-verdict

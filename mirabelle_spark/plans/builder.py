@@ -35,6 +35,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field, replace
 from typing import Callable
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 
 from mirabelle_spark.operators import aggregations as agg
@@ -42,6 +44,7 @@ from mirabelle_spark.operators import filters as flt
 from mirabelle_spark.operators import stateful as st
 from mirabelle_spark.operators import transforms as tr
 from mirabelle_spark.operators import windows as win
+from mirabelle_spark.plans.spec import InvalidActionParams, validate_tree
 
 
 import logging
@@ -389,6 +392,8 @@ _STREAM_AGGR = {
     "sum": "sum", "mean": "mean", "rate": "rate", "count": "coll-count",
     "max": "coll-max", "min": "coll-min", "ssort": "ssort",
 }
+# the aggr-fns agg.aggregation_delayed runs in batch
+_BATCH_AGGR = frozenset({"sum", "mean", "max", "min", "count", "fixed-time-window"})
 
 
 @action("aggregation")
@@ -399,13 +404,16 @@ def _aggregation(df, ctx, cfg):
     seal delay seconds after their end — action.clj:2420-2432).
     aggr-fn ssort sorts by event time."""
     kind = cfg.get("aggr-fn", "sum")
+    if kind not in (_STREAM_AGGR if ctx.streaming else _BATCH_AGGR):
+        mode = "streaming" if ctx.streaming else "batch"
+        raise InvalidActionParams(
+            "aggregation", f"aggr-fn {kind!r} does not run in {mode} mode"
+        )
     if not ctx.streaming:
         return agg.aggregation_delayed(
             df, cfg["duration"], cfg.get("delay", 0), aggr=kind, **_aggk(ctx),
             arrival_cols=list(ctx.order_cols),
         )
-    if kind not in _STREAM_AGGR:
-        raise ValueError(f"unsupported streaming aggregate {kind!r}")
     return _ACTIONS[_STREAM_AGGR[kind]](df, ctx, dict(cfg, field=ctx.time_col))
 
 
@@ -690,9 +698,18 @@ def _cond_dt(df, ctx, cond, cfg):
     return st.cond_dt(df, cond, cfg["duration"], **_stk(ctx))
 
 
-action("coll-where")(
-    lambda df, ctx, cond_sql, col="events": flt.coll_where(df, col, cond_sql)
-)
+@action("coll-where")
+def _coll_where(df, ctx, cond_sql, col="events"):
+    # the predicate is SQL text, so only Spark's analyzer can check it;
+    # it runs here, at compile time (a lambda given whole, `x -> ...`,
+    # surfaces as a py4j INTERNAL_ERROR rather than an AnalysisException)
+    try:
+        return flt.coll_where(df, col, cond_sql)
+    except (AnalysisException, Py4JJavaError) as e:
+        why = str(getattr(e, "java_exception", e)).strip().splitlines()[0]
+        raise InvalidActionParams(
+            "coll-where", f"predicate {cond_sql!r} does not resolve: {why}"
+        ) from e
 
 
 @action("stable")
@@ -721,9 +738,7 @@ def compile_stream(
     valid-action? parity): a malformed tree raises
     :class:`~mirabelle_spark.plans.spec.InvalidActionParams` naming
     the action and parameter before any DataFrame work starts."""
-    from mirabelle_spark.plans import spec as _spec
-
-    _spec.validate_tree(tree, set(_ACTIONS), _USER_ACTIONS)
+    validate_tree(tree, set(_ACTIONS), _USER_ACTIONS)
     ctx = ctx or Ctx()
     _walk(df, tree, ctx)
     return ctx

@@ -250,6 +250,11 @@ def config(req: dict[str, Validator], opt: dict[str, Validator] | None = None):
 
 _DUR = {"duration": pos_number}
 
+# `aggregation`'s aggr-fn names; each compile mode runs a subset
+# (plans.builder raises naming the mode for the rest)
+AGGR_FNS = ("sum", "mean", "max", "min", "count", "rate", "ssort",
+            "fixed-time-window")
+
 
 class Sig:
     """Positional params: ``required`` then ``optional`` validators;
@@ -336,7 +341,7 @@ SPECS: dict[str, Sig] = {
     "bottom": Sig(("config", config(_DUR))),
     "rate": Sig(("config", config(_DUR, opt={"delay": nat_number}))),
     "aggregation": Sig(("config", config(_DUR, opt={
-        "delay": nat_number, "aggr-fn": ne_string}))),
+        "delay": nat_number, "aggr-fn": one_of(*AGGR_FNS)}))),
     "ratio": Sig(("conditions", list_of(condition, 2, 2)),
                  ("config", config(_DUR, opt={"metric": boolean}))),
     "percentiles": Sig(("config", config({**_DUR, "quantiles": quantiles}))),

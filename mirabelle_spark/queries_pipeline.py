@@ -1716,8 +1716,8 @@ def _image_corpus(spark, sf) -> DataFrame:
     # rasters whose vectorized dHash costs ~0.2 s single-core — an
     # up-front repartition to cores was MEASURED SLOWER end-to-end
     # (the 64 post-union micro-partitions taxed every downstream
-    # stage of the pair join and cluster rounds more than the decode
-    # saved), so the scan's natural split stands
+    # stage of the pair join and cluster resolution more than the
+    # decode saved), so the scan's natural split stands
     return (
         docs(spark, sf)
         .select(
@@ -1818,14 +1818,14 @@ def image_near_dups(spark, sf):
     """LAION-style image near-dup resolution end-to-end (r16):
     dHash bands → :func:`dedup.band_hamming_pairs` (pigeonhole
     band equi-join, exact popcount ≤ 3 verify, never all-pairs) →
-    :func:`dedup.resolve_clusters` (min-label + pointer jumping) →
-    one canonical image per cluster. The oracle recomputes bands in
-    SQL, enumerates pairs, and resolves components with a single
-    neighbor-min round — exact here because every planted source
+    :func:`dedup.resolve_clusters` (one union-find task over the pair
+    graph) → one canonical image per cluster. The oracle recomputes
+    bands in SQL, enumerates pairs, and resolves components with a
+    single neighbor-min round — exact here because every planted source
     group is a Hamming-≤1 CLIQUE (diameter 1: v0≡v1, v2 one bit
     away from both), while cross-source md5 rasters sit ~32 bits
-    apart; the Spark side still runs the general iterative
-    propagation. Scale shape: only 20-byte signature rows shuffle;
+    apart; the Spark side still resolves general components of any
+    diameter. Scale shape: only 20-byte signature rows shuffle;
     the candidate stream is band-bucketed."""
     corpus = _image_corpus(spark, sf)
     # pin the 20-byte signature table ONCE: the pair join and the
@@ -2275,7 +2275,8 @@ def audio_near_dups(spark, sf):
     :func:`dedup.resolve_clusters`. Planted groups are diameter-1
     cliques (v1 hash-identical to v0 by the exact-gain invariance,
     v2 one bit away), so the oracle's single neighbor-min round is
-    exact; the Spark side runs the general iterative propagation."""
+    exact; the Spark side resolves general components of any
+    diameter."""
     # one pin serves both consumers, and the exact-signature collapse
     # keeps the pair stream linear in the corpus (see image_near_dups)
     hashes = multimodal.audio_dhash(

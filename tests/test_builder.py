@@ -1,6 +1,8 @@
 """DSL builder + golden harness (reference stream.clj compile path +
 test.clj golden format)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -300,6 +302,61 @@ def test_spec_rejects_bad_types(spark):
         _compile(spark, {"action": "by", "params": [{"fields": ["host"],
                                                      "shards": 0}],
                          "children": []})
+    # aggr-fn is a closed set, checked by name before any DataFrame work
+    with pytest.raises(InvalidActionParams, match="'aggregation'.*'median'"):
+        _compile(spark, {"action": "aggregation",
+                         "params": [{"duration": 10, "aggr-fn": "median"}],
+                         "children": []})
+
+
+def test_aggregation_aggr_fn_outside_its_mode_is_rejected_by_mode(spark):
+    """An aggr-fn from the closed set that the compile mode cannot run
+    is rejected naming the mode: rate and ssort run only in streaming,
+    fixed-time-window only in batch."""
+    from mirabelle_spark.plans.builder import Ctx, compile_stream
+    from mirabelle_spark.plans.spec import InvalidActionParams
+
+    df = spark.createDataFrame(
+        [("a", 1.0, "2024-01-01T00:00:00")], "host string, metric double, t string"
+    ).withColumn("time", F.to_timestamp("t"))
+
+    def node(fn):
+        return {"action": "by", "params": [{"fields": ["host"]}], "children": [
+            {"action": "aggregation",
+             "params": [{"duration": 10, "aggr-fn": fn}], "children": []}]}
+
+    for fn in ("rate", "ssort"):
+        with pytest.raises(InvalidActionParams, match=f"'{fn}'.*batch mode"):
+            compile_stream(df, node(fn))
+        compile_stream(df, node(fn), Ctx(streaming=True))
+    with pytest.raises(InvalidActionParams,
+                       match="'fixed-time-window'.*streaming mode"):
+        compile_stream(df, node("fixed-time-window"), Ctx(streaming=True))
+    compile_stream(df, node("fixed-time-window"))
+
+
+def test_coll_where_unresolvable_predicate_names_action(spark):
+    """coll-where's predicate is a lambda BODY over ``x``; a predicate
+    Spark cannot resolve — a whole lambda, an unknown field, a syntax
+    error — raises InvalidActionParams naming coll-where and the
+    predicate, not a py4j INTERNAL_ERROR."""
+    from mirabelle_spark.plans.builder import compile_stream
+    from mirabelle_spark.plans.spec import InvalidActionParams
+
+    df = spark.createDataFrame(
+        [("a", [(1.0,), (-1.0,)])],
+        "host string, events array<struct<metric:double>>",
+    )
+    for pred in ("x -> x.metric > 0", "x.nope > 0", "x.metric >"):
+        with pytest.raises(InvalidActionParams,
+                           match=f"'coll-where'.*{re.escape(repr(pred))}"):
+            compile_stream(df, {"action": "coll-where", "params": [pred],
+                                "children": []})
+    out = compile_stream(df, {"action": "coll-where",
+                              "params": ["x.metric > 0"],
+                              "children": [{"action": "tap",
+                                            "params": ["t"]}]}).taps["t"]
+    assert [len(r.events) for r in out.collect()] == [1]
 
 
 def test_spec_rejects_missing_and_unknown_config_keys(spark):

@@ -425,14 +425,106 @@ def test_resolve_clusters_transitive(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
+@pytest.mark.parametrize("clean_pairs", [False, True])
+def test_resolve_clusters_shuffled_chain(spark, clean_pairs):
+    """One 1,000-node path whose ids are out of path order: a label
+    that moves about one hop per round needs hundreds of rounds here,
+    so a round-capped propagation mislabels most of the chain (a
+    neighbour-min + one-jump step capped at 20 rounds leaves 929 of
+    1,000 ids wrong). Every id must land on the chain's min id, 0."""
+    import random
+
+    from mirabelle_spark.pipeline import dedup
+
+    n = 1000
+    path = list(range(n))
+    random.Random(19).shuffle(path)
+    pairs = spark.createDataFrame(
+        list(zip(path, path[1:])), "id_a bigint, id_b bigint"
+    )
+    ids = spark.createDataFrame([(i,) for i in range(n)], "doc_id bigint")
+    got = dict(
+        map(tuple, dedup.resolve_clusters(pairs, ids, clean_pairs=clean_pairs).collect())
+    )
+    assert got == {i: 0 for i in range(n)}
+
+
+@pytest.mark.parametrize("clean_pairs", [False, True])
+def test_resolve_clusters_degenerate_pairs(spark, clean_pairs):
+    """A self-loop, a duplicated pair, a reversed pair and pairs with
+    a null endpoint: the self-loop and null endpoints link nothing,
+    duplicates and reversals link what their first copy links."""
+    from mirabelle_spark.pipeline import dedup
+
+    pairs = spark.createDataFrame(
+        [(3, 3), (5, 4), (4, 5), (4, 5), (7, 6), (2, None), (None, 8)],
+        "id_a bigint, id_b bigint",
+    )
+    ids = spark.createDataFrame([(i,) for i in range(1, 9)], "doc_id bigint")
+    got = sorted(
+        map(tuple, dedup.resolve_clusters(pairs, ids, clean_pairs=clean_pairs).collect())
+    )
+    assert got == [(1, 1), (2, 2), (3, 3), (4, 4), (5, 4), (6, 6), (7, 6), (8, 8)]
+
+
+@pytest.mark.parametrize("clean_pairs", [False, True])
+def test_resolve_clusters_int_ids_keep_schema(spark, clean_pairs):
+    """An ``int`` id column stays ``int`` in both output columns."""
+    from pyspark.sql import types as T
+
+    from mirabelle_spark.pipeline import dedup
+
+    pairs = spark.createDataFrame([(2, 1), (3, 2)], "id_a int, id_b int")
+    ids = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id int")
+    out = dedup.resolve_clusters(pairs, ids, clean_pairs=clean_pairs)
+    assert out.schema == T.StructType([
+        T.StructField("doc_id", T.IntegerType(), True),
+        T.StructField("cluster_id", T.IntegerType(), True),
+    ])
+    assert sorted(map(tuple, out.collect())) == [(1, 1), (2, 1), (3, 1), (4, 4)]
+
+
+def test_hook_components_logarithmic_rounds():
+    """The union-find kernel alone: a shuffled 100k-node path
+    converges in at most 2·⌈log2 n⌉ hooking rounds (a one-hop label
+    step would need O(n)), and random graphs match a sequential
+    union-find's min-id components."""
+    import math
+
+    import numpy as np
+
+    from mirabelle_spark.pipeline.dedup import _hook_components
+
+    rng = np.random.default_rng(19)
+    n = 100_000
+    path = rng.permutation(n)
+    root, rounds = _hook_components(path[:-1], path[1:], n)
+    assert (root == 0).all()
+    assert 1 <= rounds <= 2 * math.ceil(math.log2(n))
+
+    for n, m in ((50, 30), (300, 280), (1000, 2000)):
+        a, b = rng.integers(0, n, m), rng.integers(0, n, m)
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for x, y in zip(a.tolist(), b.tolist()):
+            rx, ry = find(x), find(y)
+            parent[max(rx, ry)] = min(rx, ry)
+        root, _ = _hook_components(a, b, n)
+        assert root.tolist() == [find(v) for v in range(n)]
+    root, rounds = _hook_components(np.array([], int), np.array([], int), 3)
+    assert root.tolist() == [0, 1, 2] and rounds == 0
+
+
 def test_dedup_leaves_no_persistent_rdds(doc_df, spark):
     """PERF.md §16: leaked per-call caches poison every later query.
     The LSH candidate path uses a bucket-groupBy (no self-join, no
     persist), so executor storage must be EMPTY right after the
-    query materializes; resolve_clusters' per-round persists must all
-    be released too (its result rides a localCheckpoint whose blocks
-    belong to the returned handle, and are dropped by the context
-    cleaner once the handle is released)."""
+    query materializes, and resolve_clusters pins nothing at all."""
     import gc
 
     from mirabelle_spark.pipeline import dedup
@@ -472,31 +564,19 @@ def test_dedup_leaves_no_persistent_rdds(doc_df, spark):
         _time.sleep(0.5)
     assert persistent_count() <= base, "handle-owned pin survived its handle"
 
-    # resolve_clusters: per-round generation caches must all be
-    # released; the ONLY residual allowed is the returned result's
-    # own localCheckpoint blocks (owned by the live handle, released
-    # by the context cleaner when the handle is GC'd) — and repeated
-    # invocations must not accumulate storage (the old code leaked
-    # one band cache + one label generation per call, forever).
+    # resolve_clusters pins nothing (one plan, no persist or
+    # checkpoint): no call adds a cached RDD, not even while its
+    # result handle is alive (the async cleaner can only lower the
+    # count meanwhile)
     for _ in range(3):
+        before = persistent_count()
         clusters = dedup.resolve_clusters(
             dedup.minhash_lsh_candidates(doc_df), doc_df.select("doc_id")
         )
         clusters.collect()
-        # async context-cleaner may lag a previous iteration's release
-        # (r17: one observed flake where the drain needed >60 s under
-        # transient load — the pin is about accumulation, not cleaner
-        # latency, so give the async release a longer window)
-        deadline = _time.time() + 180
-        while persistent_count() > base + 1 and _time.time() < deadline:
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-            _time.sleep(0.5)
-        n_after = persistent_count()
-        assert n_after <= base + 1, f"leaked {n_after - base} cached RDDs"
-        del clusters
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
+        assert persistent_count() <= before, (
+            f"resolve_clusters left {persistent_count() - before} cached RDDs"
+        )
 
 
 def test_hash_sample_deterministic_and_partition_independent(spark):

@@ -509,3 +509,29 @@ def test_large_order_customers_plan(spark, qs):
     for s in subs:  # a broadcast touching lineitem must be post-agg
         if "lineitem" in s:
             assert "HashAggregate" in s, s
+
+
+@pytest.mark.parametrize(
+    "name, budget",
+    # measured at sf0.01: 8 and 12 jobs (29 and 34 while cluster
+    # resolution ran one join + aggregate + checkpoint + collect per
+    # round); ROADMAP item 5 budgets about 15 per query
+    [("dedup_clusters", 10), ("image_near_dups", 14)],
+)
+def test_cluster_queries_job_budget(spark, qs, name, budget):
+    """Each Spark job is a driver round-trip that costs more than the
+    tiny stages it runs at this scale, so the cluster queries pin how
+    many jobs one run starts. A regression to per-round driver
+    actions in resolve_clusters adds several jobs per round."""
+    sc = spark.sparkContext
+    group = f"job-budget-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        qs[name](spark, "/root/testdata/sf0.01").write.format("noop").mode(
+            "overwrite"
+        ).save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= budget, f"{name} started {jobs} Spark jobs"

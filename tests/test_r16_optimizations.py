@@ -97,8 +97,8 @@ def test_resolve_clusters_foreign_pair_ids_still_dropped(spark):
 
 def test_resolve_clusters_clean_pairs_equivalent_on_honest_input(spark):
     """clean_pairs=True must produce identical clusters when the
-    caller's guarantee (distinct pairs within ids) holds — a chain
-    exercises >1 round of propagation."""
+    caller's guarantee (distinct pairs within ids) holds, on a chain
+    and a separate pair."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (7, 8)], "id_a BIGINT, id_b BIGINT"
     )

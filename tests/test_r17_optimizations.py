@@ -125,9 +125,9 @@ def test_ivf_probe_scores_kernel_matches_relational(spark):
 
 
 def test_resolve_clusters_touched_subgraph_identical(spark):
-    """r17 ask #3: with clean_pairs=True the rounds run over pair
-    endpoints only and untouched ids ride a final anti-join union —
-    output must be row-identical to the validated full-graph path
+    """With clean_pairs=True only the pair endpoints are resolved and
+    untouched ids keep their own id through the final left join —
+    output must be row-identical to the validated path
     (clean_pairs=False) on a graph with chains, cliques, and a
     majority of untouched nodes."""
     from mirabelle_spark.pipeline import dedup
